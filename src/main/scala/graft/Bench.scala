@@ -61,7 +61,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - WCANARY TIMELINE: the write canary re-samples every 8th key
   *     and immediately before every gate-triggered re-run, so a
   *     mid-board regime shift localizes to the keys it hit
-  *     ("wcanary_timeline" in DETAIL).
+  *     ("wcanary_timeline" in DETAIL: a list of `[index, seconds]`
+  *     pairs). A non-negative index `i` is a sweep sample taken
+  *     before board key `i` (0 = the start-of-board canary); a
+  *     NEGATIVE index `-(i+1)` tags a sample the outlier gate took for
+  *     key `i` — at its 2x-arm decision or right before its re-run —
+  *     so sweep and gate samples never share an index.
   *
   * The printed line is kept COMPACT (2-3 significant digits, short
   * field names, empty fields omitted): the driver captures only the

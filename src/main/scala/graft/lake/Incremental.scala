@@ -133,56 +133,59 @@ object Incremental {
         .agg(sum(sign).as(RowsCol),
           ms.map { case (n, e) => sum(sign * e).as(n) }: _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      requireNonNullKeys(additive)
+      // everything that reads `additive` sits inside the try, so a
+      // failed null-key check or extremes collect cannot leak the cache
+      try {
+        requireNonNullKeys(additive)
         // groups the feed touched but left net-unchanged still merge
         // (their measures may have moved even at rows-delta 0)
-      val delta =
-        if (ext.isEmpty) additive
-        else {
-          // extremes: recompute ONLY the touched groups, against the
-          // same pinned source version the feed runs through. With a
-          // small touched set the group tuples become a pushed
-          // predicate — the scan file-skips on the logged bounds; past
-          // the cap, a broadcast semi-join still prunes rows (a scan,
-          // but of matching rows only, never a recompute of untouched
-          // groups)
-          val touched = additive.select(groupBy.map(col).toIndexedSeq: _*).distinct()
-          val tuples = touched.limit(10001).collect()
-          val pinned = LakeTable.read(spark, source, asOf = Some(srcSnap.version))
-          val pruned =
-            if (tuples.length > 10000)
-              pinned.join(broadcast(touched), groupBy, "left_semi")
-            else if (tuples.isEmpty) pinned.filter(lit(false))
-            else pinned.filter(tuples.map { r =>
-              groupBy.zipWithIndex.map { case (c, i) => col(c) === lit(r.get(i)) }
-                .reduce(_ && _)
-            }.reduce(_ || _))
-          val extremes = pruned.groupBy(groupBy.map(col).toIndexedSeq: _*)
-            .agg(ext.head._2.as(ext.head._1),
-              ext.tail.map { case (n, a) => a.as(n) }: _*)
-          // touched-but-emptied groups have no extremes row (left
-          // outer): their nulls never land — the DELETE clause claims
-          // them first
-          additive.join(extremes, groupBy, "left_outer")
-        }
-      val addNames = ms.map(_._1) :+ RowsCol
-      val extNames = ext.map(_._1)
-      try LakeTable.mergeRows(spark, target, delta, groupBy,
-        matched = Seq(
-          // group emptied out: remove its row
-          LakeTable.MatchedDelete(
-            Some(col(s"t.$RowsCol") + col(s"s.$RowsCol") === 0L)),
-          LakeTable.MatchedUpdate(None,
-            (addNames.map(n => n -> (col(s"t.$n") + col(s"s.$n"))) ++
-              extNames.map(n => n -> col(s"s.$n"))).toMap)),
-        notMatchedInsert = Seq(
-          // a brand-new group inserts its delta verbatim; a pure-delete
-          // delta for a group the target never had would be feed
-          // corruption — guard rather than insert a negative group
-          (Some(col(s"s.$RowsCol") > 0L),
-            (groupBy ++ addNames ++ extNames).map(n => n -> col(s"s.$n")).toMap)),
-        txn = Some(qid -> srcSnap.version))
-      finally additive.unpersist(blocking = false)
+        val delta =
+          if (ext.isEmpty) additive
+          else {
+            // extremes: recompute ONLY the touched groups, against the
+            // same pinned source version the feed runs through. With a
+            // small touched set the group tuples become a pushed
+            // predicate — the scan file-skips on the logged bounds; past
+            // the cap, a broadcast semi-join still prunes rows (a scan,
+            // but of matching rows only, never a recompute of untouched
+            // groups)
+            val touched = additive.select(groupBy.map(col).toIndexedSeq: _*).distinct()
+            val tuples = touched.limit(10001).collect()
+            val pinned = LakeTable.read(spark, source, asOf = Some(srcSnap.version))
+            val pruned =
+              if (tuples.length > 10000)
+                pinned.join(broadcast(touched), groupBy, "left_semi")
+              else if (tuples.isEmpty) pinned.filter(lit(false))
+              else pinned.filter(tuples.map { r =>
+                groupBy.zipWithIndex.map { case (c, i) => col(c) === lit(r.get(i)) }
+                  .reduce(_ && _)
+              }.reduce(_ || _))
+            val extremes = pruned.groupBy(groupBy.map(col).toIndexedSeq: _*)
+              .agg(ext.head._2.as(ext.head._1),
+                ext.tail.map { case (n, a) => a.as(n) }: _*)
+            // touched-but-emptied groups have no extremes row (left
+            // outer): their nulls never land — the DELETE clause claims
+            // them first
+            additive.join(extremes, groupBy, "left_outer")
+          }
+        val addNames = ms.map(_._1) :+ RowsCol
+        val extNames = ext.map(_._1)
+        LakeTable.mergeRows(spark, target, delta, groupBy,
+          matched = Seq(
+            // group emptied out: remove its row
+            LakeTable.MatchedDelete(
+              Some(col(s"t.$RowsCol") + col(s"s.$RowsCol") === 0L)),
+            LakeTable.MatchedUpdate(None,
+              (addNames.map(n => n -> (col(s"t.$n") + col(s"s.$n"))) ++
+                extNames.map(n => n -> col(s"s.$n"))).toMap)),
+          notMatchedInsert = Seq(
+            // a brand-new group inserts its delta verbatim; a pure-delete
+            // delta for a group the target never had would be feed
+            // corruption — guard rather than insert a negative group
+            (Some(col(s"s.$RowsCol") > 0L),
+              (groupBy ++ addNames ++ extNames).map(n => n -> col(s"s.$n")).toMap)),
+          txn = Some(qid -> srcSnap.version))
+      } finally additive.unpersist(blocking = false)
     }
   }
 

@@ -907,7 +907,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * page-cache-warm — the one moment metadata is cheap; every later
     * reader plans from the log alone.
     */
-  private def stageFiles(spark: SparkSession, table: String, df: DataFrame,
+  private[lake] def stageFiles(spark: SparkSession, table: String, df: DataFrame,
                          partitionBy: Seq[String],
                          mapping: Map[String, String] = Map.empty,
                          checks: Map[String, String] = Map.empty,
@@ -1161,7 +1161,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
   /** Meter `body` into [[commitNanos]]; nested spans on the same
     * thread count once (outermost wins).
     */
-  @inline private def meteredCommit[T](body: => T): T = {
+  @inline private[lake] def meteredCommit[T](body: => T): T = {
     val d = meterDepth.get.intValue
     meterDepth.set(Integer.valueOf(d + 1))
     val t0 = System.nanoTime()
@@ -1175,7 +1175,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * composes with [[meteredCommit]] — the two counters are
     * independent.
     */
-  @inline private def meteredFileOps[T](body: => T): T = {
+  @inline private[lake] def meteredFileOps[T](body: => T): T = {
     val d = fileOpsDepth.get.intValue
     fileOpsDepth.set(Integer.valueOf(d + 1))
     val t0 = System.nanoTime()
@@ -1196,7 +1196,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * the helper thread inherits the caller's job group/description
     * (InheritableThreadLocal) so bench job labels stay attached.
     */
-  private def stageConcurrently[A, B](a: => A)(b: => B): (A, B) = meteredCommit {
+  private[lake] def stageConcurrently[A, B](a: => A)(b: => B): (A, B) = meteredCommit {
     // the whole overlapped region (including the join wait) meters as
     // the CALLER's commit wall, once — nested meters inside `a` are
     // depth-guarded, `b`'s thread is suppressed outright
@@ -1253,7 +1253,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * the log entry. Like [[stageFiles]] but into `_change_data/`, no
     * hive partitioning, no stats (the feed is read whole per commit).
     */
-  private def stageChangeFiles(spark: SparkSession, table: String,
+  private[lake] def stageChangeFiles(spark: SparkSession, table: String,
                                df: DataFrame): Seq[String] = {
     val f = fs(spark, table)
     val staging = new Path(new Path(table, "_staging"), java.util.UUID.randomUUID().toString)
@@ -1425,11 +1425,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
       }
   }
 
-  /** Decoded filesystem path of an `input_file_name()` value. */
-  private def decodeFileUri(fileUri: String): String =
-    try new Path(new java.net.URI(fileUri)).toUri.getPath
-    catch { case _: java.net.URISyntaxException => new Path(fileUri).toUri.getPath }
-
   private[lake] def relativize(base: Path, p: Path): String = {
     val b = base.toUri.getPath.stripSuffix("/")
     val s = p.toUri.getPath
@@ -1494,10 +1489,12 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * `basePath` must be for Spark to parse the partition values from
     * the foreign dirs.
     */
-  private def foreignBasePath(abs: String, numPartCols: Int): String = {
+  private[graft] def foreignBasePath(abs: String, numPartCols: Int): String = {
     var p = new Path(abs).getParent // the file name
     var remaining = numPartCols
     while (remaining > 0) {
+      require(p != null, s"foreign file $abs has fewer than the $numPartCols partition " +
+        "(k=v) directories its table's partition columns need")
       if (p.getName.contains('=')) remaining -= 1
       p = p.getParent
     }
@@ -1573,7 +1570,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * `_metadata.file_path` renders file paths (Hadoop's
     * `Path.toString` of the qualified path — `file:/x`, not the URI
     * form `file:///x`). Rows that violate the assumption fail loudly in
-    * [[deleteMergeOnRead]]'s relativization rather than mis-joining.
+    * [[RowLevelOps]]'s vector keying rather than mis-joining.
     */
   private def qualifiedDataPrefix(spark: SparkSession, table: String): String =
     fs(spark, table).makeQualified(dataPath(table)).toString
@@ -1581,7 +1578,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
   /** [[qualifiedDataPrefix]] in the scan form ([[scanFormAbs]]) — the
     * prefix `_metadata.file_path` values of local files start with.
     */
-  private def scanDataPrefix(spark: SparkSession, table: String): String =
+  private[lake] def scanDataPrefix(spark: SparkSession, table: String): String =
     scanFormPath(fs(spark, table).makeQualified(dataPath(table))) + "/"
 
   /** Threshold (rows) under which the dv side of the MoR anti-join is
@@ -1595,7 +1592,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * deletion vectors. May contain rows for OTHER files sharing a dv
     * directory — callers join/filter by file, so extras are inert.
     */
-  private def dvRows(spark: SparkSession, table: String, entries: Seq[FileEntry]): DataFrame = {
+  private[lake] def dvRows(spark: SparkSession, table: String, entries: Seq[FileEntry]): DataFrame = {
     val dirs = entries.flatMap(_.dv.map(_.path)).distinct
     val schema = StructType(Seq(StructField("p", org.apache.spark.sql.types.StringType),
       StructField("pos", org.apache.spark.sql.types.LongType)))
@@ -1758,45 +1755,13 @@ object LakeTable extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Detection scan pinned at `snap` with a `__file` column carrying
-    * each row's absolute data-file path — the DV-safe generalization
-    * of `read(...).withColumn("__file", input_file_name())` the DML
-    * paths detect matched files with. On a dv-free snapshot it IS that
-    * relation scan (full pushdown + skipping); with vectors present it
-    * is the [[morScan]] composition over [[prunedEntries]] (Catalyst
-    * still pushes the caller's filters into the legs; `conds` carries
-    * the resolved conjuncts for driver-side file skipping).
-    *
-    * `scope` is the caller's selection predicate and MUST come in here
-    * rather than as a `.filter` on the result: `input_file_name()` is
-    * nondeterministic, so Catalyst refuses to push any later filter
-    * through the project that computes `__file` — the predicate is
-    * applied BELOW it (on the relation, where partition pruning and
-    * file skipping see it). `alias` names the scan for predicates
-    * written against an aliased side (mergeRows' `t`).
-    */
-  private def detectionScan(spark: SparkSession, table: String, snap: Snapshot,
-                            conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil,
-                            alias: Option[String] = None,
-                            scope: Option[Column] = None): DataFrame =
-    if (!hasDv(snap)) {
-      val r0 = read(spark, table, asOf = Some(snap.version))
-      val r1 = alias.fold(r0)(r0.alias)
-      scope.fold(r1)(r1.filter).withColumn("__file", input_file_name())
-    } else {
-      val m0 = morScan(spark, table, snap, prunedEntries(spark, table, snap, conds), keepPos = true)
-        .withColumnRenamed(FilePathCol, "__file").drop(RowPosCol)
-      val m1 = alias.fold(m0)(m0.alias)
-      scope.fold(m1)(m1.filter)
-    }
-
   /** Incoming write schema decorated for the target's column mapping:
     * fields whose name the snapshot knows take its physical name; new
     * fields get a fresh one when (and only when) the table is mapped.
     * Returns the decorated fields plus the logical → physical map to
     * stage this write's files with. Identity for unmapped tables.
     */
-  private def mappedIncoming(prev: Option[Snapshot],
+  private[lake] def mappedIncoming(prev: Option[Snapshot],
                              incoming: StructType): (StructType, Map[String, String]) =
     prev match {
       case Some(p) if ColumnMapping.isMapped(p.schema) =>
@@ -1894,7 +1859,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
   // ---------------------------------------------------------------- writes
 
-  private val maxRetries = 3
+  private[lake] val maxRetries = 3
 
   /** Replace the table contents atomically. Previous versions stay
     * readable (time travel) until vacuumed. Schema may differ freely
@@ -2200,7 +2165,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * deep-nullable anyway, and a SQL INSERT hands back the relation's
     * nullable variant of the table's own schema.
     */
-  private def mergeSchemas(existing: StructType, incoming: StructType): StructType = {
+  private[lake] def mergeSchemas(existing: StructType, incoming: StructType): StructType = {
     val byName = existing.fields.map(f => f.name -> f).toMap
     incoming.fields.foreach { f =>
       byName.get(f.name).foreach { e =>
@@ -2416,26 +2381,23 @@ object LakeTable extends org.apache.spark.internal.Logging {
     qualifying.map(_.version).max
   }
 
-  // ----------------------------------------------------------------- merge
+  // ---------------------------------------------------------- row-level DML
+  //
+  // Every DML entry point below is a thin shim that describes its
+  // statement to the one row-level core, [[RowLevelOps]]: detection, the
+  // copy-on-write or merge-on-read materializer, change-feed staging and
+  // the commit step with its rebase rule live there once.
 
   /** Upsert (MERGE): rows of `updates` replace current rows with the
-    * same `keys` value; unmatched update rows insert. File-granularity
-    * copy-on-write — only files containing a matched key are rewritten;
+    * same `keys` value; unmatched update rows insert — [[mergeRows]]
+    * with update-all and insert-all clauses. File-granularity
+    * copy-on-write: only files containing a matched key are rewritten;
     * all other files carry over by reference. `updates` must be
-    * key-unique. Schema evolves like [[append]]: new update columns
-    * merge into the snapshot schema (reading as null from files not
-    * rewritten), existing-name type conflicts are refused, and an
-    * update set missing an existing column writes null there.
-    *
-    * A lost commit race is resolved the way Delta resolves it: the
-    * winner's changes are re-examined, and when they are provably
-    * DISJOINT from everything this merge read or rewrote — a scoped
-    * merge whose scanned partitions share no directory with any file
-    * the winner added or removed, same schema, same partition layout —
-    * the merge rebases onto the winner's snapshot and retries (bounded).
-    * Anything else aborts with ConcurrentCommitException: an unscoped
-    * merge read the whole table, so ANY concurrent change could hide a
-    * matched key the rewrite never saw.
+    * key-unique (the SQL MERGE cardinality error otherwise). Schema
+    * evolves like [[append]]: new update columns merge into the
+    * snapshot schema (reading as null from files not rewritten),
+    * existing-name type conflicts are refused, and an update set
+    * missing an existing column writes null there.
     *
     * `scopeToUpdatePartitions` restricts the matched-file detection
     * scan to the partitions present in `updates` — the daily operating
@@ -2446,114 +2408,15 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * event_date); with that contract broken, a matched row in an
     * unscanned partition would survive next to its replacement. This is
     * the same discipline Delta asks of users via partition predicates
-    * in the MERGE condition.
+    * in the MERGE condition. A scoped merge that loses a commit race
+    * rebases when every file the winner added lies provably outside
+    * those partitions; an unscoped one read the whole table and refuses
+    * any race.
     */
   def merge(spark: SparkSession, table: String, updates0: DataFrame,
-            keys: Seq[String], scopeToUpdatePartitions: Boolean = false): Long = {
-    // the updates and their key set are consumed by the detection join,
-    // the rewrite union, and three change-feed projections — persist
-    // both so a non-trivial update plan computes once and the key
-    // distinct shuffles once (mergeRows stages its source the same way)
-    val updates = ColumnMapping.sanitize(updates0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val snap = latestSnapshot(spark, table)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
-    val keyCols = keys.map(col)
-    val updKeys = updates.select(keyCols: _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try mergeOn(spark, table, snap, updates, updKeys, keys, scopeToUpdatePartitions)
-    finally {
-      updKeys.unpersist(blocking = false)
-      updates.unpersist(blocking = false)
-    }
-  }
-
-  private def mergeOn(spark: SparkSession, table: String, snap: Snapshot,
-                      updates: DataFrame, updKeys: DataFrame, keys: Seq[String],
-                      scopeToUpdatePartitions: Boolean): Long = {
-    val keyCols = keys.map(col)
-
-    // Detection source: partition-prune to the updates' partitions when
-    // scoped (Catalyst prunes at the file-index level, so only those
-    // partitions' files are read), else the whole snapshot. Pinned to
-    // this snapshot so the pushed predicate also file-skips on the
-    // logged bounds.
-    val detectionSource = detectionScan(spark, table, snap, scope =
-      if (scopeToUpdatePartitions && snap.partitionColumns.nonEmpty)
-        Some(partitionTuplePredicate(updates, snap.partitionColumns))
-      else None)
-
-    // which files contain a matched key? (file names only — bounded by
-    // file count, not row count). The `__file` URIs are decoded +
-    // qualified against the data root inside mapMatchedRel; an
-    // unmappable matched file is a hard error.
-    val base = dataPath(table).toString
-    val affectedAbs = detectionSource
-      .join(broadcast(updKeys), keys)
-      .select("__file").distinct()
-      .collect().map(_.getString(0))
-    val affectedRel = mapMatchedRel(spark, table, affectedAbs, "MERGE", snap)
-
-    // schema evolution, same rules as append: new update columns merge
-    // into the snapshot schema (existing-name type conflicts refused);
-    // files that are not rewritten simply lack the column and read as
-    // null — including the matched-but-untouched rows carried into the
-    // rewritten files via the union below
-    val (incoming, _) = mappedIncoming(Some(snap), updates.schema)
-    val schema = mergeSchemas(snap.schema, incoming)
-    val stagingMap = ColumnMapping.mapping(schema)
-    val ordered = schema.fieldNames.map(col).toIndexedSeq
-    def padTo(df: DataFrame): DataFrame = df.select(schema.fields.toSeq.map { fld =>
-      if (df.columns.contains(fld.name)) col(fld.name).cast(fld.dataType).as(fld.name)
-      else lit(null).cast(fld.dataType).as(fld.name)
-    }: _*)
-    // affected-file rows feed the rewrite union AND three change-feed
-    // projections — persist for the duration of this merge so the files
-    // decode once (spills past memory; bounded by the rewrite set,
-    // which is materialized to parquet below anyway)
-    val affectedRows =
-      if (affectedRel.isEmpty) None
-      else Some(readDataFilesLive(spark, table, snap, affectedRel)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
-      val rewritten = affectedRows match {
-        case None => updates
-        case Some(rows) =>
-          rows.join(broadcast(updKeys), keys, "left_anti")
-            .unionByName(updates, allowMissingColumns = true)
-            .select(ordered: _*)
-      }
-      // change feed: replaced rows as pre/post images, fresh keys as
-      // inserts — an upsert's row-level delta, knowable only now
-      val cdcDf = affectedRows match {
-        case None => padTo(updates).withColumn(ChangeTypeCol, lit("insert"))
-        case Some(rows) =>
-          val tableKeys = rows.select(keys.map(col): _*).distinct()
-          padTo(rows.join(broadcast(updKeys), keys, "left_semi"))
-            .withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(padTo(updates.join(tableKeys, keys, "left_semi"))
-              .withColumn(ChangeTypeCol, lit("update_postimage")))
-            .unionByName(padTo(updates.join(tableKeys, keys, "left_anti"))
-              .withColumn(ChangeTypeCol, lit("insert")))
-      }
-      // no matched file ⇒ the commit is append-shaped (no removes) and
-      // its change rows are exactly the added files' rows — skip the
-      // CDC staged write and let [[changesOfEntry]] synthesize the
-      // identical inserts from the adds (guide §5: one fewer full
-      // execution of the update plan per no-match merge). When both
-      // writes run, they are independent — overlapped (guide §2.6).
-      val (newFiles, cdcFiles) = stageConcurrently(
-        stageFiles(spark, table, rewritten, snap.partitionColumns,
-          stagingMap, checks = snap.constraints))(
-        affectedRows match {
-          case None    => None
-          case Some(_) => Some(stageChangeFiles(spark, table, cdcDf))
-        })
-      commitRewrite(spark, table, snap, "MERGE",
-        cur => mergeSchemas(cur.schema, incoming),
-        newFiles, affectedRel, scopeToUpdatePartitions, cdc = cdcFiles)
-    } finally affectedRows.foreach(_.unpersist(blocking = false))
-  }
+            keys: Seq[String], scopeToUpdatePartitions: Boolean = false): Long =
+    RowLevelOps.run(spark, table, RowLevelOps.Statement("MERGE", Some(updates0), keys,
+      upsert = true, scoped = scopeToUpdatePartitions))
 
   // ------------------------------------------------------------- mergeRows
 
@@ -2579,24 +2442,21 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * conditions/assignments may reference the target side only). Rows
     * claimed by no clause carry over unchanged.
     *
-    * File-granularity copy-on-write like [[merge]]: the rewrite set is
-    * the files containing a key match, plus — only when NOT MATCHED BY
-    * SOURCE clauses exist — the files containing rows passing any such
-    * clause's condition (that detection is a pushed-filter scan, so
-    * DataSkipping bounds it by the files the conditions could match).
-    * `scopeToUpdatePartitions` has [[merge]]'s contract and enables
-    * the same disjoint-race rebase; it is ignored (full detection,
-    * abort-on-race) when NOT MATCHED BY SOURCE clauses exist, since
-    * those semantically concern the WHOLE table. The target schema is
-    * FIXED here (assignments must name existing columns — schema
-    * evolution stays on the unconditional [[merge]] path); assigned
-    * values cast to the column's snapshot type.
+    * File-granularity copy-on-write: the rewrite set is the files
+    * holding a key match (with WHEN MATCHED clauses) or a row a NOT
+    * MATCHED BY SOURCE clause claims. `scopeToUpdatePartitions` has
+    * [[merge]]'s contract and enables the same disjoint-race rebase; it
+    * is ignored (full detection, abort-on-race) when NOT MATCHED BY
+    * SOURCE clauses exist, since those semantically concern the WHOLE
+    * table. The target schema is FIXED here (assignments must name
+    * existing columns — schema evolution stays on the [[merge]]
+    * upsert); assigned values cast to the column's snapshot type.
     *
     * With ONLY insert clauses, nothing is rewritten: the anti-joined
-    * insert rows are appended — but through a version-checked commit
-    * that ABORTS on any concurrent commit rather than rebasing
-    * blindly, because a racing writer could have inserted the same key
-    * between the anti-join read and the commit.
+    * insert rows are appended through a commit that ABORTS on any
+    * concurrent commit rather than rebasing, because a racing writer
+    * could have inserted the same key between the anti-join read and
+    * the commit.
     *
     * `source` must be key-unique; violations fail loudly (the SQL
     * cardinality error) instead of silently duplicating target rows.
@@ -2607,267 +2467,11 @@ object LakeTable extends org.apache.spark.internal.Logging {
                 notMatchedBySource: Seq[MatchedClause] = Nil,
                 scopeToUpdatePartitions: Boolean = false,
                 txn: Option[(String, Long)] = None,
-                extraTxns: Map[String, Long] = Map.empty): Long = {
-    require(matched.nonEmpty || notMatchedInsert.nonEmpty || notMatchedBySource.nonEmpty,
-      "mergeRows needs at least one matched, insert, or not-matched-by-source clause")
-    val snap = latestSnapshot(spark, table)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
-    // application watermark(s) already at or past these versions: the
-    // work was committed by a previous (possibly crashed-and-replayed)
-    // run. With several watermarks (e.g. a two-source incremental
-    // join), ALL must be current — one stale source means real work.
-    val allTxns = txn.toMap ++ extraTxns
-    if (allTxns.nonEmpty &&
-        allTxns.forall { case (appId, v) => snap.txns.get(appId).exists(_ >= v) })
-      return snap.version
-    val assignedCols = (matched ++ notMatchedBySource)
-      .collect { case MatchedUpdate(_, set) => set.keys }.flatten ++
-      notMatchedInsert.flatMap(_._2.keys)
-    val unknown = assignedCols.filterNot(snap.schema.fieldNames.contains).toSeq.distinct
-    require(unknown.isEmpty,
-      s"mergeRows on $table assigns unknown column(s): ${unknown.mkString(", ")} — " +
-        "schema evolution is only supported by the unconditional merge/upsert path")
-    require(keys.forall(snap.schema.fieldNames.contains),
-      s"merge keys must be target columns: ${keys.mkString(", ")}")
-
-    // The source is scanned several times below — cardinality check,
-    // matched-file detection, rewrite join, insert anti-join, CDC
-    // projection. Persist it once so every scan reads the same
-    // materialization: a non-deterministic source (rand(), uuid(), a
-    // re-shuffling subquery) could otherwise pass the cardinality check
-    // yet yield DIFFERENT rewrite vs change-feed images per scan — the
-    // reason Delta stages its MERGE source before acting on it.
-    // MEMORY_AND_DISK spills instead of evicting, so each source row is
-    // computed once barring executor loss.
-    val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try mergeRowsOn(spark, table, snap, src, keys, matched, notMatchedInsert,
-      notMatchedBySource, scopeToUpdatePartitions, txn.toMap ++ extraTxns)
-    finally src.unpersist(blocking = false)
-  }
-
-  /** [[mergeRows]] after validation, acting on the persisted source. */
-  private def mergeRowsOn(spark: SparkSession, table: String, snap: Snapshot,
-                          source: DataFrame, keys: Seq[String],
-                          matched: Seq[MatchedClause],
-                          notMatchedInsert: Seq[(Option[Column], Map[String, Column])],
-                          notMatchedBySource: Seq[MatchedClause],
-                          scopeToUpdatePartitions: Boolean,
-                          txnUpdate: Map[String, Long]): Long = {
-    // SQL MERGE cardinality: a target row matching two source rows is
-    // an error, never a silent duplicate — with equality keys that can
-    // only come from duplicate source keys. On the rewrite paths the
-    // check RIDES the detection job as a sentinel row (guide §1.2/§5:
-    // one fewer driver action and planning round per merge) instead of
-    // running as its own count; the insert-only path keeps a dedicated
-    // preflight (it has no detection job to ride).
-    val keyCols = keys.map(col)
-    val updKeys = source.select(keyCols: _*).distinct()
-    val dupMark = "\u0000__dup_key__" // impossible in a file URI
-    def dupProbe: DataFrame = source.groupBy(keyCols: _*)
-      .agg(count(lit(1)).as("__cnt")).filter(col("__cnt") > 1)
-      .limit(1).select(lit(dupMark).as("__file"))
-    def requireNoDupMark(all: Array[String]): Array[String] = {
-      require(!all.contains(dupMark),
-        s"MERGE source has duplicate values of key (${keys.mkString(", ")}) — " +
-          "each target row may match at most one source row")
-      all
-    }
-    val ordered = snap.schema.fields.toSeq
-
-    def insertProjection(anti: DataFrame): DataFrame =
-      insertProjectionOf(anti, notMatchedInsert, ordered)
-
-    if (matched.isEmpty && notMatchedBySource.isEmpty) {
-      // insert-only: no rewrite; anti-join against the PINNED snapshot,
-      // then a commit that refuses to land over anyone else's
-      val dupKeys = source.groupBy(keyCols: _*).count()
-        .filter(col("count") > 1).limit(1).count()
-      require(dupKeys == 0L,
-        s"MERGE source has duplicate values of key (${keys.mkString(", ")}) — " +
-          "each target row may match at most one source row")
-      val insertRows = insertProjection(
-        source.alias("s")
-          .join(read(spark, table, asOf = Some(snap.version)).select(keyCols: _*),
-            keys, "left_anti"))
-      val newFiles = stageFiles(spark, table, insertRows, snap.partitionColumns,
-        ColumnMapping.mapping(snap.schema), checks = snap.constraints)
-      // no recorded change files: an insert-only merge is append-shaped
-      // (no removes), so [[changesOfEntry]] synthesizes the identical
-      // insert rows from the added files — the second full execution of
-      // the anti-join (the CDC staged write) is pure overhead (guide §5)
-      val next = Snapshot(snap.version + 1, System.currentTimeMillis(), "MERGE",
-        snap.schema, snap.partitionColumns, snap.files ++ newFiles,
-        txns = snap.txns ++ txnUpdate)
-      if (!tryCommit(spark, table, next, newFiles, Nil, cdc = None,
-          prev = Some(snap))) {
-        val f = fs(spark, table)
-        newFiles.foreach(e =>
-          try f.delete(new Path(dataPath(table), e.path), false)
-          catch { case _: java.io.IOException => () })
-        throw new ConcurrentCommitException(
-          s"insert-only MERGE on $table lost the commit race — re-run (a concurrent " +
-            "commit may have inserted keys this merge's anti-join never saw)")
-      }
-      return next.version
-    }
-
-    // ---- rewrite clauses present: copy-on-write over the affected files
-    val scoped = scopeToUpdatePartitions && notMatchedBySource.isEmpty
-    // dv-aware, `__file` column; the partition scope rides in as the
-    // below-the-file-column predicate so pruning still fires
-    val detectionSource = detectionScan(spark, table, snap, scope =
-      if (scoped && snap.partitionColumns.nonEmpty)
-        Some(partitionTuplePredicate(source, snap.partitionColumns))
-      else None)
-    // needed by matched clauses AND by the insert anti-join (whose
-    // soundness requires every file containing a source key to be in
-    // the affected set). The duplicate-source-key sentinel rides this
-    // job (or the NMBS one when this tier is absent).
-    val matchedFileAbs =
-      if (matched.isEmpty && notMatchedInsert.isEmpty) Array.empty[String]
-      else requireNoDupMark(detectionSource
-        .join(broadcast(updKeys), keys)
-        .select("__file").distinct()
-        .unionByName(dupProbe)
-        .collect().map(_.getString(0)))
-    // NOT MATCHED BY SOURCE detection: any file holding a row that
-    // passes some clause's condition may need rewriting (the row might
-    // be unmatched — only the join can tell). Pushed-filter scan, so
-    // the logged bounds skip files the conditions exclude; an
-    // unconditional clause means every file.
-    val nmbsFileAbs =
-      if (notMatchedBySource.isEmpty) Array.empty[String]
-      else {
-        val pred = notMatchedBySource
-          .map(_.condition.map(c => coalesce(c, lit(false))).getOrElse(lit(true)))
-          .reduce(_ || _)
-        val files = detectionScan(spark, table, snap, alias = Some("t"),
-          scope = Some(pred)).select(col("__file")).distinct()
-        val withProbe =
-          if (matched.isEmpty && notMatchedInsert.isEmpty)
-            files.unionByName(dupProbe)
-          else files
-        requireNoDupMark(withProbe.collect().map(_.getString(0)))
-      }
-    val affectedRel = mapMatchedRel(spark, table,
-      (matchedFileAbs ++ nmbsFileAbs).distinct, "MERGE", snap)
-
-    val base = dataPath(table).toString
-    val sMarked = source.withColumn("__s_matched", lit(true))
-
-    // NOTE on caching: the target⋈source join feeds the rewrite write
-    // and the change-feed write, so persisting it looks attractive —
-    // measured, it LOSES: the rewrite set is the bulk of the merge's
-    // data, and writing it to the block store costs more than the
-    // (columnar scan + one shuffle) recompute it saves. The SOURCE is
-    // persisted (in mergeRows); the target side deliberately re-scans.
-    val (rewritten, cdcRewrite) =
-      if (affectedRel.isEmpty) (None, None)
-      else {
-        val t = readDataFilesLive(spark, table, snap, affectedRel).alias("t")
-        val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-        val joined = t.join(sMarked.alias("s"), keyCond, "left_outer")
-        val matchedMark = col("__s_matched").isNotNull
-        val applied = appliedMarks(matchedMark, matched) ++
-          appliedMarks(!matchedMark, notMatchedBySource)
-        val deleted = applied.collect { case (a, _: MatchedDelete) => a }
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val projected = ordered.map { fld =>
-          val updates = applied.collect {
-            case (a, MatchedUpdate(_, set)) if set.contains(fld.name) =>
-              (a, set(fld.name).cast(fld.dataType))
-          }
-          updates.foldRight(col(s"t.${fld.name}")) { case ((a, v), acc) =>
-            when(a, v).otherwise(acc)
-          }.as(fld.name)
-        }
-        // change feed: pre/post of clause-updated rows, deletes of
-        // clause-deleted rows — computed off the same join
-        val tCols = ordered.map(fld => col(s"t.${fld.name}").as(fld.name))
-        val updatedMark = applied.collect { case (a, _: MatchedUpdate) => a }
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val cdcDf = joined.filter(updatedMark).select(tCols: _*)
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(joined.filter(updatedMark).select(projected: _*)
-            .withColumn(ChangeTypeCol, lit("update_postimage")))
-          .unionByName(joined.filter(coalesce(deleted, lit(false))).select(tCols: _*)
-            .withColumn(ChangeTypeCol, lit("delete")))
-        (Some(joined.filter(!coalesce(deleted, lit(false))).select(projected: _*)),
-          Some(cdcDf))
-      }
-
-    val insertRows =
-      if (notMatchedInsert.isEmpty) None
-      else Some {
-        // every matched key's rows live in files the matched detection
-        // saw; those files are all in affectedRel, so "key not in
-        // affected rows" ⇔ "key not in the table"
-        val existingKeys =
-          if (affectedRel.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-              StructType(keys.map(k => snap.schema(k))))
-          else readDataFilesLive(spark, table, snap, affectedRel)
-            .select(keyCols: _*)
-        insertProjection(source.alias("s").join(existingKeys, keys, "left_anti"))
-      }
-
-    val toWrite = (rewritten, insertRows) match {
-      case (Some(r), Some(i)) => r.unionByName(i)
-      case (Some(r), None)    => r
-      case (None, Some(i))    => i
-      case (None, None)       =>
-        // rewrite clauses but no affected file and no insert: no-op
-        return snap.version
-    }
-    val cdcAll = (cdcRewrite.toSeq ++
-      insertRows.map(_.withColumn(ChangeTypeCol, lit("insert"))).toSeq)
-      .reduce(_ unionByName _)
-    // independent staged writes — overlapped (guide §2.6)
-    val (newFiles, cdcFiles) = stageConcurrently(
-      stageFiles(spark, table, toWrite, snap.partitionColumns,
-        ColumnMapping.mapping(snap.schema), checks = snap.constraints))(
-      stageChangeFiles(spark, table, cdcAll))
-    commitRewrite(spark, table, snap, "MERGE", _ => snap.schema,
-      newFiles, affectedRel, scoped, cdc = Some(cdcFiles), txnUpdate = txnUpdate)
-  }
-
-  /** Ordered first-true-wins application marks: applied_i = gate ∧
-    * ¬c₁ ∧ … ∧ ¬c_{i-1} ∧ c_i (NULL conditions do not apply). Shared by
-    * the CoW ([[mergeRows]]) and MoR ([[mergeRowsMergeOnRead]]) clause
-    * evaluators so both paths agree on SQL MERGE clause semantics.
-    */
-  private def appliedMarks(gate: Column, clauses: Seq[MatchedClause]): Seq[(Column, MatchedClause)] = {
-    var notPrev: Column = lit(true)
-    clauses.map { cl =>
-      val c = cl.condition.map(x => coalesce(x, lit(false))).getOrElse(lit(true))
-      val a = gate && notPrev && c
-      notPrev = notPrev && !c
-      (a, cl)
-    }
-  }
-
-  /** Insert projection for anti-joined source rows under ordered insert
-    * clauses; rows claimed by no clause are dropped.
-    */
-  private def insertProjectionOf(anti: DataFrame,
-                                 notMatchedInsert: Seq[(Option[Column], Map[String, Column])],
-                                 ordered: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
-    var notPrev: Column = lit(true)
-    val marks = notMatchedInsert.map { case (cond, image) =>
-      val c = cond.map(x => coalesce(x, lit(false))).getOrElse(lit(true))
-      val a = notPrev && c
-      notPrev = notPrev && !c
-      (a, image)
-    }
-    anti.filter(marks.map(_._1).reduce(_ || _))
-      .select(ordered.map { fld =>
-        marks.collect { case (a, image) if image.contains(fld.name) =>
-          (a, image(fld.name).cast(fld.dataType))
-        }.foldRight(lit(null).cast(fld.dataType): Column) { case ((a, v), acc) =>
-          when(a, v).otherwise(acc)
-        }.as(fld.name)
-      }: _*)
-  }
+                extraTxns: Map[String, Long] = Map.empty): Long =
+    RowLevelOps.run(spark, table, RowLevelOps.Statement("MERGE", Some(source), keys,
+      matched, notMatchedInsert, notMatchedBySource,
+      scoped = scopeToUpdatePartitions && notMatchedBySource.isEmpty,
+      txns = txn.toMap ++ extraTxns))
 
   /** A user partition predicate resolved against a snapshot's partition
     * schema, evaluable driver-side: per FILE path (exact, all columns
@@ -2933,102 +2537,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
     new PartitionScope(bound, pSchema, tz)
   }
 
-  /** Partition-tuple predicate of `updates`' distinct partition values
-    * — bounded by partitions touched, not rows (the scoped-detection
-    * pruner shared by [[merge]] and [[mergeRows]]).
-    */
-  private def partitionTuplePredicate(updates: DataFrame,
-                                      pcols: Seq[String]): Column = {
-    val tuples = updates.select(pcols.map(col): _*).distinct().collect()
-    if (tuples.isEmpty) lit(false)
-    else tuples.map { r =>
-      pcols.zipWithIndex.map { case (c, i) =>
-        if (r.isNullAt(i)) col(c).isNull else col(c) === lit(r.get(i))
-      }.reduce(_ && _)
-    }.reduce(_ || _)
-  }
-
-  /** Decode + qualify `input_file_name()` URIs into snapshot-relative
-    * paths; a matched file that cannot be mapped under the data root
-    * is a hard error (silently dropping it would commit duplicates).
-    */
-  private def mapMatchedRel(spark: SparkSession, table: String,
-                            matchedAbs: Array[String], op: String,
-                            snap: Snapshot): Seq[String] = {
-    val f = fs(spark, table)
-    val baseRaw = f.makeQualified(dataPath(table)).toUri.getPath.stripSuffix("/")
-    // foreign (cloned) entries match by their own decoded absolute
-    // path, not the clone's data root
-    val foreignByRaw: Map[String, String] = snap.filePaths
-      .filter(isForeignEntry).map(p => new Path(p).toUri.getPath -> p).toMap
-    val matchedSet = matchedAbs.map { abs =>
-      val p = decodeFileUri(abs)
-      if (p.startsWith(baseRaw + "/")) p.drop(baseRaw.length + 1)
-      else foreignByRaw.getOrElse(p,
-        throw new IllegalArgumentException(
-          s"$op matched file $p outside the table data root $baseRaw/ and not a " +
-            "cloned reference of this snapshot — refusing to commit (the file " +
-            "could not be marked for rewrite)"))
-    }.toSet
-    snap.filePaths.filter(matchedSet.contains)
-  }
-
-  /** The copy-on-write commit loop shared by [[merge]] and
-    * [[mergeRows]]: replace `affectedRel` with `newFiles` on top of
-    * the base snapshot; on a lost race, rebase iff the merge was
-    * scoped and the winner's changes are provably disjoint from this
-    * merge's footprint (read partitions + written files), else abort
-    * loudly.
-    */
-  private def commitRewrite(spark: SparkSession, table: String, baseSnap: Snapshot,
-                            op: String, schemaOf: Snapshot => StructType,
-                            newFiles: Seq[FileEntry], affectedRel: Seq[String],
-                            scoped: Boolean, cdc: Option[Seq[String]] = None,
-                            txnUpdate: Map[String, Long] = Map.empty): Long = {
-    val affectedPathSet = affectedRel.toSet
-    // Disjointness keys on HIVE-PARTITION identity, not the parent dir:
-    // bulk-move commits (r17) give every unpartitioned commit a distinct
-    // batch dir, so a parent-dir check would judge any two of them
-    // disjoint and silently rebase over rows the detection scan never
-    // saw. partitionDirOf maps all unpartitioned files to "" — they
-    // always conflict, matching the AddFile-vs-read-predicate rule.
-    val footprintDirs = (newFiles.map(e => partitionDirOf(e.path)) ++
-      affectedRel.map(partitionDirOf)).toSet
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = if (attempt == 0) baseSnap
-        else latestSnapshot(spark, table).getOrElse(baseSnap)
-      if (cur.version != baseSnap.version) {
-        val baseSet = baseSnap.filePaths.toSet
-        val curSet = cur.filePaths.toSet
-        val winnerChanged =
-          cur.files.filterNot(e => baseSet(e.path)) ++
-          baseSnap.files.filterNot(e => curSet(e.path))
-        val disjoint = scoped &&
-          cur.schema == baseSnap.schema &&
-          cur.partitionColumns == baseSnap.partitionColumns &&
-          // rows were validated against baseSnap's CHECK constraints;
-          // a rebase over a changed set would commit unvalidated rows
-          cur.constraints == baseSnap.constraints &&
-          !winnerChanged.exists(e => footprintDirs(partitionDirOf(e.path)))
-        if (!disjoint)
-          throw new ConcurrentCommitException(
-            s"$op on $table lost the commit race to v${cur.version} and the winning " +
-              "commit overlaps this merge's scanned partitions (or changed the " +
-              "schema/layout) — cannot rebase safely, re-run the merge")
-      }
-      val next = Snapshot(cur.version + 1, System.currentTimeMillis(), op,
-        schemaOf(cur), cur.partitionColumns,
-        cur.files.filterNot(e => affectedPathSet(e.path)) ++ newFiles,
-        txns = cur.txns ++ txnUpdate)
-      if (tryCommit(spark, table, next, newFiles, affectedRel, cdc = cdc,
-          prev = Some(cur)))
-        return next.version
-      attempt += 1
-    }
-    throw new ConcurrentCommitException(s"$op on $table lost $maxRetries commit races")
-  }
-
   // ---------------------------------------------------------------- delete
 
   /** Copy-on-write DELETE: remove the rows matching `condition`,
@@ -3039,379 +2547,49 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * Previous versions still time-travel. Returns the committed
     * version — the current one unchanged when nothing matched.
     *
-    * Detection runs on the pinned snapshot and collects matched FILE
-    * NAMES (bounded by file count, not rows); the rewrite reads just
-    * those files and keeps their non-matching rows. A lost commit race
-    * aborts with [[ConcurrentCommitException]] rather than rebasing:
-    * any concurrent change could contain rows this delete's scan never
-    * saw, and a silent rebase would resurrect or miss them.
+    * METADATA-ONLY fast path: a file every live row of which provably
+    * matches the predicate is dropped from the snapshot WITHOUT being
+    * read or rewritten ([[DataSkipping.proveAllRows]] over the logged
+    * min/max bounds, the hive partition values, and the source ranges
+    * generated-transform partition values imply) — so a retention
+    * delete (`ts < cutoff` on a day-partitioned 100 TB fact) costs
+    * O(boundary partition). The dropped files' delete rows are not
+    * recorded as change data; the commit marks them `removedFull` and
+    * the change feed synthesizes them lazily from the previous snapshot
+    * (reader protocol 4 — see [[Protocol]]).
+    *
+    * A lost commit race rebases onto the winner when every file the
+    * winner added provably misses the predicate and every file this
+    * delete read is unchanged (the continuous-ingest-vs-retention race);
+    * anything else refuses with [[ConcurrentCommitException]].
     */
-  /** Copy-on-write DELETE with a METADATA-ONLY fast path: a file every
-    * live row of which provably matches the predicate is dropped from
-    * the snapshot WITHOUT being read or rewritten
-    * ([[DataSkipping.proveAllRows]] over the logged min/max bounds, the
-    * hive partition values, and the source ranges generated-transform
-    * partition values imply) — so a retention delete
-    * (`ts < cutoff` on a day-partitioned 100 TB fact) costs O(boundary
-    * partition): interior days leave by log edit, only the files
-    * STRADDLING the cutoff are scanned and rewritten. The dropped
-    * files' delete rows are not recorded as change data (that would
-    * mean reading them); the commit marks them `removedFull` and the
-    * change feed synthesizes their rows lazily from the previous
-    * snapshot (reader protocol 4 — see [[Protocol]]).
-    */
-  def delete(spark: SparkSession, table: String, condition: Column): Long = {
-    val snap = latestSnapshot(spark, table)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
-    val conds = resolvedConjuncts(spark, snap.schema, condition)
-
-    // ---- metadata pass: whole-file drops, before ANY data I/O
-    val dropped = provablyCoveredFiles(spark, snap, conds)
-    val droppedSet = dropped.toSet
-
-    // ---- detection over the REMAINING candidates only (driver-side
-    // pruned by partitions + bounds + bloom) — the dropped files are
-    // never opened; that is the point
-    val remaining = snap.files.filterNot(e => droppedSet.contains(e.path))
-    val cand = prunedEntries(spark, table, snap.copy(files = remaining), conds)
-    val matchedAbs =
-      if (cand.isEmpty) Array.empty[String]
-      else morScan(spark, table, snap, cand, keepPos = true)
-        .withColumnRenamed(FilePathCol, "__file").drop(RowPosCol)
-        .filter(condition)
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0))
-    if (matchedAbs.isEmpty && dropped.isEmpty) return snap.version
-
-    // same URI-decode + qualify discipline as merge: a matched file
-    // that cannot be mapped under the data root is a hard error
-    val affectedRel =
-      if (matchedAbs.isEmpty) Seq.empty[String]
-      else mapMatchedRel(spark, table, matchedAbs, "DELETE", snap)
-    val removedAll = affectedRel ++ dropped
-    val removedSet = removedAll.toSet
-
-    // CoW rewrite + recorded change rows for the PARTIALLY matched
-    // files only; the dropped files' deletes ride as removedFull
-    val (newFiles, cdcFiles) =
-      if (affectedRel.isEmpty) (Seq.empty[FileEntry], Seq.empty[String])
-      else {
-        val affectedDf = readDataFilesLive(spark, table, snap, affectedRel)
-        val kept = affectedDf.filter(!coalesce(condition, lit(false)))
-        // independent staged writes — overlapped (guide §2.6)
-        stageConcurrently(
-          stageFiles(spark, table, kept, snap.partitionColumns,
-            ColumnMapping.mapping(snap.schema)))(
-          stageChangeFiles(spark, table,
-            affectedDf.filter(coalesce(condition, lit(false)))
-              .withColumn(ChangeTypeCol, lit("delete"))))
-      }
-
-    // Commit, rebasing onto concurrent commits when PROVABLY safe —
-    // the continuous-ingest-vs-nightly-retention race. A rebase is
-    // sound iff (a) schema/layout/constraints are unchanged, (b) every
-    // file this delete removes is still present UNCHANGED in the new
-    // head (FileEntry equality — a racing MoR delete's dv on one of
-    // our files disqualifies: kept rows and change images were
-    // computed under the old vector state), and (c) none of the
-    // winners' ADDED files can contain a matching row — proven by the
-    // same driver-side pruning a detection scan uses (partition
-    // values, transform bounds, logged min/max, bloom); a fresh
-    // append of ts >> cutoff proves disjoint by its stats, anything
-    // unprovable refuses loudly (Delta's AddFile-vs-predicate
-    // conflict rule).
-    deleteBeforeCommitHook()
-    commitPredicateRewrite(spark, table, snap, "DELETE", newFiles, removedAll,
-      conds, cdcFiles, removedFull = dropped)
-  }
-
-  /** The metadata pass behind retention deletes: files of `snap` whose
-    * every row PROVABLY satisfies the conjuncts
-    * ([[DataSkipping.proveAllRows]]) given the logged footer stats,
-    * the file's hive partition values (constant per file — partition
-    * columns are never renamed, so logical == physical), and the
-    * source intervals generated-transform partition values imply
-    * ([[GeneratedColumns.sourceBounds]]). `conds`'s AND must equal the
-    * caller's predicate exactly (resolvedConjuncts guarantees it when
-    * non-empty; empty proves nothing).
-    */
-  private def provablyCoveredFiles(spark: SparkSession, snap: Snapshot,
-      conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[String] = {
-    if (conds.isEmpty) return Nil
-    val resolver = spark.sessionState.conf.resolver
-    val pSchema = GraftDataSource.asNullable(
-      StructType(snap.partitionColumns.map(snap.schema(_))))
-    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
-    val nameMap = ColumnMapping.mapping(snap.schema)
-    val physSchema = ColumnMapping.physicalSchema(snap.schema)
-    val physConds =
-      if (ColumnMapping.needsTranslation(snap.schema))
-        conds.map(ColumnMapping.physicalizeExpr(_, nameMap))
-      else conds
-    val gens = GeneratedColumns.specs(snap.schema)
-      .filter(s => snap.partitionColumns.contains(s.target))
-    snap.files.filter { e =>
-      val row = PartitionPaths.valuesOf(e.path, pSchema, tz)
-      val known = scala.collection.mutable.Map.empty[String, DataSkipping.KnownBounds]
-      pSchema.fields.zipWithIndex.foreach { case (f, i) =>
-        if (!row.isNullAt(i))
-          known(f.name) =
-            DataSkipping.KnownBounds(f.dataType, row.get(i, f.dataType), row.get(i, f.dataType))
-      }
-      gens.foreach { sp =>
-        val i = pSchema.fieldIndex(sp.target)
-        if (!row.isNullAt(i)) {
-          snap.schema.find(_.name == sp.source).foreach { sf =>
-            GeneratedColumns.sourceBounds(sp.transform, sf.dataType,
-                row.get(i, pSchema(sp.target).dataType)).foreach { case (lo, hi) =>
-              known(nameMap.getOrElse(sp.source, sp.source)) =
-                DataSkipping.KnownBounds(sf.dataType, lo, hi)
-            }
-          }
-        }
-      }
-      DataSkipping.proveAllRows(physConds, physSchema, resolver, e, known.toMap)
-    }.map(_.path)
-  }
-
-  /** Commit loop for predicate-scoped copy-on-write rewrites (DELETE /
-    * UPDATE): replace `removedAll` with `newFiles` on top of the base
-    * snapshot, REBASING onto concurrent commits when provably safe —
-    * the continuous-ingest-vs-maintenance-DML race. A rebase is sound
-    * iff (a) schema/layout/constraints are unchanged, (b) every file
-    * this rewrite removes is still present UNCHANGED in the new head
-    * (FileEntry equality — a racing MoR vector on one of our files
-    * disqualifies: kept rows and change images were computed under the
-    * old vector state), and (c) none of the winners' ADDED files can
-    * contain a row matching `conds` — proven by the same driver-side
-    * pruning a detection scan uses (partition values, transform
-    * bounds, logged min/max, bloom); a fresh append of future data
-    * proves disjoint by its stats, anything unprovable refuses loudly
-    * (Delta's AddFile-vs-predicate conflict rule).
-    */
-  private def commitPredicateRewrite(spark: SparkSession, table: String,
-      base: Snapshot, op: String, newFiles: Seq[FileEntry],
-      removedAll: Seq[String],
-      conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      cdcFiles: Seq[String], removedFull: Seq[String] = Nil): Long = {
-    val removedSet = removedAll.toSet
-    var cur = base
-    var attempt = 0
-    while (true) {
-      val next = Snapshot(cur.version + 1, System.currentTimeMillis(), op,
-        cur.schema, cur.partitionColumns,
-        cur.files.filterNot(e => removedSet.contains(e.path)) ++ newFiles,
-        txns = cur.txns,
-        protocol = if (removedFull.nonEmpty) Protocol(4, 1) else Protocol(1, 1))
-      if (tryCommit(spark, table, next, newFiles, removedAll, cdc = Some(cdcFiles),
-          prev = Some(cur), removedFull = removedFull))
-        return next.version
-      attempt += 1
-      if (attempt >= maxRetries)
-        throw new ConcurrentCommitException(
-          s"$op on $table lost $maxRetries commit races — re-run")
-      val newest = latestSnapshot(spark, table).getOrElse(
-        throw new IllegalStateException(s"log of $table disappeared mid-commit"))
-      def refuse(why: String): Nothing = throw new ConcurrentCommitException(
-        s"$op on $table lost the commit race to v${newest.version} and $why — " +
-          "cannot rebase safely, re-run (a concurrent commit may contain rows " +
-          s"this ${op.toLowerCase} never scanned)")
-      if (newest.schema != cur.schema || newest.partitionColumns != cur.partitionColumns)
-        refuse("the winner changed the schema or partition layout")
-      if (newest.constraints != cur.constraints)
-        refuse("the winner changed the CHECK constraints")
-      val curByPath = cur.files.iterator.map(e => e.path -> e).toMap
-      val newestByPath = newest.files.iterator.map(e => e.path -> e).toMap
-      removedAll.foreach { p =>
-        if (!newestByPath.get(p).contains(curByPath(p)))
-          refuse(s"the winner rewrote, vectored or removed $p, a file this " +
-            s"${op.toLowerCase} read")
-      }
-      val winnersAdds = newest.files.filterNot(e => curByPath.get(e.path).contains(e))
-      if (conds.isEmpty && winnersAdds.nonEmpty)
-        refuse("the predicate did not resolve for a disjointness proof")
-      val mightMatch = prunedEntries(spark, table,
-        newest.copy(files = winnersAdds), conds)
-      if (mightMatch.nonEmpty)
-        refuse(s"the winner added file(s) the predicate cannot be proven to miss " +
-          s"(e.g. ${mightMatch.head.path})")
-      cur = newest
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Vector-key column for the MoR position-delete paths: a matched
-    * row in a LOCAL file keys on its data-root-relative path; a row in
-    * a CLONED (foreign) file keys on the file's absolute URI verbatim —
-    * the same key form [[shallowClone]] re-keys inherited vectors with,
-    * and the form `_metadata.file_path` yields at scan time, so
-    * [[morScan]]'s verbatim absolute-key resolution applies both
-    * without caring who wrote them. `foreignAffected` is the matched
-    * foreign entry set ([[mapMatchedRel]] already proved every matched
-    * file is either local or a cloned reference of this snapshot);
-    * anything else fails loudly IN THE PLAN rather than committing a
-    * vector no scan would ever match.
-    */
-  private def morVectorKey(spark: SparkSession, table: String, op: String,
-                           foreignAffected: Seq[String]): Column = {
-    val prefix = scanDataPrefix(spark, table)
-    val bad = raise_error(concat(
-      lit(s"$op on $table matched a file outside the data root: "),
-      col(FilePathCol)))
-    // log-form foreign paths transcode to the scan form the column
-    // carries ([[mapMatchedRel]] applies the inverse decode) — a
-    // verbatim comparison would miss percent-encodable paths and raise
-    // the misleading outside-the-data-root error for a legitimately
-    // matched cloned file
-    val foreignLeg =
-      if (foreignAffected.isEmpty) bad
-      else when(col(FilePathCol).isInCollection(foreignAffected.map(scanFormAbs)),
-        col(FilePathCol)).otherwise(bad)
-    when(col(FilePathCol).startsWith(prefix),
-      col(FilePathCol).substr(lit(prefix.length + 1), lit(Int.MaxValue)))
-      .otherwise(foreignLeg)
-  }
-
-  /** Stage `df` (columns `p` = data-file-relative path, `pos` = row
-    * ordinal) as ONE new deletion-vector directory under `_deletes/`,
-    * returning its table-relative path. Partitioned by file so a
-    * reader's per-file rows cluster; `_SUCCESS` markers are hidden
-    * files the parquet read ignores.
-    */
-  private def stageDeleteVector(spark: SparkSession, table: String,
-                                df: DataFrame, parts: Int): String = {
-    val f = fs(spark, table)
-    val staging = new Path(new Path(table, "_staging"), java.util.UUID.randomUUID().toString)
-    meteredCommit(df.repartition(parts, col("p")).write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(staging.toString))
-    val name = java.util.UUID.randomUUID().toString
-    val dest = new Path(deletesPath(table), name)
-    meteredCommit { meteredFileOps {
-      f.mkdirs(deletesPath(table))
-      if (!f.rename(staging, dest))
-        throw new IllegalStateException(
-          s"could not move staged deletion vector $staging to $dest")
-    }}
-    s"_deletes/$name"
-  }
+  def delete(spark: SparkSession, table: String, condition: Column): Long =
+    RowLevelOps.run(spark, table,
+      RowLevelOps.Statement("DELETE", bySource = Seq(MatchedDelete(Some(condition)))))
 
   /** Merge-on-read DELETE: instead of rewriting every data file that
     * contains a matching row (copy-on-write [[delete]] — O(bytes of
     * affected files)), commit a positional [[DeleteVector]] per
     * affected file and leave the data files untouched — O(deleted
     * rows) bytes written, the Iceberg-v2 positional-delete / Delta
-    * deletion-vector discipline (ref:
-    * trino_iceberg_transform_component.py:33,116-123). The canonical
-    * 100 TB case is a trickle of GDPR-style point deletes against a
-    * fact table: CoW rewrites the table; this writes kilobytes.
+    * deletion-vector discipline. The canonical 100 TB case is a trickle
+    * of GDPR-style point deletes against a fact table: CoW rewrites the
+    * table; this writes kilobytes.
     *
     * Reads apply the vectors via [[morScan]]; [[compact]] reconciles
     * them back into clean files; the change feed records the deleted
     * rows at commit time exactly like CoW. A file whose every row is
-    * deleted is simply REMOVED from the snapshot (no vector needed).
-    * Repeat deletes on the same file fold the old vector into the new
-    * one, so each entry references its complete deleted set. Commits
-    * stamp protocol (3, 3): older readers/writers refuse loudly
-    * instead of resurrecting rows. Returns the committed version —
-    * unchanged when nothing matched.
+    * deleted is simply REMOVED from the snapshot (no vector needed), and
+    * provably-covered files drop by metadata as in [[delete]]. Repeat
+    * deletes on the same file fold the old vector into the new one, so
+    * each entry references its complete deleted set. Commits stamp
+    * protocol (3, 3): older readers/writers refuse loudly instead of
+    * resurrecting rows. Races rebase under [[delete]]'s rule. Returns
+    * the committed version — unchanged when nothing matched.
     */
-  def deleteMergeOnRead(spark: SparkSession, table: String, condition: Column): Long = {
-    val snap = latestSnapshot(spark, table)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
-    val conds = resolvedConjuncts(spark, snap.schema, condition)
-    // metadata pass, shared with CoW delete: a provably-covered file
-    // needs no vector AND no read — it leaves by log edit, its delete
-    // rows ride removedFull for lazy feed synthesis. A MoR retention
-    // sweep therefore vectors only the boundary files.
-    val dropped = provablyCoveredFiles(spark, snap, conds)
-    val droppedSet = dropped.toSet
-    val remaining = snap.files.filterNot(e => droppedSet.contains(e.path))
-    val candidates = prunedEntries(spark, table, snap.copy(files = remaining), conds)
-    if (candidates.isEmpty && dropped.isEmpty) return snap.version
-
-    // one detection scan, three consumers (positions, per-file counts,
-    // change-feed preimages): persist so they agree and the scan runs
-    // once. Bounded by matched rows, not table size.
-    val matched = morScan(spark, table, snap, candidates, keepPos = true)
-      .filter(coalesce(condition, lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE action yields both the matched file set and the per-file
-      // new-position counts (guide §5: the old separate
-      // allRows.groupBy("p").count() job is gone); the committed
-      // cardinality adds the folded old vector's logged cardinality —
-      // sound because morScan already excludes dv'd rows, so new
-      // positions are disjoint from the old vector's by construction
-      val newCounts: Map[String, Long] = matched.groupBy(col(FilePathCol))
-        .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val matchedAbs = newCounts.keys.toArray
-      if (matchedAbs.isEmpty && dropped.isEmpty) return snap.version
-      val affectedRel =
-        if (matchedAbs.isEmpty) Seq.empty[String]
-        else mapMatchedRel(spark, table, matchedAbs, "DELETE", snap)
-      val affectedSet = affectedRel.toSet
-      val prefix = scanDataPrefix(spark, table)
-      def scanAbsOf(e: FileEntry): String =
-        if (isForeignEntry(e.path)) scanFormAbs(e.path)
-        else prefix + scanFormRel(e.path)
-
-      // vectors + recorded change rows only for the PARTIALLY matched
-      // files; a dropped file's deletes ride as removedFull
-      val (updated, cdcFiles): (Seq[FileEntry], Seq[String]) =
-        if (affectedRel.isEmpty) (Seq.empty, Seq.empty)
-        else {
-          // new positions, keyed IN the plan (no driver round-trip of
-          // row-level data): local files relativize, cloned (foreign)
-          // files keep their absolute URIs — the clone-vector key form
-          val relCol = morVectorKey(spark, table, "DELETE",
-            affectedRel.filter(isForeignEntry))
-          val newRows = matched.select(relCol.as("p"), col(RowPosCol).as("pos"))
-
-          // fold in the affected files' existing vectors, so each
-          // rewritten entry's single dv reference is its COMPLETE
-          // deleted set
-          val withOldDv = candidates.filter(e => affectedSet(e.path) && e.dv.isDefined)
-          val allRows =
-            if (withOldDv.isEmpty) newRows
-            else newRows.unionByName(dvRows(spark, table, withOldDv)
-              .filter(col("p").isInCollection(withOldDv.map(scanKey))))
-          // two independent staged writes off the one persisted
-          // detection scan — overlapped (guide §2.6)
-          val (dvDir, cdc) = stageConcurrently(
-            stageDeleteVector(spark, table, allRows,
-              math.max(1, math.min(32, affectedRel.size))))(
-            stageChangeFiles(spark, table,
-              matched.drop(FilePathCol, RowPosCol)
-                .withColumn(ChangeTypeCol, lit("delete"))))
-
-          val upd = remaining.filter(e => affectedSet.contains(e.path)).flatMap { e =>
-            val newCard = newCounts.getOrElse(scanAbsOf(e), 0L)
-            // every affected file has >=1 matched row, so a missing key
-            // means the detection rows and the log disagree on path form
-            require(newCard > 0, s"internal: no matched rows keyed as " +
-              s"${e.path} — vector-key/entry-path form drift")
-            val card = newCard + e.dv.map(_.cardinality).getOrElse(0L)
-            // fully-deleted file: drop the entry outright (vacuum
-            // reclaims the bytes once the version ages out)
-            if (e.rowCount >= 0 && card >= e.rowCount) None
-            else Some(e.copy(dv = Some(DeleteVector(dvDir, card))))
-          }
-          (upd, cdc)
-        }
-
-      val carried = remaining.filterNot(e => affectedSet.contains(e.path))
-      val next = Snapshot(snap.version + 1, System.currentTimeMillis(), "DELETE",
-        snap.schema, snap.partitionColumns, carried ++ updated, txns = snap.txns,
-        protocol = Protocol(if (dropped.nonEmpty) 4 else 3, 3))
-      if (!tryCommit(spark, table, next, updated, affectedRel ++ dropped,
-          cdc = Some(cdcFiles), prev = Some(snap), removedFull = dropped))
-        throw new ConcurrentCommitException(
-          s"merge-on-read DELETE on $table lost the commit race — re-run (a " +
-            "concurrent commit may contain rows this delete never scanned)")
-      next.version
-    } finally matched.unpersist(blocking = false)
-  }
+  def deleteMergeOnRead(spark: SparkSession, table: String, condition: Column): Long =
+    RowLevelOps.run(spark, table, RowLevelOps.Statement("DELETE",
+      bySource = Seq(MatchedDelete(Some(condition))), mor = true))
 
   /** Merge-on-read UPDATE: express the update as a positional delete of
     * the old images plus an APPEND of the new ones — the Iceberg-v2
@@ -3419,110 +2597,17 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * file containing a match (copy-on-write [[update]]). A 1-row update
     * on a 100 TB fact therefore writes O(updated rows) bytes (one tiny
     * vector + one tiny data file), not O(bytes of affected files).
-    * Matched files keep their data untouched and gain (or fold) a
-    * [[DeleteVector]] hiding the pre-image rows; the post-image rows
-    * stage through the ordinary append path, so partition routing
-    * (including re-routing on a partition-column assignment), CHECK
-    * constraints, column mapping and generated columns all hold.
-    * The change feed records pre/post images exactly like CoW UPDATE.
-    * Commits stamp protocol (3, 3); returns the committed version —
-    * unchanged when nothing matched.
+    * The post-image rows stage through the ordinary append path, so
+    * partition routing (including re-routing on a partition-column
+    * assignment), CHECK constraints, column mapping and generated
+    * columns all hold. The change feed records pre/post images exactly
+    * like CoW UPDATE. Commits stamp protocol (3, 3); races rebase under
+    * [[delete]]'s rule; returns the committed version — unchanged when
+    * nothing matched.
     */
   def updateMergeOnRead(spark: SparkSession, table: String,
-                        set: Seq[(String, Column)], condition: Column): Long = {
-    val snap = latestSnapshot(spark, table)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
-    require(set.nonEmpty, s"UPDATE on $table assigns no columns")
-    val unknown = set.map(_._1).filterNot(n => snap.schema.fieldNames.contains(n))
-    require(unknown.isEmpty, s"UPDATE on $table assigns unknown column(s): " +
-      unknown.mkString(", "))
-    val setByName = set.toMap
-    val conds = resolvedConjuncts(spark, snap.schema, condition)
-    // file-level prune against the logged bounds: a selective predicate's
-    // detection scan reads only the files it could possibly match
-    val candidates = prunedEntries(spark, table, snap, conds)
-    if (candidates.isEmpty) return snap.version
-
-    // one dv-aware detection scan, three consumers (old positions,
-    // post-image rows, change-feed images): persist so they agree and
-    // the scan runs once. Bounded by matched rows, not table size.
-    val matched = morScan(spark, table, snap, candidates, keepPos = true)
-      .filter(coalesce(condition, lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one action for the matched file set AND per-file new-position
-      // counts; committed cardinality = new + folded old vector's
-      // logged cardinality (disjoint by construction — morScan already
-      // excludes dv'd rows). See deleteMergeOnRead.
-      val newCounts: Map[String, Long] = matched.groupBy(col(FilePathCol))
-        .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val matchedAbs = newCounts.keys.toArray
-      if (matchedAbs.isEmpty) return snap.version
-      val affectedRel = mapMatchedRel(spark, table, matchedAbs, "UPDATE", snap)
-      val affectedSet = affectedRel.toSet
-      val prefix = scanDataPrefix(spark, table)
-      def scanAbsOf(e: FileEntry): String =
-        if (isForeignEntry(e.path)) scanFormAbs(e.path)
-        else prefix + scanFormRel(e.path)
-
-      // position-delete the OLD images, folding the affected files'
-      // existing vectors so each rewritten entry's single dv reference
-      // is its complete deleted set (same discipline as MoR DELETE);
-      // cloned (foreign) files key on their absolute URIs
-      val relCol = morVectorKey(spark, table, "UPDATE",
-        affectedRel.filter(isForeignEntry))
-      val newRows = matched.select(relCol.as("p"), col(RowPosCol).as("pos"))
-      val withOldDv = candidates.filter(e => affectedSet(e.path) && e.dv.isDefined)
-      val allRows =
-        if (withOldDv.isEmpty) newRows
-        else newRows.unionByName(dvRows(spark, table, withOldDv)
-          .filter(col("p").isInCollection(withOldDv.map(scanKey))))
-
-      // append the POST images through the ordinary staging path
-      // (partition routing, constraints, mapping, generated columns)
-      val applied = snap.schema.fields.toSeq.map { fld =>
-        setByName.get(fld.name) match {
-          case Some(v) => v.cast(fld.dataType).as(fld.name)
-          case None => col(fld.name)
-        }
-      }
-      val postRows = matched.select(applied: _*)
-      // three independent staged writes off the one persisted detection
-      // scan — overlapped (guide §2.6)
-      val (dvDir, (newFiles, cdcFiles)) = stageConcurrently(
-        stageDeleteVector(spark, table, allRows,
-          math.max(1, math.min(32, affectedRel.size))))(
-        stageConcurrently(
-          stageFiles(spark, table, postRows, snap.partitionColumns,
-            ColumnMapping.mapping(snap.schema), checks = snap.constraints))(
-          stageChangeFiles(spark, table,
-            matched.select(snap.schema.fieldNames.map(col).toIndexedSeq: _*)
-              .withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(postRows.withColumn(ChangeTypeCol,
-                lit("update_postimage"))))))
-
-      val updated = snap.files.filter(e => affectedSet.contains(e.path)).flatMap { e =>
-        val newCard = newCounts.getOrElse(scanAbsOf(e), 0L)
-        require(newCard > 0, s"internal: no matched rows keyed as " +
-          s"${e.path} — vector-key/entry-path form drift")
-        val card = newCard + e.dv.map(_.cardinality).getOrElse(0L)
-        // every row updated: the old file leaves the snapshot outright
-        // (its full content rides the feed as preimages already)
-        if (e.rowCount >= 0 && card >= e.rowCount) None
-        else Some(e.copy(dv = Some(DeleteVector(dvDir, card))))
-      }
-      val carried = snap.files.filterNot(e => affectedSet.contains(e.path))
-      val next = Snapshot(snap.version + 1, System.currentTimeMillis(), "UPDATE",
-        snap.schema, snap.partitionColumns, carried ++ updated ++ newFiles,
-        txns = snap.txns, protocol = Protocol(3, 3))
-      if (!tryCommit(spark, table, next, updated ++ newFiles, affectedRel,
-          cdc = Some(cdcFiles), prev = Some(snap)))
-        throw new ConcurrentCommitException(
-          s"merge-on-read UPDATE on $table lost the commit race — re-run (a " +
-            "concurrent commit may contain rows this update never scanned)")
-      next.version
-    } finally matched.unpersist(blocking = false)
-  }
+                        set: Seq[(String, Column)], condition: Column): Long =
+    RowLevelOps.run(spark, table, updateStatement(table, set, condition, mor = true))
 
   /** Merge-on-read MERGE (upsert): [[merge]]'s semantics — existing
     * keys take the source row, fresh keys insert — expressed as a
@@ -3532,474 +2617,62 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * O(source rows) bytes. Detection prunes files against the logged
     * key bounds when the source's distinct keys are bounded (pushed
     * per-column IN, the [[graft.operators.Dedup.probeMinhashIndex]]
-    * discipline); the change feed carries the same pre/post/insert
-    * images as the CoW path (spec-pinned state-identical to [[merge]]).
-    * Schema evolution stays on the CoW path: source columns must exist
-    * in the snapshot schema (missing ones pad as null, like [[merge]]).
-    * Returns the committed version.
+    * discipline), and that predicate is the race footprint: a lost race
+    * rebases when the winner's added files provably hold none of the
+    * keys. The change feed carries the same pre/post/insert images as
+    * the CoW path. Schema evolution stays on the CoW path: source
+    * columns must exist in the snapshot schema (missing ones write
+    * null, like [[merge]]). Returns the committed version.
     */
   def mergeMergeOnRead(spark: SparkSession, table: String, updates0: DataFrame,
-                       keys: Seq[String], maxPushedKeys: Int = 10000): Long = {
-    val snap = latestSnapshot(spark, table)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
-    require(keys.nonEmpty && keys.forall(snap.schema.fieldNames.contains),
-      s"merge keys must be target columns: ${keys.mkString(", ")}")
-    val sane = ColumnMapping.sanitize(updates0)
-    val newCols = sane.columns.filterNot(snap.schema.fieldNames.contains)
-    require(newCols.isEmpty,
-      s"merge-on-read MERGE on $table cannot add column(s) ${newCols.mkString(", ")} " +
-        "— schema evolution is copy-on-write; use merge()")
-    require(keys.forall(sane.columns.contains),
-      s"source is missing merge key column(s): ${keys.filterNot(sane.columns.contains).mkString(", ")}")
-    // pad + order to the snapshot schema (missing source columns → null)
-    val updates = sane.select(snap.schema.fields.toSeq.map { fld =>
-      if (sane.columns.contains(fld.name)) col(fld.name).cast(fld.dataType).as(fld.name)
-      else lit(null).cast(fld.dataType).as(fld.name)
-    }: _*).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val updKeys = updates.select(keys.map(col): _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // bounded-key file prune: per-column IN over the collected distinct
-      // keys (a conjunctive superset for composite keys — sound for
-      // skipping); an unbounded source degrades to scanning the
-      // candidates the join needs anyway, never a corpus re-shuffle
-      val keyRows = updKeys.limit(maxPushedKeys + 1).collect()
-      // empty source: nothing to position-delete, nothing to append —
-      // early-return instead of committing a pure version-churn snapshot
-      // (same contract as updateMergeOnRead when nothing matches)
-      if (keyRows.isEmpty) return snap.version
-      val candidates =
-        if (keyRows.length > maxPushedKeys) snap.files
-        else {
-          val pruneCond = keys.zipWithIndex.map { case (k, i) =>
-            col(k).isInCollection(keyRows.map(_.get(i)).distinct.toSeq)
-          }.reduce(_ && _)
-          prunedEntries(spark, table, snap,
-            resolvedConjuncts(spark, snap.schema, pruneCond))
-        }
-      val matched = morScan(spark, table, snap, candidates, keepPos = true)
-        .join(broadcast(updKeys), keys, "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // one action for the matched file set AND per-file new-position
-        // counts (see deleteMergeOnRead)
-        val newCounts: Map[String, Long] = matched.groupBy(col(FilePathCol))
-          .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val matchedAbs = newCounts.keys.toArray
-        val affectedRel =
-          if (matchedAbs.isEmpty) Seq.empty[String]
-          else mapMatchedRel(spark, table, matchedAbs, "MERGE", snap)
-        val affectedSet = affectedRel.toSet
-        val prefix = scanDataPrefix(spark, table)
-        def scanAbsOf(e: FileEntry): String =
-          if (isForeignEntry(e.path)) scanFormAbs(e.path)
-          else prefix + scanFormRel(e.path)
+                       keys: Seq[String]): Long =
+    RowLevelOps.run(spark, table, RowLevelOps.Statement("MERGE", Some(updates0), keys,
+      upsert = true, mor = true))
 
-        // three independent staged writes: the position-delete vector +
-        // change feed (both derived from the persisted detection scan)
-        // overlap the source append (guide §2.6). No match ⇒ the commit
-        // is append-shaped and the feed synthesizes the same inserts
-        // from the added files: skip both the vector and the CDC write.
-        val ((updated, cdcFiles), newFiles) = stageConcurrently({
-          if (affectedRel.isEmpty)
-            (Seq.empty[FileEntry], Option.empty[Seq[String]])
-          else {
-            // position-delete the replaced target rows (fold existing
-            // vectors); cloned (foreign) files key on absolute URIs
-            val relCol = morVectorKey(spark, table, "MERGE",
-              affectedRel.filter(isForeignEntry))
-            val newRows = matched.select(relCol.as("p"), col(RowPosCol).as("pos"))
-            val withOldDv = candidates.filter(e => affectedSet(e.path) && e.dv.isDefined)
-            val allRows =
-              if (withOldDv.isEmpty) newRows
-              else newRows.unionByName(dvRows(spark, table, withOldDv)
-                .filter(col("p").isInCollection(withOldDv.map(scanKey))))
-            val pre = matched.drop(FilePathCol, RowPosCol)
-            // change feed: replaced rows as pre/post images, fresh keys
-            // as inserts — identical kinds to the CoW upsert's
-            val (dvDir, cdc) = stageConcurrently(
-              stageDeleteVector(spark, table, allRows,
-                math.max(1, math.min(32, affectedRel.size))))({
-              val tableKeys = pre.select(keys.map(col): _*).distinct()
-              stageChangeFiles(spark, table,
-                pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-                  .unionByName(updates.join(broadcast(tableKeys), keys, "left_semi")
-                    .withColumn(ChangeTypeCol, lit("update_postimage")))
-                  .unionByName(updates.join(broadcast(tableKeys), keys, "left_anti")
-                    .withColumn(ChangeTypeCol, lit("insert"))))
-            })
-            val upd = snap.files.filter(e => affectedSet.contains(e.path)).flatMap { e =>
-              val newCard = newCounts.getOrElse(scanAbsOf(e), 0L)
-              require(newCard > 0, s"internal: no matched rows keyed as " +
-                s"${e.path} — vector-key/entry-path form drift")
-              val card = newCard + e.dv.map(_.cardinality).getOrElse(0L)
-              if (e.rowCount >= 0 && card >= e.rowCount) None
-              else Some(e.copy(dv = Some(DeleteVector(dvDir, card))))
-            }
-            (upd, Some(cdc))
-          }
-        })(
-          // append EVERY source row (replacement images + fresh inserts)
-          stageFiles(spark, table, updates, snap.partitionColumns,
-            ColumnMapping.mapping(snap.schema), checks = snap.constraints))
-
-        val carried = snap.files.filterNot(e => affectedSet.contains(e.path))
-        val next = Snapshot(snap.version + 1, System.currentTimeMillis(), "MERGE",
-          snap.schema, snap.partitionColumns, carried ++ updated ++ newFiles,
-          txns = snap.txns, protocol = Protocol(3, 3))
-        if (!tryCommit(spark, table, next, updated ++ newFiles, affectedRel,
-            cdc = cdcFiles, prev = Some(snap)))
-          throw new ConcurrentCommitException(
-            s"merge-on-read MERGE on $table lost the commit race — re-run (a " +
-              "concurrent commit may contain rows this merge never scanned)")
-        next.version
-      } finally matched.unpersist(blocking = false)
-    } finally {
-      updKeys.unpersist(blocking = false)
-      updates.unpersist(blocking = false)
-    }
-  }
-
-  /** Merge-on-read form of [[mergeRows]] for the MATCHED-clause surface:
-    * ordered condition-gated `WHEN MATCHED` UPDATE / DELETE clauses plus
-    * ordered `WHEN NOT MATCHED INSERT` clauses. The matched pre-images
+  /** Merge-on-read form of [[mergeRows]]: the same clause surface and
+    * semantics (ordered, condition-gated WHEN MATCHED UPDATE / DELETE,
+    * WHEN NOT MATCHED INSERT and WHEN NOT MATCHED BY SOURCE clauses over
+    * the aliased sides `t`/`s`; first-true wins; NULL conditions do not
+    * apply; SQL cardinality violations fail loudly). The target rows
     * CLAIMED by some clause are position-deleted (vectors folding with
     * the affected files' existing ones); update post-images and
     * anti-joined inserts land through the ordinary append path. A
     * matched row claimed by NO clause keeps its position in place —
-    * zero bytes written for it, where the CoW [[mergeRows]] rewrites
-    * its whole file. A conditional trickle-upsert or a
-    * retention-delete-with-merge against a 100 TB fact therefore writes
-    * O(claimed rows) bytes, not O(bytes of affected files).
-    *
-    * Clause semantics are [[mergeRows]]'s exactly (shared
-    * [[appliedMarks]]/[[insertProjectionOf]] evaluators): conditions and
-    * assignment values are Columns over the aliased sides `t`/`s`,
-    * first-true wins, NULL conditions do not apply, unassigned columns
-    * keep the target value, SQL cardinality violations fail loudly.
-    * `WHEN NOT MATCHED BY SOURCE` (r14) also has an MoR expression: its
-    * semantics concern the whole table, so the READ is only
-    * condition-bounded (the CoW detection's pushed-filter scan — an
-    * unconditional clause means every file), but the WRITE stays
-    * O(claimed rows) — position-deletes + update post-images — where
-    * CoW rewrites every file holding one claimed row (a sync-deletes
-    * merge against a 100 TB fact rewrites the table under CoW and
-    * writes only vectors here). Schema is FIXED (assignments must name
-    * snapshot columns). Detection prunes files by pushed per-column IN
-    * when the source's distinct keys are bounded, like
-    * [[mergeMergeOnRead]]; the NMBS scan does not weaken the matched
-    * tier's prune. The change feed carries the same
-    * pre/post/delete/insert images as the CoW path. Returns the
-    * committed version — unchanged when no clause claims anything.
+    * zero bytes written for it, where the CoW [[mergeRows]] rewrites its
+    * whole file. NOT MATCHED BY SOURCE reads the whole table (its
+    * semantics concern every target row) but still writes only O(claimed
+    * rows). Schema is FIXED. Detection prunes files by pushed per-column
+    * IN when the source's distinct keys are bounded, as
+    * [[mergeMergeOnRead]]. Returns the committed version — unchanged
+    * when no clause claims anything.
     */
   def mergeRowsMergeOnRead(spark: SparkSession, table: String, source0: DataFrame,
                            keys: Seq[String], matched: Seq[MatchedClause],
                            notMatchedInsert: Seq[(Option[Column], Map[String, Column])] = Nil,
                            notMatchedBySource: Seq[MatchedClause] = Nil,
-                           maxPushedKeys: Int = 10000,
-                           txn: Option[(String, Long)] = None): Long = {
-    val snap = latestSnapshot(spark, table)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
-    require(matched.nonEmpty || notMatchedInsert.nonEmpty || notMatchedBySource.nonEmpty,
-      "mergeRowsMergeOnRead needs at least one matched, insert or " +
-        "not-matched-by-source clause")
-    if (txn.exists { case (appId, v) => snap.txns.get(appId).exists(_ >= v) })
-      return snap.version
-    val assignedCols = (matched ++ notMatchedBySource)
-      .collect { case MatchedUpdate(_, set) => set.keys }
-      .flatten ++ notMatchedInsert.flatMap(_._2.keys)
-    val unknown = assignedCols.filterNot(snap.schema.fieldNames.contains).toSeq.distinct
-    require(unknown.isEmpty,
-      s"mergeRowsMergeOnRead on $table assigns unknown column(s): " +
-        s"${unknown.mkString(", ")} — schema evolution is copy-on-write; use mergeRows()")
-    require(keys.forall(snap.schema.fieldNames.contains),
-      s"merge keys must be target columns: ${keys.mkString(", ")}")
-    val sane = ColumnMapping.sanitize(source0)
-    require(keys.forall(sane.columns.contains),
-      s"source is missing merge key column(s): ${keys.filterNot(sane.columns.contains).mkString(", ")}")
-
-    val ordered = snap.schema.fields.toSeq
-    // persisted once: cardinality check, key prune, row join and insert
-    // anti-join must see the same materialization (Delta's staged-source
-    // discipline — see mergeRows)
-    val src = sane.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE action yields the bounded distinct-key sample AND the SQL
-      // MERGE cardinality check (guide §5): when every distinct key fit
-      // under the cap, duplicate detection is a local scan of the
-      // collected counts; only an over-cap source (which degrades to
-      // full-candidate detection anyway) pays a dedicated dup probe.
-      val dupMsg = s"MERGE source has duplicate values of key " +
-        s"(${keys.mkString(", ")}) — each target row may match at most one source row"
-      val aggRows = src.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__cnt")).limit(maxPushedKeys + 1).collect()
-      if (aggRows.length <= maxPushedKeys)
-        require(!aggRows.exists(_.getLong(keys.length) > 1L), dupMsg)
-      else
-        require(src.groupBy(keys.map(col): _*).count()
-          .filter(col("count") > 1).limit(1).count() == 0L, dupMsg)
-      val keyRows = aggRows
-      // an empty source is a no-op for the matched/insert tiers, but an
-      // NMBS clause then claims (up to its condition) EVERY target row —
-      // the sync-to-empty shape must fall through
-      if (keyRows.isEmpty && notMatchedBySource.isEmpty) return snap.version
-      // bounded-key file prune (sound conjunctive superset; an unbounded
-      // source degrades to the full candidate set, never a re-shuffle)
-      val candidates =
-        if (keyRows.length > maxPushedKeys) snap.files
-        else {
-          val pruneCond = keys.zipWithIndex.map { case (k, i) =>
-            col(k).isInCollection(keyRows.map(_.get(i)).distinct.toSeq)
-          }.reduce(_ && _)
-          prunedEntries(spark, table, snap,
-            resolvedConjuncts(spark, snap.schema, pruneCond))
-        }
-
-      // every target row whose key the source names, with its source row
-      // alongside and its (file, pos) riding — the clause evaluation,
-      // position-delete and CDC all read this ONE persisted join
-      val t = morScan(spark, table, snap, candidates, keepPos = true).alias("t")
-      val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-      var joinedN: DataFrame = null
-      val joined = t.join(src.alias("s"), keyCond, "inner")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val marks = appliedMarks(lit(true), matched)
-        val claimed = marks.map(_._1).reduceOption(_ || _).getOrElse(lit(false))
-        val updatedMark = marks.collect { case (a, _: MatchedUpdate) => a }
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val deletedMark = marks.collect { case (a, _: MatchedDelete) => a }
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val tCols = ordered.map(fld => col(s"t.${fld.name}").as(fld.name))
-        val projected = ordered.map { fld =>
-          val updates = marks.collect {
-            case (a, MatchedUpdate(_, set)) if set.contains(fld.name) =>
-              (a, set(fld.name).cast(fld.dataType))
-          }
-          updates.foldRight(col(s"t.${fld.name}")) { case ((a, v), acc) =>
-            when(a, v).otherwise(acc)
-          }.as(fld.name)
-        }
-
-        // NMBS tier: target rows with NO source match, detected via the
-        // CoW condition-pruned detection (dv-aware), claimed via the
-        // same ordered evaluators over a left-outer join whose source
-        // columns are null — CoW semantics by construction. Yields
-        // (claimed positions, update post-images, change rows).
-        val nmbs: Option[(DataFrame, DataFrame, DataFrame)] =
-          if (notMatchedBySource.isEmpty) None
-          else {
-            val pred = notMatchedBySource
-              .map(_.condition.map(c => coalesce(c, lit(false))).getOrElse(lit(true)))
-              .reduce(_ || _)
-            val nmbsAbs = detectionScan(spark, table, snap, alias = Some("t"),
-              scope = Some(pred)).select(col("__file")).distinct()
-              .collect().map(_.getString(0))
-            if (nmbsAbs.isEmpty) None
-            else {
-              val rel = mapMatchedRel(spark, table, nmbsAbs, "MERGE", snap).toSet
-              val entries = snap.files.filter(e => rel(e.path))
-              val tN = morScan(spark, table, snap, entries, keepPos = true).alias("t")
-              val jN = tN.join(src.withColumn("__s_matched", lit(true)).alias("s"),
-                  keyCond, "left_outer")
-                .filter(col("__s_matched").isNull)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              joinedN = jN
-              val marksN = appliedMarks(lit(true), notMatchedBySource)
-              val claimedN = marksN.map(_._1).reduceOption(_ || _).getOrElse(lit(false))
-              val updatedN = marksN.collect { case (a, _: MatchedUpdate) => a }
-                .reduceOption(_ || _).getOrElse(lit(false))
-              val deletedN = marksN.collect { case (a, _: MatchedDelete) => a }
-                .reduceOption(_ || _).getOrElse(lit(false))
-              val projectedN = ordered.map { fld =>
-                val ups = marksN.collect {
-                  case (a, MatchedUpdate(_, set)) if set.contains(fld.name) =>
-                    (a, set(fld.name).cast(fld.dataType))
-                }
-                ups.foldRight(col(s"t.${fld.name}")) { case ((a, v), acc) =>
-                  when(a, v).otherwise(acc)
-                }.as(fld.name)
-              }
-              val cdcN = jN.filter(updatedN).select(tCols: _*)
-                .withColumn(ChangeTypeCol, lit("update_preimage"))
-                .unionByName(jN.filter(updatedN).select(projectedN: _*)
-                  .withColumn(ChangeTypeCol, lit("update_postimage")))
-                .unionByName(jN.filter(deletedN).select(tCols: _*)
-                  .withColumn(ChangeTypeCol, lit("delete")))
-              Some((jN.filter(claimedN).select(col(FilePathCol), col(RowPosCol)),
-                jN.filter(updatedN).select(projectedN: _*), cdcN))
-            }
-          }
-
-        val hit0 = joined.filter(claimed).select(col(FilePathCol), col(RowPosCol))
-        val hit = nmbs.map { case (h, _, _) => hit0.unionByName(h) }.getOrElse(hit0)
-        // one action for the claimed file set AND per-file new-position
-        // counts (see deleteMergeOnRead)
-        val newCounts: Map[String, Long] = hit.groupBy(col(FilePathCol))
-          .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val matchedAbs = newCounts.keys.toArray
-        val affectedRel =
-          if (matchedAbs.isEmpty) Seq.empty[String]
-          else mapMatchedRel(spark, table, matchedAbs, "MERGE", snap)
-        val affectedSet = affectedRel.toSet
-        val prefix = scanDataPrefix(spark, table)
-        def scanAbsOf(e: FileEntry): String =
-          if (isForeignEntry(e.path)) scanFormAbs(e.path)
-          else prefix + scanFormRel(e.path)
-
-        // append: update post-images (both tiers) + anti-joined inserts.
-        // The inner join above saw EVERY key match (candidates cover all
-        // files the pushed prune could not exclude), so "key absent from
-        // the join" ⇔ "key absent from the table"
-        val postRows0 = joined.filter(updatedMark).select(projected: _*)
-        val postRows = nmbs.map { case (_, p, _) => postRows0.unionByName(p) }
-          .getOrElse(postRows0)
-        val insertRows =
-          if (notMatchedInsert.isEmpty) None
-          else {
-            val existingKeys = joined.select(keys.map(k => col(s"t.$k").as(k)): _*)
-              .distinct()
-            Some(insertProjectionOf(
-              src.alias("s").join(existingKeys, keys, "left_anti"),
-              notMatchedInsert, ordered))
-          }
-        val toWrite = insertRows match {
-          case Some(i) => postRows.unionByName(i)
-          case None    => postRows
-        }
-        // no claimed pre-image and nothing to append: a true no-op —
-        // skip the commit entirely (unless a watermark must advance)
-        if (affectedRel.isEmpty && txn.isEmpty && toWrite.limit(1).isEmpty)
-          return snap.version
-
-        // three independent staged writes: the position-delete vector +
-        // change feed (claimed pre-images, folding the affected files'
-        // existing vectors — same discipline as MoR DELETE/UPDATE, with
-        // cloned files keyed on absolute URIs) overlap the post-image/
-        // insert append (guide §2.6). Nothing claimed ⇒ the commit is
-        // append-shaped (inserts only, no removes): skip the vector and
-        // CDC writes — the feed synthesizes the identical inserts from
-        // the added files.
-        val ((updated, cdcFiles), newFiles) = stageConcurrently({
-          if (affectedRel.isEmpty)
-            (Seq.empty[FileEntry], Option.empty[Seq[String]])
-          else {
-            val relCol = morVectorKey(spark, table, "MERGE",
-              affectedRel.filter(isForeignEntry))
-            val newRows = hit.select(relCol.as("p"), col(RowPosCol).as("pos"))
-            // fold from the snapshot, not the matched-tier prune: NMBS
-            // may claim rows in files that prune excluded
-            val withOldDv = snap.files.filter(e => affectedSet(e.path) && e.dv.isDefined)
-            val allRows =
-              if (withOldDv.isEmpty) newRows
-              else newRows.unionByName(dvRows(spark, table, withOldDv)
-                .filter(col("p").isInCollection(withOldDv.map(scanKey))))
-            val cdcDf0 = joined.filter(updatedMark).select(tCols: _*)
-              .withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(joined.filter(updatedMark).select(projected: _*)
-                .withColumn(ChangeTypeCol, lit("update_postimage")))
-              .unionByName(joined.filter(deletedMark).select(tCols: _*)
-                .withColumn(ChangeTypeCol, lit("delete")))
-            val cdcDf = nmbs.map { case (_, _, c) => cdcDf0.unionByName(c) }
-              .getOrElse(cdcDf0)
-            val cdcAll = (Seq(cdcDf) ++ insertRows.map(
-              _.withColumn(ChangeTypeCol, lit("insert"))).toSeq)
-              .reduce(_ unionByName _)
-            val (dvDir, cdc) = stageConcurrently(
-              stageDeleteVector(spark, table, allRows,
-                math.max(1, math.min(32, affectedRel.size))))(
-              stageChangeFiles(spark, table, cdcAll))
-            val upd = snap.files.filter(e => affectedSet.contains(e.path)).flatMap { e =>
-              val newCard = newCounts.getOrElse(scanAbsOf(e), 0L)
-              require(newCard > 0, s"internal: no matched rows keyed as " +
-                s"${e.path} — vector-key/entry-path form drift")
-              val card = newCard + e.dv.map(_.cardinality).getOrElse(0L)
-              if (e.rowCount >= 0 && card >= e.rowCount) None
-              else Some(e.copy(dv = Some(DeleteVector(dvDir, card))))
-            }
-            (upd, Some(cdc))
-          }
-        })(
-          stageFiles(spark, table, toWrite, snap.partitionColumns,
-            ColumnMapping.mapping(snap.schema), checks = snap.constraints))
-        val carried = snap.files.filterNot(e => affectedSet.contains(e.path))
-        val next = Snapshot(snap.version + 1, System.currentTimeMillis(), "MERGE",
-          snap.schema, snap.partitionColumns, carried ++ updated ++ newFiles,
-          txns = snap.txns ++ txn.toMap, protocol = Protocol(3, 3))
-        if (!tryCommit(spark, table, next, updated ++ newFiles, affectedRel,
-            cdc = cdcFiles, prev = Some(snap)))
-          throw new ConcurrentCommitException(
-            s"merge-on-read MERGE on $table lost the commit race — re-run (a " +
-              "concurrent commit may contain rows this merge never scanned)")
-        next.version
-      } finally {
-        joined.unpersist(blocking = false)
-        if (joinedN != null) joinedN.unpersist(blocking = false)
-      }
-    } finally src.unpersist(blocking = false)
-  }
+                           txn: Option[(String, Long)] = None): Long =
+    RowLevelOps.run(spark, table, RowLevelOps.Statement("MERGE", Some(source0), keys,
+      matched, notMatchedInsert, notMatchedBySource, mor = true, txns = txn.toMap))
 
   /** Copy-on-write UPDATE: apply `set` to the rows matching `condition`
     * (NULL conditions leave rows untouched, SQL semantics), rewriting
     * only the files containing at least one match — the same
-    * file-granularity discipline as [[delete]]. Assigned values are
-    * cast to the column's snapshot type (no silent type drift in the
-    * log); assigning a PARTITION column re-routes the updated rows to
-    * their new hive directories (the whole matched file is rewritten,
-    * so its unmatched rows stay in place). Returns the committed
-    * version — unchanged when nothing matched.
+    * file-granularity discipline and race rule as [[delete]]. Assigned
+    * values are cast to the column's snapshot type (no silent type
+    * drift in the log); assigning a PARTITION column re-routes the
+    * updated rows to their new hive directories (the whole matched file
+    * is rewritten, so its unmatched rows stay in place). Returns the
+    * committed version — unchanged when nothing matched.
     */
   def update(spark: SparkSession, table: String, set: Seq[(String, Column)],
-             condition: Column): Long = {
-    val snap = latestSnapshot(spark, table)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
-    val unknown = set.map(_._1).filterNot(n => snap.schema.fieldNames.contains(n))
-    require(unknown.isEmpty, s"UPDATE on $table assigns unknown column(s): " +
-      unknown.mkString(", "))
+             condition: Column): Long =
+    RowLevelOps.run(spark, table, updateStatement(table, set, condition, mor = false))
 
-    // detection through the registered source, pinned to this snapshot:
-    // the pushed predicate prunes at FILE level against the logged
-    // bounds (DataSkipping), so a selective predicate's detection scan
-    // reads only the files it could possibly match — not the table
-    // (dv-aware via detectionScan)
-    val matchedAbs = detectionScan(spark, table, snap,
-      resolvedConjuncts(spark, snap.schema, condition), scope = Some(condition))
-      .select(col("__file")).distinct()
-      .collect().map(_.getString(0))
-    if (matchedAbs.isEmpty) return snap.version
-
-    val affectedRel = mapMatchedRel(spark, table, matchedAbs, "UPDATE", snap)
-    val setByName = set.toMap
-    val hit = coalesce(condition, lit(false))
-    val affectedDf = readDataFilesLive(spark, table, snap, affectedRel)
-    val applied = snap.schema.fields.toSeq.map { fld =>
-      setByName.get(fld.name) match {
-        case Some(v) => v.cast(fld.dataType).as(fld.name)
-        case None => col(fld.name)
-      }
-    }
-    val rewritten = affectedDf
-      .select(snap.schema.fields.map { fld =>
-        setByName.get(fld.name) match {
-          case Some(v) => when(hit, v.cast(fld.dataType)).otherwise(col(fld.name)).as(fld.name)
-          case None => col(fld.name)
-        }
-      }.toIndexedSeq: _*)
-    // change feed: pre/post images of exactly the hit rows; independent
-    // of the rewrite write — overlapped (guide §2.6)
-    val hitRows = affectedDf.filter(hit)
-    val (newFiles, cdcFiles) = stageConcurrently(
-      stageFiles(spark, table, rewritten, snap.partitionColumns,
-        ColumnMapping.mapping(snap.schema), checks = snap.constraints))(
-      stageChangeFiles(spark, table,
-        hitRows.select(snap.schema.fieldNames.map(col).toIndexedSeq: _*)
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(hitRows.select(applied: _*)
-            .withColumn(ChangeTypeCol, lit("update_postimage")))))
-
-    updateBeforeCommitHook()
-    commitPredicateRewrite(spark, table, snap, "UPDATE", newFiles, affectedRel,
-      resolvedConjuncts(spark, snap.schema, condition), cdcFiles)
+  private def updateStatement(table: String, set: Seq[(String, Column)], condition: Column,
+                              mor: Boolean): RowLevelOps.Statement = {
+    require(set.nonEmpty, s"UPDATE on $table assigns no columns")
+    RowLevelOps.Statement("UPDATE",
+      bySource = Seq(MatchedUpdate(Some(condition), set.toMap)), mor = mor)
   }
 
   // --------------------------------------------------------------- compact
@@ -4194,14 +2867,11 @@ object LakeTable extends org.apache.spark.internal.Logging {
     */
   @volatile private[graft] var compactBeforeCommitHook: () => Unit = () => ()
 
-  /** Test seam: invoked after a DELETE stages its rewrite and change
-    * data, before its commit loop — lets a spec interleave a
-    * concurrent commit deterministically.
+  /** Test seam: invoked by every DML statement after it staged its
+    * files and change data, before its commit step — lets a spec
+    * interleave a concurrent commit deterministically.
     */
-  @volatile private[graft] var deleteBeforeCommitHook: () => Unit = () => ()
-
-  /** Test seam: the UPDATE counterpart of [[deleteBeforeCommitHook]]. */
-  @volatile private[graft] var updateBeforeCommitHook: () => Unit = () => ()
+  @volatile private[graft] var dmlBeforeCommitHook: () => Unit = () => ()
 
   /** The hive partition directory of a table-relative file path ("" on
     * an unpartitioned table).
@@ -4738,7 +3408,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
           .select(when(col("p").startsWith("/") || col("p").contains(":/"), col("p"))
             .otherwise(concat(lit(scanFormPath(srcRoot) + "/"), col("p"))).as("p"),
             col("pos"))
-        Some(stageDeleteVector(spark, dst, rows,
+        Some(RowLevelOps.stageDeleteVector(spark, dst, rows,
           math.max(1, math.min(32, dvd.size))))
       }
     val entries = snap.files.map { e =>

@@ -139,23 +139,34 @@ object Similarity {
   }
 
   /** Deterministic Lloyd's k-means over a small driver-side sample —
-    * the PQ codebook fitter. Init = the first `k` DISTINCT points in
-    * sample order (padded by repetition when the sample has fewer);
-    * an emptied cluster keeps its previous centroid; fixed iteration
-    * count — the fit is a pure function of the sample, no RNG.
-    * Codebook QUALITY only shapes [[annPq]]'s candidate width; its
-    * error bound keeps correctness independent of the fit.
+    * the IVF quantizer and PQ codebook fitter. Init = maximin spread:
+    * the first sample point, then repeatedly the point farthest (squared
+    * L2) from every seed so far, ties to the earliest — on clustered
+    * data the seeds land in distinct clusters, where the first `k`
+    * points in sample order may all sit in one (padded by repetition
+    * when the sample has fewer than `k` distinct points). An emptied
+    * cluster keeps its previous centroid; fixed iteration count — the
+    * fit is a pure function of the sample, no RNG. Fit QUALITY only
+    * shapes candidate width; the error bounds keep results exact.
     */
   private def lloyd(points: Array[Array[Double]], k: Int,
                     iters: Int): Array[Array[Double]] = {
     val dim = points.head.length
-    val init = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-    val seen = scala.collection.mutable.HashSet.empty[Seq[Double]]
-    var i = 0
-    while (i < points.length && init.length < k) {
-      val p = points(i)
-      if (seen.add(p.toSeq)) init += p
-      i += 1
+    def dist2(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0
+      var d = 0
+      while (d < dim) { val t = a(d) - b(d); s += t * t; d += 1 }
+      s
+    }
+    val init = scala.collection.mutable.ArrayBuffer(points.head)
+    val near = points.map(dist2(_, points.head))
+    var far = near.indices.maxBy(near)
+    while (init.length < k && near(far) > 0.0) {
+      val p = points(far)
+      init += p
+      var i = 0
+      while (i < points.length) { near(i) = math.min(near(i), dist2(points(i), p)); i += 1 }
+      far = near.indices.maxBy(near)
     }
     val distinct = init.length
     while (init.length < k) init += init(init.length % distinct)
@@ -169,9 +180,7 @@ object Similarity {
         var bd = Double.MaxValue
         var c = 0
         while (c < k) {
-          var d2 = 0.0
-          var d = 0
-          while (d < dim) { val t = p(d) - cents(c)(d); d2 += t * t; d += 1 }
+          val d2 = dist2(p, cents(c))
           if (d2 < bd) { bd = d2; best = c }
           c += 1
         }
@@ -194,15 +203,19 @@ object Similarity {
   }
 
   /** Per-subspace PQ codebooks from a deterministic, bounded sample:
-    * hash-gated scan + cap (no sizing pass, no global sort — the
-    * [[fitQuantizer]] discipline), [[lloyd]] per subspace. Returns the
+    * hash-gated scan + hash-ordered cap (a top-k: no sizing pass, no
+    * global sort — the [[fitQuantizer]] discipline), [[lloyd]] per
+    * subspace. Returns the
     * flat layout `cb[((sub*k)+code)*subDim + d]` that the pq_*
     * expressions consume. Codebook QUALITY shapes candidate width
     * only; the residual bound keeps the operators exact regardless.
     */
   private def fitPqCodebook(e: DataFrame, subspaces: Int,
                             codebookSize: Int): Array[Double] = {
+    // ordered by id hash: `limit` alone keeps whichever rows the scan
+    // yields first, and the seeding depends on sample order
     val sampleCols = e.select(col("v"), col("vec_id"))
+      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
     val gated = sampleCols.filter(pmod(xxhash64(col("vec_id")), lit(7)) === 0)
       .limit(4096).collect()
     val sample = if (gated.nonEmpty) gated else sampleCols.limit(4096).collect()
@@ -410,8 +423,7 @@ object Similarity {
       .withColumn("tau", min(when(col("lrn") <= k, col("lb"))).over(wt))
       .filter(col("ub") >= col("tau") - lit(1e-5))
       .select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annPqIndexed", cand)
+      .transform(cached("annPqIndexed"))
     val ids = cand.select(col("vec_id")).distinct()
       .limit(maxPushedKeys + 1).collect().map(_.getLong(0))
     val vecSrc0 = vectors(spark, dir).select(col("vec_id"), col("v"))
@@ -474,22 +486,19 @@ object Similarity {
   def annIvfPq(spark: SparkSession, dir: String, numQueries: Int = 10, k: Int = 5,
                cells: Int = 16, probes: Int = 10,
                subspaces: Int = 8, codebookSize: Int = 16): DataFrame = {
-    val e = vectors(spark, dir).cache()
+    val e = vectors(spark, dir).transform(cached("annIvfPqE"))
     val centers = fitQuantizer(e, cells)
     val cb = fitPqCodebook(e, subspaces, codebookSize)
     val cbSql = s"array(${cb.mkString("D,")}D)"
     val assigned = e.withColumn("cell", cellOf(centers))
       .select(col("vec_id"), col("v"), col("norm"), col("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfPqE", e)
-    retireCache("annIvfPqAssigned", assigned)
+      .transform(cached("annIvfPqAssigned"))
     // the scan-side rows: cell + codes + scalars, never the vectors
     val enc = assigned
       .withColumn("pq", expr(s"pq_encode(v, $cbSql, $subspaces, $codebookSize)"))
       .select(col("vec_id"), col("cell"), col("norm"),
         col("pq.codes").as("codes"), col("pq.resid").as("resid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfPqEnc", enc)
+      .transform(cached("annIvfPqEnc"))
 
     import spark.implicits._
     val centersDf = centers.zipWithIndex.toSeq
@@ -517,8 +526,7 @@ object Similarity {
         .partitionBy(col("q_id")).orderBy(col("theta"), col("cell"))))
       .select(col("q_id"), col("qnorm"), col("lut"), col("cell"),
         col("bound"), col("cr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfPqQCells", qCells)
+      .transform(cached("annIvfPqQCells"))
 
     // PQ-bounded scan of a probe set: codes-only rows, m lookup-adds
     // per pair, lb/ub on the true cosine per the Cauchy–Schwarz bound
@@ -551,8 +559,7 @@ object Similarity {
       .filter(col("ub") >= col("tau1") - lit(1e-5))
       .select(col("q_id"), col("vec_id"))
     val exact1 = rerank(cand1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfPqExact1", exact1)
+      .transform(cached("annIvfPqExact1"))
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
     val tau = exact1
@@ -604,8 +611,7 @@ object Similarity {
       .withColumn("pq", expr(s"pq_encode(v, $cbSql, $subspaces, $codebookSize)"))
       .select(col("vec_id"), col("cell"), col("norm"), col("v"),
         col("pq.codes").as("codes"), col("pq.resid").as("resid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("buildIvfPq", assigned)
+      .transform(cached("buildIvfPq"))
     val centersDf = centers.zipWithIndex.toSeq
       .map { case (c, i) => (i, c) }.toDF("cell", "centroid")
     val radius = assigned.join(broadcast(centersDf), Seq("cell"))
@@ -655,8 +661,7 @@ object Similarity {
     val centers = readCentroids(spark, indexPath)
     val assigned = e.withColumn("cell", cellOf(centers))
       .select(col("vec_id"), col("v"), col("norm"), col("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("ivfPqAppend", assigned)
+      .transform(cached("ivfPqAppend"))
     // radius merge FIRST, corpus append SECOND: a probe (or crash)
     // between the two commits must stay exact. Widened-radius-without-
     // rows only loosens phase-2 pruning (always safe); rows-without-
@@ -723,8 +728,7 @@ object Similarity {
         .partitionBy(col("q_id")).orderBy(col("theta"), col("cell"))))
       .select(col("q_id"), col("qnorm"), col("lut"), col("cell"),
         col("bound"), col("cr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfPqIdxQCells", qCells)
+      .transform(cached("annIvfPqIdxQCells"))
 
     def pqScan(probeSet: DataFrame, cellList: Seq[Int]): DataFrame =
       corpus.filter(col("cell").isin(cellList: _*))
@@ -739,8 +743,7 @@ object Similarity {
         .select(col("q_id"), col("vec_id"), col("lb"), col("ub"))
 
     def rerank(cand: DataFrame): DataFrame = {
-      val c = cand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      retireCache("annIvfPqIdxCand", c)
+      val c = cand.transform(cached("annIvfPqIdxCand"))
       val ids = c.select(col("vec_id")).distinct()
         .limit(maxPushedKeys + 1).collect().map(_.getLong(0))
       val vecSrc0 = vectors(spark, dir).select(col("vec_id"), col("v"), col("norm"))
@@ -766,8 +769,7 @@ object Similarity {
       .filter(col("ub") >= col("tau1") - lit(1e-5))
       .select(col("q_id"), col("vec_id"))
     val exact1 = rerank(cand1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfPqIdxExact1", exact1)
+      .transform(cached("annIvfPqIdxExact1"))
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
     val tau = exact1
@@ -777,8 +779,7 @@ object Similarity {
     val extra = qCells.filter(col("cr") > probes)
       .join(broadcast(tau), Seq("q_id"), "left")
       .filter(col("tau").isNull || col("bound") >= col("tau") - lit(1e-5))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfPqIdxExtra", extra)
+      .transform(cached("annIvfPqIdxExtra"))
     val cellList2 = extra.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val cand2 =
@@ -831,8 +832,7 @@ object Similarity {
       .groupBy(col("label"), col("v"))
       .agg(min(col("vec_id")).as("rep_id"), first(col("norm")).as("norm"),
         collect_list(col("vec_id")).as("ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("neardupCosine", members)
+      .transform(cached("neardupCosine"))
     val e = members.select(col("label"), col("rep_id"), col("v"), col("norm"))
     val a = e.select(col("label"), col("rep_id").as("rep_a"), col("v").as("va"), col("norm").as("na"))
     val b = e.select(col("label"), col("rep_id").as("rep_b"), col("v").as("vb"), col("norm").as("nb"))
@@ -915,13 +915,11 @@ object Similarity {
     */
   def annIvf(spark: SparkSession, dir: String, numQueries: Int = 10, k: Int = 5,
              cells: Int = 16, probes: Int = 10): DataFrame = {
-    val e = vectors(spark, dir).cache()
+    val e = vectors(spark, dir).transform(cached("annIvfE"))
     val centers = fitQuantizer(e, cells)
     val assigned = e.withColumn("cell", cellOf(centers))
       .select(col("vec_id"), col("label"), col("v"), col("norm"), col("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfE", e)
-    retireCache("annIvfAssigned", assigned)
+      .transform(cached("annIvfAssigned"))
 
     // centroids are cells×dim — tiny, so the query→cells map is computed
     // on the driver and broadcast-joined.
@@ -953,8 +951,7 @@ object Similarity {
         .partitionBy(col("q_id")).orderBy(col("theta"), col("cell"))))
       .select(col("q_id"), col("qv"), col("qnorm"), col("cell"),
         col("bound"), col("cr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfQCells", qCells)
+      .transform(cached("annIvfQCells"))
 
     def scan(probeSet: DataFrame): DataFrame =
       assigned.join(broadcast(probeSet.select(
@@ -966,8 +963,7 @@ object Similarity {
     // phase 1: the `probes` nearest cells, exact cosines, provisional
     // k-th best τ per query (k-th of a subset ≤ the full k-th)
     val phase1 = scan(qCells.filter(col("cr") <= probes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annIvfPhase1", phase1)
+      .transform(cached("annIvfPhase1"))
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
     val tau = phase1
@@ -1032,7 +1028,10 @@ object Similarity {
     // distributed jobs). Exactness never depended on WHICH centroids
     // come out — the angular radii make any assignment probe-correct —
     // so centroid provenance is a pure performance choice.
-    val train = e.filter(keep).select(col("v")).limit(sampleCap).collect()
+    // ordered by id hash so the capped sample, and with it the seeding,
+    // does not depend on scan order
+    val train = e.filter(keep).orderBy(xxhash64(col("vec_id")), col("vec_id"))
+      .select(col("v")).limit(sampleCap).collect()
     require(train.nonEmpty, "fitQuantizer: empty corpus")
     lloyd(train.map(_.getSeq[Double](0).toArray), cells, iters = 5)
   }
@@ -1227,8 +1226,7 @@ object Similarity {
       .groupBy(col("v"))
       .agg(min(col("vec_id")).as("rep_id"), first(col("norm")).as("norm"),
         collect_list(col("vec_id")).as("ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireLshCache(members)
+      .transform(cached("annLsh"))
     val base = members
       .select(col("rep_id"), col("v"), col("norm"))
       .withColumn("sigs", expr(s"lsh_sigs(v, $tables, $bits, 20260812)"))
@@ -1381,8 +1379,7 @@ object Similarity {
       .withColumn("qfw", expr(s"lsh_sigs(v, $filterWords, 32, $LshFilterSeed)"))
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("norm").as("qnorm"), col("sigs"), col("qfw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annLshIndexed", q)
+      .transform(cached("annLshIndexed"))
     val qb = q.select(col("q_id"), col("qfw"),
       posexplode(col("sigs")).as(Seq("t", "sig")))
     // bounded metadata to the driver: DISTINCT bucket keys, capped —
@@ -1409,8 +1406,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id") && hamming <= maxDisagree)
       .select(col("q_id"), col("vec_id"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireCache("annLshIndexedCand", cand)
+      .transform(cached("annLshIndexedCand"))
     // candidate ids, capped the same way, push into the vecs scan
     val candIds = cand.select(col("vec_id")).distinct()
       .limit(maxPushedKeys + 1).collect()
@@ -1450,11 +1446,15 @@ object Similarity {
   /** One outstanding cache per operator, retired on the next call
     * unless the plan is canonically identical (same dir/params — then
     * the CacheManager entry is shared and must stay; see the twin
-    * logic in [[Dedup]]).
+    * logic in [[Dedup]]). A repeat call on the same inputs reuses that
+    * entry instead of persisting the identical plan a second time.
     */
   private val liveCaches =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def retireCache(op: String, current: DataFrame): Unit = {
+  private def cached(op: String)(df: DataFrame): DataFrame = {
+    val current =
+      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val old = liveCaches.put(op, current)
     if (old != null &&
         old.queryExecution.analyzed.canonicalized !=
@@ -1462,6 +1462,6 @@ object Similarity {
       try old.unpersist(blocking = false)
       catch { case scala.util.control.NonFatal(_) => () }
     }
+    current
   }
-  private def retireLshCache(current: DataFrame): Unit = retireCache("annLsh", current)
 }

@@ -624,4 +624,54 @@ class DeleteVectorSpec extends SparkSpec {
     val got = spark.read.parquet(s"$outDir/sink").select("id").as[Long].collect().toSet
     assert(got == (3L to 20L).filter(_ % 2 == 1).toSet)
   }
+
+  test("MoR DML rebases onto a disjoint concurrent append; an overlapping one refuses") {
+    def build(tag: String): String = {
+      val t = tmpTable(s"dv_rebase_$tag")
+      LakeTable.overwrite(spark, t, baseDf, partitionBy = Seq("grp"))
+      t
+    }
+    def racing(t: String, rows: Seq[(Long, String, Double)]): Unit =
+      LakeTable.dmlBeforeCommitHook = () => {
+        LakeTable.dmlBeforeCommitHook = () => ()
+        LakeTable.append(spark, t, rows.toDF("id", "grp", "v").coalesce(1))
+      }
+    def ids(t: String): Set[Long] = LakeTable.read(spark, t).select("id").as[Long].collect().toSet
+
+    // MoR DELETE in g1; the winner appends into g2 — provably outside
+    // the condition, so the delete rebases and keeps the winner's rows
+    val t1 = build("del_ok")
+    racing(t1, Seq((1001L, "g2", 1.0)))
+    val v1 = try LakeTable.deleteMergeOnRead(spark, t1, $"grp" === "g1" && $"id" === 5L)
+      finally LakeTable.dmlBeforeCommitHook = () => ()
+    assert(v1 == 3L) // overwrite, racing append, rebased delete
+    assert(ids(t1) == (1L to 100L).toSet - 5L + 1001L)
+
+    // the winner appends one g1 file whose id bounds [4, 9] admit 5:
+    // it cannot be proven to miss
+    val t2 = build("del_bad")
+    racing(t2, Seq((4L, "g1", 1.0), (9L, "g1", 2.0)))
+    val e2 = try intercept[LakeTable.ConcurrentCommitException](
+        LakeTable.deleteMergeOnRead(spark, t2, $"grp" === "g1" && $"id" === 5L))
+      finally LakeTable.dmlBeforeCommitHook = () => ()
+    assert(e2.getMessage.contains("cannot be proven to miss"))
+    assert(ids(t2).contains(5L), "the refused delete must not land")
+
+    // bounded-key MoR MERGE: the pushed key IN is the footprint
+    val t3 = build("merge_ok")
+    racing(t3, Seq((2001L, "g3", 1.0)))
+    try LakeTable.mergeMergeOnRead(spark, t3,
+      Seq((7L, "g3", -7.0), (3000L, "g0", 3.0)).toDF("id", "grp", "v"), Seq("id"))
+    finally LakeTable.dmlBeforeCommitHook = () => ()
+    val m3 = LakeTable.read(spark, t3).select("id", "v").as[(Long, Double)].collect().toMap
+    assert(m3.size == 102 && m3(7L) == -7.0 && m3(3000L) == 3.0 && m3(2001L) == 1.0)
+
+    val t4 = build("merge_bad")
+    racing(t4, Seq((7L, "g3", 70.0)))
+    intercept[LakeTable.ConcurrentCommitException] {
+      try LakeTable.mergeMergeOnRead(spark, t4,
+        Seq((7L, "g3", -7.0)).toDF("id", "grp", "v"), Seq("id"))
+      finally LakeTable.dmlBeforeCommitHook = () => ()
+    }
+  }
 }

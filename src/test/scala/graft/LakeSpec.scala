@@ -722,6 +722,24 @@ class LakeSpec extends SparkSpec {
     }
   }
 
+  test("merge(keys) upsert refuses duplicate source keys with the SQL cardinality error") {
+    val t = tmpTable("lake_dupkey")
+    LakeTable.overwrite(spark, t, Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"))
+    // a duplicated matched key and a duplicated fresh key both refuse:
+    // the check rides the detection collect, not the match
+    Seq(Seq((1L, 1.0), (1L, 2.0)), Seq((7L, 1.0), (7L, 2.0))).foreach { rows =>
+      val e = intercept[IllegalArgumentException](
+        LakeTable.merge(spark, t, rows.toDF("id", "v"), Seq("id")))
+      assert(e.getMessage.contains("duplicate values of key (id)"))
+      val e2 = intercept[IllegalArgumentException](
+        LakeTable.mergeMergeOnRead(spark, t, rows.toDF("id", "v"), Seq("id")))
+      assert(e2.getMessage.contains("duplicate values of key (id)"))
+    }
+    assert(LakeTable.latestSnapshot(spark, t).get.version == 1L, "nothing may commit")
+    assert(LakeTable.read(spark, t).as[(Long, Double)].collect().toSet ==
+      Set((1L, 10.0), (2L, 20.0)))
+  }
+
   test("change feed: every DML commit's row-level changes, typed and versioned") {
     import org.apache.spark.sql.functions.col
     val t = tmpTable("lake_cdf")

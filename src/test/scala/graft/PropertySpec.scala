@@ -138,6 +138,9 @@ class PropertySpec extends SparkSpec {
     case class Merge(rows: Map[Long, Double]) extends Op
     case class Delete(below: Double) extends Op
     case class Update(atLeast: Double) extends Op
+    case class MergeMor(rows: Map[Long, Double]) extends Op
+    case class DeleteMor(below: Double) extends Op
+    case class UpdateMor(atLeast: Double) extends Op
     case object Compact extends Op
     case class CompactClustered(zorder: Boolean) extends Op
     case class Restore(frac: Double) extends Op // index into history, as a fraction
@@ -150,6 +153,9 @@ class PropertySpec extends SparkSpec {
       4 -> rowsGen(Gen.choose(0L, 40L)).map(Merge(_)),
       2 -> Gen.choose(0, 1000).map(x => Delete(x.toDouble)),
       2 -> Gen.choose(0, 1000).map(x => Update(x.toDouble)),
+      2 -> rowsGen(Gen.choose(0L, 40L)).map(MergeMor(_)),
+      1 -> Gen.choose(0, 1000).map(x => DeleteMor(x.toDouble)),
+      1 -> Gen.choose(0, 1000).map(x => UpdateMor(x.toDouble)),
       1 -> Gen.const(Compact),
       1 -> Gen.oneOf(true, false).map(CompactClustered(_)),
       1 -> Gen.choose(0.0, 1.0).map(Restore(_)))
@@ -183,6 +189,16 @@ class PropertySpec extends SparkSpec {
             model = model.filterNot { case (_, v) => v < below }
           case Update(atLeast) =>
             LakeTable.update(spark, t, Seq("v" -> (col("v") + 10000)), col("v") >= atLeast)
+            model = model.map { case (id, v) => id -> (if (v >= atLeast) v + 10000 else v) }
+          case MergeMor(rows) =>
+            LakeTable.mergeMergeOnRead(spark, t, toDf(rows), keys = Seq("id"))
+            model = model ++ rows
+          case DeleteMor(below) =>
+            LakeTable.deleteMergeOnRead(spark, t, col("v") < below)
+            model = model.filterNot { case (_, v) => v < below }
+          case UpdateMor(atLeast) =>
+            LakeTable.updateMergeOnRead(spark, t, Seq("v" -> (col("v") + 10000)),
+              col("v") >= atLeast)
             model = model.map { case (id, v) => id -> (if (v >= atLeast) v + 10000 else v) }
           case Compact =>
             LakeTable.compact(spark, t, smallFileBytes = 1L << 20)

@@ -212,12 +212,12 @@ class RetentionDeleteSpec extends SparkSpec {
     val future = eventsDf.filter($"ts" >= timestamp_micros(lit(cut1)))
       .withColumn("event_id", $"event_id" + 1000000L)
     val nFuture = future.count()
-    LakeTable.deleteBeforeCommitHook = () => {
-      LakeTable.deleteBeforeCommitHook = () => ()
+    LakeTable.dmlBeforeCommitHook = () => {
+      LakeTable.dmlBeforeCommitHook = () => ()
       LakeTable.append(spark, t1, future)
     }
     val v = try LakeTable.delete(spark, t1, $"ts" < timestamp_micros(lit(cut1)))
-      finally { LakeTable.deleteBeforeCommitHook = () => () }
+      finally { LakeTable.dmlBeforeCommitHook = () => () }
     assert(LakeTable.logEntryAt(spark, t1, v).removedFull.nonEmpty)
     val exp1 = eventsDf.filter($"ts" >= timestamp_micros(lit(cut1))).count() + nFuture
     assert(LakeTable.read(spark, t1).count() == exp1)
@@ -226,26 +226,26 @@ class RetentionDeleteSpec extends SparkSpec {
     val (t2, cut2) = build("bad")
     val old = eventsDf.filter($"ts" < timestamp_micros(lit(cut2)))
       .withColumn("event_id", $"event_id" + 2000000L)
-    LakeTable.deleteBeforeCommitHook = () => {
-      LakeTable.deleteBeforeCommitHook = () => ()
+    LakeTable.dmlBeforeCommitHook = () => {
+      LakeTable.dmlBeforeCommitHook = () => ()
       LakeTable.append(spark, t2, old)
     }
     val e2 = try intercept[LakeTable.ConcurrentCommitException] {
       LakeTable.delete(spark, t2, $"ts" < timestamp_micros(lit(cut2)))
-    } finally { LakeTable.deleteBeforeCommitHook = () => () }
+    } finally { LakeTable.dmlBeforeCommitHook = () => () }
     assert(e2.getMessage.contains("cannot be proven to miss"))
 
     // 3. racing MoR delete vectoring a file this delete read: refuse
     val (t3, cut3) = build("dv")
     val victim = eventsDf.filter($"ts" < timestamp_micros(lit(cut3)))
       .select($"event_id").as[Long].head()
-    LakeTable.deleteBeforeCommitHook = () => {
-      LakeTable.deleteBeforeCommitHook = () => ()
+    LakeTable.dmlBeforeCommitHook = () => {
+      LakeTable.dmlBeforeCommitHook = () => ()
       LakeTable.deleteMergeOnRead(spark, t3, $"event_id" === victim)
     }
     val e3 = try intercept[LakeTable.ConcurrentCommitException] {
       LakeTable.delete(spark, t3, $"ts" < timestamp_micros(lit(cut3)))
-    } finally { LakeTable.deleteBeforeCommitHook = () => () }
+    } finally { LakeTable.dmlBeforeCommitHook = () => () }
     assert(e3.getMessage.contains("rewrote, vectored or removed"))
 
     // 4. UPDATE goes through the same rebase: racing future append is
@@ -253,14 +253,14 @@ class RetentionDeleteSpec extends SparkSpec {
     val (t4, cut4) = build("upd")
     val future4 = eventsDf.filter($"ts" >= timestamp_micros(lit(cut4)))
       .withColumn("event_id", $"event_id" + 3000000L)
-    LakeTable.deleteBeforeCommitHook = () => () // not the update's seam
-    LakeTable.updateBeforeCommitHook = () => {
-      LakeTable.updateBeforeCommitHook = () => ()
+    LakeTable.dmlBeforeCommitHook = () => () // not the update's seam
+    LakeTable.dmlBeforeCommitHook = () => {
+      LakeTable.dmlBeforeCommitHook = () => ()
       LakeTable.append(spark, t4, future4)
     }
     try LakeTable.update(spark, t4, Seq("value" -> lit(0.0)),
       $"ts" < timestamp_micros(lit(cut4)))
-    finally { LakeTable.updateBeforeCommitHook = () => () }
+    finally { LakeTable.dmlBeforeCommitHook = () => () }
     val got4 = LakeTable.read(spark, t4)
       .filter($"ts" < timestamp_micros(lit(cut4)) && $"value" =!= 0.0).count()
     assert(got4 == 0, "update must have zeroed every pre-cutoff row")
