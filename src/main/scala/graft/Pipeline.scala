@@ -19,7 +19,14 @@ import graft.operators.{Analytics, Conform, Contracts, Quality}
   * overwrites, time travel, schema evolution and MERGE, with the
   * 100 TB fact tables date-partitioned so time filters prune at the
   * file-index level. Quality gates (row checks + declared schema
-  * contracts) run after each layer like the reference's asset checks.
+  * contracts) guard each layer like the reference's asset checks.
+  *
+  * A layer's models read only bronze, so they materialize
+  * CONCURRENTLY, one thread per model ([[materialize]]): each table's
+  * log commits independently, so writers to different tables need no
+  * coordination. Silver's freshness gate still runs first, before any
+  * write; its quality gate (bronze-only) runs beside the models and its
+  * verdict is checked once they have all finished.
   */
 object Pipeline {
 
@@ -71,10 +78,21 @@ object Pipeline {
     "dim_supplier" -> "supplier_key", "fact_lineitem" -> "lineitem_key",
     "fact_orders" -> "order_key", "fact_events" -> "event_key")
 
-  private def materialize(spark: SparkSession, srcDir: String, warehouseDir: String,
-                          layer: String,
-                          models: Map[String, (SparkSession, String) => DataFrame]): Map[String, Long] = {
-    val counts = models.map { case (name, fn) =>
+  /** Materialize `models` into `warehouseDir/<layer>/`, each model's
+    * whole body (overwrite, contract check, pk_not_null, count) on its
+    * own thread of a pool sized to the model count, while `beside` runs
+    * on the calling thread. Every model is joined before the catalog is
+    * published. A failing model rethrows — the first in name order,
+    * the others suppressed on it — and the catalog is not written; a
+    * model failure outranks any failure of `beside`, which is rethrown
+    * only after the catalog is written.
+    */
+  private[graft] def materialize[G](spark: SparkSession, srcDir: String, warehouseDir: String,
+                                    layer: String,
+                                    models: Map[String, (SparkSession, String) => DataFrame])(
+                                    beside: => G): (Map[String, Long], G) = {
+    val byName = models.toSeq.sortBy(_._1)
+    val (counts, aside) = Parallel.mapAllBeside(byName, byName.size) { case (name, fn) =>
       val out = tablePath(warehouseDir, layer, name)
       val df = withDerived(name, fn(spark, srcDir))
       LakeTable.overwrite(spark, out, df, partitioning.getOrElse(name, Nil))
@@ -90,18 +108,19 @@ object Pipeline {
         if (!has)
           LakeTable.addConstraint(spark, out, "pk_not_null", s"$pk IS NOT NULL")
       }
-      name -> materialized.count()
-    }
+      materialized.count()
+    }(beside)
     // materialization registers in the warehouse's persistent catalog
     // (the Glue analog) — a fresh session restores the tables by name
     // from the directory alone (GraftCatalog.restoreLake/init)
     GraftCatalog.saveCatalog(spark, warehouseDir)
-    counts
+    (byName.map(_._1).zip(counts).toMap, aside.get)
   }
 
-  /** silver_daily_transforms analog: conform all dims/facts, then run
-    * the quality gate. Returns per-model row counts; throws if any
-    * zero-violation check fails (the reference's ERROR severity).
+  /** silver_daily_transforms analog: conform all dims/facts
+    * concurrently, with the quality gate running beside them. Returns
+    * per-model row counts; throws if any zero-violation check fails
+    * (the reference's ERROR severity).
     *
     * `freshnessSlaMs` is the max tolerated staleness of any event
     * source behind the freshest one; a breach fails the run BEFORE
@@ -125,10 +144,10 @@ object Pipeline {
             (if (freshnessMaxAgeMs.isDefined) s" (age ${r.getAs[Long]("age_ms")}ms)" else ""))
           .mkString(", "))
     }
-    val counts = materialize(spark, srcDir, warehouseDir, "silver", silverModels)
-    val failures = Quality.dqChecks(spark, srcDir)
-      .filter(org.apache.spark.sql.functions.not(org.apache.spark.sql.functions.col("passed")))
-      .collect()
+    val (counts, failures) = materialize(spark, srcDir, warehouseDir, "silver", silverModels)(
+      Quality.dqChecks(spark, srcDir)
+        .filter(org.apache.spark.sql.functions.not(org.apache.spark.sql.functions.col("passed")))
+        .collect())
     if (failures.nonEmpty)
       throw new IllegalStateException(
         s"quality gate failed: ${failures.map(r => s"${r.get(0)}/${r.get(1)}=${r.get(2)}").mkString(", ")}")
@@ -160,7 +179,7 @@ object Pipeline {
 
   /** gold_daily_analytics analog. */
   def runGold(spark: SparkSession, srcDir: String, warehouseDir: String): Map[String, Long] =
-    materialize(spark, srcDir, warehouseDir, "gold", goldModels)
+    materialize(spark, srcDir, warehouseDir, "gold", goldModels)(())._1
 
   /** Full daily run: silver (with quality gate) then gold. */
   def runAll(spark: SparkSession, srcDir: String, warehouseDir: String,

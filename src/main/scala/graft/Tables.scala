@@ -41,16 +41,20 @@ object Tables {
           // handling rides a per-relation READ OPTION (merged into the
           // scan's hadoopConf at execution). The session conf is back
           // to its prior value before this function returns, so no
-          // later parquet read in the session changes behavior.
+          // later parquet read in the session changes behavior. The flip
+          // is serialized: two concurrent loads (the pipeline runs its
+          // models side by side) must not capture each other's `true`
+          // as the prior value.
           val key = "spark.sql.legacy.parquet.nanosAsLong"
-          val prior = s.conf.getOption(key)
-          s.conf.set(key, "true")
-          val inferred =
+          val inferred = Tables.synchronized {
+            val prior = s.conf.getOption(key)
+            s.conf.set(key, "true")
             try load(s, d, "events").schema
             finally prior match {
               case Some(v) => s.conf.set(key, v)
               case None    => s.conf.unset(key)
             }
+          }
           s.read.schema(inferred).option(key, "true")
             .parquet(s"$d/events.parquet")
       }

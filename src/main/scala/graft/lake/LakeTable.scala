@@ -1143,6 +1143,11 @@ object LakeTable extends org.apache.spark.internal.Logging {
   // Bench samples deltas of both around each key (commit_s /
   // fileops_s in BENCH_DETAIL), so box-level write-path drift is
   // attributable without overstating it as the whole staged write.
+  // The depth guard is per thread, so CONCURRENT operations (e.g. the
+  // pipeline's models, materialized side by side) each add their own
+  // wall time: a span's commit seconds can then exceed its wall time —
+  // perfbench's lake.commit_s and lake.overwrite_ms on nightly_pipeline
+  // read as summed per-model commit time, not elapsed time.
   private val commitNanosAcc = new java.util.concurrent.atomic.AtomicLong(0L)
   private val meterDepth = new ThreadLocal[Integer] { override def initialValue = Integer.valueOf(0) }
   private val fileOpsNanosAcc = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -1220,24 +1225,14 @@ object LakeTable extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Run `body` over the items on a bounded thread pool, preserving
-    * order; the first failure propagates (remaining work is not
-    * awaited beyond cancellation).
+  /** Run `body` over the items on a bounded thread pool
+    * ([[graft.Parallel.mapAll]]: ordered results, every task awaited,
+    * the first failure in item order rethrown) — so a caller's
+    * `finally` that deletes the staging directory never races a rename
+    * still in flight.
     */
-  private def stageParallel[A, B](items: Seq[A])(body: A => B): Seq[B] = meteredCommit { meteredFileOps {
-    if (items.size <= 1) return items.map(body)
-    val threads = math.min(16, items.size)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    try {
-      val futures = items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = body(a)
-      }))
-      futures.map { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    } finally pool.shutdownNow()
-  }}
+  private def stageParallel[A, B](items: Seq[A])(body: A => B): Seq[B] =
+    meteredCommit { meteredFileOps { graft.Parallel.mapAll(items, 16)(body) } }
 
   // ------------------------------------------------------ change data feed
 

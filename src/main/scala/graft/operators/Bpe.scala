@@ -57,7 +57,7 @@ object Bpe {
       .select(col("word"), col("cnt"),
         expr("array_append(regexp_extract_all(word, '.', 0), '</w>')").as("syms"))
 
-    var vocab = base.persist(StorageLevel.MEMORY_AND_DISK)
+    var vocab = Dedup.persistOnce(StorageLevel.MEMORY_AND_DISK)(base)
     // the predecessor vocabulary, unpersisted one iteration LATE: the
     // argmax pair count below scans every partition of the current
     // vocab, so its cache is complete by the time the collect returns —
@@ -108,7 +108,7 @@ object Bpe {
                   concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
                   .otherwise(concat(acc, array(x))))
             val next = vocab.select(col("word"), col("cnt"), rewritten.as("syms"))
-              .persist(StorageLevel.MEMORY_AND_DISK)
+              .transform(Dedup.persistOnce(StorageLevel.MEMORY_AND_DISK))
             prev = vocab
             vocab = next
           }

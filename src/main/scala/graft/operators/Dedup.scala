@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.functions.Money.rnd
 import graft.functions.TextFns
@@ -36,6 +37,14 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   private val liveCaches =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[DataFrame]]()
+
+  /** Persist `df` unless its plan is already cached — by an identical
+    * earlier call whose entry [[retirePrevious]] kept — and then reuse
+    * that entry instead of asking the CacheManager to cache it again.
+    * `df.transform(persistOnce(level))` in place of `df.persist(level)`.
+    */
+  private[operators] def persistOnce(level: StorageLevel)(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df else df.persist(level)
 
   private def retirePrevious(op: String, current: Seq[DataFrame]): Unit = {
     val old = liveCaches.put(op, current)
@@ -81,7 +90,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       .filter(size(col("w")) >= 3)
       .groupBy(col("lang"), col("text"))
       .agg(min(col("doc_id")).as("rep_id"), collect_list(col("doc_id")).as("ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(persistOnce(StorageLevel.MEMORY_AND_DISK))
     val d = members
       .withColumn("w", TextFns.tokens(col("text")))
       .withColumn("sh", array_sort(TextFns.shingleExpr("w", 3)))
@@ -89,7 +98,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       // reused three times (doc-freq scan, prefix build, verify joins),
       // but shingle arrays are ~10x the document text: DISK_ONLY keeps
       // the re-read cheap without pinning executor memory at 100 TB
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      .transform(persistOnce(StorageLevel.DISK_ONLY))
 
     // rarest-first prefix: global order = (document frequency, shingle)
     val docFreq = d.select(col("lang"), explode(col("sh")).as("s"))
@@ -101,7 +110,8 @@ object Dedup extends org.apache.spark.internal.Logging {
       .withColumn("rk", row_number().over(byRarity))
       .filter(col("rk") <= col("n") - ceil(lit(threshold) * col("n")).cast("int") + 1)
       .select(col("lang"), col("doc_id"), col("n"), col("s"))
-      .cache() // joined with itself below; avoid recomputing the rank window twice
+      // joined with itself below; avoid recomputing the rank window twice
+      .transform(persistOnce(StorageLevel.MEMORY_AND_DISK))
     retirePrevious("ngramJaccard", Seq(members, d, prefix))
 
     // (A PPJoin positional filter was considered here but is unsound
@@ -295,13 +305,13 @@ object Dedup extends org.apache.spark.internal.Logging {
       .filter(size(col("w")) >= 3)
       .groupBy(col("text"))
       .agg(min(col("doc_id")).as("rep_id"), collect_list(col("doc_id")).as("ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(persistOnce(StorageLevel.MEMORY_AND_DISK))
     val d = members
       .withColumn("w", TextFns.tokens(col("text")))
       .withColumn("sh", TextFns.shingleExpr("w", 3))
       .withColumn("sig", expr(s"minhash_sig(transform(sh, s -> xxhash64(s)), $numHashes)"))
       .select(col("rep_id").as("doc_id"), col("sh"), col("sig"))
-      .cache()
+      .transform(persistOnce(StorageLevel.MEMORY_AND_DISK))
     retirePrevious("dedupMinhash", Seq(members, d))
 
     val banded = d.select(
@@ -475,7 +485,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     val probe = bandBuckets(newDocs)
       .withColumnRenamed("doc_id", "probe_id")
       .withColumnRenamed("sig", "probe_sig")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(persistOnce(StorageLevel.MEMORY_AND_DISK))
     retirePrevious("probeMinhashIndex", Seq(probe))
     // bounded metadata to the driver: DISTINCT buckets, capped — the
     // cap decides the scan strategy, it never truncates candidates
@@ -496,7 +506,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       .filter(col("doc_id") =!= col("probe_id"))
       .select(col("doc_id"), col("probe_id"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(persistOnce(StorageLevel.MEMORY_AND_DISK))
     // candidate doc_ids, capped the same way, push into the sigs scan
     val candIds = cand.select(col("doc_id")).distinct()
       .limit(maxPushedKeys + 1).collect()
@@ -564,7 +574,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       val c = probeMinhashIndex(spark, docs.filter(col("doc_id") >= c2), table,
           math.max(0.0, threshold - 0.15))
         .select(col("doc_id"), col("probe_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(persistOnce(StorageLevel.MEMORY_AND_DISK))
       // retire the PREVIOUS run's pair cache BEFORE materializing the
       // new one — back-to-back runs must not hold both peaks at once
       retirePrevious("dedupIncrCand", Seq(c))
@@ -617,7 +627,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     val members = Tables.documents(spark, dir)
       .groupBy(col("text"))
       .agg(min(col("doc_id")).as("rep_id"), collect_list(col("doc_id")).as("ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(persistOnce(StorageLevel.MEMORY_AND_DISK))
     retirePrevious("dedupSimhash", Seq(members))
     val d = members
       .withColumn("toks", TextFns.tokens(col("text")))

@@ -1452,9 +1452,7 @@ object Similarity {
   private val liveCaches =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def cached(op: String)(df: DataFrame): DataFrame = {
-    val current =
-      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val current = Dedup.persistOnce(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)(df)
     val old = liveCaches.put(op, current)
     if (old != null &&
         old.queryExecution.analyzed.canonicalized !=

@@ -105,6 +105,39 @@ class PipelineSpec extends SparkSpec {
     assert(msgs(e).contains("CHECK constraint violated"))
   }
 
+  test("a failing model propagates after the others commit; no staging left, no catalog") {
+    val tmp = java.nio.file.Files.createTempDirectory("warehouse_fail").toString
+    // fails inside its staged write (a task failure), not at plan time
+    def broken(tag: String): (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame =
+      (s, d) => Tables.nation(s, d).withColumn("n_name",
+        coalesce(raise_error(lit(s"injected failure $tag")).cast("string"), col("n_name")))
+    val good = Pipeline.silverModels.filter { case (n, _) => n.startsWith("dim_") }
+    val models = good + ("dim_c_broken" -> broken("c")) + ("dim_z_broken" -> broken("z"))
+    val e = intercept[Exception] {
+      Pipeline.materialize(spark, sf, tmp, "silver", models)(())
+    }
+    def chain(x: Throwable): String =
+      if (x == null) "" else Option(x.getMessage).getOrElse("") + " | " + chain(x.getCause)
+    // the first failing model in name order propagates; the other rides
+    // along as suppressed
+    assert(chain(e).contains("injected failure c"), chain(e))
+    assert(e.getSuppressed.exists(x => chain(x).contains("injected failure z")),
+      e.getSuppressed.map(chain).mkString("; "))
+    // every other model finished and committed, with its invariant
+    good.keys.foreach { name =>
+      val snap = lake.LakeTable.latestSnapshot(spark, Pipeline.tablePath(tmp, "silver", name))
+      assert(snap.exists(_.constraints.contains("pk_not_null")), s"$name not committed")
+    }
+    // no staged write is left under any model table, failed ones included
+    models.keys.foreach { name =>
+      val staging = new java.io.File(Pipeline.tablePath(tmp, "silver", name), "_staging")
+      assert(Option(staging.list()).forall(_.isEmpty),
+        s"$name: left ${Option(staging.list()).map(_.mkString(",")).getOrElse("")}")
+    }
+    assert(!new java.io.File(tmp, "_catalog.json").exists(), "catalog written despite a failure")
+  }
+
   test("partitioned facts prune on the partition column") {
     val tmp = java.nio.file.Files.createTempDirectory("warehouse_part").toString
     Pipeline.runSilver(spark, sf, tmp)
