@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
@@ -115,11 +115,11 @@ object Incremental {
         .agg(count(lit(1)).as(RowsCol),
           (ms.map { case (n, e) => sum(e).as(n) } ++
             ext.map { case (n, a) => a.as(n) }): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val own = LakeTable.persistShared(agg)
       try {
         requireNonNullKeys(agg)
         LakeTable.overwrite(spark, target, agg, txn = Some(qid -> srcSnap.version))
-      } finally agg.unpersist(blocking = false)
+      } finally if (own) agg.unpersist(blocking = false)
     } else {
       // delta: only the feed of (done, srcSnap.version] is read.
       // PERSISTED (groups-scale): consumed by the null-key probe, the
@@ -132,7 +132,7 @@ object Incremental {
         .groupBy(groupBy.map(col).toIndexedSeq: _*)
         .agg(sum(sign).as(RowsCol),
           ms.map { case (n, e) => sum(sign * e).as(n) }: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val own = LakeTable.persistShared(additive)
       // everything that reads `additive` sits inside the try, so a
       // failed null-key check or extremes collect cannot leak the cache
       try {
@@ -185,7 +185,7 @@ object Incremental {
             (Some(col(s"s.$RowsCol") > 0L),
               (groupBy ++ addNames ++ extNames).map(n => n -> col(s"s.$n")).toMap)),
           txn = Some(qid -> srcSnap.version))
-      } finally additive.unpersist(blocking = false)
+      } finally if (own) additive.unpersist(blocking = false)
     }
   }
 
@@ -214,10 +214,34 @@ object Incremental {
                     groupBy: Seq[String], valueCol: String,
                     lgK: Int = 12): Long = {
     require(groupBy.nonEmpty, "refreshSketch needs at least one group column")
+    refreshInsertOnly(spark, source, target, sketchWatermarkId(source), "SKETCH REFRESH",
+        "refreshSketch", "sketches are insert-only summaries") { (rows, through) =>
+      rows.groupBy(groupBy.map(col).toIndexedSeq: _*)
+        .agg(expr(s"hll_sketch_agg(`$valueCol`, $lgK)").as("sketch"),
+          count(lit(1)).as("n"))
+        .withColumn("through_version", lit(through))
+    }
+  }
+
+  /** The scaffold of the insert-only refreshes ([[refreshSketch]],
+    * [[refreshQuantiles]], [[refreshHeavyHitters]]): read the source
+    * head and the target's watermark `qid`; return the target's
+    * version when it is caught up; otherwise build the partial rows
+    * over the source's NEW rows — the whole source on the first
+    * refresh, the change feed since the watermark after it, refusing
+    * any change that is not an insert — and append them with the
+    * watermark in the same commit ([[LakeTable.appendStream]], which
+    * creates a missing target). A crashed-and-replayed refresh of the
+    * same (source, version) appends nothing. Returns the committed
+    * version; on a replay, the target's version as read (or, when a
+    * racer created the target, its latest).
+    */
+  private def refreshInsertOnly(spark: SparkSession, source: String, target: String,
+                                qid: String, op: String, fn: String, why: String)(
+      partial: (DataFrame, Long) => DataFrame): Long = {
     val srcSnap = LakeTable.latestSnapshot(spark, source)
       .getOrElse(throw new IllegalArgumentException(
         s"no committed version at source $source"))
-    val qid = sketchWatermarkId(source)
     val tgtSnap = LakeTable.latestSnapshot(spark, target)
     val done = tgtSnap.flatMap(_.txns.get(qid)).getOrElse(0L)
     if (done >= srcSnap.version) return tgtSnap.get.version
@@ -228,25 +252,15 @@ object Incremental {
         val nonInsert = feed
           .filter(col(LakeTable.ChangeTypeCol) =!= "insert").limit(1).count()
         require(nonInsert == 0L,
-          s"refreshSketch source $source fed a non-insert change in versions " +
-            s"(${done + 1}, ${srcSnap.version}] — sketches are insert-only " +
-            "summaries; rebuild the sketch table instead of folding a delete")
+          s"$fn source $source fed a non-insert change in versions " +
+            s"(${done + 1}, ${srcSnap.version}] — $why; rebuild the target " +
+            "instead of folding a delete")
         feed
       }
-    val partial = rows
-      .groupBy(groupBy.map(col).toIndexedSeq: _*)
-      .agg(expr(s"hll_sketch_agg(`$valueCol`, $lgK)").as("sketch"),
-        count(lit(1)).as("n"))
-      .withColumn("through_version", lit(srcSnap.version))
-    // the txn ledger rides the commit: a crashed-and-replayed refresh
-    // of the same (source, version) appends nothing
-    (if (tgtSnap.isEmpty)
-       LakeTable.overwriteStream(spark, target, partial, qid, srcSnap.version,
-         operation = "SKETCH REFRESH")
-         .getOrElse(LakeTable.latestVersion(spark, target).getOrElse(0L))
-     else
-       LakeTable.appendStream(spark, target, partial, qid, srcSnap.version,
-         operation = "SKETCH REFRESH").getOrElse(tgtSnap.get.version))
+    LakeTable.appendStream(spark, target, partial(rows, srcSnap.version), qid,
+      srcSnap.version, operation = op)
+      .getOrElse(tgtSnap.map(_.version)
+        .getOrElse(LakeTable.latestVersion(spark, target).getOrElse(0L)))
   }
 
   /** Distinct-count estimates from an accumulated sketch table: union
@@ -278,37 +292,13 @@ object Incremental {
                        eps: Double = 0.01): Long = {
     require(groupBy.nonEmpty, "refreshQuantiles needs at least one group column")
     graft.functions.QuantileAgg.register(spark)
-    val srcSnap = LakeTable.latestSnapshot(spark, source)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed version at source $source"))
-    val qid = gkWatermarkId(source)
-    val tgtSnap = LakeTable.latestSnapshot(spark, target)
-    val done = tgtSnap.flatMap(_.txns.get(qid)).getOrElse(0L)
-    if (done >= srcSnap.version) return tgtSnap.get.version
-    val rows =
-      if (done == 0L) LakeTable.read(spark, source, asOf = Some(srcSnap.version))
-      else {
-        val feed = LakeTable.changes(spark, source, done + 1, srcSnap.version)
-        val nonInsert = feed
-          .filter(col(LakeTable.ChangeTypeCol) =!= "insert").limit(1).count()
-        require(nonInsert == 0L,
-          s"refreshQuantiles source $source fed a non-insert change in " +
-            s"(${done + 1}, ${srcSnap.version}] — quantile summaries are " +
-            "insert-only; rebuild instead of folding a delete")
-        feed
-      }
-    val partial = rows
-      .groupBy(groupBy.map(col).toIndexedSeq: _*)
-      .agg(expr(s"gk_sketch_agg(CAST(`$valueCol` AS DOUBLE), ${eps}d)").as("gk"),
-        count(col(valueCol)).as("n"))
-      .withColumn("through_version", lit(srcSnap.version))
-    (if (tgtSnap.isEmpty)
-       LakeTable.overwriteStream(spark, target, partial, qid, srcSnap.version,
-         operation = "GK REFRESH")
-         .getOrElse(LakeTable.latestVersion(spark, target).getOrElse(0L))
-     else
-       LakeTable.appendStream(spark, target, partial, qid, srcSnap.version,
-         operation = "GK REFRESH").getOrElse(tgtSnap.get.version))
+    refreshInsertOnly(spark, source, target, gkWatermarkId(source), "GK REFRESH",
+        "refreshQuantiles", "quantile summaries are insert-only") { (rows, through) =>
+      rows.groupBy(groupBy.map(col).toIndexedSeq: _*)
+        .agg(expr(s"gk_sketch_agg(CAST(`$valueCol` AS DOUBLE), ${eps}d)").as("gk"),
+          count(col(valueCol)).as("n"))
+        .withColumn("through_version", lit(through))
+    }
   }
 
   /** Percentile estimates from an accumulated GK-sketch table: merge
@@ -351,45 +341,22 @@ object Incremental {
                           terms: Column, eps: Double = 1e-4,
                           confidence: Double = 0.99, seed: Int = 42,
                           candidatesPerBatch: Int = 100): Long = {
-    val srcSnap = LakeTable.latestSnapshot(spark, source)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed version at source $source"))
-    val qid = hhWatermarkId(source)
-    val tgtSnap = LakeTable.latestSnapshot(spark, target)
-    val done = tgtSnap.flatMap(_.txns.get(qid)).getOrElse(0L)
-    if (done >= srcSnap.version) return tgtSnap.get.version
-    val rows =
-      if (done == 0L) LakeTable.read(spark, source, asOf = Some(srcSnap.version))
-      else {
-        val feed = LakeTable.changes(spark, source, done + 1, srcSnap.version)
-        val nonInsert = feed
-          .filter(col(LakeTable.ChangeTypeCol) =!= "insert").limit(1).count()
-        require(nonInsert == 0L,
-          s"refreshHeavyHitters source $source fed a non-insert change in " +
-            s"(${done + 1}, ${srcSnap.version}] — sketches are insert-only " +
-            "summaries; rebuild instead of folding a delete")
-        feed
-      }
-    val batchTerms = rows.select(explode(terms).as("term"))
-      .filter(col("term").isNotNull && col("term") =!= "")
-    val cmsRow = batchTerms
-      .agg(expr(s"count_min_sketch(term, ${eps}d, ${confidence}d, $seed)").as("cms"))
-      .select(lit("cms").as("kind"), lit(null).cast("string").as("term"),
-        lit(null).cast("long").as("n"), col("cms"),
-        lit(srcSnap.version).as("through_version"))
-    val candRows = batchTerms.groupBy("term").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("term")).limit(candidatesPerBatch)
-      .select(lit("cand").as("kind"), col("term"), col("n"),
-        lit(null).cast("binary").as("cms"),
-        lit(srcSnap.version).as("through_version"))
-    val partial = cmsRow.unionByName(candRows)
-    (if (tgtSnap.isEmpty)
-       LakeTable.overwriteStream(spark, target, partial, qid, srcSnap.version,
-         operation = "HH REFRESH")
-         .getOrElse(LakeTable.latestVersion(spark, target).getOrElse(0L))
-     else
-       LakeTable.appendStream(spark, target, partial, qid, srcSnap.version,
-         operation = "HH REFRESH").getOrElse(tgtSnap.get.version))
+    refreshInsertOnly(spark, source, target, hhWatermarkId(source), "HH REFRESH",
+        "refreshHeavyHitters", "sketches are insert-only summaries") { (rows, through) =>
+      val batchTerms = rows.select(explode(terms).as("term"))
+        .filter(col("term").isNotNull && col("term") =!= "")
+      val cmsRow = batchTerms
+        .agg(expr(s"count_min_sketch(term, ${eps}d, ${confidence}d, $seed)").as("cms"))
+        .select(lit("cms").as("kind"), lit(null).cast("string").as("term"),
+          lit(null).cast("long").as("n"), col("cms"),
+          lit(through).as("through_version"))
+      val candRows = batchTerms.groupBy("term").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("term")).limit(candidatesPerBatch)
+        .select(lit("cand").as("kind"), col("term"), col("n"),
+          lit(null).cast("binary").as("cms"),
+          lit(through).as("through_version"))
+      cmsRow.unionByName(candRows)
+    }
   }
 
   /** Top-k terms from an accumulated heavy-hitters table via the
@@ -602,7 +569,7 @@ object Incremental {
       // tombstone anti-join — persist it so the (left scan ⋈ dim) runs
       // once, not once per consumer
       val replacement = view(lTouched)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val own = LakeTable.persistShared(replacement)
       try {
         val repl = replacement.withColumn(marker, lit(false))
         // tombstones: touched keys producing no view row anymore
@@ -622,7 +589,7 @@ object Incremental {
             (Some(!col(s"s.$marker")), viewCols.map(n => n -> col(s"s.$n")).toMap)),
           txn = Some(widL -> lSnap.version),
           extraTxns = Map(widR -> rSnap.version))
-      } finally replacement.unpersist(blocking = false)
+      } finally if (own) replacement.unpersist(blocking = false)
     }
   }
 }

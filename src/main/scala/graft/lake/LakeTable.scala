@@ -796,7 +796,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * post-commit state the caller derived; at every
     * `checkpointInterval`-th version the winner also rolls it into a
     * snapshot checkpoint (advisory). Returns false on a lost race
-    * (version taken by another writer).
+    * (version taken by another writer). Writers reach it only through
+    * [[commitLoop]].
     */
   private[lake] def tryCommit(spark: SparkSession, table: String, snap: Snapshot,
                               adds: Seq[FileEntry], removes: Seq[String],
@@ -1190,6 +1191,25 @@ object LakeTable extends org.apache.spark.internal.Logging {
     }
   }
 
+  /** Persist `df` (MEMORY_AND_DISK) unless an identical plan is cached
+    * already, checking and adding under the CacheManager's lock. Two
+    * concurrent statements over one plan (racing refreshes of one
+    * target) then share one cache entry: without the lock both persist
+    * it, and Spark warns "Asked to cache already cached data". True when
+    * this call made the entry — only its maker unpersists it; a sharer
+    * whose maker finished first reads through to the plan again.
+    */
+  private[lake] def persistShared(df: DataFrame): Boolean = {
+    val cm = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cm.synchronized {
+      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE && {
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        true
+      }
+    }
+  }
+
   /** Run two INDEPENDENT staged writes concurrently (guide §2.6/§5:
     * a DML commit's data-file, change-feed and deletion-vector writes
     * share no lineage beyond already-persisted inputs, so running them
@@ -1217,7 +1237,17 @@ object LakeTable extends org.apache.spark.internal.Logging {
     t.start()
     val ra =
       try a
-      catch { case e: Throwable => t.join(); throw e }
+      catch {
+        case e: Throwable =>
+          // graft.Parallel's contract: the first failure rethrows with
+          // the other side's attached, not dropped
+          t.join()
+          rb.get() match {
+            case Left(eb) if eb ne e => e.addSuppressed(eb)
+            case _ => ()
+          }
+          throw e
+      }
     t.join()
     rb.get() match {
       case Right(v) => (ra, v)
@@ -1854,24 +1884,132 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
   // ---------------------------------------------------------------- writes
 
+  /** How many commit races a writer may lose before [[commitLoop]]
+    * gives up — the only retry bound of the commit protocol.
+    */
   private[lake] val maxRetries = 3
+
+  /** What a writer's derive step decides for one commit attempt:
+    * commit a [[CommitSpec]], or stop at an [[AlreadyCommitted]]
+    * version. Refusing is throwing [[ConcurrentCommitException]].
+    */
+  private[lake] sealed trait Attempt
+
+  /** Commit this: the full derived state (for the in-memory snapshot +
+    * checkpoints) and the delta the log file records (`adds`,
+    * `removes`, `reset`, the staged change-feed dirs `cdc`, and the
+    * `removedFull` files whose deletes the change feed synthesizes).
+    * `txnUpdate` merges into the head's txns; `constraintsUpdate`
+    * replaces the head's CHECK constraints (None carries them).
+    */
+  private[lake] final case class CommitSpec(schema: StructType, partitionColumns: Seq[String],
+                                            files: Seq[FileEntry], adds: Seq[FileEntry],
+                                            removes: Seq[String], reset: Boolean,
+                                            txnUpdate: Map[String, Long] = Map.empty,
+                                            protocol: Protocol = Protocol(1, 1),
+                                            constraintsUpdate: Option[Map[String, String]] = None,
+                                            cdc: Option[Seq[String]] = None,
+                                            removedFull: Seq[String] = Nil) extends Attempt
+
+  /** Commit nothing and return `version`: the head already holds this
+    * write (a replayed stream batch or txn watermark).
+    */
+  private[lake] final case class AlreadyCommitted(version: Long) extends Attempt
+
+  /** The one commit loop of the table format (optimistic concurrency,
+    * Delta Lake VLDB 2020 §3), and the only caller of [[tryCommit]].
+    * Each attempt hands the head to the writer's `derive`, assembles
+    * version head+1 from the returned [[CommitSpec]] and publishes it
+    * put-if-absent. A lost race re-reads the head and derives again; the
+    * writer decides there whether its staged work still holds on the new
+    * head (rebase) or not (throw [[ConcurrentCommitException]]). After
+    * [[maxRetries]] lost races the loop gives up with
+    * `"<op> on <table> lost N commit races"`. The loop never deletes a
+    * file: what a writer staged is the writer's to clean up.
+    *
+    * Carried forward from the head on every attempt: its txn watermarks
+    * (merged with `txnUpdate`, so no commit drops a stream's progress),
+    * and — inside [[tryCommit]] — its protocol (the stamp only rises)
+    * and its CHECK constraints (only `constraintsUpdate` replaces them).
+    *
+    * `held` is the head the writer already read, used for the first
+    * attempt instead of a fresh read (`Some(None)`: known not to exist).
+    *
+    * Rebase rules, per writer (each refusal throws
+    * [[ConcurrentCommitException]]):
+    * {{{
+    * writer                         on a lost race
+    * ------------------------------ --------------------------------------------
+    * append, appendStream,          re-derive on the head; refuse when a
+    *   overwritePartitions            RENAME/DROP COLUMN, ADD CONSTRAINT or
+    *                                  bucket-layout change raced the staged files
+    * overwrite, overwriteStream     re-derive; refuse when ADD CONSTRAINT raced
+    * appendStream, overwriteStream  stop (None) once the head holds the batch
+    * DML (RowLevelOps.commit)       rebase when schema, layout and constraints
+    *                                  are unchanged, every removed or vectored
+    *                                  file is unchanged, and every winner-added
+    *                                  file is provably outside the footprint
+    * compact, reclusterIncremental  rebase when schema, layout and every
+    *   (rewriteFiles)                 rewritten file are unchanged
+    * publish                        fast-forward when the branch's write set,
+    *                                  schema, layout and constraints hold; stop
+    *                                  once the head holds its txn
+    * shallowClone                   refuse: the clone target now exists
+    * addConstraint                  refuse: rows landed after its validation
+    * other DDL, restore             re-derive on the head
+    * }}}
+    */
+  private[lake] def commitLoop(spark: SparkSession, table: String, op: String,
+                               held: Option[Option[Snapshot]] = None)(
+      derive: Option[Snapshot] => Attempt): Long = {
+    @annotation.tailrec def attempt(head: Option[Snapshot], n: Int): Long =
+      derive(head) match {
+        case AlreadyCommitted(v) => v
+        case spec: CommitSpec =>
+          val snap = Snapshot(head.map(_.version).getOrElse(0L) + 1,
+            System.currentTimeMillis(), op, spec.schema, spec.partitionColumns, spec.files,
+            txns = head.map(_.txns).getOrElse(Map.empty) ++ spec.txnUpdate,
+            protocol = spec.protocol)
+          if (tryCommit(spark, table, snap, spec.adds, spec.removes, spec.reset, spec.cdc,
+              head, spec.constraintsUpdate, spec.removedFull)) snap.version
+          else if (n == maxRetries)
+            throw new ConcurrentCommitException(s"$op on $table lost $maxRetries commit races")
+          else attempt(latestSnapshot(spark, table), n + 1)
+      }
+    attempt(held.getOrElse(latestSnapshot(spark, table)), 1)
+  }
+
+  /** Commit `staged` files through [[commitLoop]]; under `once =
+    * (queryId, batchId)`, with the stream writers' exactly-once stop
+    * rule: a head that already holds that batch (or a later one) stops
+    * the commit, the staged files are deleted (orphans otherwise; vacuum
+    * also reclaims) and the result is None.
+    */
+  private def commitStaged(spark: SparkSession, table: String, op: String,
+                           staged: Seq[FileEntry], once: Option[(String, Long)])(
+      derive: Option[Snapshot] => CommitSpec): Option[Long] = {
+    var replayed = false
+    val v = commitLoop(spark, table, op) { head =>
+      replayed = holdsBatch(head, once)
+      if (replayed) AlreadyCommitted(head.get.version) else derive(head)
+    }
+    if (!replayed) return Some(v)
+    val f = fs(spark, table)
+    staged.foreach(e =>
+      try f.delete(new Path(dataPath(table), e.path), false)
+      catch { case _: java.io.IOException => () })
+    None
+  }
+
+  private def holdsBatch(s: Option[Snapshot], once: Option[(String, Long)]): Boolean =
+    once.exists { case (queryId, batchId) =>
+      s.exists(_.txns.get(queryId).exists(_ >= batchId)) }
 
   /** Replace the table contents atomically. Previous versions stay
     * readable (time travel) until vacuumed. Schema may differ freely
     * from the previous version.
-    */
-  /** What one commit attempt writes: the full derived state (for the
-    * in-memory snapshot + checkpoints) and the delta (what the log
-    * file records).
-    */
-  private final case class CommitSpec(schema: StructType, partitionColumns: Seq[String],
-                                      files: Seq[FileEntry], adds: Seq[FileEntry],
-                                      removes: Seq[String], reset: Boolean,
-                                      txnUpdate: Map[String, Long] = Map.empty,
-                                      protocol: Protocol = Protocol(1, 1),
-                                      constraintsUpdate: Option[Map[String, String]] = None)
-
-  /** `txn = Some(appId -> version)` records an APPLICATION watermark in
+    *
+    * `txn = Some(appId -> version)` records an APPLICATION watermark in
     * the same commit (the txnAppId/txnVersion idiom): data and progress
     * marker land atomically, so an idempotent writer can check
     * `latestSnapshot.txns(appId)` and skip work it already committed —
@@ -1880,7 +2018,14 @@ object LakeTable extends org.apache.spark.internal.Logging {
   def overwrite(spark: SparkSession, table: String, df0: DataFrame,
                 partitionBy: Seq[String] = Nil,
                 txn: Option[(String, Long)] = None,
-                extraTxns: Map[String, Long] = Map.empty): Long = {
+                extraTxns: Map[String, Long] = Map.empty): Long =
+    overwriteAs(spark, table, df0, "OVERWRITE", _ => partitionBy,
+      txn.toMap ++ extraTxns, once = None).get
+
+  /** The body of [[overwrite]] and [[overwriteStream]]. */
+  private def overwriteAs(spark: SparkSession, table: String, df0: DataFrame, op: String,
+                          partitionBy: Option[Snapshot] => Seq[String],
+                          txns: Map[String, Long], once: Option[(String, Long)]): Option[Long] = {
     // overwrite replaces the schema wholesale, so it replaces the
     // column mapping too: sanitize strips any metadata the frame
     // carried from a mapped source, and the files are written with the
@@ -1890,14 +2035,16 @@ object LakeTable extends org.apache.spark.internal.Logging {
     // CHECK constraints SURVIVE an overwrite (they are governance
     // metadata, not data) — the replacement rows must satisfy them
     val prev0 = latestSnapshot(spark, table)
-    val newFiles = stageFiles(spark, table, df, partitionBy,
+    if (holdsBatch(prev0, once)) return None // replay detected before any staging cost
+    val parts = partitionBy(prev0)
+    val newFiles = stageFiles(spark, table, df, parts,
       checks = prev0.map(_.constraints).getOrElse(Map.empty), replaceLayout = true)
-    retryCommit(spark, table, "OVERWRITE") { prev =>
+    commitStaged(spark, table, op, newFiles, once) { prev =>
       checkConstraintsStable(table, prev0, prev)
       // reset delta: carries the complete new file list, so it is its
       // own reconstruction base — an overwrite's delta IS full-state
-      CommitSpec(df.schema, partitionBy, newFiles, newFiles, Nil, reset = true,
-        txnUpdate = txn.toMap ++ extraTxns)
+      CommitSpec(df.schema, parts, newFiles, newFiles, Nil, reset = true,
+        txnUpdate = txns ++ once)
     }
   }
 
@@ -1980,7 +2127,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     // the parent of a new file can differ from the parent of the old
     // file it replaces while both live in the same partition.
     val touched = newFiles.map(e => partitionDirOf(e.path)).toSet
-    retryCommit(spark, table, "OVERWRITE PARTITIONS") { prevOpt =>
+    commitLoop(spark, table, "OVERWRITE PARTITIONS") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
         s"$table lost its log while this write was staging"))
       checkMappingStable(table, Some(prev0), prevOpt, df.schema, mapping)
@@ -2017,23 +2164,31 @@ object LakeTable extends org.apache.spark.internal.Logging {
   /** Append rows; new columns merge into the snapshot schema (old files
     * read them as null). Partitioning is carried from the table.
     */
-  def append(spark: SparkSession, table: String, df0: DataFrame): Long = {
+  def append(spark: SparkSession, table: String, df0: DataFrame): Long =
+    appendAs(spark, table, df0, "APPEND", Nil, once = None).get
+
+  /** The body of [[append]] and [[appendStream]]. */
+  private def appendAs(spark: SparkSession, table: String, df0: DataFrame, op: String,
+                       partitionByIfNew: Seq[String],
+                       once: Option[(String, Long)]): Option[Long] = {
     val df = ColumnMapping.sanitize(df0)
     val prev0 = latestSnapshot(spark, table)
-    val parts = prev0.map(_.partitionColumns).getOrElse(Nil)
+    if (holdsBatch(prev0, once)) return None // replay detected before any staging cost
+    val parts = prev0.map(_.partitionColumns).getOrElse(partitionByIfNew)
     // on a mapped table the files stage under the snapshot's physical
     // names (fresh names for evolution columns); the commit loop
     // re-verifies the mapping against the snapshot it actually lands on
     val (incoming, mapping) = mappedIncoming(prev0, df.schema)
     val newFiles = stageFiles(spark, table, df, parts, mapping,
       checks = prev0.map(_.constraints).getOrElse(Map.empty))
-    retryCommit(spark, table, "APPEND") { prev =>
+    commitStaged(spark, table, op, newFiles, once) { prev =>
       checkMappingStable(table, prev0, prev, df.schema, mapping)
       checkConstraintsStable(table, prev0, prev)
       checkBucketingStable(table, prev0, prev)
       val schema = prev.map(p => mergeSchemas(p.schema, incoming)).getOrElse(incoming)
       CommitSpec(schema, prev.map(_.partitionColumns).getOrElse(parts),
-        prev.map(_.files).getOrElse(Nil) ++ newFiles, newFiles, Nil, reset = false)
+        prev.map(_.files).getOrElse(Nil) ++ newFiles, newFiles, Nil, reset = false,
+        txnUpdate = once.toMap)
     }
   }
 
@@ -2044,7 +2199,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * snapshot turns that replay into a no-op instead of duplicate rows
     * — the transaction-log half of end-to-end exactly-once (the other
     * half is the source's replayable offsets). Returns the committed
-    * version, or None when the batch was already in the log.
+    * version, or None when the batch was already in the log. Creates a
+    * missing table, partitioned by `partitionByIfNew`.
     *
     * The watermark check runs again inside the commit loop: two
     * instances of the same query racing (a zombie executor's driver
@@ -2055,104 +2211,22 @@ object LakeTable extends org.apache.spark.internal.Logging {
   def appendStream(spark: SparkSession, table: String, df0: DataFrame,
                    queryId: String, batchId: Long,
                    partitionByIfNew: Seq[String] = Nil,
-                   operation: String = "STREAMING APPEND"): Option[Long] = {
-    val df = ColumnMapping.sanitize(df0)
-    def alreadyCommitted(s: Option[Snapshot]): Boolean =
-      s.exists(_.txns.get(queryId).exists(_ >= batchId))
-    val prev0 = latestSnapshot(spark, table)
-    if (alreadyCommitted(prev0)) return None // replay detected before any staging cost
-    val parts = prev0.map(_.partitionColumns).getOrElse(partitionByIfNew)
-    val (incoming, mapping) = mappedIncoming(prev0, df.schema)
-    val newFiles = stageFiles(spark, table, df, parts, mapping,
-      checks = prev0.map(_.constraints).getOrElse(Map.empty))
-    val f = fs(spark, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val prev = latestSnapshot(spark, table)
-      if (alreadyCommitted(prev)) {
-        newFiles.foreach(e =>
-          try f.delete(new Path(dataPath(table), e.path), false)
-          catch { case _: java.io.IOException => () }) // orphans; vacuum also reclaims
-        return None
-      }
-      checkMappingStable(table, prev0, prev, df.schema, mapping)
-      checkConstraintsStable(table, prev0, prev)
-      checkBucketingStable(table, prev0, prev)
-      val snap = Snapshot(prev.map(_.version).getOrElse(0L) + 1,
-        System.currentTimeMillis(), operation,
-        prev.map(p => mergeSchemas(p.schema, incoming)).getOrElse(incoming),
-        prev.map(_.partitionColumns).getOrElse(parts),
-        prev.map(_.files).getOrElse(Nil) ++ newFiles,
-        txns = prev.map(_.txns).getOrElse(Map.empty) + (queryId -> batchId))
-      if (tryCommit(spark, table, snap, newFiles, Nil, prev = prev))
-        return Some(snap.version)
-      attempt += 1
-    }
-    throw new ConcurrentCommitException(
-      s"STREAMING APPEND on $table lost $maxRetries commit races")
-  }
+                   operation: String = "STREAMING APPEND"): Option[Long] =
+    appendAs(spark, table, df0, operation, partitionByIfNew, Some(queryId -> batchId))
 
   /** Exactly-once Complete-mode streaming write: each batch replaces
     * the table contents (the snapshot carries only the new files), with
     * the same `(queryId, batchId)` replay protection as
-    * [[appendStream]].
+    * [[appendStream]]. An empty `partitionBy` keeps the table's layout.
     */
   def overwriteStream(spark: SparkSession, table: String, df0: DataFrame,
                       queryId: String, batchId: Long,
                       partitionBy: Seq[String] = Nil,
-                      operation: String = "STREAMING OVERWRITE"): Option[Long] = {
-    val df = ColumnMapping.sanitize(df0) // replaces the mapping like overwrite
-    def alreadyCommitted(s: Option[Snapshot]): Boolean =
-      s.exists(_.txns.get(queryId).exists(_ >= batchId))
-    val prev0 = latestSnapshot(spark, table)
-    if (alreadyCommitted(prev0)) return None
-    val parts =
-      if (partitionBy.nonEmpty) partitionBy
-      else prev0.map(_.partitionColumns).getOrElse(Nil)
-    val newFiles = stageFiles(spark, table, df, parts,
-      checks = prev0.map(_.constraints).getOrElse(Map.empty), replaceLayout = true)
-    val f = fs(spark, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val prev = latestSnapshot(spark, table)
-      if (alreadyCommitted(prev)) {
-        newFiles.foreach(e =>
-          try f.delete(new Path(dataPath(table), e.path), false)
-          catch { case _: java.io.IOException => () })
-        return None
-      }
-      checkConstraintsStable(table, prev0, prev)
-      val snap = Snapshot(prev.map(_.version).getOrElse(0L) + 1,
-        System.currentTimeMillis(), operation,
-        df.schema, parts, newFiles,
-        txns = prev.map(_.txns).getOrElse(Map.empty) + (queryId -> batchId))
-      if (tryCommit(spark, table, snap, newFiles, Nil, reset = true, prev = prev))
-        return Some(snap.version)
-      attempt += 1
-    }
-    throw new ConcurrentCommitException(
-      s"STREAMING OVERWRITE on $table lost $maxRetries commit races")
-  }
-
-  private def retryCommit(spark: SparkSession, table: String, op: String)(
-      derive: Option[Snapshot] => CommitSpec): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val prev = latestSnapshot(spark, table)
-      val spec = derive(prev)
-      // streaming watermarks survive every batch commit — dropping one
-      // would make a restarted stream re-append its last batch
-      val snap = Snapshot(prev.map(_.version).getOrElse(0L) + 1,
-        System.currentTimeMillis(), op, spec.schema, spec.partitionColumns, spec.files,
-        txns = prev.map(_.txns).getOrElse(Map.empty) ++ spec.txnUpdate,
-        protocol = spec.protocol)
-      if (tryCommit(spark, table, snap, spec.adds, spec.removes, spec.reset,
-          prev = prev, constraintsUpdate = spec.constraintsUpdate))
-        return snap.version
-      attempt += 1
-    }
-    throw new ConcurrentCommitException(s"$op on $table lost $maxRetries commit races")
-  }
+                      operation: String = "STREAMING OVERWRITE"): Option[Long] =
+    overwriteAs(spark, table, df0, operation,
+      prev => if (partitionBy.nonEmpty) partitionBy
+              else prev.map(_.partitionColumns).getOrElse(Nil),
+      Map.empty, Some(queryId -> batchId))
 
   /** Fields of `existing` plus any new fields of `incoming`; a name
     * present in both must have the same type (no silent widening).
@@ -2672,6 +2746,17 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
   // --------------------------------------------------------------- compact
 
+  /** `REORG TABLE … APPLY (PURGE)` (Delta's name): rewrite ONLY the
+    * files carrying outstanding deletion vectors — no bin-packing of
+    * small files, no clustering — so readers stop paying the MoR
+    * anti-join and vacuum can reclaim the vectors, without touching
+    * anything else. A zero-byte small-file threshold makes [[compact]]
+    * select exactly the dv-carrying set (it always pulls those in).
+    */
+  def reorgPurge(spark: SparkSession, table: String,
+                 partitionFilter: Option[Column] = None): Long =
+    compact(spark, table, smallFileBytes = 0L, partitionFilter = partitionFilter)
+
   /** Bin-pack small data files (streaming MERGE and frequent appends
     * accumulate them) into fewer, larger ones — the OPTIMIZE /
     * rewrite_data_files analog. Files already at or above
@@ -2707,17 +2792,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * carry over by reference. The predicate must reference only
     * partition columns.
     */
-  /** `REORG TABLE … APPLY (PURGE)` (Delta's name): rewrite ONLY the
-    * files carrying outstanding deletion vectors — no bin-packing of
-    * small files, no clustering — so readers stop paying the MoR
-    * anti-join and vacuum can reclaim the vectors, without touching
-    * anything else. A zero-byte small-file threshold makes [[compact]]
-    * select exactly the dv-carrying set (it always pulls those in).
-    */
-  def reorgPurge(spark: SparkSession, table: String,
-                 partitionFilter: Option[Column] = None): Long =
-    compact(spark, table, smallFileBytes = 0L, partitionFilter = partitionFilter)
-
   def compact(spark: SparkSession, table: String,
               smallFileBytes: Long = 32L << 20,
               sortBy: Seq[String] = Nil,
@@ -2727,6 +2801,67 @@ object LakeTable extends org.apache.spark.internal.Logging {
               dirScope: Option[Set[String]] = None): Long = {
     require(sortBy.isEmpty || zorderBy.isEmpty,
       "pass sortBy OR zorderBy, not both")
+    rewriteFiles(spark, table, "COMPACT", sortBy, zorderBy, targetFileBytes) { snap =>
+      val inFilter: FileEntry => Boolean = partitionFilter match {
+        case None => _ => true
+        case Some(c) =>
+          val scope = resolvePartitionFilter(spark, snap, c, "compact")
+          e => scope.fileInScope(e.path)
+      }
+      // dirScope (autoCompact's touched-partition set) composes with the
+      // predicate filter: both must admit the file
+      val inScope: FileEntry => Boolean = dirScope match {
+        case None => inFilter
+        case Some(ds) => e => inFilter(e) && ds.contains(partitionDirOf(e.path))
+      }
+      // A file with an outstanding deletion vector joins the rewrite set
+      // REGARDLESS of size: compact is where merge-on-read deletes
+      // reconcile back into clean files (Iceberg's rewrite_data_files
+      // with delete-file compaction), so readers stop paying the
+      // anti-join and vacuum can reclaim the vector.
+      val small = snap.files.filter(inScope).map(e => e -> sizeOf(spark, table, e))
+        .filter { case (e, sz) => sz < smallFileBytes || e.dv.isDefined }
+      if (small.size <= 1 && small.forall(_._1.dv.isEmpty)) Nil else small
+    }
+  }
+
+  /** A file's size from the log; a legacy entry (pre-stats log) costs
+    * one stat — never a listing.
+    */
+  private def sizeOf(spark: SparkSession, table: String, e: FileEntry): Long =
+    if (e.size >= 0) e.size
+    else fs(spark, table).getFileStatus(entryPath(dataPath(table), e.path)).getLen
+
+  /** The rewrite body of [[compact]] and [[reclusterIncremental]]:
+    * validate the cluster columns, read back the live rows of the
+    * files `pick` selects (with their sizes) from the current snapshot,
+    * cluster them — Z-order, range sort, or plain coalescing — into
+    * ~`targetFileBytes` files, stage, and commit them in place of the
+    * selected set. An empty pick commits nothing and returns the
+    * current version. `watermark` names a txn key that records this
+    * commit's version (see [[reclusterIncremental]]).
+    *
+    * Rebase-on-race: the rewrite is value-preserving surgery on a FIXED
+    * file set, so losing the commit race to a concurrent APPEND (the
+    * nightly-OPTIMIZE-under-continuous-ingest case) must not discard
+    * it. As long as the newer head still carries every rewritten entry
+    * UNCHANGED (same path, size, stats, and crucially the same dv — a
+    * concurrent MoR delete disqualifies) and neither schema nor
+    * partitioning moved (schema equality covers the bucket spec and
+    * column mapping, which live in field metadata), the same staged
+    * files re-commit on top of the new head: its files minus the
+    * rewritten set plus the rewrite, its txns (concurrent streaming
+    * watermarks survive). Anything else — a racing DELETE/UPDATE/
+    * COMPACT that touched the set, a schema change — refuses loudly.
+    * On a rebase the watermark stays at the PRE-RACE version: the
+    * rebased snapshot holds the racer's unclustered file, so the next
+    * pass re-sorts this pass's output plus the racer (work bounded by
+    * the race window) and only then advances over a clean snapshot.
+    */
+  private def rewriteFiles(spark: SparkSession, table: String, what: String,
+                           sortBy: Seq[String], zorderBy: Seq[String],
+                           targetFileBytes: Long, watermark: Option[String] = None)(
+      pick: Snapshot => Seq[(FileEntry, Long)]): Long = {
     require(zorderBy.isEmpty || zorderBy.size >= 2,
       "zorderBy needs at least two columns — use sortBy to cluster on one")
     require(zorderBy.size <= 10,
@@ -2735,7 +2870,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val snap = latestSnapshot(spark, table)
       .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
     // a bucketed table's clustering IS its bucket layout; a sort/Z-order
-    // compact would be silently undone by the bucket re-routing in
+    // rewrite would be silently undone by the bucket re-routing in
     // stageFiles — refuse loudly (plain compact bin-packs per bucket)
     require(Bucketing.spec(snap.schema).isEmpty ||
         (sortBy.isEmpty && zorderBy.isEmpty),
@@ -2750,44 +2885,17 @@ object LakeTable extends org.apache.spark.internal.Logging {
       require(!snap.partitionColumns.contains(c),
         s"cluster column $c is a partition column — constant per file already")
     }
-    val f = fs(spark, table)
-    val base = dataPath(table)
-    val inFilter: FileEntry => Boolean = partitionFilter match {
-      case None => _ => true
-      case Some(c) =>
-        val scope = resolvePartitionFilter(spark, snap, c, "compact")
-        e => scope.fileInScope(e.path)
-    }
-    // dirScope (autoCompact's touched-partition set) composes with the
-    // predicate filter: both must admit the file
-    val inScope: FileEntry => Boolean = dirScope match {
-      case None => inFilter
-      case Some(ds) => e => inFilter(e) && ds.contains(partitionDirOf(e.path))
-    }
-    // sizes come from the log; a legacy entry (pre-stats log) costs one
-    // stat — never a listing. A file with an outstanding deletion
-    // vector joins the rewrite set REGARDLESS of size: compact is where
-    // merge-on-read deletes reconcile back into clean files (Iceberg's
-    // rewrite_data_files with delete-file compaction), so readers stop
-    // paying the anti-join and vacuum can reclaim the vector.
-    val sized = snap.files.map(e => e ->
-      (if (e.size >= 0) e.size else f.getFileStatus(entryPath(base, e.path)).getLen))
-    val (smallSized, bigSized) = sized.partition { case (e, sz) =>
-      inScope(e) && (sz < smallFileBytes || e.dv.isDefined)
-    }
-    val small = smallSized.map(_._1)
-    val big = bigSized.map(_._1)
-    if (small.isEmpty || (small.size <= 1 && small.forall(_.dv.isEmpty)))
-      return snap.version
+    val picked = pick(snap)
+    if (picked.isEmpty) return snap.version
+    val set = picked.map(_._1)
     // a byte-budgeted task count: Spark's split planning targets one
     // split PER CORE (files.minPartitionNum defaults to the
     // parallelism), which on tiny inputs re-emits one output file per
-    // input — the opposite of packing. ~targetFileBytes of small-file
-    // bytes per task ⇒ each rewritten file lands near the parquet
-    // sweet spot.
+    // input — the opposite of packing. ~targetFileBytes of input bytes
+    // per task ⇒ each rewritten file lands near the parquet sweet spot.
     val targetTasks = math.max(1,
-      math.ceil(smallSized.map(_._2).sum.toDouble / targetFileBytes).toInt)
-    val packed = readDataFilesLive(spark, table, snap, small.map(_.path))
+      math.ceil(picked.map(_._2).sum.toDouble / targetFileBytes).toInt)
+    val packed = readDataFilesLive(spark, table, snap, set.map(_.path))
     // partition cols lead the range-partitioning and the sort, so the
     // write path's required ordering is already satisfied and it does
     // not re-sort (which would destroy the clustering)
@@ -2796,7 +2904,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       if (zorderBy.nonEmpty) {
         // logged LIVE row counts size the boundary sample; a legacy
         // entry (rowCount unknown) costs one count of the scope
-        val counts = smallSized.map(_._1.liveRowCount)
+        val counts = set.map(_.liveRowCount)
         val totalRows = if (counts.forall(_ >= 0)) counts.sum else packed.count()
         val zc = "_graft_zvalue"
         packed.withColumn(zc, ZOrder.zvalue(packed, zorderBy, totalRows))
@@ -2814,46 +2922,23 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val newFiles = stageFiles(spark, table, rows, snap.partitionColumns,
       ColumnMapping.mapping(snap.schema))
     compactBeforeCommitHook()
-    // Rebase-on-race: a COMPACT is value-preserving surgery on a FIXED
-    // file set, so losing the commit race to a concurrent APPEND (the
-    // nightly-OPTIMIZE-under-continuous-ingest case) must not discard
-    // the whole rewrite. As long as the newer head still carries every
-    // rewritten entry UNCHANGED (same path, size, stats, and crucially
-    // the same dv — a concurrent MoR delete disqualifies) and neither
-    // schema nor partitioning moved (schema equality covers the bucket
-    // spec and column mapping, which live in field metadata), the same
-    // staged files re-commit on top of the new head: its files minus
-    // the rewritten set plus the rewrite, its txns (concurrent
-    // streaming watermarks survive). Anything else — a racing DELETE/
-    // UPDATE/COMPACT that touched the set, a schema change — refuses
-    // loudly, and the bound keeps a pathological commit storm finite.
-    val rewrittenSet = small.toSet
-    var prevSnap = snap
-    var next = Snapshot(snap.version + 1, System.currentTimeMillis(), "COMPACT",
-      snap.schema, snap.partitionColumns, big ++ newFiles, txns = snap.txns)
-    var attempts = 0
-    while (!tryCommit(spark, table, next, newFiles, small.map(_.path),
-        prev = Some(prevSnap))) {
-      attempts += 1
-      val newer = latestSnapshot(spark, table).getOrElse(
+    val rewritten = set.toSet
+    commitLoop(spark, table, "COMPACT", held = Some(Some(snap))) { head =>
+      val newer = head.getOrElse(throw new ConcurrentCommitException(
+        s"$what on $table: log disappeared during the commit race"))
+      val rebased = newer.version != snap.version
+      if (rebased && !(newer.schema == snap.schema &&
+          newer.partitionColumns == snap.partitionColumns &&
+          rewritten.subsetOf(newer.files.toSet)))
         throw new ConcurrentCommitException(
-          s"COMPACT on $table: log disappeared during the commit race"))
-      val canRebase = attempts <= 5 &&
-        newer.schema == snap.schema &&
-        newer.partitionColumns == snap.partitionColumns &&
-        rewrittenSet.subsetOf(newer.files.toSet)
-      if (!canRebase)
-        throw new ConcurrentCommitException(
-          s"COMPACT on $table lost the commit race and cannot rebase — a " +
+          s"$what on $table lost the commit race and cannot rebase — a " +
             "concurrent commit changed the schema, the partitioning, or the " +
             "files being rewritten; re-run")
-      prevSnap = newer
-      next = Snapshot(newer.version + 1, System.currentTimeMillis(), "COMPACT",
-        newer.schema, newer.partitionColumns,
-        newer.files.filterNot(rewrittenSet.contains) ++ newFiles,
-        txns = newer.txns)
+      CommitSpec(newer.schema, newer.partitionColumns,
+        newer.files.filterNot(rewritten.contains) ++ newFiles, newFiles,
+        set.map(_.path), reset = false,
+        txnUpdate = watermark.map(_ -> (if (rebased) snap.version else snap.version + 1)).toMap)
     }
-    next.version
   }
 
   /** Test seam: invoked after a compact stages its rewrite, before the
@@ -2907,13 +2992,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val touched = entry.full.map(_.map(_.path)).getOrElse(entry.adds.map(_.path))
     if (touched.isEmpty) return None
     val dirs = touched.map(partitionDirOf).toSet
-    val f = fs(spark, table)
-    val base = dataPath(table)
-    val smallInScope = snap.files.count { e =>
-      dirs.contains(partitionDirOf(e.path)) &&
-        (if (e.size >= 0) e.size
-         else f.getFileStatus(entryPath(base, e.path)).getLen) < smallFileBytes
-    }
+    val smallInScope = snap.files.count(e =>
+      dirs.contains(partitionDirOf(e.path)) && sizeOf(spark, table, e) < smallFileBytes)
     if (smallInScope < minSmallFiles) None
     else {
       val v = compact(spark, table, smallFileBytes = smallFileBytes,
@@ -2958,104 +3038,29 @@ object LakeTable extends org.apache.spark.internal.Logging {
                            partitionFilter: Option[Column] = None): Long = {
     require(sortBy.nonEmpty ^ zorderBy.nonEmpty,
       "pass exactly one of sortBy / zorderBy")
-    require(zorderBy.isEmpty || zorderBy.size >= 2,
-      "zorderBy needs at least two columns — use sortBy to cluster on one")
-    val snap = latestSnapshot(spark, table)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $table"))
-    require(Bucketing.spec(snap.schema).isEmpty,
-      s"$table is hash-bucketed — sort/Z-order clustering does not compose with " +
-        "a bucket layout (stageFiles would re-route the rows by bucket)")
-    (sortBy ++ zorderBy).foreach { c =>
-      require(snap.schema.fieldNames.contains(c),
-        s"cluster column $c is not in the schema of $table")
-      require(!snap.partitionColumns.contains(c),
-        s"cluster column $c is a partition column — constant per file already")
-    }
     val key = clusterWatermarkKey(sortBy, zorderBy)
-    val clusteredAsOf: Set[String] = snap.txns.get(key) match {
-      case Some(v) => scala.util.Try(snapshotAt(spark, table, v).filePaths.toSet)
-        .getOrElse(Set.empty) // watermark version vacuumed from the log → full pass
-      case None => Set.empty
-    }
-    val inScope: FileEntry => Boolean = partitionFilter match {
-      case None => _ => true
-      case Some(c) =>
-        val scope = resolvePartitionFilter(spark, snap, c, "recluster")
-        e => scope.fileInScope(e.path)
-    }
-    // NOTE: the watermark is table-global per cluster spec — use a
-    // consistent partitionFilter across calls (a scoped first pass
-    // followed by an unscoped one would treat never-clustered files
-    // that predate the watermark as clustered; run one unscoped full
-    // pass to re-baseline)
-    val tail = snap.files.filter(e =>
-      inScope(e) && (!clusteredAsOf.contains(e.path) || e.dv.isDefined))
-    if (tail.isEmpty) return snap.version
-    val tailSet = tail.map(_.path).toSet
-    val carried = snap.files.filterNot(e => tailSet.contains(e.path))
-
-    val packed = readDataFilesLive(spark, table, snap, tail.map(_.path))
-    val f = fs(spark, table)
-    val base = dataPath(table)
-    val tailBytes = tail.map(e =>
-      if (e.size >= 0) e.size else f.getFileStatus(entryPath(base, e.path)).getLen).sum
-    val targetTasks = math.max(1,
-      math.ceil(tailBytes.toDouble / targetFileBytes).toInt)
-    val pCols = snap.partitionColumns.map(col)
-    val rows =
-      if (zorderBy.nonEmpty) {
-        val counts = tail.map(_.liveRowCount)
-        val totalRows = if (counts.forall(_ >= 0)) counts.sum else packed.count()
-        val zc = "_graft_zvalue"
-        packed.withColumn(zc, ZOrder.zvalue(packed, zorderBy, totalRows))
-          .repartitionByRange(targetTasks, (pCols :+ col(zc)).toIndexedSeq: _*)
-          .sortWithinPartitions((pCols :+ col(zc)).toIndexedSeq: _*)
-          .drop(zc)
-      } else {
-        val sCols = pCols ++ sortBy.map(col)
-        packed.repartitionByRange(targetTasks, sCols.toIndexedSeq: _*)
-          .sortWithinPartitions(sCols.toIndexedSeq: _*)
+    rewriteFiles(spark, table, "incremental recluster", sortBy, zorderBy,
+        targetFileBytes, watermark = Some(key)) { snap =>
+      val clusteredAsOf: Set[String] = snap.txns.get(key) match {
+        case Some(v) => scala.util.Try(snapshotAt(spark, table, v).filePaths.toSet)
+          .getOrElse(Set.empty) // watermark version vacuumed from the log → full pass
+        case None => Set.empty
       }
-    val newFiles = stageFiles(spark, table, rows, snap.partitionColumns,
-      ColumnMapping.mapping(snap.schema))
-    compactBeforeCommitHook()
-    // same rebase-on-race as [[compact]]: value-preserving rewrite of a
-    // fixed set, so a concurrent APPEND re-bases instead of discarding
-    // the clustering work. The WATERMARK, however, must keep meaning
-    // "every file in that version's snapshot is clustered" — the
-    // rebased commit's snapshot contains the racer's unclustered file,
-    // so on rebase the watermark stays at the PRE-RACE base version:
-    // the next incremental pass re-sorts this pass's output plus the
-    // racer (work bounded by the race window, not the table) and only
-    // THEN advances the watermark over a clean snapshot.
-    val rewrittenSet = tail.toSet
-    var prevSnap = snap
-    var next = Snapshot(snap.version + 1, System.currentTimeMillis(), "COMPACT",
-      snap.schema, snap.partitionColumns, carried ++ newFiles,
-      txns = snap.txns + (key -> (snap.version + 1)))
-    var attempts = 0
-    while (!tryCommit(spark, table, next, newFiles, tail.map(_.path),
-        prev = Some(prevSnap))) {
-      attempts += 1
-      val newer = latestSnapshot(spark, table).getOrElse(
-        throw new ConcurrentCommitException(
-          s"incremental recluster on $table: log disappeared during the race"))
-      val canRebase = attempts <= 5 &&
-        newer.schema == snap.schema &&
-        newer.partitionColumns == snap.partitionColumns &&
-        rewrittenSet.subsetOf(newer.files.toSet)
-      if (!canRebase)
-        throw new ConcurrentCommitException(
-          s"incremental recluster on $table lost the commit race and cannot " +
-            "rebase — a concurrent commit changed the schema, the " +
-            "partitioning, or the files being reclustered; re-run")
-      prevSnap = newer
-      next = Snapshot(newer.version + 1, System.currentTimeMillis(), "COMPACT",
-        newer.schema, newer.partitionColumns,
-        newer.files.filterNot(rewrittenSet.contains) ++ newFiles,
-        txns = newer.txns + (key -> snap.version))
+      val inScope: FileEntry => Boolean = partitionFilter match {
+        case None => _ => true
+        case Some(c) =>
+          val scope = resolvePartitionFilter(spark, snap, c, "recluster")
+          e => scope.fileInScope(e.path)
+      }
+      // NOTE: the watermark is table-global per cluster spec — use a
+      // consistent partitionFilter across calls (a scoped first pass
+      // followed by an unscoped one would treat never-clustered files
+      // that predate the watermark as clustered; run one unscoped full
+      // pass to re-baseline)
+      snap.files.filter(e =>
+        inScope(e) && (!clusteredAsOf.contains(e.path) || e.dv.isDefined))
+        .map(e => e -> sizeOf(spark, table, e))
     }
-    next.version
   }
 
   // ------------------------------------------------------------ schema DDL
@@ -3089,7 +3094,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
   def enableBloomFilter(spark: SparkSession, table: String, column: String,
                         fpp: Double = 0.01): Long = {
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0,1), got $fpp")
-    retryCommit(spark, table, "ENABLE BLOOM") { prevOpt =>
+    commitLoop(spark, table, "ENABLE BLOOM") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
         s"no committed version at $table"))
       require(prev.schema.fieldNames.contains(column),
@@ -3109,7 +3114,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
   def addColumns(spark: SparkSession, table: String, cols: StructType): Long = {
     require(cols.nonEmpty, "addColumns needs at least one column")
     val resolver = spark.sessionState.conf.resolver
-    retryCommit(spark, table, "ADD COLUMNS") { prevOpt =>
+    commitLoop(spark, table, "ADD COLUMNS") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
         s"no committed version at $table"))
       val clash = cols.fieldNames.filter(n =>
@@ -3168,7 +3173,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       throw new IllegalArgumentException(
         s"cannot add CHECK constraint '$name' ($exprSql) to $table: existing " +
           s"rows violate it, e.g. ${bad.head}")
-    retryCommit(spark, table, "ADD CONSTRAINT") { prevOpt =>
+    commitLoop(spark, table, "ADD CONSTRAINT") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
         s"no committed version at $table"))
       if (prev.version != snap0.version)
@@ -3186,7 +3191,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * commit. The writer-version stamp stays (monotonic, like Delta).
     */
   def dropConstraint(spark: SparkSession, table: String, name: String): Long =
-    retryCommit(spark, table, "DROP CONSTRAINT") { prevOpt =>
+    commitLoop(spark, table, "DROP CONSTRAINT") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
         s"no committed version at $table"))
       if (!prev.constraints.contains(name))
@@ -3216,7 +3221,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * are read or written. Idempotent.
     */
   def enableColumnMapping(spark: SparkSession, table: String): Long =
-    retryCommit(spark, table, "ENABLE COLUMN MAPPING") { prevOpt =>
+    commitLoop(spark, table, "ENABLE COLUMN MAPPING") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
         s"no committed version at $table"))
       CommitSpec(ensureMapped(prev.schema), prev.partitionColumns, prev.files,
@@ -3242,7 +3247,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
                    oldName: String, newName: String): Long = {
     require(newName.nonEmpty, "new column name must be non-empty")
     val resolver = spark.sessionState.conf.resolver
-    retryCommit(spark, table, "RENAME COLUMN") { prevOpt =>
+    commitLoop(spark, table, "RENAME COLUMN") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
         s"no committed version at $table"))
       require(!prev.partitionColumns.exists(resolver(_, oldName)),
@@ -3287,7 +3292,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     */
   def dropColumn(spark: SparkSession, table: String, name: String): Long = {
     val resolver = spark.sessionState.conf.resolver
-    retryCommit(spark, table, "DROP COLUMN") { prevOpt =>
+    commitLoop(spark, table, "DROP COLUMN") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
         s"no committed version at $table"))
       require(!prev.partitionColumns.exists(resolver(_, name)),
@@ -3411,13 +3416,12 @@ object LakeTable extends org.apache.spark.internal.Logging {
         .map(d => DeleteVector(dvDir.get, d.cardinality))
       e.copy(path = absOf(e.path), dv = dv, bloom = None)
     }
-    val next = Snapshot(1L, System.currentTimeMillis(), "CLONE",
-      snap.schema, snap.partitionColumns, entries,
-      protocol = snap.protocol, constraints = snap.constraints)
-    if (!tryCommit(spark, dst, next, entries, Nil, reset = true, prev = None,
-        constraintsUpdate = Some(snap.constraints)))
-      throw new ConcurrentCommitException(s"CLONE into $dst lost the commit race")
-    1L
+    commitLoop(spark, dst, "CLONE", held = Some(None)) { head =>
+      if (head.nonEmpty)
+        throw new ConcurrentCommitException(s"CLONE into $dst lost the commit race")
+      CommitSpec(snap.schema, snap.partitionColumns, entries, entries, Nil, reset = true,
+        protocol = snap.protocol, constraintsUpdate = Some(snap.constraints))
+    }
   }
 
   /** Write-audit-publish PUBLISH (Iceberg's audit-branch /
@@ -3589,10 +3593,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
       return latestVersion(spark, src).getOrElse(
         throw new IllegalStateException(s"source $src has no committed versions"))
     val removedSet = removedByBranch.map(_.path).toSet
-    var cur = latestSnapshot(spark, src).getOrElse(
-      throw new IllegalStateException(s"source $src has no committed versions"))
-    var attempt = 0
-    while (true) {
+    commitLoop(spark, src, "PUBLISH") { srcHead =>
+      val cur = srcHead.getOrElse(
+        throw new IllegalStateException(s"source $src has no committed versions"))
       def refuse(why: String): Nothing = throw new ConcurrentCommitException(
         s"PUBLISH of $branch onto $src cannot fast-forward: $why — re-branch " +
           "from the current head and re-audit")
@@ -3625,25 +3628,13 @@ object LakeTable extends org.apache.spark.internal.Logging {
         refuse(s"the source independently added a file named ${a.path}"))
       // replay guard re-checked under the commit race: a competing
       // coordinator may have landed the same txn while we validated
-      txn.foreach { case (appId, ver) =>
-        if (cur.txns.get(appId).exists(_ >= ver)) return cur.version
-      }
-      val next = Snapshot(cur.version + 1, System.currentTimeMillis(), "PUBLISH",
-        head.schema, head.partitionColumns,
-        cur.files.filterNot(e => removedSet.contains(e.path)) ++ adds,
-        txns = cur.txns ++ txn.map { case (a, v) => a -> v },
-        protocol = head.protocol, constraints = head.constraints)
-      if (tryCommit(spark, src, next, adds, removedByBranch.map(_.path),
-          prev = Some(cur), constraintsUpdate = Some(head.constraints)))
-        return next.version
-      attempt += 1
-      if (attempt >= maxRetries)
-        throw new ConcurrentCommitException(
-          s"PUBLISH of $branch onto $src lost $maxRetries commit races — re-run")
-      cur = latestSnapshot(spark, src).getOrElse(
-        throw new IllegalStateException(s"log of $src disappeared mid-commit"))
+      if (txn.exists { case (appId, ver) => cur.txns.get(appId).exists(_ >= ver) })
+        AlreadyCommitted(cur.version)
+      else CommitSpec(head.schema, head.partitionColumns,
+        cur.files.filterNot(e => removedSet.contains(e.path)) ++ adds, adds,
+        removedByBranch.map(_.path), reset = false, txnUpdate = txn.toMap,
+        protocol = head.protocol, constraintsUpdate = Some(head.constraints))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   def restore(spark: SparkSession, table: String, version: Long): Long = {
@@ -3666,7 +3657,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     // list against the log right before deleting, so a committed
     // RESTORE re-protects its files)
     var preHead: Option[Snapshot] = None
-    val v = retryCommit(spark, table, "RESTORE") { prev =>
+    val v = commitLoop(spark, table, "RESTORE") { prev =>
       require(prev.exists(_.version >= version),
         s"restore target $version is beyond the latest version of $table")
       preHead = prev
@@ -3689,7 +3680,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val gone = probeMissing()
     if (gone.nonEmpty) {
       val compensated = preHead.exists { h =>
-        scala.util.Try(retryCommit(spark, table, "RESTORE") { p =>
+        scala.util.Try(commitLoop(spark, table, "RESTORE") { p =>
           // only compensate while OUR broken restore is still the head —
           // a later commit supersedes the problem (and the authority to
           // fix it)

@@ -5,8 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
-import org.apache.spark.storage.StorageLevel
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import LakeTable._
 
@@ -89,8 +87,7 @@ private[lake] object RowLevelOps {
     // and change-feed images (why Delta stages its MERGE source). A
     // source the caller already holds cached is read from that cache.
     val source = st0.source.map(ColumnMapping.sanitize)
-    val ownCache = source.filter(_.storageLevel == StorageLevel.NONE)
-    ownCache.foreach(_.persist(MEMORY_AND_DISK))
+    val ownCache = source.filter(persistShared)
     try {
       source.foreach { s =>
         val missing = st0.keys.filterNot(s.columns.contains)
@@ -171,9 +168,9 @@ private[lake] object RowLevelOps {
     // CoW with matched clauses rewrites every file holding a key match
     // (file granularity); MoR vectors exactly the claimed rows
     val touched = if (st.mor || st.matched.isEmpty) claimed else claimed || keyMatched
-    val det1 = det0.filter(rawPred.filter(_ => st.source.isEmpty)
+    val det = det0.filter(rawPred.filter(_ => st.source.isEmpty)
       .getOrElse(if (st.inserts.nonEmpty) claimed || keyMatched else touched))
-    val det = if (st.mor || st.inserts.nonEmpty) det1.persist(MEMORY_AND_DISK) else det1
+    val ownDet = (st.mor || st.inserts.nonEmpty) && persistShared(det)
     try {
       val hits = det.filter(touched)
       val countsDf = hits.groupBy(col(FilePathCol)).count()
@@ -245,7 +242,7 @@ private[lake] object RowLevelOps {
       if (removed.isEmpty && newFiles.isEmpty && st.txns.isEmpty) return snap.version
       commit(spark, table, snap, st, schema, vectored ++ newFiles, removed,
         dropped, cdc, footprint)
-    } finally if (st.mor || st.inserts.nonEmpty) det.unpersist(blocking = false)
+    } finally if (ownDet) det.unpersist(blocking = false)
   }
 
   /** `t` (aliased "t") joined to the source and marked by the clauses in
@@ -353,7 +350,8 @@ private[lake] object RowLevelOps {
   }
 
   /** The one commit step of every DML statement: replace `removed` with
-    * `adds` on top of the base snapshot. On a lost race it rebases onto
+    * `adds` on top of the base snapshot, through [[LakeTable.commitLoop]]
+    * (first attempt on `base`, no head re-read). On a lost race it rebases onto
     * the new head only when (a) schema, partition layout and CHECK
     * constraints are unchanged, (b) every file this statement removed
     * or vectored is unchanged in the head (FileEntry equality — a
@@ -373,46 +371,40 @@ private[lake] object RowLevelOps {
     val protocol = Protocol(if (removedFull.nonEmpty) 4 else if (st.mor) 3 else 1,
       if (st.mor) 3 else 1)
     var cur = base
-    var attempt = 0
-    while (true) {
-      val next = Snapshot(cur.version + 1, System.currentTimeMillis(), st.op, schema,
-        cur.partitionColumns, cur.files.filterNot(e => removedSet(e.path)) ++ adds,
-        txns = cur.txns ++ st.txns, protocol = protocol)
-      if (tryCommit(spark, table, next, adds, removed, cdc = cdc, prev = Some(cur),
-          removedFull = removedFull))
-        return next.version
-      attempt += 1
-      if (attempt >= maxRetries)
-        throw new ConcurrentCommitException(s"${st.what} on $table lost $maxRetries commit races — re-run")
-      val newest = latestSnapshot(spark, table).getOrElse(
+    commitLoop(spark, table, st.op, held = Some(Some(base))) { head =>
+      val newest = head.getOrElse(
         throw new IllegalStateException(s"log of $table disappeared mid-commit"))
-      def refuse(why: String): Nothing = throw new ConcurrentCommitException(
-        s"${st.what} on $table lost the commit race to v${newest.version}, and the " +
-          s"winning commit overlaps what this ${st.op.toLowerCase} read or cannot be " +
-          s"proven not to: $why — cannot rebase safely, re-run")
-      val conds = footprint.getOrElse(refuse("its footprint has no predicate to " +
-        "prove the winner disjoint (insert-only, NOT MATCHED BY SOURCE or unbounded keys)"))
-      if (newest.schema != cur.schema || newest.partitionColumns != cur.partitionColumns)
-        refuse("the winner changed the schema or partition layout")
-      if (newest.constraints != cur.constraints)
-        refuse("the winner changed the CHECK constraints")
-      if (st.txns.exists { case (appId, v) => newest.txns.get(appId).exists(_ >= v) })
-        refuse("the winner already committed this transaction")
-      val curByPath = cur.files.iterator.map(e => e.path -> e).toMap
-      val newestByPath = newest.files.iterator.map(e => e.path -> e).toMap
-      removed.find(p => !newestByPath.get(p).contains(curByPath(p))).foreach(p =>
-        refuse(s"the winner rewrote, vectored or removed $p, a file this " +
-          s"${st.op.toLowerCase} read"))
-      val winnersAdds = newest.files.filterNot(e => curByPath.get(e.path).contains(e))
-      if (conds.isEmpty && winnersAdds.nonEmpty)
-        refuse("the predicate did not resolve for a disjointness proof")
-      val mightMatch = prunedEntries(spark, table, newest.copy(files = winnersAdds), conds)
-      if (mightMatch.nonEmpty)
-        refuse(s"the winner added file(s) the predicate cannot be proven to miss " +
-          s"(e.g. ${mightMatch.head.path})")
-      cur = newest
+      if (newest.version != cur.version) {
+        def refuse(why: String): Nothing = throw new ConcurrentCommitException(
+          s"${st.what} on $table lost the commit race to v${newest.version}, and the " +
+            s"winning commit overlaps what this ${st.op.toLowerCase} read or cannot be " +
+            s"proven not to: $why — cannot rebase safely, re-run")
+        val conds = footprint.getOrElse(refuse("its footprint has no predicate to " +
+          "prove the winner disjoint (insert-only, NOT MATCHED BY SOURCE or unbounded keys)"))
+        if (newest.schema != cur.schema || newest.partitionColumns != cur.partitionColumns)
+          refuse("the winner changed the schema or partition layout")
+        if (newest.constraints != cur.constraints)
+          refuse("the winner changed the CHECK constraints")
+        if (st.txns.exists { case (appId, v) => newest.txns.get(appId).exists(_ >= v) })
+          refuse("the winner already committed this transaction")
+        val curByPath = cur.files.iterator.map(e => e.path -> e).toMap
+        val newestByPath = newest.files.iterator.map(e => e.path -> e).toMap
+        removed.find(p => !newestByPath.get(p).contains(curByPath(p))).foreach(p =>
+          refuse(s"the winner rewrote, vectored or removed $p, a file this " +
+            s"${st.op.toLowerCase} read"))
+        val winnersAdds = newest.files.filterNot(e => curByPath.get(e.path).contains(e))
+        if (conds.isEmpty && winnersAdds.nonEmpty)
+          refuse("the predicate did not resolve for a disjointness proof")
+        val mightMatch = prunedEntries(spark, table, newest.copy(files = winnersAdds), conds)
+        if (mightMatch.nonEmpty)
+          refuse(s"the winner added file(s) the predicate cannot be proven to miss " +
+            s"(e.g. ${mightMatch.head.path})")
+        cur = newest
+      }
+      CommitSpec(schema, cur.partitionColumns,
+        cur.files.filterNot(e => removedSet(e.path)) ++ adds, adds, removed, reset = false,
+        txnUpdate = st.txns, protocol = protocol, cdc = cdc, removedFull = removedFull)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** The metadata pass behind retention deletes: files of `snap` whose
