@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR
@@ -67,6 +68,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     NEGATIVE index `-(i+1)` tags a sample the outlier gate took for
   *     key `i` — at its 2x-arm decision or right before its re-run —
   *     so sweep and gate samples never share an index.
+  *   - JOB SPLIT: a SparkListener records every Spark job of a key's
+  *     timed runs; for the best run, DETAIL carries `jobs` (job count),
+  *     `job_union_s` (the union of the job intervals — time the
+  *     cluster had work), `driver_gap_s` (wall − union: planning, log
+  *     replay, driver-side loops and per-job overhead) and `top_jobs`
+  *     (the 5 job descriptions — last stage name, first 60 characters
+  *     — with the most summed job time, as `[description, count,
+  *     seconds]`): whether a key is bound by query execution or by
+  *     per-job/driver overhead.
   *
   * The printed line is kept COMPACT (2-3 significant digits, short
   * field names, empty fields omitted): the driver captures only the
@@ -76,6 +86,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (default ./BENCH_DETAIL.json) for human/judge consumption.
   */
 object Bench {
+  private final case class JobRec(desc: String, start: Long, var end: Long)
+
+  /** One timed run's job split: job count, union of the job intervals
+    * and driver gap (seconds), top descriptions by summed job time. */
+  private final case class JobSplit(jobs: Int, unionS: Double, gapS: Double,
+                                    top: Seq[(String, Int, Double)])
+
+  private def jobSplit(recs0: Seq[JobRec], wall: Double): JobSplit = {
+    val recs = recs0.filter(_.end > 0).sortBy(_.start)
+    // union of job intervals -> busy time; wall - busy = driver gap
+    var busy = 0L
+    var curS = -1L; var curE = -1L
+    recs.foreach { r =>
+      if (r.start > curE) { busy += (curE - curS) max 0L; curS = r.start; curE = r.end }
+      else if (r.end > curE) curE = r.end
+    }
+    busy += (curE - curS) max 0L
+    val byDesc = recs.groupBy(r => if (r.desc.length > 60) r.desc.take(60) else r.desc)
+      .map { case (d, rs) => (d, rs.size, rs.map(r => r.end - r.start).sum / 1e3) }
+      .toSeq.sortBy(-_._3)
+    JobSplit(recs.size, busy / 1e3, wall - busy / 1e3, byDesc.take(5))
+  }
+
   // Locale.ROOT: the f-interpolator honors the default locale, and a
   // comma-decimal locale would make the compact JSON line unparseable.
   private def fmt(v: Double): String =
@@ -99,6 +132,21 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val desc = js.stageInfos.lastOption.map(_.name)
+          .orElse(Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description"))))
+          .getOrElse("")
+        jobs.put(js.jobId, JobRec(desc, js.time, -1L))
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
+        val r = jobs.get(je.jobId)
+        if (r != null) r.end = je.time
+      }
+    })
 
     def loadAvg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
@@ -236,11 +284,14 @@ object Bench {
       var best = Double.MaxValue
       var bestCommit = 0.0
       var bestFileOps = 0.0
+      var bestJobs = JobSplit(0, 0.0, 0.0, Nil)
       var failed = false
       def timedRun(): Unit = {
+        jobs.clear()
         val c0 = graft.lake.LakeTable.commitNanos
         val fo0 = graft.lake.LakeTable.fileOpsNanos
         val t0 = System.nanoTime()
+        var isBest = false
         try {
           consume(SparkEntry.queries(name)(spark, sfDir))
           val el = (System.nanoTime() - t0) / 1e9
@@ -248,9 +299,17 @@ object Bench {
             best = el
             bestCommit = (graft.lake.LakeTable.commitNanos - c0) / 1e9
             bestFileOps = (graft.lake.LakeTable.fileOpsNanos - fo0) / 1e9
+            isBest = true
           }
         } catch { case _: Throwable => failed = true }
         spark.catalog.clearCache() // not part of the measured query
+        // read after the cache clear: the listener bus delivers job
+        // events asynchronously, so the last job-end may still be in
+        // flight right after the action returns
+        if (isBest) {
+          import scala.jdk.CollectionConverters._
+          bestJobs = jobSplit(jobs.values.asScala.toSeq, best)
+        }
       }
       var run = 0
       while (run < timedRuns && !failed) { timedRun(); run += 1 }
@@ -283,14 +342,14 @@ object Bench {
         if (failed) { failed = false; best = hadBest }
       }
       (name, if (failed) -1.0 else best, if (failed) 0.0 else bestCommit,
-        if (failed) 0.0 else bestFileOps)
+        if (failed) 0.0 else bestFileOps, if (failed) None else Some(bestJobs))
     }
     val canaryLast = if (hasCanaryQuery) timeCanary() else -1.0
     val wcanaryLast = timeWriteCanary()
     val loadPost = loadAvg
 
     val ok = results.filter(_._2 >= 0)
-    val failedNames = results.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
+    val failedNames = results.collect { case (k, v, _, _, _) if v < 0 => "\"" + k + "\"" }
     val total = ok.map(_._2).sum
     val commitTotal = ok.map(_._3).sum
     val fileOpsTotal = ok.map(_._4).sum
@@ -330,7 +389,7 @@ object Bench {
         // own caveat
         s""","note":"CANARY_REL ${fmt(canaryFirst)}s/${fmt(canaryLast)}s abs-gate relative""""
       else ""
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v, _, _, _) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val failedJson = if (failedNames.isEmpty) "" else s""","failed":${failedNames.mkString("[", ",", "]")}"""
     // rerun marker in-band: re-run-assisted totals must be
     // distinguishable from plain 2-run totals on the compact line the
@@ -344,16 +403,24 @@ object Bench {
 
     // Full precision for humans/judge; the printed line is budgeted for
     // the driver's 2000-char tail capture.
-    val qsFull = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val commitFull = results.collect { case (k, _, c, _) if c > 0 => "\"" + k + "\":" + c }
+    val qsFull = results.map { case (k, v, _, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val commitFull = results.collect { case (k, _, c, _, _) if c > 0 => "\"" + k + "\":" + c }
       .mkString("{", ",", "}")
-    val fileOpsFull = results.collect { case (k, _, _, fo) if fo > 0 => "\"" + k + "\":" + fo }
+    val fileOpsFull = results.collect { case (k, _, _, fo, _) if fo > 0 => "\"" + k + "\":" + fo }
       .mkString("{", ",", "}")
+    val splits = results.collect { case (k, _, _, _, Some(j)) => k -> j }
+    def perKey(f: JobSplit => String): String =
+      splits.map { case (k, j) => "\"" + k + "\":" + f(j) }.mkString("{", ",", "}")
+    val jobsJson = s""""jobs":${perKey(_.jobs.toString)},""" +
+      s""""job_union_s":${perKey(_.unionS.toString)},""" +
+      s""""driver_gap_s":${perKey(_.gapS.toString)},""" +
+      s""""top_jobs":${perKey(_.top.map { case (d, n, sec) =>
+        s"[${org.json4s.jackson.JsonMethods.compact(org.json4s.JString(d))},$n,$sec]" }.mkString("[", ",", "]"))},"""
     val rerunJson = rerun.map("\"" + _ + "\"").mkString("[", ",", "]")
     val wcTlJson = wcTimeline.map { case (i, s) => s"[$i,$s]" }.mkString("[", ",", "]")
     val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,""" +
       s""""commit_s":$commitFull,"commit_total":$commitTotal,""" +
-      s""""fileops_s":$fileOpsFull,"fileops_total":$fileOpsTotal,"rerun":$rerunJson,""" +
+      s""""fileops_s":$fileOpsFull,"fileops_total":$fileOpsTotal,$jobsJson"rerun":$rerunJson,""" +
       s""""wcanary_timeline":$wcTlJson,""" +
       s""""failed":${failedNames.mkString("[", ",", "]")},"runs":$timedRuns,"cpus":"$cpus",""" +
       s""""sf":"$sfDir","load_pre":$loadPre,"load_post":$loadPost,""" +

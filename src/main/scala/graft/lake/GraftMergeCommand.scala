@@ -7,81 +7,13 @@ import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, De
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.functions.col
 
 /** SQL `MERGE INTO` on a graft table, routed through the transaction
-  * log's copy-on-write merge — the last missing piece of SQL write
-  * parity (the reference's entire compute surface is SQL; its
-  * deployments upsert via Iceberg MERGE).
-  *
-  * Spark's analyzer fully resolves `MergeIntoTable` over a V1 relation
-  * (star actions expand to per-column assignments, attributes bind,
-  * CheckAnalysis passes) — only the PLANNER has no V1 strategy.
-  * [[GraftMergeRule]] converts the resolved node into this command for
-  * the upsert shapes [[LakeTable.merge]] expresses:
-  *
-  *  - `ON` a conjunction of target-column = source-expression
-  *    equalities (the merge keys);
-  *  - `WHEN MATCHED THEN UPDATE SET ...` and/or
-  *    `WHEN NOT MATCHED THEN INSERT ...`, unconditional, at most one
-  *    of each, assigning the SAME source expressions (MERGE applies
-  *    one row image per source row — differing UPDATE/INSERT images
-  *    would need a per-row matched bit the upsert primitive does not
-  *    carry);
-  *  - every ON key's source side must be what the action assigns to
-  *    that key column (otherwise the join the upsert performs would
-  *    not be the join the query asked for).
-  *
-  * Anything else — DELETE actions, per-action conditions,
-  * NOT MATCHED BY SOURCE — fails loudly with the reason rather than
-  * planning wrong semantics. Update-only merges restrict the source to
-  * rows whose key already exists (left-semi against the current
-  * snapshot); insert-only merges to rows whose key does not
-  * (left-anti); both-action merges are the plain upsert.
-  */
-final case class GraftMergeCommand(tablePath: String, updates: LogicalPlan,
-                                   keys: Seq[String],
-                                   updateOnly: Boolean)
-    extends LeafRunnableCommand {
-  override def innerChildren: Seq[LogicalPlan] = Seq(updates)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val data = org.apache.spark.sql.graft.SqlShims.ofRows(spark, updates)
-    // auto-scope: when every partition column is a merge key, a matched
-    // row can only live in its update row's partition — the scoped
-    // detection contract holds by construction, so the merge detection
-    // partition-prunes AND qualifies for the disjoint-race rebase (two
-    // SQL merges into different dates of a partitioned fact both land)
-    val parts = LakeTable.latestSnapshot(spark, tablePath)
-      .map(_.partitionColumns).getOrElse(Nil)
-    val scoped = parts.nonEmpty && parts.forall(keys.contains)
-    // spark.graft.merge.mode=mor routes the upsert through position-
-    // delete + append (the general-clause GraftMergeRowsCommand honors
-    // the same conf via mergeRowsMergeOnRead for EVERY clause shape,
-    // NOT MATCHED BY SOURCE included since r14)
-    val mor = GraftMergeCommand.morMode(spark)
-    val src =
-      if (!updateOnly) data
-      else data.join(
-        LakeTable.read(spark, tablePath).select(keys.map(col): _*), keys, "left_semi")
-    if (mor) LakeTable.mergeMergeOnRead(spark, tablePath, src, keys)
-    else LakeTable.merge(spark, tablePath, src, keys, scopeToUpdatePartitions = scoped)
-    Seq.empty
-  }
-}
-
-object GraftMergeCommand {
-  /** `spark.graft.merge.mode` parsed: true = merge-on-read. */
-  private[lake] def morMode(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.merge.mode").map(_.toLowerCase) match {
-      case Some("mor") => true
-      case Some("cow") | None => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"spark.graft.merge.mode must be 'cow' or 'mor', got '$other'")
-    }
-}
-
-/** The general-shape SQL MERGE, routed through [[LakeTable.mergeRows]]:
+  * log's row-level merge ([[LakeTable.mergeRows]]). Spark's analyzer
+  * fully resolves `MergeIntoTable` over a V1 relation (star actions
+  * expand to per-column assignments, attributes bind, CheckAnalysis
+  * passes) — only the PLANNER has no V1 strategy, so
+  * [[GraftMergeRule]] converts every resolved MERGE into this command:
   * ordered WHEN MATCHED clauses with conditions (UPDATE preserving
   * unassigned target columns, DELETE), ordered condition-gated WHEN
   * NOT MATCHED INSERT clauses, and ordered WHEN NOT MATCHED BY SOURCE
@@ -116,6 +48,11 @@ final case class GraftMergeRowsCommand(
     val insertClauses = insert.map { case (cond, image) =>
       (cond.map(columnOf), image.map { case (n, v) => n -> columnOf(v) }.toMap)
     }
+    // auto-scope: when every partition column is a merge key, a matched
+    // row can only live in its source row's partition — the scoped
+    // detection contract holds by construction, so the merge detection
+    // partition-prunes AND qualifies for the disjoint-race rebase (two
+    // SQL merges into different dates of a partitioned fact both land)
     val parts = LakeTable.latestSnapshot(spark, tablePath)
       .map(_.partitionColumns).getOrElse(Nil)
     val scoped = parts.nonEmpty && parts.forall(keys.contains)
@@ -124,7 +61,7 @@ final case class GraftMergeRowsCommand(
     // SOURCE pays a condition-bounded whole-table READ (inherent to its
     // semantics) but writes O(claimed rows), where CoW rewrites every
     // file holding one claimed row.
-    if (GraftMergeCommand.morMode(spark))
+    if (GraftMergeRowsCommand.morMode(spark))
       LakeTable.mergeRowsMergeOnRead(spark, tablePath, data, keys,
         toClauses(matched), insertClauses, toClauses(notMatchedBySource))
     else
@@ -133,6 +70,17 @@ final case class GraftMergeRowsCommand(
         scopeToUpdatePartitions = scoped)
     Seq.empty
   }
+}
+
+object GraftMergeRowsCommand {
+  /** `spark.graft.merge.mode` parsed: true = merge-on-read. */
+  private def morMode(spark: SparkSession): Boolean =
+    spark.conf.getOption("spark.graft.merge.mode").map(_.toLowerCase) match {
+      case Some("mor") => true
+      case Some("cow") | None => false
+      case Some(other) => throw new IllegalArgumentException(
+        s"spark.graft.merge.mode must be 'cow' or 'mor', got '$other'")
+    }
 }
 
 /** SQL `DELETE FROM <graft table> WHERE ...`, planned onto
@@ -208,9 +156,11 @@ final class GraftMergeRule extends Rule[LogicalPlan] {
   private def unsupported(what: String): Nothing =
     throw new UnsupportedOperationException(
       s"MERGE INTO a graft table: $what. Supported shape: ON a conjunction of " +
-        "target-column = source-expression equalities, with an unconditional " +
-        "WHEN MATCHED THEN UPDATE SET ... and/or WHEN NOT MATCHED THEN INSERT ... " +
-        "assigning the same source expressions; use the LakeTable API for richer shapes")
+        "target-column = source-expression equalities, then any ordered mix of " +
+        "WHEN MATCHED [AND cond] THEN UPDATE SET ... | DELETE, " +
+        "WHEN NOT MATCHED [AND cond] THEN INSERT ... and " +
+        "WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET ... | DELETE clauses, " +
+        "whose UPDATE and INSERT assignments target columns")
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case org.apache.spark.sql.catalyst.expressions.And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -251,7 +201,6 @@ final class GraftMergeRule extends Rule[LogicalPlan] {
       }
       val targetAttrs = m.targetTable.outputSet
       val sourceAttrs = m.sourceTable.outputSet
-      val targetNames = m.targetTable.output.map(_.name)
 
       // ON condition → (target key name, source-side expression) pairs
       val keyPairs: Seq[(String, Expression)] = conjuncts(m.mergeCondition).map {
@@ -289,76 +238,43 @@ final class GraftMergeRule extends Rule[LogicalPlan] {
       if (matchedParsed.isEmpty && insertParsed.isEmpty && nmbsParsed.isEmpty)
         unsupported("no UPDATE, DELETE or INSERT action given")
 
-      // ---------- fast path: the plain upsert LakeTable.merge expresses
-      // directly — one unconditional UPDATE covering EVERY target column
-      // (+ optionally an unconditional INSERT with the same image), each
-      // ON key assigned its own join value. Anything else (conditions,
-      // DELETE, partial images that must PRESERVE unassigned columns,
-      // differing update/insert images, insert-only with its anti-join
-      // race) takes the row-level path.
-      val fastImage: Option[Map[String, Expression]] =
-        if (nmbsParsed.nonEmpty) None
-        else (matchedParsed, insertParsed) match {
-          case (Seq((None, Some(u))), Seq((None, i))) =>
-            val um = u.toMap; val im = i.toMap
-            val same = um.keySet == im.keySet &&
-              um.forall { case (k, v) => im(k).semanticEquals(v) }
-            if (same && targetNames.forall(um.contains)) Some(um) else None
-          case (Seq((None, Some(u))), Seq()) =>
-            val um = u.toMap
-            if (targetNames.forall(um.contains)) Some(um) else None
-          case _ => None
+      // The source relation must expose each ON key under the target's
+      // key NAME (mergeRows joins t.k = s.k): alias the key expression in
+      // when the source lacks the column; refuse when the source has a
+      // DIFFERENT column of that name.
+      val sourceByName = m.sourceTable.output.map(a => a.name -> a).toMap
+      val needAlias = keyPairs.filter { case (n, e) =>
+        sourceByName.get(n) match {
+          case Some(a) if a.semanticEquals(e) => false
+          case Some(_) => unsupported(s"the source already has a column named '$n' " +
+            s"that differs from the ON key expression '${e.sql}' — alias one of them")
+          case None => true
         }
-      val fastKeysOk = fastImage.exists { image =>
-        keyPairs.forall { case (n, s) => image.get(n).exists(_.semanticEquals(s)) }
       }
+      val sourcePlan =
+        if (needAlias.isEmpty) m.sourceTable
+        else Project(m.sourceTable.output ++
+          needAlias.map { case (n, e) => Alias(e, n)() }, m.sourceTable)
 
-      if (fastKeysOk) {
-        val image = fastImage.get
-        val targetOrder = targetNames.filter(image.contains)
-        val projection = targetOrder.map(n => Alias(image(n), n)())
-        val updates = Project(projection, m.sourceTable)
-        GraftMergeCommand(idx.tablePath, updates, keys,
-          updateOnly = insertParsed.isEmpty)
-      } else {
-        // ---------- row-level path. The source relation must expose each
-        // ON key under the target's key NAME (mergeRows joins t.k = s.k):
-        // alias the key expression in when the source lacks the column;
-        // refuse when the source has a DIFFERENT column of that name.
-        val sourceByName = m.sourceTable.output.map(a => a.name -> a).toMap
-        val needAlias = keyPairs.filter { case (n, e) =>
-          sourceByName.get(n) match {
-            case Some(a) if a.semanticEquals(e) => false
-            case Some(_) => unsupported(s"the source already has a column named '$n' " +
-              s"that differs from the ON key expression '${e.sql}' — alias one of them")
-            case None => true
-          }
-        }
-        val sourcePlan =
-          if (needAlias.isEmpty) m.sourceTable
-          else Project(m.sourceTable.output ++
-            needAlias.map { case (n, e) => Alias(e, n)() }, m.sourceTable)
-
-        // rebind target/source attributes to the t/s aliases the
-        // row-level merge joins under (resolution is by name at run time)
-        def rebind(e: Expression): Expression = e.transform {
-          case a: AttributeReference if targetAttrs.contains(a) =>
-            UnresolvedAttribute(Seq("t", a.name))
-          case a: AttributeReference if sourceAttrs.contains(a) =>
-            UnresolvedAttribute(Seq("s", a.name))
-        }
-        val matchedSpecs = matchedParsed.map { case (cond, set) =>
-          (cond.map(rebind), set.map(_.map { case (n, v) => n -> rebind(v) }))
-        }
-        val insertSpecs = insertParsed.map { case (cond, image) =>
-          (cond.map(rebind), image.map { case (n, v) => n -> rebind(v) })
-        }
-        val nmbsSpecs = nmbsParsed.map { case (cond, set) =>
-          (cond.map(rebind), set.map(_.map { case (n, v) => n -> rebind(v) }))
-        }
-        GraftMergeRowsCommand(idx.tablePath, sourcePlan, keys, matchedSpecs,
-          insertSpecs, nmbsSpecs)
+      // rebind target/source attributes to the t/s aliases the
+      // row-level merge joins under (resolution is by name at run time)
+      def rebind(e: Expression): Expression = e.transform {
+        case a: AttributeReference if targetAttrs.contains(a) =>
+          UnresolvedAttribute(Seq("t", a.name))
+        case a: AttributeReference if sourceAttrs.contains(a) =>
+          UnresolvedAttribute(Seq("s", a.name))
       }
+      val matchedSpecs = matchedParsed.map { case (cond, set) =>
+        (cond.map(rebind), set.map(_.map { case (n, v) => n -> rebind(v) }))
+      }
+      val insertSpecs = insertParsed.map { case (cond, image) =>
+        (cond.map(rebind), image.map { case (n, v) => n -> rebind(v) })
+      }
+      val nmbsSpecs = nmbsParsed.map { case (cond, set) =>
+        (cond.map(rebind), set.map(_.map { case (n, v) => n -> rebind(v) }))
+      }
+      GraftMergeRowsCommand(idx.tablePath, sourcePlan, keys, matchedSpecs,
+        insertSpecs, nmbsSpecs)
     case _ => plan
   }
 }

@@ -900,6 +900,31 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------------------------- data files
 
+  /** Write `df` as parquet into a fresh `<table>/_staging/<uuid>`
+    * directory and hand that directory to `publish`, then delete it
+    * whether the write, the publish or neither failed — a failed
+    * statement (a CHECK violation, a `raise_error` in a SET value, a
+    * lost rename) leaves no staging litter for vacuum's grace period to
+    * sweep. The write meters as commit time; `publish` meters its own
+    * file operations.
+    */
+  private[lake] def withStagedWrite[T](spark: SparkSession, table: String, df: DataFrame,
+                                       partitionBy: Seq[String] = Nil)(publish: Path => T): T = {
+    val staging = new Path(new Path(table, "_staging"), java.util.UUID.randomUUID().toString)
+    // no _SUCCESS marker: the log, not a marker file, defines commit
+    // visibility — and a directory-rename publish would otherwise carry
+    // the marker along as litter
+    val writer = df.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    try {
+      meteredCommit((if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+        .parquet(staging.toString))
+      publish(staging)
+    } finally {
+      try fs(spark, table).delete(staging, true) catch { case _: java.io.IOException => () }
+    }
+  }
+
   /** Write `df` to a transient staging dir, then move the part files
     * into the shared `data/` tree (preserving hive partition subdirs).
     * Part file names embed the write job's UUID, so moves never
@@ -967,145 +992,127 @@ object LakeTable extends org.apache.spark.internal.Logging {
       case None => gened
     }
     val f = fs(spark, table)
-    val staging = new Path(new Path(table, "_staging"), java.util.UUID.randomUUID().toString)
-    // no _SUCCESS marker: the log, not a marker file, defines commit
-    // visibility — and the bulk-move publish would otherwise carry the
-    // marker into data/ as litter
-    val writer = routed.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-    try meteredCommit((if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
-      .parquet(staging.toString))
-    catch {
-      case e: Throwable =>
-        // a failed staging write (e.g. an in-flight CHECK-constraint
-        // violation) must not leave partial files behind
-        try f.delete(staging, true) catch { case _: java.io.IOException => () }
-        throw e
-    }
-
-    // the staged listing's FileStatus stands for the published file:
-    // rename preserves length and mtime, so no per-file re-stat after
-    // the move (one round trip per file saved on an object store)
-    val staged = meteredCommit { meteredFileOps {
-      val b = scala.collection.mutable.ArrayBuffer.empty[(String, Path, Long, Long)]
-      val it = f.listFiles(staging, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (st.isFile && name.endsWith(".parquet")) {
-          b += ((relativize(staging, st.getPath), st.getPath,
-            st.getLen, st.getModificationTime))
-        }
-      }
-      b
-    }}
     // partition column values live in the dir path, not the file — only
     // data columns have footer stats (physical names: the files' own)
     val dataSchema = StructType(gened.schema.filterNot(fl => physParts.contains(fl.name)))
     val conf = spark.sessionState.newHadoopConf()
-    // An unpartitioned, unbucketed commit (staged files all at the
-    // staging root) publishes its data files with ONE directory rename
-    // — data/<batch-uuid>/<part-file> — instead of a move per file:
-    // the log's paths are opaque table-relative names, so the extra
-    // level costs readers nothing (partition parsing is a no-op on an
-    // empty partition schema), and the per-file rename+mkdirs round
-    // trips vanish from the commit path (guide §6). Hive-partitioned
-    // layouts keep per-file moves (their dir names ARE semantics);
-    // bucketed commits keep them too (the move renames the file to
-    // carry its bucket id).
-    val bulkMove = bucketing.isEmpty && physParts.isEmpty &&
-      staged.nonEmpty && staged.forall(s => !s._1.contains('/'))
-    // move + stat + footer-read PER FILE, fanned out on a bounded pool:
-    // serially this is the driver-side commit bottleneck once a write
-    // stages thousands of files (each footer read is a GET on an object
-    // store); the files are independent, so the wall cost drops to
-    // ceil(files / threads) round trips
-    val entries =
-      try {
-        if (bulkMove) {
-          val batchDir = staging.getName // the write's UUID — unique
-          val destDir = new Path(dataPath(table), batchDir)
-          meteredCommit { meteredFileOps {
-            f.mkdirs(dataPath(table))
-            if (!f.rename(staging, destDir))
-              throw new IllegalStateException(s"could not move $staging to $destDir")
-          }}
-          stageParallel(staged.toSeq) { case (rel0, _, len, mtime) =>
-            val rel = s"$batchDir/$rel0"
-            val (rows, stats) =
-              ParquetStats.collect(conf, new Path(dataPath(table), rel), dataSchema)
-            FileEntry(rel, len, mtime, rows, stats)
-          }
-        } else if (bucketing.isEmpty && physParts.nonEmpty) {
-          // hive-partitioned, unbucketed: publish each staged leaf
-          // partition directory with ONE rename —
-          // <k=v dirs>/<batch-uuid>/<part-file> — instead of a move per
-          // file (guide §6, the partitioned sibling of bulkMove above).
-          // Partition identity is carried by the LEADING k=v segments,
-          // which every consumer parses by name (PartitionPaths.valuesOf)
-          // or by leading run (partitionDirOf), so the nested batch dir
-          // is invisible to partition semantics. Single-file partitions
-          // keep the flat per-file move (a dir rename would add nesting
-          // for no round-trip win).
-          val batchDir = staging.getName
-          val byDir = staged.toSeq.groupBy { case (rel0, _, _, _) =>
-            val i = rel0.lastIndexOf('/')
-            if (i < 0) "" else rel0.substring(0, i)
-          }.toSeq.sortBy(_._1)
-          val moved = stageParallel(byDir) { case (pdir, files) =>
-            val destParent =
-              if (pdir.isEmpty) dataPath(table) else new Path(dataPath(table), pdir)
-            f.mkdirs(destParent)
-            if (files.size > 1 && pdir.nonEmpty) {
-              val destDir = new Path(destParent, batchDir)
-              if (!f.rename(new Path(staging, pdir), destDir))
-                throw new IllegalStateException(
-                  s"could not move ${new Path(staging, pdir)} to $destDir")
-              files.map { case (rel0, _, len, mtime) =>
-                (s"$pdir/$batchDir/${rel0.substring(pdir.length + 1)}", len, mtime)
-              }
-            } else files.map { case (rel0, src, len, mtime) =>
-              val dest = new Path(dataPath(table), rel0)
-              if (!f.rename(src, dest))
-                throw new IllegalStateException(s"could not move $src to $dest")
-              (rel0, len, mtime)
-            }
-          }
-          stageParallel(moved.flatten) { case (rel, len, mtime) =>
-            val (rows, stats) =
-              ParquetStats.collect(conf, new Path(dataPath(table), rel), dataSchema)
-            FileEntry(rel, len, mtime, rows, stats)
-          }
-        } else {
-          // mkdirs once per distinct destination directory, not per file
-          meteredCommit { meteredFileOps {
-            staged.map { case (rel0, _, _, _) =>
-              new Path(dataPath(table), rel0).getParent
-            }.distinct.foreach(f.mkdirs)
-          }}
-          stageParallel(staged.toSeq) { case (rel0, src, len, mtime) =>
-            // bucketed commit: the staged name's task id (= bucket id under
-            // the repartition above) moves into Spark's bucket-file naming,
-            // `_NNNNN` before the extension — what BucketingUtils parses
-            val rel = bucketing match {
-              case Some(_) =>
-                val slash = rel0.lastIndexOf('/')
-                val (dir, name) = rel0.splitAt(slash + 1)
-                val tid = Bucketing.taskIdOf(name).getOrElse(
-                  throw new IllegalStateException(
-                    s"staged file $name carries no task id — cannot assign its bucket"))
-                dir + Bucketing.bucketedName(name, tid)
-              case None => rel0
-            }
-            val dest = new Path(dataPath(table), rel)
-            if (!f.rename(src, dest))
-              throw new IllegalStateException(s"could not move $src to $dest")
-            val (rows, stats) = ParquetStats.collect(conf, dest, dataSchema)
-            FileEntry(rel, len, mtime, rows, stats)
+    val entries = withStagedWrite(spark, table, routed, physParts) { staging =>
+      // the staged listing's FileStatus stands for the published file:
+      // rename preserves length and mtime, so no per-file re-stat after
+      // the move (one round trip per file saved on an object store)
+      val staged = meteredCommit { meteredFileOps {
+        val b = scala.collection.mutable.ArrayBuffer.empty[(String, Path, Long, Long)]
+        val it = f.listFiles(staging, true)
+        while (it.hasNext) {
+          val st = it.next()
+          val name = st.getPath.getName
+          if (st.isFile && name.endsWith(".parquet")) {
+            b += ((relativize(staging, st.getPath), st.getPath,
+              st.getLen, st.getModificationTime))
           }
         }
+        b
+      }}
+      // An unpartitioned, unbucketed commit (staged files all at the
+      // staging root) publishes its data files with ONE directory rename
+      // — data/<batch-uuid>/<part-file> — instead of a move per file:
+      // the log's paths are opaque table-relative names, so the extra
+      // level costs readers nothing (partition parsing is a no-op on an
+      // empty partition schema), and the per-file rename+mkdirs round
+      // trips vanish from the commit path (guide §6). Hive-partitioned
+      // layouts keep per-file moves (their dir names ARE semantics);
+      // bucketed commits keep them too (the move renames the file to
+      // carry its bucket id).
+      val bulkMove = bucketing.isEmpty && physParts.isEmpty &&
+        staged.nonEmpty && staged.forall(s => !s._1.contains('/'))
+      // move + stat + footer-read PER FILE, fanned out on a bounded pool:
+      // serially this is the driver-side commit bottleneck once a write
+      // stages thousands of files (each footer read is a GET on an object
+      // store); the files are independent, so the wall cost drops to
+      // ceil(files / threads) round trips
+      if (bulkMove) {
+        val batchDir = staging.getName // the write's UUID — unique
+        val destDir = new Path(dataPath(table), batchDir)
+        meteredCommit { meteredFileOps {
+          f.mkdirs(dataPath(table))
+          if (!f.rename(staging, destDir))
+            throw new IllegalStateException(s"could not move $staging to $destDir")
+        }}
+        stageParallel(staged.toSeq) { case (rel0, _, len, mtime) =>
+          val rel = s"$batchDir/$rel0"
+          val (rows, stats) =
+            ParquetStats.collect(conf, new Path(dataPath(table), rel), dataSchema)
+          FileEntry(rel, len, mtime, rows, stats)
+        }
+      } else if (bucketing.isEmpty && physParts.nonEmpty) {
+        // hive-partitioned, unbucketed: publish each staged leaf
+        // partition directory with ONE rename —
+        // <k=v dirs>/<batch-uuid>/<part-file> — instead of a move per
+        // file (guide §6, the partitioned sibling of bulkMove above).
+        // Partition identity is carried by the LEADING k=v segments,
+        // which every consumer parses by name (PartitionPaths.valuesOf)
+        // or by leading run (partitionDirOf), so the nested batch dir
+        // is invisible to partition semantics. Single-file partitions
+        // keep the flat per-file move (a dir rename would add nesting
+        // for no round-trip win).
+        val batchDir = staging.getName
+        val byDir = staged.toSeq.groupBy { case (rel0, _, _, _) =>
+          val i = rel0.lastIndexOf('/')
+          if (i < 0) "" else rel0.substring(0, i)
+        }.toSeq.sortBy(_._1)
+        val moved = stageParallel(byDir) { case (pdir, files) =>
+          val destParent =
+            if (pdir.isEmpty) dataPath(table) else new Path(dataPath(table), pdir)
+          f.mkdirs(destParent)
+          if (files.size > 1 && pdir.nonEmpty) {
+            val destDir = new Path(destParent, batchDir)
+            if (!f.rename(new Path(staging, pdir), destDir))
+              throw new IllegalStateException(
+                s"could not move ${new Path(staging, pdir)} to $destDir")
+            files.map { case (rel0, _, len, mtime) =>
+              (s"$pdir/$batchDir/${rel0.substring(pdir.length + 1)}", len, mtime)
+            }
+          } else files.map { case (rel0, src, len, mtime) =>
+            val dest = new Path(dataPath(table), rel0)
+            if (!f.rename(src, dest))
+              throw new IllegalStateException(s"could not move $src to $dest")
+            (rel0, len, mtime)
+          }
+        }
+        stageParallel(moved.flatten) { case (rel, len, mtime) =>
+          val (rows, stats) =
+            ParquetStats.collect(conf, new Path(dataPath(table), rel), dataSchema)
+          FileEntry(rel, len, mtime, rows, stats)
+        }
+      } else {
+        // mkdirs once per distinct destination directory, not per file
+        meteredCommit { meteredFileOps {
+          staged.map { case (rel0, _, _, _) =>
+            new Path(dataPath(table), rel0).getParent
+          }.distinct.foreach(f.mkdirs)
+        }}
+        stageParallel(staged.toSeq) { case (rel0, src, len, mtime) =>
+          // bucketed commit: the staged name's task id (= bucket id under
+          // the repartition above) moves into Spark's bucket-file naming,
+          // `_NNNNN` before the extension — what BucketingUtils parses
+          val rel = bucketing match {
+            case Some(_) =>
+              val slash = rel0.lastIndexOf('/')
+              val (dir, name) = rel0.splitAt(slash + 1)
+              val tid = Bucketing.taskIdOf(name).getOrElse(
+                throw new IllegalStateException(
+                  s"staged file $name carries no task id — cannot assign its bucket"))
+              dir + Bucketing.bucketedName(name, tid)
+            case None => rel0
+          }
+          val dest = new Path(dataPath(table), rel)
+          if (!f.rename(src, dest))
+            throw new IllegalStateException(s"could not move $src to $dest")
+          val (rows, stats) = ParquetStats.collect(conf, dest, dataSchema)
+          FileEntry(rel, len, mtime, rows, stats)
+        }
       }
-      finally f.delete(staging, true)
+    }
     // bloom sidecar for flagged columns: the table's CURRENT schema
     // metadata names them (enableBloomFilter); the build reads the
     // just-moved, page-cache-warm files once, distributed. Flags are
@@ -1279,25 +1286,21 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * hive partitioning, no stats (the feed is read whole per commit).
     */
   private[lake] def stageChangeFiles(spark: SparkSession, table: String,
-                               df: DataFrame): Seq[String] = {
-    val f = fs(spark, table)
-    val staging = new Path(new Path(table, "_staging"), java.util.UUID.randomUUID().toString)
-    meteredCommit(df.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(staging.toString))
-    // change files are never partitioned: publish the whole staged dir
-    // with ONE rename — _change_data/<batch-uuid>/<part-file> — the
-    // feed reader takes the recorded paths verbatim, so the extra
-    // level is free (see the bulk-move note in stageFiles)
-    meteredCommit { meteredFileOps {
-      val staged = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = f.listFiles(staging, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-          staged += relativize(staging, st.getPath)
-      }
-      try {
+                               df: DataFrame): Seq[String] =
+    withStagedWrite(spark, table, df) { staging =>
+      // change files are never partitioned: publish the whole staged dir
+      // with ONE rename — _change_data/<batch-uuid>/<part-file> — the
+      // feed reader takes the recorded paths verbatim, so the extra
+      // level is free (see the bulk-move note in stageFiles)
+      meteredCommit { meteredFileOps {
+        val f = fs(spark, table)
+        val staged = scala.collection.mutable.ArrayBuffer.empty[String]
+        val it = f.listFiles(staging, true)
+        while (it.hasNext) {
+          val st = it.next()
+          if (st.isFile && st.getPath.getName.endsWith(".parquet"))
+            staged += relativize(staging, st.getPath)
+        }
         if (staged.isEmpty) Nil
         else {
           val batchDir = staging.getName
@@ -1307,9 +1310,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
             throw new IllegalStateException(s"could not move $staging to $destDir")
           staged.toSeq.map(rel => s"_change_data/$batchDir/$rel")
         }
-      } finally f.delete(staging, true)
-    }}
-  }
+      }}
+    }
 
   /** Row-level changes of exactly version `v`: the table columns of
     * that commit's schema plus `_change_type` ('insert' | 'delete' |

@@ -490,20 +490,17 @@ private[lake] object RowLevelOps {
     * files the parquet read ignores.
     */
   private[lake] def stageDeleteVector(spark: SparkSession, table: String,
-                                df: DataFrame, parts: Int): String = {
-    val f = fs(spark, table)
-    val staging = new Path(new Path(table, "_staging"), java.util.UUID.randomUUID().toString)
-    meteredCommit(df.repartition(parts, col("p")).write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(staging.toString))
-    val name = java.util.UUID.randomUUID().toString
-    val dest = new Path(deletesPath(table), name)
-    meteredCommit { meteredFileOps {
-      f.mkdirs(deletesPath(table))
-      if (!f.rename(staging, dest))
-        throw new IllegalStateException(
-          s"could not move staged deletion vector $staging to $dest")
-    }}
-    s"_deletes/$name"
-  }
+                                df: DataFrame, parts: Int): String =
+    withStagedWrite(spark, table, df.repartition(parts, col("p"))) { staging =>
+      val name = java.util.UUID.randomUUID().toString
+      val dest = new Path(deletesPath(table), name)
+      meteredCommit { meteredFileOps {
+        val f = fs(spark, table)
+        f.mkdirs(deletesPath(table))
+        if (!f.rename(staging, dest))
+          throw new IllegalStateException(
+            s"could not move staged deletion vector $staging to $dest")
+      }}
+      s"_deletes/$name"
+    }
 }

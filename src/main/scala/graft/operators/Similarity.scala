@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Money.rnd
@@ -19,6 +20,39 @@ import graft.functions.Sketches
   * lambdas evaluate interpreted per element, ~50x slower on the
   * pairwise paths. Accumulation order matches a sequential fold, so
   * DuckDB oracle parity (list_dot_product) holds.
+  *
+  * BOUND AND RE-RANK — the contract of the exact ANN family
+  * ([[annQuant]], [[annPq]], [[annIvf]], [[annIvfPq]] and their
+  * persisted forms). Each operator brings one bound on the true cosine
+  * of a (query, vector) pair; everything else is shared:
+  *
+  *  1. bound every pair: a lower bound `lb` and an upper bound `ub`
+  *     (a compressed score ŝ ± its error over exact norms —
+  *     [[adcBounds]]), or a per-CELL upper bound (the angular triangle
+  *     bound of [[cellBounds]]);
+  *  2. τ = the k-th largest lower bound per query ([[kthLowerBound]]),
+  *     or the k-th EXACT cosine of a probed subset ([[kthCosine]]) — a
+  *     subset's k-th never exceeds the full k-th, so either is a valid
+  *     floor;
+  *  3. keep what reaches `τ − 1e-5` ([[aboveTau]]): order statistics
+  *     commute with the monotone 5-digit rounding, and the slack covers
+  *     [[annTopk]]'s round-then-rank ties;
+  *  4. re-rank the survivors on the float vectors ([[rerank]]; the
+  *     persisted probes push the candidate ids into the embeddings scan
+  *     while they fit `maxPushedKeys` — [[pushIds]]) and take the
+  *     ranked top-k ([[topK]]).
+  *
+  * A true top-k member's upper bound dominates its cosine, which is at
+  * least the k-th cosine, which dominates τ — so true top-k ⊆
+  * survivors, and every operator's result EQUALS [[annTopk]] and shares
+  * its brute-force DuckDB oracle. Bound QUALITY (codebook fit, cell
+  * geometry) only shapes how many pairs survive; correctness never
+  * depends on it. A zero-norm vector crashes the whole tier upstream
+  * (ANSI division by zero — annTopk's own loud refusal), so every
+  * lb/ub/τ is a real number; near-zero norms merely widen the bounds
+  * (PropertySpec forces both edges). The windowed bound passes carry
+  * scalars and codes only — float vectors join back for the candidate
+  * set alone. RecallSpec pins row-for-row equality with [[annTopk]].
   */
 object Similarity {
 
@@ -30,58 +64,203 @@ object Similarity {
     */
   private[graft] var failAfterRadiusCommit: Boolean = false
 
+  // ------------------------------------------------ shared building blocks
+
+  /** Raw embeddings (`embedding` float array) plus the double-precision
+    * vector `v` and its L2 `norm` — the one cast every reader and
+    * every index writer applies. */
+  private def embed(raw: DataFrame): DataFrame =
+    raw.withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
+      .withColumn("norm", expr("sqrt(dot_d(v, v))"))
+
   /** embeddings with double-precision vector + L2 norm (computed once). */
   private def vectors(spark: SparkSession, dir: String): DataFrame = {
     Sketches.register(spark)
-    Tables.embeddings(spark, dir)
-      .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
-      .withColumn("norm", expr("sqrt(dot_d(v, v))"))
+    embed(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("label"), col("v"), col("norm"))
   }
+
+  /** The query frame: the first `numQueries` vectors as
+    * (q_id, qv, qnorm) plus any per-query `extra` columns. */
+  private def queryFrame(e: DataFrame, numQueries: Int, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < numQueries)
+      .select(Seq(col("vec_id").as("q_id"), col("v").as("qv"),
+        col("norm").as("qnorm")) ++ extra: _*)
+
+  /** Exact cosine of a (v, norm) × (qv, qnorm) row, rounded to the 5
+    * digits every key of the tier ranks on. */
+  private val cosine: Column =
+    rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5)
+
+  private val byCosine =
+    Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
+
+  /** The ranked top-k per query of scored (q_id, vec_id, cosine) rows. */
+  private def topK(scored: DataFrame, k: Int, extra: Column*): DataFrame =
+    scored.withColumn("rank", row_number().over(byCosine).cast("long"))
+      .filter(col("rank") <= k)
+      .select(Seq(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"),
+        col("rank")) ++ extra: _*)
+
+  /** Per query, the k-th best exact cosine as `tau`. */
+  private def kthCosine(exact: DataFrame, k: Int): DataFrame =
+    exact.withColumn("rn", row_number().over(byCosine))
+      .filter(col("rn") === k)
+      .select(col("q_id"), col("cosine").as("tau"))
+
+  /** Rows whose `bound` column reaches `τ − 1e-5` — all of a query's
+    * rows when it has no τ (fewer than k exact rows: the left join's
+    * null). */
+  private def aboveTau(df: DataFrame, tau: DataFrame, bound: String): DataFrame =
+    df.join(broadcast(tau), Seq("q_id"), "left")
+      .filter(col("tau").isNull || col(bound) >= col("tau") - lit(1e-5))
+
+  /** Compressed-score bounds on the true cosine of scored pairs:
+    * `[(ŝ − err)/(‖x‖‖q‖), (ŝ + err)/(‖x‖‖q‖)]` over exact norms. */
+  private def adcBounds(pairs: DataFrame, shat: Column, err: Column): DataFrame =
+    pairs.select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"),
+        shat.as("shat"), err.as("err"))
+      .withColumn("lb", (col("shat") - col("err")) / (col("norm") * col("qnorm")))
+      .withColumn("ub", (col("shat") + col("err")) / (col("norm") * col("qnorm")))
+
+  /** The PQ bound ([[annPq]]): ŝ by table lookups, err = ‖q‖·resid. */
+  private def pqBounds(pairs: DataFrame): DataFrame =
+    adcBounds(pairs, expr("pq_adc(codes, lut)"), col("resid") * col("qnorm"))
+
+  private val byLowerBound =
+    Window.partitionBy(col("q_id")).orderBy(col("lb").desc, col("vec_id"))
+
+  /** Bounded pairs whose upper bound reaches the query's k-th largest
+    * lower bound (rank + unbounded min over one window partitioning —
+    * one shuffle). */
+  private def kthLowerBound(bounded: DataFrame, k: Int): DataFrame =
+    bounded.withColumn("lrn", row_number().over(byLowerBound))
+      .withColumn("tau", min(when(col("lrn") <= k, col("lb")))
+        .over(Window.partitionBy(col("q_id"))))
+      .filter(col("ub") >= col("tau") - lit(1e-5))
+
+  /** Exact cosine of candidate pairs: the float vectors (`vecs`, keyed
+    * by vec_id) and the query side (`q`, keyed by q_id) join back only
+    * here. */
+  private def rerank(cand: DataFrame, vecs: DataFrame, q: DataFrame): DataFrame =
+    cand.join(vecs, Seq("vec_id")).join(broadcast(q), Seq("q_id"))
+      .withColumn("cosine", cosine)
+
+  /** `src` restricted to the candidates' distinct vec_ids, pushed into
+    * its scan as an IN filter while they number at most `maxPushedKeys`
+    * (the bounded-key probe discipline); an unbounded candidate set
+    * (adversarial geometry) reads `src` whole — still exact. */
+  private def pushIds(cand: DataFrame, src: DataFrame, maxPushedKeys: Int): DataFrame = {
+    val ids = cand.select(col("vec_id")).distinct()
+      .limit(maxPushedKeys + 1).collect().map(_.getLong(0))
+    if (ids.length <= maxPushedKeys) src.filter(col("vec_id").isInCollection(ids.toSeq))
+    else src
+  }
+
+  /** A double array as a SQL array literal (codebooks, centroids,
+    * quantizer ranges ride into the kernels as constants). */
+  private def arrayLit(xs: Array[Double]): String = s"array(${xs.mkString("D,")}D)"
+
+  /** Per-subspace PQ codebooks in the flat layout
+    * `cb[((sub*kk)+code)*subDim + d]` that the pq_* expressions take. */
+  private final case class Codebook(cb: Array[Double], m: Int, kk: Int) {
+    private val sql = arrayLit(cb)
+    /** `df`'s `keep` columns plus the m codes and the exact
+      * reconstruction residual of its `v`. */
+    def encode(df: DataFrame, keep: Column*): DataFrame =
+      df.withColumn("pq", expr(s"pq_encode(v, $sql, $m, $kk)"))
+        .select(keep ++ Seq(col("pq.codes").as("codes"), col("pq.resid").as("resid")): _*)
+    /** The per-query lookup table of `qv`. */
+    def lut: Column = expr(s"pq_lut(qv, $sql, $m, $kk)")
+    /** The codebook as its side table: one (sub, code, centroid) row
+      * per centroid. */
+    def rows(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      val subDim = cb.length / (m * kk)
+      (for (s <- 0 until m; c <- 0 until kk) yield
+        (s, c, cb.slice(((s * kk) + c) * subDim, ((s * kk) + c + 1) * subDim).toSeq))
+        .toDF("sub", "code", "centroid").coalesce(1)
+    }
+  }
+
+  private object Codebook {
+    /** The persisted codebook side table back as a [[Codebook]].
+      * Bounded driver pull (subspaces × codebookSize rows). */
+    def read(spark: SparkSession, indexPath: String): Codebook = {
+      val rows = graft.lake.LakeTable.read(spark, s"$indexPath/codebook")
+        .select(col("sub"), col("code"), col("centroid")).collect()
+      require(rows.nonEmpty, s"no PQ codebook at $indexPath")
+      val m = rows.map(_.getInt(0)).max + 1
+      val kk = rows.map(_.getInt(1)).max + 1
+      val subDim = rows.head.getSeq[Double](2).length
+      val cb = new Array[Double](m * kk * subDim)
+      rows.foreach { r =>
+        val off = ((r.getInt(0) * kk) + r.getInt(1)) * subDim
+        val cent = r.getSeq[Double](2)
+        var d = 0
+        while (d < subDim) { cb(off + d) = cent(d); d += 1 }
+      }
+      Codebook(cb, m, kk)
+    }
+  }
+
+  /** Fitted centroids as the (cell, centroid) frame, cell = index. */
+  private def centroidFrame(spark: SparkSession, centers: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    centers.zipWithIndex.toSeq.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
+  }
+
+  /** Per-cell angular radius `max angle(member, centroid)` of
+    * cell-assigned (cell, v, norm) rows — one partial-agg pass, cells ×
+    * 1 rows. A zero-norm member carries no angle: radius π, the
+    * no-prune-safe value. */
+  private def cellRadius(members: DataFrame, centersDf: DataFrame): DataFrame =
+    members.join(broadcast(centersDf), Seq("cell"))
+      .withColumn("cn", sqrt(expr("dot_d(centroid, centroid)")))
+      .withColumn("ca", when(col("norm") > 0 && col("cn") > 0,
+        acos(least(lit(1.0), greatest(lit(-1.0),
+          expr("dot_d(v, centroid)") / (col("norm") * col("cn"))))))
+        .otherwise(lit(math.Pi)))
+      .groupBy(col("cell")).agg(max(col("ca")).as("radius"))
+
+  /** Query × cell rows (qv, qnorm, centroid, radius) with the query's
+    * angle `theta` to the centroid, the cell's best reachable cosine
+    * `bound = cos(max(0, θ_qc − r_cell))` (the triangle inequality on
+    * the sphere: every member sits at angle ≥ θ_qc − r_cell), and the
+    * cell's nearness rank `cr` per query. */
+  private def cellBounds(qc: DataFrame): DataFrame =
+    qc.withColumn("cn", sqrt(expr("dot_d(centroid, centroid)")))
+      .withColumn("theta", when(col("qnorm") > 0 && col("cn") > 0,
+        acos(least(lit(1.0), greatest(lit(-1.0),
+          expr("dot_d(qv, centroid)") / (col("qnorm") * col("cn"))))))
+        .otherwise(lit(0.0)))
+      .withColumn("bound", cos(greatest(lit(0.0), col("theta") - col("radius"))))
+      .withColumn("cr", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("theta"), col("cell"))))
+
+  // -------------------------------------------------------------- operators
 
   /** Brute-force cosine top-k: the exactness baseline for ANN. */
   def annTopk(spark: SparkSession, dir: String, numQueries: Int = 10, k: Int = 5): DataFrame = {
     val e = vectors(spark, dir)
-    val q = e.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
+    val q = queryFrame(e, numQueries)
     val scored = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
+      .withColumn("cosine", cosine)
+    topK(scored, k)
   }
 
   /** Int8 scalar-quantized top-k — the QUANTIZATION leg of the tier
     * (brute-force = exactness baseline, LSH/IVF = candidate pruning,
-    * this = arithmetic/memory compression) — and since r14 an EXACT
-    * operator with a DuckDB oracle, not a recall-gated one. The scan
-    * is still 1 byte/dimension (the 100 TB reason to quantize), but
-    * the candidate rule is a proof instead of a fixed rerank factor:
-    *
-    *  1. fit the per-dimension [lo, hi] as the EXACT corpus min/max
-    *     (one partial-agg pass; the shuffle carries dims × partitions
-    *     rows, never data rows) — exact bounds mean no clamping, which
-    *     is what makes the quantization error bounded;
-    *  2. first pass scores the DEQUANTIZED dot `dot_i8_deq` and its
-    *     per-row error half `deq_err_i8` (see the bound derivation on
-    *     the expressions): per pair, the true cosine lies inside
-    *     `[(ŝ−err)/(‖a‖‖q‖), (ŝ+err)/(‖a‖‖q‖)]` with exact norms;
-    *  3. τ = the k-th largest LOWER bound per query (rank + unbounded
-    *     min over the same window partitioning — one shuffle); every
-    *     vector whose UPPER bound reaches `τ − 1e-5` is a candidate.
-    *     Order statistics commute with the monotone 5-digit rounding,
-    *     so the slack covers [[annTopk]]'s round-then-rank ties;
-    *  4. exact re-rank of the candidates on the float vectors.
-    *
-    * True top-k ⊆ candidates by construction (lower bounds never
-    * exceed true cosines, pointwise domination carries to order
-    * statistics), so the result EQUALS [[annTopk]] and shares its
-    * brute-force oracle. Candidate width is data-dependent (tighter
-    * ranges ⇒ fewer exact re-ranks) but correctness never is.
-    * RecallSpec pins row-for-row equality with [[annTopk]].
+    * this = arithmetic/memory compression): the scan is 1
+    * byte/dimension, and the candidate rule is the family's proof.
+    * Its bound: the per-dimension [lo, hi] is the EXACT corpus min/max
+    * (one partial-agg pass; the shuffle carries dims × partitions
+    * rows) — exact ranges mean no clamping, which is what bounds the
+    * quantization error; the pass scores the DEQUANTIZED dot
+    * `dot_i8_deq` with its per-row error half `deq_err_i8` (see the
+    * derivation on the expressions), so the true dot lies within
+    * ŝ ± (eh + qeh + Σ step²/4).
     */
   def annQuant(spark: SparkSession, dir: String, numQueries: Int = 10, k: Int = 5): DataFrame = {
     val e = vectors(spark, dir)
@@ -94,48 +273,19 @@ object Similarity {
     val step = lo.indices.map(i => (hi(i) - lo(i)) / 255.0).toArray
     // the pair-independent tail of the error bound: Σ step_i²/4
     val c0 = step.map(s => s * s / 4.0).sum
-    val loSql = s"array(${lo.mkString("D,")}D)"
-    val hiSql = s"array(${hi.mkString("D,")}D)"
-    val stepSql = s"array(${step.mkString("D,")}D)"
+    val (loSql, hiSql, stepSql) = (arrayLit(lo), arrayLit(hi), arrayLit(step))
     val eq = e
       .withColumn("v8", expr(s"quantize_i8(v, $loSql, $hiSql)"))
       .withColumn("eh", expr(s"deq_err_i8(v8, $loSql, $stepSql)"))
-    val q = eq.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("norm").as("qnorm"), col("v8").as("q8"), col("eh").as("qeh"))
-    val wl = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("lb").desc, col("vec_id"))
-    val wt = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    // the windowed bound pass carries SCALARS only (never the 64-double
-    // vectors — dragging them through two window sorts is what would
-    // dominate the shuffle); the float vectors join back for the tiny
-    // candidate set afterwards
-    val cand = eq.select(col("vec_id"), col("norm"), col("v8"), col("eh"))
+    val q = queryFrame(eq, numQueries, col("v8").as("q8"), col("eh").as("qeh"))
+    val pairs = eq.select(col("vec_id"), col("norm"), col("v8"), col("eh"))
       .crossJoin(broadcast(q.select(col("q_id"), col("qnorm"), col("q8"), col("qeh"))))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"),
-        expr(s"dot_i8_deq(v8, q8, $loSql, $stepSql)").as("shat"),
-        (col("eh") + col("qeh") + lit(c0)).as("err"))
-      .withColumn("lb", (col("shat") - col("err")) / (col("norm") * col("qnorm")))
-      .withColumn("ub", (col("shat") + col("err")) / (col("norm") * col("qnorm")))
-      .withColumn("lrn", row_number().over(wl))
-      .withColumn("tau", min(when(col("lrn") <= k, col("lb"))).over(wt))
-      // every lb/ub/τ is a real number: a zero-norm vector crashes the
-      // whole cosine tier upstream (ANSI division by zero — the same
-      // loud refusal annTopk gives; spec-pinned in PropertySpec).
-      // Near-zero norms merely widen the bounds — more candidates,
-      // still exact (PropertySpec forces that edge).
-      .filter(col("ub") >= col("tau") - lit(1e-5))
+    val cand = kthLowerBound(adcBounds(pairs,
+        expr(s"dot_i8_deq(v8, q8, $loSql, $stepSql)"),
+        col("eh") + col("qeh") + lit(c0)), k)
       .select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"))
-    cand
-      .join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(q.select(col("q_id"), col("qv"))), Seq("q_id"))
-      .withColumn("cosine", rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
+    topK(rerank(cand, e.select(col("vec_id"), col("v")), q.select(col("q_id"), col("qv"))), k)
   }
 
   /** Deterministic Lloyd's k-means over a small driver-side sample —
@@ -205,13 +355,11 @@ object Similarity {
   /** Per-subspace PQ codebooks from a deterministic, bounded sample:
     * hash-gated scan + hash-ordered cap (a top-k: no sizing pass, no
     * global sort — the [[fitQuantizer]] discipline), [[lloyd]] per
-    * subspace. Returns the
-    * flat layout `cb[((sub*k)+code)*subDim + d]` that the pq_*
-    * expressions consume. Codebook QUALITY shapes candidate width
-    * only; the residual bound keeps the operators exact regardless.
+    * subspace. Codebook QUALITY shapes candidate width only; the
+    * residual bound keeps the operators exact regardless.
     */
   private def fitPqCodebook(e: DataFrame, subspaces: Int,
-                            codebookSize: Int): Array[Double] = {
+                            codebookSize: Int): Codebook = {
     // ordered by id hash: `limit` alone keeps whichever rows the scan
     // yields first, and the seeding depends on sample order
     val sampleCols = e.select(col("v"), col("vec_id"))
@@ -237,78 +385,31 @@ object Similarity {
       }
       s += 1
     }
-    cb
+    Codebook(cb, subspaces, codebookSize)
   }
 
   /** Product-quantized top-k — the deepest-compression leg of the
     * quantized-ANN family (int8 keeps 1 byte/dim; PQ keeps 1 byte per
     * `subDim`-dim SUBSPACE + one residual scalar: ~10 bytes/vector at
-    * 64 dims), and like [[annQuant]] an EXACT operator sharing
-    * [[annTopk]]'s brute-force oracle, not a recall-gated one:
-    *
-    *  1. fit per-subspace codebooks by deterministic [[lloyd]] k-means
-    *     on a hash-gated, capped sample (bounded driver pull — the
-    *     10k-capped quantizer-sample discipline);
-    *  2. `pq_encode` snaps each corpus vector to its nearest centroid
-    *     per subspace (codes) and records the EXACT reconstruction
-    *     distance `resid = ‖x − x̂‖` — one pass, whole-stage codegen;
-    *  3. the first pass scores `ŝ = q·x̂` via per-query lookup tables
-    *     (`pq_lut` once per broadcast query row, `pq_adc` = `m`
-    *     lookup-adds per pair — no corpus-vector arithmetic at all)
-    *     and bounds the true cosine by Cauchy–Schwarz:
-    *     `|q·x − q·x̂| ≤ ‖q‖·‖x−x̂‖ = qnorm·resid`, with exact norms;
-    *  4. τ = the k-th largest lower bound per query; candidates are
-    *     rows whose upper bound reaches `τ − 1e-5` (the slack covers
-    *     [[annTopk]]'s round-then-rank ties, same as [[annQuant]]);
-    *     exact re-rank of the survivors on the float vectors.
-    *
-    * True top-k ⊆ candidates by pointwise domination, so the result
-    * EQUALS [[annTopk]]. The windowed bound pass carries scalars and
-    * the `m`-byte codes only; float vectors join back for the
-    * candidate set. At 100 TB the scan reads ~10 bytes/vector — the
-    * PQ memory story — while correctness never depends on the
-    * codebook. RecallSpec pins row-for-row equality with [[annTopk]].
+    * 64 dims). Its bound: per-subspace codebooks fit by [[lloyd]] on a
+    * hash-gated, capped sample; `pq_encode` snaps each vector to its
+    * nearest centroid per subspace and records the EXACT reconstruction
+    * distance `resid = ‖x − x̂‖`; the pass scores `ŝ = q·x̂` by lookup
+    * tables (`pq_lut` once per broadcast query, `pq_adc` = `m`
+    * lookup-adds per pair — no corpus-vector arithmetic), and
+    * Cauchy–Schwarz gives `|q·x − q·x̂| ≤ ‖q‖·resid`.
     */
   def annPq(spark: SparkSession, dir: String, numQueries: Int = 10, k: Int = 5,
             subspaces: Int = 8, codebookSize: Int = 16): DataFrame = {
     val e = vectors(spark, dir)
-    val cb = fitPqCodebook(e, subspaces, codebookSize)
-    val cbSql = s"array(${cb.mkString("D,")}D)"
-    val enc = e
-      .withColumn("pq", expr(s"pq_encode(v, $cbSql, $subspaces, $codebookSize)"))
-      .select(col("vec_id"), col("norm"),
-        col("pq.codes").as("codes"), col("pq.resid").as("resid"))
-    val q = e.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-      .withColumn("lut", expr(s"pq_lut(qv, $cbSql, $subspaces, $codebookSize)"))
-    val wl = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("lb").desc, col("vec_id"))
-    val wt = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    // bound pass carries scalars + m-byte codes only (the annQuant
-    // discipline: never drag float vectors through the window sorts)
-    val cand = enc
-      .crossJoin(broadcast(q.select(col("q_id"), col("qnorm"), col("lut"))))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"),
-        expr("pq_adc(codes, lut)").as("shat"),
-        (col("resid") * col("qnorm")).as("err"))
-      .withColumn("lb", (col("shat") - col("err")) / (col("norm") * col("qnorm")))
-      .withColumn("ub", (col("shat") + col("err")) / (col("norm") * col("qnorm")))
-      .withColumn("lrn", row_number().over(wl))
-      .withColumn("tau", min(when(col("lrn") <= k, col("lb"))).over(wt))
-      // zero-norm rows crash loudly upstream (ANSI division), the
-      // annTopk/annQuant contract; near-zero norms only widen bounds
-      .filter(col("ub") >= col("tau") - lit(1e-5))
+    val book = fitPqCodebook(e, subspaces, codebookSize)
+    val enc = book.encode(e, col("vec_id"), col("norm"))
+    val q = queryFrame(e, numQueries).withColumn("lut", book.lut)
+    val cand = kthLowerBound(pqBounds(enc
+        .crossJoin(broadcast(q.select(col("q_id"), col("qnorm"), col("lut"))))
+        .filter(col("vec_id") =!= col("q_id"))), k)
       .select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"))
-    cand
-      .join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(q.select(col("q_id"), col("qv"))), Seq("q_id"))
-      .withColumn("cosine", rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
+    topK(rerank(cand, e.select(col("vec_id"), col("v")), q.select(col("q_id"), col("qv"))), k)
   }
 
   /** Persisted PQ index: the encoded corpus — `m` 1-byte codes + the
@@ -324,43 +425,11 @@ object Similarity {
   def buildPqIndex(spark: SparkSession, dir: String, indexPath: String,
                    subspaces: Int = 8, codebookSize: Int = 16,
                    only: Option[Column] = None): Unit = {
-    Sketches.register(spark)
-    import spark.implicits._
     val e = only.foldLeft(vectors(spark, dir))(_.filter(_))
-    val cb = fitPqCodebook(e, subspaces, codebookSize)
-    val subDim = cb.length / (subspaces * codebookSize)
-    val cbSql = s"array(${cb.mkString("D,")}D)"
-    val enc = e
-      .withColumn("pq", expr(s"pq_encode(v, $cbSql, $subspaces, $codebookSize)"))
-      .select(col("vec_id"), col("norm"),
-        col("pq.codes").as("codes"), col("pq.resid").as("resid"))
-    graft.lake.LakeTable.overwrite(spark, s"$indexPath/corpus", enc)
-    val rows = for (s <- 0 until subspaces; c <- 0 until codebookSize) yield
-      (s, c, cb.slice(((s * codebookSize) + c) * subDim,
-        ((s * codebookSize) + c) * subDim + subDim).toSeq)
-    graft.lake.LakeTable.overwrite(spark, s"$indexPath/codebook",
-      rows.toDF("sub", "code", "centroid").coalesce(1))
-  }
-
-  /** The persisted codebook as the flat array + geometry the pq_*
-    * expressions take. Bounded driver pull (subspaces × codebookSize
-    * rows). */
-  private def readPqCodebook(spark: SparkSession,
-                             indexPath: String): (Array[Double], Int, Int) = {
-    val rows = graft.lake.LakeTable.read(spark, s"$indexPath/codebook")
-      .select(col("sub"), col("code"), col("centroid")).collect()
-    require(rows.nonEmpty, s"no PQ codebook at $indexPath")
-    val m = rows.map(_.getInt(0)).max + 1
-    val kk = rows.map(_.getInt(1)).max + 1
-    val subDim = rows.head.getSeq[Double](2).length
-    val cb = new Array[Double](m * kk * subDim)
-    rows.foreach { r =>
-      val off = ((r.getInt(0) * kk) + r.getInt(1)) * subDim
-      val cent = r.getSeq[Double](2)
-      var d = 0
-      while (d < subDim) { cb(off + d) = cent(d); d += 1 }
-    }
-    (cb, m, kk)
+    val book = fitPqCodebook(e, subspaces, codebookSize)
+    graft.lake.LakeTable.overwrite(spark, s"$indexPath/corpus",
+      book.encode(e, col("vec_id"), col("norm")))
+    graft.lake.LakeTable.overwrite(spark, s"$indexPath/codebook", book.rows(spark))
   }
 
   /** O(delta) index growth: encode only the NEW vectors against the
@@ -375,69 +444,31 @@ object Similarity {
   def pqAppend(spark: SparkSession, indexPath: String,
                newVectors: DataFrame): Long = {
     Sketches.register(spark)
-    val (cb, m, kk) = readPqCodebook(spark, indexPath)
-    val cbSql = s"array(${cb.mkString("D,")}D)"
-    val e = newVectors
-      .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
-      .withColumn("norm", expr("sqrt(dot_d(v, v))"))
-      .withColumn("pq", expr(s"pq_encode(v, $cbSql, $m, $kk)"))
-      .select(col("vec_id"), col("norm"),
-        col("pq.codes").as("codes"), col("pq.resid").as("resid"))
-    graft.lake.LakeTable.append(spark, s"$indexPath/corpus", e)
+    val book = Codebook.read(spark, indexPath)
+    graft.lake.LakeTable.append(spark, s"$indexPath/corpus",
+      book.encode(embed(newVectors), col("vec_id"), col("norm")))
   }
 
-  /** Exact top-k over a persisted PQ index: the bound pass scans the
-    * ~10-byte-per-vector index table only; the float embeddings are
-    * read for the QUERIES (id-pushed) and for the CANDIDATES — whose
-    * distinct ids, while bounded by `maxPushedKeys`, push into the
-    * embeddings scan as an IN filter (the bounded-key probe discipline
-    * of the LSH/incremental tiers), so the re-rank never re-scans the
-    * corpus vectors. An unbounded candidate set (adversarial geometry)
-    * degrades to the plain join — still exact, never wrong. Result
-    * EQUALS [[annTopk]].
+  /** Exact top-k over a persisted PQ index, [[annPq]]'s bound: the
+    * bound pass scans the ~10-byte-per-vector index table only; the
+    * float embeddings are read for the QUERIES (id-pushed) and for the
+    * CANDIDATES, whose ids push into the embeddings scan
+    * ([[pushIds]]), so the re-rank never re-scans the corpus vectors.
     */
   def annPqIndexed(spark: SparkSession, dir: String, indexPath: String,
                    numQueries: Int = 10, k: Int = 5,
                    maxPushedKeys: Int = 10000): DataFrame = {
     Sketches.register(spark)
-    val (cb, m, kk) = readPqCodebook(spark, indexPath)
-    val cbSql = s"array(${cb.mkString("D,")}D)"
-    val q = vectors(spark, dir).filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-      .withColumn("lut", expr(s"pq_lut(qv, $cbSql, $m, $kk)"))
+    val book = Codebook.read(spark, indexPath)
+    val q = queryFrame(vectors(spark, dir), numQueries).withColumn("lut", book.lut)
     val enc = graft.lake.LakeTable.read(spark, s"$indexPath/corpus")
-    val wl = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("lb").desc, col("vec_id"))
-    val wt = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val cand = enc
-      .crossJoin(broadcast(q.select(col("q_id"), col("qnorm"), col("lut"))))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"),
-        expr("pq_adc(codes, lut)").as("shat"),
-        (col("resid") * col("qnorm")).as("err"))
-      .withColumn("lb", (col("shat") - col("err")) / (col("norm") * col("qnorm")))
-      .withColumn("ub", (col("shat") + col("err")) / (col("norm") * col("qnorm")))
-      .withColumn("lrn", row_number().over(wl))
-      .withColumn("tau", min(when(col("lrn") <= k, col("lb"))).over(wt))
-      .filter(col("ub") >= col("tau") - lit(1e-5))
+    val cand = kthLowerBound(pqBounds(enc
+        .crossJoin(broadcast(q.select(col("q_id"), col("qnorm"), col("lut"))))
+        .filter(col("vec_id") =!= col("q_id"))), k)
       .select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"))
       .transform(cached("annPqIndexed"))
-    val ids = cand.select(col("vec_id")).distinct()
-      .limit(maxPushedKeys + 1).collect().map(_.getLong(0))
-    val vecSrc0 = vectors(spark, dir).select(col("vec_id"), col("v"))
-    val vecSrc =
-      if (ids.length <= maxPushedKeys)
-        vecSrc0.filter(col("vec_id").isInCollection(ids.toSeq))
-      else vecSrc0
-    cand
-      .join(vecSrc, Seq("vec_id"))
-      .join(broadcast(q.select(col("q_id"), col("qv"))), Seq("q_id"))
-      .withColumn("cosine", rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
+    val vecs = pushIds(cand, vectors(spark, dir).select(col("vec_id"), col("v")), maxPushedKeys)
+    topK(rerank(cand, vecs, q.select(col("q_id"), col("qv"))), k)
   }
 
   /** Gate query for the persisted/incremental PQ path, with an EXACT
@@ -456,133 +487,62 @@ object Similarity {
     annPqIndexed(spark, dir, idx, numQueries, k)
   }
 
+  /** PQ-bounded scan of a probe set (q_id, qnorm, lut, cell) over a
+    * cell-tagged codes corpus: codes-only rows, (q_id, vec_id, lb, ub)
+    * out. */
+  private def pqScan(corpus: DataFrame, probeSet: DataFrame): DataFrame =
+    pqBounds(corpus.join(broadcast(probeSet.select(
+        col("q_id"), col("qnorm"), col("lut"), col("cell"))), Seq("cell"))
+      .filter(col("vec_id") =!= col("q_id")))
+      .select(col("q_id"), col("vec_id"), col("lb"), col("ub"))
+
   /** IVF-PQ top-k — the composed billion-scale ANN architecture
     * (coarse cells prune WHICH vectors are scanned, product codes
     * shrink WHAT a scan reads to ~10 bytes/vector), still EXACT, by
-    * stacking the two proofs this tier already carries:
-    *
-    *  1. [[annIvf]]'s build: KMeans cells + per-cell angular radius;
-    *     [[annPq]]'s build: per-subspace codebooks, `pq_encode` codes
-    *     + exact residual per row (one pass each);
-    *  2. phase 1 scans the `probes` nearest cells with the PQ bound
-    *     (`m` lookup-adds per pair, codes-only rows): candidates =
-    *     upper bound ≥ the k-th LOWER bound within the probed cells;
-    *     exact re-rank of those candidates yields the exact top-k OF
-    *     THE PROBED SUBSET and its k-th cosine τ (≤ the full k-th);
-    *  3. phase 2 scans only the remaining cells whose angular bound
-    *     `cos(max(0, θ_qc − r_cell))` reaches `τ − 1e-5` — again
-    *     PQ-bounded, candidates by `ub ≥ τ − 1e-5`;
-    *  4. the union of candidates re-ranks exactly to the final top-k.
-    *
-    * Every true top-k member is either in a probed cell (its upper
-    * bound dominates its cosine ≥ the probed k-th lower bound) or in
-    * a surviving cell (its cell bound and upper bound both dominate
-    * its cosine ≥ τ), and the 1e-5 slack covers round-then-rank ties
-    * as everywhere in this tier — so the result EQUALS [[annTopk]]
-    * and shares its brute-force oracle. At 100 TB the persisted form
-    * is the cell-partitioned codes table: a probe reads only its
-    * cells' partitions, ~25× fewer bytes than the float vectors.
+    * stacking the two bounds this tier already carries: [[annIvf]]'s
+    * per-cell angular bound picks the cells, and [[annPq]]'s residual
+    * bound picks, within them, the pairs that re-rank. Phase 1 scans
+    * each query's `probes` nearest cells and keeps
+    * [[kthLowerBound]]'s candidates; their exact re-rank gives τ, the
+    * k-th cosine OF THE PROBED SUBSET. Phase 2 scans only the other
+    * cells whose angular bound reaches τ and keeps the pairs whose
+    * upper bound does; the union re-ranks to the final top-k. A true
+    * top-k member is either in a probed cell (its upper bound
+    * dominates the probed k-th lower bound) or in a surviving cell
+    * (its cell bound and upper bound both dominate τ).
+    * At 100 TB the persisted form is the cell-partitioned codes table:
+    * a probe reads only its cells' partitions, ~25× fewer bytes than
+    * the float vectors.
     */
   def annIvfPq(spark: SparkSession, dir: String, numQueries: Int = 10, k: Int = 5,
                cells: Int = 16, probes: Int = 10,
                subspaces: Int = 8, codebookSize: Int = 16): DataFrame = {
     val e = vectors(spark, dir).transform(cached("annIvfPqE"))
     val centers = fitQuantizer(e, cells)
-    val cb = fitPqCodebook(e, subspaces, codebookSize)
-    val cbSql = s"array(${cb.mkString("D,")}D)"
+    val book = fitPqCodebook(e, subspaces, codebookSize)
     val assigned = e.withColumn("cell", cellOf(centers))
       .select(col("vec_id"), col("v"), col("norm"), col("cell"))
       .transform(cached("annIvfPqAssigned"))
     // the scan-side rows: cell + codes + scalars, never the vectors
-    val enc = assigned
-      .withColumn("pq", expr(s"pq_encode(v, $cbSql, $subspaces, $codebookSize)"))
-      .select(col("vec_id"), col("cell"), col("norm"),
-        col("pq.codes").as("codes"), col("pq.resid").as("resid"))
+    val enc = book.encode(assigned, col("vec_id"), col("cell"), col("norm"))
       .transform(cached("annIvfPqEnc"))
-
-    import spark.implicits._
-    val centersDf = centers.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c) }.toDF("cell", "centroid")
-    val cellRadius = assigned.join(broadcast(centersDf), Seq("cell"))
-      .withColumn("cn", sqrt(expr("dot_d(centroid, centroid)")))
-      .withColumn("ca", when(col("norm") > 0 && col("cn") > 0,
-        acos(least(lit(1.0), greatest(lit(-1.0),
-          expr("dot_d(v, centroid)") / (col("norm") * col("cn"))))))
-        .otherwise(lit(math.Pi)))
-      .groupBy(col("cell")).agg(max(col("ca")).as("radius"))
-
-    val q = assigned.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-      .withColumn("lut", expr(s"pq_lut(qv, $cbSql, $subspaces, $codebookSize)"))
-    val qCells = q.crossJoin(broadcast(centersDf))
-      .join(broadcast(cellRadius), Seq("cell"))
-      .withColumn("cn", sqrt(expr("dot_d(centroid, centroid)")))
-      .withColumn("theta", when(col("qnorm") > 0 && col("cn") > 0,
-        acos(least(lit(1.0), greatest(lit(-1.0),
-          expr("dot_d(qv, centroid)") / (col("qnorm") * col("cn"))))))
-        .otherwise(lit(0.0)))
-      .withColumn("bound", cos(greatest(lit(0.0), col("theta") - col("radius"))))
-      .withColumn("cr", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("theta"), col("cell"))))
-      .select(col("q_id"), col("qnorm"), col("lut"), col("cell"),
-        col("bound"), col("cr"))
+    val centersDf = centroidFrame(spark, centers)
+    val q = queryFrame(assigned, numQueries).withColumn("lut", book.lut)
+    val qCells = cellBounds(q.crossJoin(broadcast(centersDf))
+        .join(broadcast(cellRadius(assigned, centersDf)), Seq("cell")))
+      .select(col("q_id"), col("qnorm"), col("lut"), col("cell"), col("bound"), col("cr"))
       .transform(cached("annIvfPqQCells"))
-
-    // PQ-bounded scan of a probe set: codes-only rows, m lookup-adds
-    // per pair, lb/ub on the true cosine per the Cauchy–Schwarz bound
-    def pqScan(probeSet: DataFrame): DataFrame =
-      enc.join(broadcast(probeSet.select(
-          col("q_id"), col("qnorm"), col("lut"), col("cell"))), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"),
-          expr("pq_adc(codes, lut)").as("shat"),
-          (col("resid") * col("qnorm")).as("err"))
-        .withColumn("lb", (col("shat") - col("err")) / (col("norm") * col("qnorm")))
-        .withColumn("ub", (col("shat") + col("err")) / (col("norm") * col("qnorm")))
-        .select(col("q_id"), col("vec_id"), col("lb"), col("ub"))
-
-    // exact re-rank of a bounded candidate set: float vectors join
-    // back only here
-    def rerank(cand: DataFrame): DataFrame =
-      cand.join(assigned.select(col("vec_id"), col("v"), col("norm")), Seq("vec_id"))
-        .join(broadcast(q.select(col("q_id"), col("qv"), col("qnorm"))), Seq("q_id"))
-        .withColumn("cosine", rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5))
+    def exact(cand: DataFrame): DataFrame =
+      rerank(cand, assigned.select(col("vec_id"), col("v"), col("norm")),
+        q.select(col("q_id"), col("qv"), col("qnorm")))
         .select(col("q_id"), col("vec_id"), col("cosine"))
-
-    val wl = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("lb").desc, col("vec_id"))
-    val wt = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-    // phase 1: probed cells, PQ candidate rule vs the k-th lower bound
-    val cand1 = pqScan(qCells.filter(col("cr") <= probes))
-      .withColumn("lrn", row_number().over(wl))
-      .withColumn("tau1", min(when(col("lrn") <= k, col("lb"))).over(wt))
-      .filter(col("ub") >= col("tau1") - lit(1e-5))
+    val cand1 = kthLowerBound(pqScan(enc, qCells.filter(col("cr") <= probes)), k)
       .select(col("q_id"), col("vec_id"))
-    val exact1 = rerank(cand1)
-      .transform(cached("annIvfPqExact1"))
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val tau = exact1
-      .withColumn("rn", row_number().over(wk))
-      .filter(col("rn") === k)
-      .select(col("q_id"), col("cosine").as("tau"))
-
-    // phase 2: surviving cells only, candidates vs the EXACT τ (null τ
-    // — fewer than k phase-1 rows — keeps everything)
-    val extraCells = qCells.filter(col("cr") > probes)
-      .join(broadcast(tau), Seq("q_id"), "left")
-      .filter(col("tau").isNull || col("bound") >= col("tau") - lit(1e-5))
-    val cand2 = pqScan(extraCells)
-      .join(broadcast(tau), Seq("q_id"), "left")
-      .filter(col("tau").isNull || col("ub") >= col("tau") - lit(1e-5))
-      .select(col("q_id"), col("vec_id"))
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    exact1.unionByName(rerank(cand2))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
+    val exact1 = exact(cand1).transform(cached("annIvfPqExact1"))
+    val tau = kthCosine(exact1, k)
+    val extra = aboveTau(qCells.filter(col("cr") > probes), tau, "bound")
+    val cand2 = aboveTau(pqScan(enc, extra), tau, "ub").select(col("q_id"), col("vec_id"))
+    topK(exact1.unionByName(exact(cand2)), k)
   }
 
   /** Persisted IVF-PQ index — the deployed form of [[annIvfPq]]: the
@@ -600,27 +560,13 @@ object Similarity {
   def buildIvfPqIndex(spark: SparkSession, dir: String, indexPath: String,
                       cells: Int = 16, subspaces: Int = 8, codebookSize: Int = 16,
                       only: Option[Column] = None): Unit = {
-    Sketches.register(spark)
-    import spark.implicits._
     val e = only.foldLeft(vectors(spark, dir))(_.filter(_))
     val centers = fitQuantizer(e, cells)
-    val cb = fitPqCodebook(e, subspaces, codebookSize)
-    val subDim = cb.length / (subspaces * codebookSize)
-    val cbSql = s"array(${cb.mkString("D,")}D)"
-    val assigned = e.withColumn("cell", cellOf(centers))
-      .withColumn("pq", expr(s"pq_encode(v, $cbSql, $subspaces, $codebookSize)"))
-      .select(col("vec_id"), col("cell"), col("norm"), col("v"),
-        col("pq.codes").as("codes"), col("pq.resid").as("resid"))
+    val book = fitPqCodebook(e, subspaces, codebookSize)
+    val assigned = book.encode(e.withColumn("cell", cellOf(centers)),
+        col("vec_id"), col("cell"), col("norm"), col("v"))
       .transform(cached("buildIvfPq"))
-    val centersDf = centers.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c) }.toDF("cell", "centroid")
-    val radius = assigned.join(broadcast(centersDf), Seq("cell"))
-      .withColumn("cn", sqrt(expr("dot_d(centroid, centroid)")))
-      .withColumn("ca", when(col("norm") > 0 && col("cn") > 0,
-        acos(least(lit(1.0), greatest(lit(-1.0),
-          expr("dot_d(v, centroid)") / (col("norm") * col("cn"))))))
-        .otherwise(lit(math.Pi)))
-      .groupBy(col("cell")).agg(max(col("ca")).as("radius"))
+    val centersDf = centroidFrame(spark, centers)
     // right-size the writes: one file per cell for the corpus (codes
     // rows are tiny — a 32-partition write would pay per-file stats +
     // commit cost on hundreds of near-empty files), one file for each
@@ -630,14 +576,10 @@ object Similarity {
         col("cell")).repartition(cells, col("cell")),
       partitionBy = Seq("cell"))
     graft.lake.LakeTable.overwrite(spark, s"$indexPath/centroids",
-      centersDf.join(radius, Seq("cell"), "left")
+      centersDf.join(cellRadius(assigned, centersDf), Seq("cell"), "left")
         .select(col("cell"), col("centroid"),
           coalesce(col("radius"), lit(0.0)).as("radius")).coalesce(1))
-    val cbRows = for (s <- 0 until subspaces; c <- 0 until codebookSize) yield
-      (s, c, cb.slice(((s * codebookSize) + c) * subDim,
-        ((s * codebookSize) + c) * subDim + subDim).toSeq)
-    graft.lake.LakeTable.overwrite(spark, s"$indexPath/codebook",
-      cbRows.toDF("sub", "code", "centroid").coalesce(1))
+    graft.lake.LakeTable.overwrite(spark, s"$indexPath/codebook", book.rows(spark))
   }
 
   /** O(delta) growth of a persisted IVF-PQ index: assign the new
@@ -650,16 +592,11 @@ object Similarity {
   def ivfPqAppend(spark: SparkSession, indexPath: String,
                   newVectors: DataFrame): Long = {
     Sketches.register(spark)
-    val (cb, m, kk) = readPqCodebook(spark, indexPath)
-    val cbSql = s"array(${cb.mkString("D,")}D)"
+    val book = Codebook.read(spark, indexPath)
     val centersDf = graft.lake.LakeTable.read(spark, s"$indexPath/centroids")
-    val e = newVectors
-      .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
-      .withColumn("norm", expr("sqrt(dot_d(v, v))"))
-      .select(col("vec_id"), col("v"), col("norm"))
     // nearest-centroid assignment as one codegen kernel (see ivfAppend)
     val centers = readCentroids(spark, indexPath)
-    val assigned = e.withColumn("cell", cellOf(centers))
+    val assigned = embed(newVectors).withColumn("cell", cellOf(centers))
       .select(col("vec_id"), col("v"), col("norm"), col("cell"))
       .transform(cached("ivfPqAppend"))
     // radius merge FIRST, corpus append SECOND: a probe (or crash)
@@ -668,13 +605,8 @@ object Similarity {
     // widened-radius would let the angular bound prune a cell holding
     // a true neighbor — silent non-exactness the single-threaded incr
     // gate can't see. (cells × 1 rows — metadata-scale)
-    val deltaRadius = assigned.join(broadcast(centersDf), Seq("cell"))
-      .withColumn("cn", sqrt(expr("dot_d(centroid, centroid)")))
-      .withColumn("ca", when(col("norm") > 0 && col("cn") > 0,
-        acos(least(lit(1.0), greatest(lit(-1.0),
-          expr("dot_d(v, centroid)") / (col("norm") * col("cn"))))))
-        .otherwise(lit(math.Pi)))
-      .groupBy(col("cell")).agg(max(col("ca")).as("delta_radius"))
+    val deltaRadius = cellRadius(assigned, centersDf)
+      .withColumnRenamed("radius", "delta_radius")
     graft.lake.LakeTable.overwrite(spark, s"$indexPath/centroids",
       centersDf.join(deltaRadius, Seq("cell"), "left")
         .select(col("cell"), col("centroid"),
@@ -688,118 +620,58 @@ object Similarity {
     // route one task per cell before appending, like the build: an
     // unrouted delta fans out to (tasks × cells) near-empty files per
     // append — per-file commit cost + read-side file bloat (guide §6)
-    val enc = assigned
-      .withColumn("pq", expr(s"pq_encode(v, $cbSql, $m, $kk)"))
-      .select(col("vec_id"), col("norm"),
-        col("pq.codes").as("codes"), col("pq.resid").as("resid"), col("cell"))
+    val enc = book.encode(assigned, col("vec_id"), col("norm"), col("cell"))
+      .select(col("vec_id"), col("norm"), col("codes"), col("resid"), col("cell"))
       .repartition(centers.length, col("cell"))
     graft.lake.LakeTable.append(spark, s"$indexPath/corpus", enc)
   }
 
   /** EXACT top-k over a persisted IVF-PQ index — [[annIvfPq]]'s
-    * two-phase bound probing with both cell lists resolved driver-side
-    * and pushed as partition filters (bounded: numQueries × probes for
+    * two-phase probe with both cell lists resolved driver-side
+    * and pushed as a partition filter (bounded: numQueries × probes for
     * phase 1, the τ-surviving cells for phase 2 — the filters are
     * semantically redundant, the joins key on cell, they exist purely
     * to prune I/O to the probed partitions). The bound pass reads the
     * codes-only corpus table; the float embeddings are read for the
-    * queries and the bounded candidate re-rank (pushed IN ids, the
-    * [[annPqIndexed]] discipline).
+    * queries and the bounded candidate re-rank ([[pushIds]]).
     */
   def annIvfPqIndexed(spark: SparkSession, dir: String, indexPath: String,
                       numQueries: Int = 10, k: Int = 5, probes: Int = 8,
                       maxPushedKeys: Int = 10000): DataFrame = {
     Sketches.register(spark)
-    val (cb, m, kk) = readPqCodebook(spark, indexPath)
-    val cbSql = s"array(${cb.mkString("D,")}D)"
+    val book = Codebook.read(spark, indexPath)
     val corpus = graft.lake.LakeTable.read(spark, s"$indexPath/corpus")
     val centersDf = graft.lake.LakeTable.read(spark, s"$indexPath/centroids")
-    val q = vectors(spark, dir).filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-      .withColumn("lut", expr(s"pq_lut(qv, $cbSql, $m, $kk)"))
-    val qCells = q.crossJoin(broadcast(centersDf))
-      .withColumn("cn", sqrt(expr("dot_d(centroid, centroid)")))
-      .withColumn("theta", when(col("qnorm") > 0 && col("cn") > 0,
-        acos(least(lit(1.0), greatest(lit(-1.0),
-          expr("dot_d(qv, centroid)") / (col("qnorm") * col("cn"))))))
-        .otherwise(lit(0.0)))
-      .withColumn("bound", cos(greatest(lit(0.0), col("theta") - col("radius"))))
-      .withColumn("cr", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("theta"), col("cell"))))
-      .select(col("q_id"), col("qnorm"), col("lut"), col("cell"),
-        col("bound"), col("cr"))
+    val q = queryFrame(vectors(spark, dir), numQueries).withColumn("lut", book.lut)
+    val qCells = cellBounds(q.crossJoin(broadcast(centersDf)))
+      .select(col("q_id"), col("qnorm"), col("lut"), col("cell"), col("bound"), col("cr"))
       .transform(cached("annIvfPqIdxQCells"))
-
-    def pqScan(probeSet: DataFrame, cellList: Seq[Int]): DataFrame =
-      corpus.filter(col("cell").isin(cellList: _*))
-        .join(broadcast(probeSet.select(
-          col("q_id"), col("qnorm"), col("lut"), col("cell"))), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"), col("norm"), col("qnorm"),
-          expr("pq_adc(codes, lut)").as("shat"),
-          (col("resid") * col("qnorm")).as("err"))
-        .withColumn("lb", (col("shat") - col("err")) / (col("norm") * col("qnorm")))
-        .withColumn("ub", (col("shat") + col("err")) / (col("norm") * col("qnorm")))
-        .select(col("q_id"), col("vec_id"), col("lb"), col("ub"))
-
-    def rerank(cand: DataFrame): DataFrame = {
+    def cellsOf(probeSet: DataFrame): Seq[Int] =
+      probeSet.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
+    def exact(cand: DataFrame): DataFrame = {
       val c = cand.transform(cached("annIvfPqIdxCand"))
-      val ids = c.select(col("vec_id")).distinct()
-        .limit(maxPushedKeys + 1).collect().map(_.getLong(0))
-      val vecSrc0 = vectors(spark, dir).select(col("vec_id"), col("v"), col("norm"))
-      val vecSrc =
-        if (ids.length <= maxPushedKeys)
-          vecSrc0.filter(col("vec_id").isInCollection(ids.toSeq))
-        else vecSrc0
-      c.join(vecSrc, Seq("vec_id"))
-        .join(broadcast(q.select(col("q_id"), col("qv"), col("qnorm"))), Seq("q_id"))
-        .withColumn("cosine", rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5))
+      val vecs = pushIds(c,
+        vectors(spark, dir).select(col("vec_id"), col("v"), col("norm")), maxPushedKeys)
+      rerank(c, vecs, q.select(col("q_id"), col("qv"), col("qnorm")))
         .select(col("q_id"), col("vec_id"), col("cosine"))
     }
-
-    val wl = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("lb").desc, col("vec_id"))
-    val wt = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
     val phase1Set = qCells.filter(col("cr") <= probes)
-    val cellList1 = phase1Set.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val cand1 = pqScan(phase1Set, cellList1)
-      .withColumn("lrn", row_number().over(wl))
-      .withColumn("tau1", min(when(col("lrn") <= k, col("lb"))).over(wt))
-      .filter(col("ub") >= col("tau1") - lit(1e-5))
+    val cand1 = kthLowerBound(pqScan(corpus.filter(col("cell").isin(cellsOf(phase1Set): _*)),
+        phase1Set), k)
       .select(col("q_id"), col("vec_id"))
-    val exact1 = rerank(cand1)
-      .transform(cached("annIvfPqIdxExact1"))
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val tau = exact1
-      .withColumn("rn", row_number().over(wk))
-      .filter(col("rn") === k)
-      .select(col("q_id"), col("cosine").as("tau"))
-    val extra = qCells.filter(col("cr") > probes)
-      .join(broadcast(tau), Seq("q_id"), "left")
-      .filter(col("tau").isNull || col("bound") >= col("tau") - lit(1e-5))
+    val exact1 = exact(cand1).transform(cached("annIvfPqIdxExact1"))
+    val tau = kthCosine(exact1, k)
+    // used twice (its cell list, then the scan): cached
+    val extra = aboveTau(qCells.filter(col("cr") > probes), tau, "bound")
       .transform(cached("annIvfPqIdxExtra"))
-    val cellList2 = extra.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val cellList2 = cellsOf(extra)
     val cand2 =
       if (cellList2.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("q_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("vec_id",
-              org.apache.spark.sql.types.LongType))))
-      else pqScan(extra, cellList2)
-        .join(broadcast(tau), Seq("q_id"), "left")
-        .filter(col("tau").isNull || col("ub") >= col("tau") - lit(1e-5))
+          org.apache.spark.sql.types.StructType.fromDDL("q_id BIGINT, vec_id BIGINT"))
+      else aboveTau(pqScan(corpus.filter(col("cell").isin(cellList2: _*)), extra), tau, "ub")
         .select(col("q_id"), col("vec_id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    exact1.unionByName(rerank(cand2))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
+    topK(exact1.unionByName(exact(cand2)), k)
   }
 
   /** Gate query for the persisted/incremental IVF-PQ path: build on
@@ -819,20 +691,53 @@ object Similarity {
     annIvfPqIndexed(spark, dir, idx, numQueries, k)
   }
 
-  /** Exact cosine near-duplicate pairs, blocked by label. Identical
-    * vectors within a label collapse to one representative before the
-    * blocked pair join and expand afterwards (see [[annLsh]]) — the
-    * join is quadratic in block occupancy and exact duplicates have
-    * identical cosine against everything, so the expanded set is
-    * byte-identical to mining raw rows (within-group pairs round to
-    * cosine 1 at 5 digits in both engines).
-    */
-  def neardupCosine(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
-    val members = vectors(spark, dir)
-      .groupBy(col("label"), col("v"))
+  /** EXACT-DUPLICATE COLLAPSE: byte-identical vectors (within the
+    * `carry` columns' groups) collapse to one representative — rep_id =
+    * the min vec_id, `ids` = every member — so pair mining pays its
+    * quadratic cost on distinct CONTENT, not raw row count (exact
+    * duplicates, ubiquitous in crawled corpora and what replica-scaled
+    * bench data maximizes, share every bucket and block). */
+  private def collapseDuplicates(e: DataFrame, carry: Seq[String], op: String): DataFrame =
+    e.groupBy(carry.map(col) :+ col("v"): _*)
       .agg(min(col("vec_id")).as("rep_id"), first(col("norm")).as("norm"),
         collect_list(col("vec_id")).as("ids"))
-      .transform(cached("neardupCosine"))
+      .transform(cached(op))
+
+  /** Expand representative pairs (rep_a, rep_b, cosine) back to member
+    * pairs (vec_a < vec_b): every member of group A pairs with every
+    * member of group B at the rep pair's cosine (identical vectors ⇒
+    * identical cosine against everything), plus the within-group pairs
+    * at cosine 1 (what 5-digit rounding gives them — the sqrt/square
+    * round trip is ≤ 1 ulp). `groups` is (carry…, rep_id, ids); the
+    * carried columns come out as bigint. */
+  private def expandDuplicates(repPairs: DataFrame, groups: DataFrame,
+                               carry: Seq[String]): DataFrame = {
+    val keep = carry.map(col)
+    val out = carry.map(c => col(c).cast("long").as(c))
+    val cross = repPairs
+      .join(groups.select(col("rep_id").as("rep_a"), col("ids").as("ids_a")), Seq("rep_a"))
+      .join(groups.select(col("rep_id").as("rep_b"), col("ids").as("ids_b")), Seq("rep_b"))
+      .select(keep ++ Seq(explode(col("ids_a")).as("ia"), col("ids_b"), col("cosine")): _*)
+      .select(keep ++ Seq(col("ia"), explode(col("ids_b")).as("ib"), col("cosine")): _*)
+      .select(out ++ Seq(least(col("ia"), col("ib")).as("vec_a"),
+        greatest(col("ia"), col("ib")).as("vec_b"), col("cosine")): _*)
+    val within = groups.filter(size(col("ids")) > 1)
+      .select(keep ++ Seq(explode(col("ids")).as("ia"), col("ids")): _*)
+      .select(keep ++ Seq(col("ia"), explode(col("ids")).as("ib")): _*)
+      .filter(col("ia") < col("ib"))
+      .select(out ++ Seq(col("ia").as("vec_a"), col("ib").as("vec_b"),
+        lit(1.0).as("cosine")): _*)
+    cross.unionByName(within)
+  }
+
+  /** Exact cosine near-duplicate pairs, blocked by label. Identical
+    * vectors within a label collapse to one representative before the
+    * blocked pair join and expand afterwards ([[collapseDuplicates]]) —
+    * the join is quadratic in block occupancy, and the expanded set is
+    * byte-identical to mining raw rows.
+    */
+  def neardupCosine(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
+    val members = collapseDuplicates(vectors(spark, dir), Seq("label"), "neardupCosine")
     val e = members.select(col("label"), col("rep_id"), col("v"), col("norm"))
     val a = e.select(col("label"), col("rep_id").as("rep_a"), col("v").as("va"), col("norm").as("na"))
     val b = e.select(col("label"), col("rep_id").as("rep_b"), col("v").as("vb"), col("norm").as("nb"))
@@ -845,21 +750,7 @@ object Similarity {
     // the threshold in both engines), so its group emits no pairs
     val groups = members.filter(col("norm") > 0)
       .select(col("label"), col("rep_id"), col("ids"))
-    val cross = repPairs
-      .join(groups.select(col("rep_id").as("rep_a"), col("ids").as("ids_a")), Seq("rep_a"))
-      .join(groups.select(col("rep_id").as("rep_b"), col("ids").as("ids_b")), Seq("rep_b"))
-      .select(col("label"), explode(col("ids_a")).as("ia"), col("ids_b"), col("cosine"))
-      .select(col("label"), col("ia"), explode(col("ids_b")).as("ib"), col("cosine"))
-      .select(col("label").cast("long").as("label"),
-        least(col("ia"), col("ib")).as("vec_a"),
-        greatest(col("ia"), col("ib")).as("vec_b"), col("cosine"))
-    val within = groups.filter(size(col("ids")) > 1)
-      .select(col("label"), explode(col("ids")).as("ia"), col("ids"))
-      .select(col("label"), col("ia"), explode(col("ids")).as("ib"))
-      .filter(col("ia") < col("ib"))
-      .select(col("label").cast("long").as("label"),
-        col("ia").as("vec_a"), col("ib").as("vec_b"), lit(1.0).as("cosine"))
-    cross.unionByName(within)
+    expandDuplicates(repPairs, groups, Seq("label"))
   }
 
   /** Embedding-cosine near-duplicate CLUSTERS: the [[neardupCosine]]
@@ -886,32 +777,16 @@ object Similarity {
 
   /** IVF (inverted-file) top-k: a KMeans coarse quantizer (local
     * [[lloyd]] on a bounded deterministic sample) partitions the corpus
-    * into cells; each query probes
-    * its `probes` nearest cells first, then — since r14 — every other
-    * cell whose ANGULAR upper bound could still beat the provisional
-    * k-th cosine, which makes the operator EXACT (same brute-force
-    * DuckDB oracle as [[annTopk]]) instead of recall-gated:
-    *
-    *  1. build records each cell's angular radius `r_cell = max angle
-    *     (member, centroid)` — one partial-agg pass, cells × 1 rows;
-    *  2. for a query at angle `θ_qc` from a centroid, the triangle
-    *     inequality on the sphere gives every member
-    *     `angle(q, x) ≥ θ_qc − r_cell`, so the cell's best possible
-    *     cosine is `cos(max(0, θ_qc − r_cell))`;
-    *  3. phase 1 scans the `probes` nearest cells exactly and takes
-    *     the k-th best cosine τ (k-th of a subset never exceeds the
-    *     full k-th, so τ is a valid pruning floor);
-    *  4. phase 2 scans only the remaining cells with bound ≥ τ − 1e-5
-    *     (the slack covers round-then-rank ties exactly as in
-    *     [[annQuant]]); the union re-ranks to the final top-k.
-    *
-    * An unprobed cell's members all sit strictly below what rank k can
-    * round to, so the result EQUALS [[annTopk]]. How many cells phase 2
-    * touches is data-dependent — tight clusters prune to nothing,
-    * isotropic data degrades toward a full exact scan — but correctness
-    * never is. At 100 TB the cell is the partitioning key (see
+    * into cells. Its bound is per CELL ([[cellRadius]],
+    * [[cellBounds]]): phase 1 scans each query's `probes` nearest
+    * cells exactly and takes the k-th best cosine τ ([[kthCosine]]);
+    * phase 2 scans only the remaining cells whose angular bound
+    * reaches τ ([[aboveTau]]); the union re-ranks to the final top-k.
+    * How many cells phase 2 touches is data-dependent — tight clusters
+    * prune to nothing, isotropic data degrades toward a full exact
+    * scan. At 100 TB the cell is the partitioning key (see
     * [[buildIvfIndex]]), so both phases touch only their cells'
-    * partitions. RecallSpec pins row-for-row equality with [[annTopk]].
+    * partitions.
     */
   def annIvf(spark: SparkSession, dir: String, numQueries: Int = 10, k: Int = 5,
              cells: Int = 16, probes: Int = 10): DataFrame = {
@@ -920,71 +795,26 @@ object Similarity {
     val assigned = e.withColumn("cell", cellOf(centers))
       .select(col("vec_id"), col("label"), col("v"), col("norm"), col("cell"))
       .transform(cached("annIvfAssigned"))
-
     // centroids are cells×dim — tiny, so the query→cells map is computed
     // on the driver and broadcast-joined.
-    import spark.implicits._
-    val centersDf = centers.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c) }.toDF("cell", "centroid")
-    // per-cell angular radius (zero-norm members carry no angle: their
-    // cosine is NaN/0-guarded to radius π, the no-prune-safe value)
-    val cellRadius = assigned.join(broadcast(centersDf), Seq("cell"))
-      .withColumn("cn", sqrt(expr("dot_d(centroid, centroid)")))
-      .withColumn("ca", when(col("norm") > 0 && col("cn") > 0,
-        acos(least(lit(1.0), greatest(lit(-1.0),
-          expr("dot_d(v, centroid)") / (col("norm") * col("cn"))))))
-        .otherwise(lit(math.Pi)))
-      .groupBy(col("cell")).agg(max(col("ca")).as("radius"))
-
-    val q = assigned.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-    val qCells = q.crossJoin(broadcast(centersDf))
-      .join(broadcast(cellRadius), Seq("cell"))
-      .withColumn("cn", sqrt(expr("dot_d(centroid, centroid)")))
-      .withColumn("theta", when(col("qnorm") > 0 && col("cn") > 0,
-        acos(least(lit(1.0), greatest(lit(-1.0),
-          expr("dot_d(qv, centroid)") / (col("qnorm") * col("cn"))))))
-        .otherwise(lit(0.0)))
-      // the cell's best reachable cosine for this query
-      .withColumn("bound", cos(greatest(lit(0.0), col("theta") - col("radius"))))
-      .withColumn("cr", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("theta"), col("cell"))))
-      .select(col("q_id"), col("qv"), col("qnorm"), col("cell"),
-        col("bound"), col("cr"))
+    val centersDf = centroidFrame(spark, centers)
+    val q = queryFrame(assigned, numQueries)
+    val qCells = cellBounds(q.crossJoin(broadcast(centersDf))
+        .join(broadcast(cellRadius(assigned, centersDf)), Seq("cell")))
+      .select(col("q_id"), col("qv"), col("qnorm"), col("cell"), col("bound"), col("cr"))
       .transform(cached("annIvfQCells"))
 
     def scan(probeSet: DataFrame): DataFrame =
       assigned.join(broadcast(probeSet.select(
           col("q_id"), col("qv"), col("qnorm"), col("cell"))), Seq("cell"))
         .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cosine", rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5))
+        .withColumn("cosine", cosine)
         .select(col("q_id"), col("vec_id"), col("cosine"))
 
-    // phase 1: the `probes` nearest cells, exact cosines, provisional
-    // k-th best τ per query (k-th of a subset ≤ the full k-th)
     val phase1 = scan(qCells.filter(col("cr") <= probes))
       .transform(cached("annIvfPhase1"))
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val tau = phase1
-      .withColumn("rn", row_number().over(wk))
-      .filter(col("rn") === k)
-      .select(col("q_id"), col("cosine").as("tau"))
-
-    // phase 2: remaining cells whose bound clears τ (all of them for a
-    // query with fewer than k phase-1 rows — the left join's null τ).
-    // τ is always a real number: zero-norm vectors crash the tier
-    // upstream (ANSI division by zero, annTopk's own refusal —
-    // spec-pinned in PropertySpec)
-    val extra = qCells.filter(col("cr") > probes)
-      .join(broadcast(tau), Seq("q_id"), "left")
-      .filter(col("tau").isNull || col("bound") >= col("tau") - lit(1e-5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    phase1.unionByName(scan(extra))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
+    val tau = kthCosine(phase1, k)
+    topK(phase1.unionByName(scan(aboveTau(qCells.filter(col("cr") > probes), tau, "bound"))), k)
   }
 
   /** Coarse KMeans quantizer, fit on a bounded sample — never the full
@@ -1043,8 +873,7 @@ object Similarity {
     * crossJoin + per-row window (guide §4/§2: no shuffle, no UDF).
     */
   private def cellOf(centers: Array[Array[Double]]): Column =
-    expr(s"nearest_cell(v, array(${centers.flatten.mkString("D,")}D), " +
-      s"${centers.length})")
+    expr(s"nearest_cell(v, ${arrayLit(centers.flatten)}, ${centers.length})")
 
   /** Persisted IVF index: the cell-assigned corpus written as a lake
     * table PARTITIONED BY cell (plus the centroids as a side table) —
@@ -1055,7 +884,6 @@ object Similarity {
     */
   def buildIvfIndex(spark: SparkSession, dir: String, indexPath: String,
                     cells: Int = 16, only: Option[Column] = None): Unit = {
-    import spark.implicits._
     val e = only.foldLeft(vectors(spark, dir))(_.filter(_))
     val centers = fitQuantizer(e, cells)
     val assigned = e.withColumn("cell", cellOf(centers))
@@ -1066,10 +894,8 @@ object Similarity {
     graft.lake.LakeTable.overwrite(spark, s"$indexPath/corpus",
       assigned.repartition(cells, col("cell")),
       partitionBy = Seq("cell"))
-    val centersDf = centers.zipWithIndex
-      .map { case (c, i) => (i, c) }.toSeq.toDF("cell", "centroid")
     graft.lake.LakeTable.overwrite(spark, s"$indexPath/centroids",
-      centersDf.coalesce(1))
+      centroidFrame(spark, centers).coalesce(1))
   }
 
   /** ANN over a persisted IVF index. The probed cells are resolved
@@ -1084,13 +910,12 @@ object Similarity {
     Sketches.register(spark)
     val corpus = graft.lake.LakeTable.read(spark, s"$indexPath/corpus")
     val centersDf = graft.lake.LakeTable.read(spark, s"$indexPath/centroids")
-    val q = vectors(spark, dir).filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"))
-    val qCells = q.crossJoin(broadcast(centersDf))
+    val qCells = queryFrame(vectors(spark, dir), numQueries)
+      .crossJoin(broadcast(centersDf))
       .withColumn("dist", expr(
         "dot_d(qv, qv) - 2 * dot_d(qv, centroid) + dot_d(centroid, centroid)"))
-      .withColumn("cr", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("dist"), col("cell"))))
+      .withColumn("cr", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cell"))))
       .filter(col("cr") <= probes)
       .select(col("q_id"), col("qv"), col("qnorm"), col("cell"))
     val probedCells = qCells.select("cell").distinct()
@@ -1098,13 +923,8 @@ object Similarity {
     val scored = corpus.filter(col("cell").isin(probedCells: _*))
       .join(broadcast(qCells), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"),
-        col("rank"), col("cell").cast("long").as("cell"))
+      .withColumn("cosine", cosine)
+    topK(scored, k, col("cell").cast("long").as("cell"))
   }
 
   /** Incremental IVF index maintenance: assign ONLY `newVectors`
@@ -1127,10 +947,6 @@ object Similarity {
                 newVectors: DataFrame): Long = {
     Sketches.register(spark)
     val centers = readCentroids(spark, indexPath)
-    val e = newVectors
-      .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
-      .withColumn("norm", expr("sqrt(dot_d(v, v))"))
-      .select(col("vec_id"), col("label"), col("v"), col("norm"))
     // nearest-centroid assignment as one codegen kernel over the delta
     // — replaces a delta×cells cross join plus a full-shuffle per-row
     // window (guide §2: the shuffle carried every float vector; the
@@ -1138,7 +954,7 @@ object Similarity {
     // the build: an unrouted delta would fan out to (tasks × cells)
     // near-empty files per append — per-file commit cost and read-side
     // file-count bloat for nothing (guide §6).
-    val assigned = e.withColumn("cell", cellOf(centers))
+    val assigned = embed(newVectors).withColumn("cell", cellOf(centers))
       .select(col("vec_id"), col("label"), col("v"), col("norm"), col("cell"))
       .repartition(centers.length, col("cell"))
     graft.lake.LakeTable.append(spark, s"$indexPath/corpus", assigned)
@@ -1180,6 +996,29 @@ object Similarity {
       .select(col("q_id"), col("neighbor_id"), col("cosine"), col("rank"))
   }
 
+  // ------------------------------------------------------------------ LSH
+
+  private val LshSigSeed = 20260812L
+  private val LshFilterSeed = 20260813L
+
+  /** The `tables` bucket signatures of `v` (`bits` bits each). */
+  private def lshSigs(tables: Int, bits: Int): Column =
+    expr(s"lsh_sigs(v, $tables, $bits, $LshSigSeed)")
+
+  /** The `words` 32-bit sign words of `v` the Hamming prefilter reads. */
+  private def signWords(words: Int): Column =
+    expr(s"lsh_sigs(v, $words, 32, $LshFilterSeed)")
+
+  /** Total sign disagreement between filter-word arrays `a` and `b`.
+    * Masked to the low 32 bits: int^int promotes through bigint with
+    * sign extension, and an unmasked bit_count would add 32 phantom
+    * disagreements whenever word 31's sign bit differs. */
+  private def hamming(a: String, b: String, words: Int): Column =
+    (1 to words).map { i =>
+      expr(s"bit_count((cast(element_at($a, $i) as bigint) ^ " +
+        s"cast(element_at($b, $i) as bigint)) & 4294967295)")
+    }.reduce(_ + _)
+
   /** Random-hyperplane LSH ANN, multi-table. A pair is a candidate if
     * it collides in ANY table (single-table sign-LSH has near-zero
     * recall at moderate cosine); candidates get exact cosine and are
@@ -1207,43 +1046,24 @@ object Similarity {
     * ~10× fewer rows, which is what keeps ×10-scale wall time bounded
     * by true-pair volume, not bucket-collision volume. Exact cosine
     * (computed ONCE per distinct surviving pair, after the dedup)
-    * remains the final arbiter, so precision is unaffected.
+    * remains the final arbiter, so precision is unaffected. Pairs are
+    * mined over [[collapseDuplicates]]' representatives and expanded
+    * back afterwards.
     */
   def annLsh(spark: SparkSession, dir: String, threshold: Double = 0.35,
              tables: Int = 24, bits: Int = 4, maxDisagree: Int = 118): DataFrame = {
-    val filterWords = 8 // 8 × 32-bit sign words = 256 filter bits
-    // EXACT-DUPLICATE COLLAPSE first: group byte-identical vectors and
-    // mine near-dup pairs over one representative per group, expanding
-    // the group members back into the pair set afterwards. Bucket-join
-    // volume is quadratic in bucket occupancy, and exact duplicates
-    // (ubiquitous in crawled corpora — and what replica-scaled bench
-    // data maximizes) all land in the same buckets of every table, so
-    // collapsing them first is the difference between paying the
-    // quadratic cost on distinct CONTENT vs on raw row count. Identical
-    // vectors have identical cosine against everything, so the expanded
-    // pair set is exactly what mining the raw corpus would emit.
-    val members = vectors(spark, dir)
-      .groupBy(col("v"))
-      .agg(min(col("vec_id")).as("rep_id"), first(col("norm")).as("norm"),
-        collect_list(col("vec_id")).as("ids"))
-      .transform(cached("annLsh"))
+    val words = 8 // 8 × 32-bit sign words = 256 filter bits
+    val members = collapseDuplicates(vectors(spark, dir), Nil, "annLsh")
     val base = members
       .select(col("rep_id"), col("v"), col("norm"))
-      .withColumn("sigs", expr(s"lsh_sigs(v, $tables, $bits, 20260812)"))
-      .withColumn("fw", expr(s"lsh_sigs(v, $filterWords, 32, 20260813)"))
+      .withColumn("sigs", lshSigs(tables, bits))
+      .withColumn("fw", signWords(words))
     val e = base.select(col("rep_id"), col("fw"),
       posexplode(col("sigs")).as(Seq("t", "sig")))
-    // mask to the low 32 bits: int^int promotes through bigint with
-    // sign extension, and an unmasked bit_count would add 32 phantom
-    // disagreements whenever word 31's sign bit differs
-    val hamming = (1 to filterWords).map { i =>
-      expr(s"bit_count((cast(element_at(fa, $i) as bigint) ^ " +
-        s"cast(element_at(fb, $i) as bigint)) & 4294967295)")
-    }.reduce(_ + _)
     val cand = e.select(col("t"), col("sig"), col("rep_id").as("rep_a"), col("fw").as("fa"))
       .join(e.select(col("t"), col("sig"), col("rep_id").as("rep_b"), col("fw").as("fb")),
         Seq("t", "sig"))
-      .filter(col("rep_a") < col("rep_b") && hamming <= maxDisagree)
+      .filter(col("rep_a") < col("rep_b") && hamming("fa", "fb", words) <= maxDisagree)
       .select(col("rep_a"), col("rep_b"))
       .distinct()
     val repPairs = cand
@@ -1252,30 +1072,8 @@ object Similarity {
       .withColumn("cosine", expr("dot_d(va, vb)") / (col("na") * col("nb")))
       .filter(col("cosine") >= threshold)
       .select(col("rep_a"), col("rep_b"), rnd(col("cosine"), 5).as("cosine"))
-    // expand: every member of group A pairs with every member of group
-    // B at the REP pair's cosine (identical vectors ⇒ identical
-    // cosine), plus the within-group pairs (cosine exactly 1 after
-    // 5-digit rounding — sqrt/square round-trip is ≤1 ulp)
-    val groups = members.select(col("rep_id"), col("ids"))
-    val cross = repPairs
-      .join(groups.select(col("rep_id").as("rep_a"), col("ids").as("ids_a")), Seq("rep_a"))
-      .join(groups.select(col("rep_id").as("rep_b"), col("ids").as("ids_b")), Seq("rep_b"))
-      .select(explode(col("ids_a")).as("ia"), col("ids_b"), col("cosine"))
-      .select(col("ia"), explode(col("ids_b")).as("ib"), col("cosine"))
-      .select(least(col("ia"), col("ib")).as("vec_a"),
-        greatest(col("ia"), col("ib")).as("vec_b"), col("cosine"))
-    val within = groups.filter(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("ia"), col("ids"))
-      .select(col("ia"), explode(col("ids")).as("ib"))
-      .filter(col("ia") < col("ib"))
-      .select(col("ia").as("vec_a"), col("ib").as("vec_b"), lit(1.0).as("cosine"))
-    cross.unionByName(within)
+    expandDuplicates(repPairs, members.select(col("rep_id"), col("ids")), Nil)
   }
-
-  // ------------------------------------------------------- persisted LSH
-
-  private val LshSigSeed = 20260812L
-  private val LshFilterSeed = 20260813L
 
   /** Persisted LSH index — the [[annLsh]] hash tables written ONCE as
     * lake tables instead of re-signed per query (the [[buildIvfIndex]]
@@ -1299,8 +1097,8 @@ object Similarity {
                     targetFileBytes: Long = 1L << 20): Unit = {
     import spark.implicits._
     val base = only.foldLeft(vectors(spark, dir))(_.filter(_))
-      .withColumn("sigs", expr(s"lsh_sigs(v, $tables, $bits, $LshSigSeed)"))
-      .withColumn("fw", expr(s"lsh_sigs(v, $filterWords, 32, $LshFilterSeed)"))
+      .withColumn("sigs", lshSigs(tables, bits))
+      .withColumn("fw", signWords(filterWords))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       graft.lake.LakeTable.overwrite(spark, s"$indexPath/vecs",
@@ -1333,12 +1131,10 @@ object Similarity {
                 newVectors: DataFrame): Long = {
     Sketches.register(spark)
     val p = graft.lake.LakeTable.read(spark, s"$indexPath/params").head()
-    val (tables, bits, filterWords) = (p.getInt(0), p.getInt(1), p.getInt(2))
-    val base = newVectors
-      .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
-      .withColumn("norm", expr("sqrt(dot_d(v, v))"))
-      .withColumn("sigs", expr(s"lsh_sigs(v, $tables, $bits, $LshSigSeed)"))
-      .withColumn("fw", expr(s"lsh_sigs(v, $filterWords, 32, $LshFilterSeed)"))
+    val (tables, bits, words) = (p.getInt(0), p.getInt(1), p.getInt(2))
+    val base = embed(newVectors)
+      .withColumn("sigs", lshSigs(tables, bits))
+      .withColumn("fw", signWords(words))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       graft.lake.LakeTable.append(spark, s"$indexPath/vecs",
@@ -1357,7 +1153,7 @@ object Similarity {
     * buckets are read; candidates survive the 256-bit Hamming
     * prefilter ON the bucket join (no vector fetched yet), dedup to
     * distinct (query, candidate) pairs, and only those ids fetch their
-    * exact vectors from the clustered vecs table (id pushdown) for the
+    * exact vectors from the clustered vecs table ([[pushIds]]) for the
     * cosine re-rank. Recall vs [[annTopk]] is gate-asserted in
     * RecallSpec.
     *
@@ -1373,12 +1169,11 @@ object Similarity {
                     maxPushedKeys: Int = 10000): DataFrame = {
     Sketches.register(spark)
     val p = graft.lake.LakeTable.read(spark, s"$indexPath/params").head()
-    val (tables, bits, filterWords) = (p.getInt(0), p.getInt(1), p.getInt(2))
-    val q = vectors(spark, dir).filter(col("vec_id") < numQueries)
-      .withColumn("sigs", expr(s"lsh_sigs(v, $tables, $bits, $LshSigSeed)"))
-      .withColumn("qfw", expr(s"lsh_sigs(v, $filterWords, 32, $LshFilterSeed)"))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("norm").as("qnorm"), col("sigs"), col("qfw"))
+    val (tables, bits, words) = (p.getInt(0), p.getInt(1), p.getInt(2))
+    val q = queryFrame(vectors(spark, dir)
+        .withColumn("sigs", lshSigs(tables, bits))
+        .withColumn("qfw", signWords(words)),
+        numQueries, col("sigs"), col("qfw"))
       .transform(cached("annLshIndexed"))
     val qb = q.select(col("q_id"), col("qfw"),
       posexplode(col("sigs")).as(Seq("t", "sig")))
@@ -1396,34 +1191,14 @@ object Similarity {
         }.reduceOption(_ || _).getOrElse(lit(false))
         buckets0.filter(pred)
       }
-    // mask to the low 32 bits: int^int promotes through bigint with
-    // sign extension (see annLsh)
-    val hamming = (1 to filterWords).map { i =>
-      expr(s"bit_count((cast(element_at(fw, $i) as bigint) ^ " +
-        s"cast(element_at(qfw, $i) as bigint)) & 4294967295)")
-    }.reduce(_ + _)
     val cand = buckets.join(broadcast(qb), Seq("t", "sig"))
-      .filter(col("vec_id") =!= col("q_id") && hamming <= maxDisagree)
+      .filter(col("vec_id") =!= col("q_id") && hamming("fw", "qfw", words) <= maxDisagree)
       .select(col("q_id"), col("vec_id"))
       .distinct()
       .transform(cached("annLshIndexedCand"))
-    // candidate ids, capped the same way, push into the vecs scan
-    val candIds = cand.select(col("vec_id")).distinct()
-      .limit(maxPushedKeys + 1).collect()
-    val vecs0 = graft.lake.LakeTable.read(spark, s"$indexPath/vecs")
-      .select(col("vec_id"), col("v"), col("norm"))
-    val vecs =
-      if (candIds.length > maxPushedKeys) vecs0
-      else if (candIds.isEmpty) vecs0.filter(lit(false))
-      else vecs0.filter(col("vec_id").isin(candIds.map(_.getLong(0)): _*))
-    val scored = cand.join(vecs, Seq("vec_id"))
-      .join(broadcast(q.select(col("q_id"), col("qv"), col("qnorm"))), Seq("q_id"))
-      .withColumn("cosine", rnd(expr("dot_d(v, qv)") / (col("norm") * col("qnorm")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
+    val vecs = pushIds(cand, graft.lake.LakeTable.read(spark, s"$indexPath/vecs")
+      .select(col("vec_id"), col("v"), col("norm")), maxPushedKeys)
+    topK(rerank(cand, vecs, q.select(col("q_id"), col("qv"), col("qnorm"))), k)
   }
 
   /** Gate query for the persisted-LSH path: build the index on the even

@@ -1016,4 +1016,28 @@ class LakeSpec extends SparkSpec {
     LakeTable.append(spark, t, Seq((3L, "c")).toDF("id", "s"))
     assert(LakeTable.read(spark, t).count() == 3)
   }
+
+  test("an UPDATE whose SET value fails at run time leaves no staging dir, CoW and MoR") {
+    // every staged write (data files, change feed, deletion vectors)
+    // deletes its _staging/<uuid> dir when the write or its publish
+    // fails, and the failed statement commits nothing
+    def messages(x: Throwable): Seq[String] =
+      Option(x).toSeq.flatMap(y => Option(y.getMessage).toSeq ++ messages(y.getCause))
+    def staging(t: String): Seq[String] =
+      Option(new java.io.File(t, "_staging").list()).map(_.toSeq).getOrElse(Nil)
+    Seq(false, true).foreach { mor =>
+      val t = tmpTable(if (mor) "lake_stage_mor" else "lake_stage_cow")
+      LakeTable.overwrite(spark, t, (1L to 20L).map(i => (i, s"s$i")).toDF("id", "s"))
+      val v0 = LakeTable.latestSnapshot(spark, t).get.version
+      val set = Seq("s" -> raise_error(lit("set value failed")).cast("string"))
+      val e = intercept[Exception] {
+        if (mor) LakeTable.updateMergeOnRead(spark, t, set, col("id") < 10)
+        else LakeTable.update(spark, t, set, col("id") < 10)
+      }
+      assert(messages(e).exists(_.contains("set value failed")), s"got: $e")
+      assert(staging(t).isEmpty, s"mor=$mor left staging dirs behind: ${staging(t)}")
+      assert(LakeTable.latestSnapshot(spark, t).get.version == v0)
+      assert(LakeTable.read(spark, t).count() == 20)
+    }
+  }
 }

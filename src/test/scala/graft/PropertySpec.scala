@@ -320,6 +320,32 @@ class PropertySpec extends SparkSpec {
         subspaces = 1, codebookSize = 2))
       assert(ivfpq == exact,
         s"ann_ivfpq missing=${exact.diff(ivfpq).take(5)} extra=${ivfpq.diff(exact).take(5)}")
+      // the persisted indexes carry the same proofs across a build on
+      // the even vec_ids and an append of the odd ones: a starved
+      // codebook, a single IVF-PQ probe (phase 2 over merged radii) and
+      // an all-cells IVF probe
+      val even = Some(col("vec_id") % 2 === 0)
+      val odd = graft.Tables.embeddings(spark, dir).filter(col("vec_id") % 2 === 1)
+      operators.Similarity.buildPqIndex(spark, dir, s"$dir/pq",
+        subspaces = 1, codebookSize = 2, only = even)
+      operators.Similarity.pqAppend(spark, s"$dir/pq", odd)
+      val pqIdx = canon(operators.Similarity.annPqIndexed(spark, dir, s"$dir/pq",
+        numQueries = 3, k = 4))
+      assert(pqIdx == exact,
+        s"persisted pq missing=${exact.diff(pqIdx).take(5)} extra=${pqIdx.diff(exact).take(5)}")
+      operators.Similarity.buildIvfPqIndex(spark, dir, s"$dir/ivfpq",
+        cells = 4, subspaces = 1, codebookSize = 2, only = even)
+      operators.Similarity.ivfPqAppend(spark, s"$dir/ivfpq", odd)
+      val ivfpqIdx = canon(operators.Similarity.annIvfPqIndexed(spark, dir, s"$dir/ivfpq",
+        numQueries = 3, k = 4, probes = 1))
+      assert(ivfpqIdx == exact, s"persisted ivfpq missing=${exact.diff(ivfpqIdx).take(5)} " +
+        s"extra=${ivfpqIdx.diff(exact).take(5)}")
+      operators.Similarity.buildIvfIndex(spark, dir, s"$dir/ivf", cells = 4, only = even)
+      operators.Similarity.ivfAppend(spark, s"$dir/ivf", odd)
+      val ivfIdx = canon(operators.Similarity.annIvfIndexed(spark, dir, s"$dir/ivf",
+        numQueries = 3, k = 4, probes = 4))
+      assert(ivfIdx == exact,
+        s"persisted ivf missing=${exact.diff(ivfIdx).take(5)} extra=${ivfIdx.diff(exact).take(5)}")
     }
   }
 
