@@ -53,19 +53,20 @@ private[graft] object BloomIndex {
     case _ => false
   }
 
-  /** Build blooms for `relPaths` (freshly staged, physical column
+  /** Build blooms for `entries` (freshly staged, physical column
     * names) in one distributed pass, write the commit's sidecar, and
     * return its table-relative path. `physCols` are (physical name,
-    * type, fpp); `rowCountByRel` sizes each file's filters exactly.
-    * Returns None when nothing is flagged or no column type is
-    * supported.
+    * type, fpp): the scan reads exactly those columns by their known
+    * types, through the entries' logged statuses
+    * ([[LakeTable.scanEntries]]); each entry's row count sizes its
+    * filters exactly. Returns None when nothing is flagged or no
+    * column type is supported.
     */
   def buildSidecar(spark: SparkSession, table: String,
-                   relPaths: Seq[String],
-                   physCols: Seq[(String, DataType, Double)],
-                   rowCountByRel: Map[String, Long]): Option[String] = {
+                   entries: Seq[LakeTable.FileEntry],
+                   physCols: Seq[(String, DataType, Double)]): Option[String] = {
     val cols = physCols.filter { case (_, dt, _) => supported(dt) }
-    if (cols.isEmpty || relPaths.isEmpty) return None
+    if (cols.isEmpty || entries.isEmpty) return None
     val base = LakeTable.dataPath(table)
     val f = LakeTable.fs(spark, table)
     // scan form: _metadata.file_path is percent-encoded; sidecar keys
@@ -73,18 +74,17 @@ private[graft] object BloomIndex {
     // encodable paths (skipping silently lost, never wrong results)
     val prefix = LakeTable.scanFormPath(f.makeQualified(base)) + "/"
     val relByScan: Map[String, String] =
-      relPaths.map(r => LakeTable.scanFormRel(r) -> r).toMap
+      entries.map(e => LakeTable.scanFormRel(e.path) -> e.path).toMap
     val names = cols.map(_._1)
     val kinds: Array[Int] = cols.map {
       case (_, StringType, _) => 1
       case _ => 0 // integral family, read as long
     }.toArray
     val fpps = cols.map(_._3).toArray
-    val sizes = relPaths.map(r => r -> math.max(64L, rowCountByRel.getOrElse(r, 1L))).toMap
+    val sizes = entries.map(e => e.path -> math.max(64L, e.rowCount)).toMap
 
-    val df = spark.read
-      .option("basePath", base.toString)
-      .parquet(relPaths.map(rel => new Path(base, rel).toString): _*)
+    val readSchema = StructType(cols.map { case (n, dt, _) => StructField(n, dt) })
+    val df = LakeTable.scanEntries(spark, table, readSchema, Nil, entries)
       .select(col("_metadata.file_path").as("__f") +:
         names.zipWithIndex.map { case (n, i) =>
           if (kinds(i) == 1) col(n).cast("string").as(s"__c$i")

@@ -126,31 +126,21 @@ final class GraftFileIndex(spark: SparkSession, val tablePath: String,
               s"at v${initialSnapshot.version} — a plain scan would read deleted " +
               "rows; re-register the view (REFRESH TABLE / re-create it) to read " +
               "through the vector-aware scan")
-        val statuses: Seq[(String, FileStatus, LakeTable.FileEntry)] =
+        val statuses: Seq[(FileStatus, LakeTable.FileEntry)] =
           if (snap.files.forall(_.size >= 0)) {
             // the log carries size + mtime per file, so the scan's
             // FileStatus objects are built WITHOUT touching the
             // filesystem — no LIST, no stat. At object-store scale this
             // is the difference between one small JSON read and a
             // million-object recursive listing per snapshot change.
-            snap.files.map { e =>
-              val st = new FileStatus(e.size, false, 1, 128L << 20,
-                math.max(e.mtimeMs, 0L), LakeTable.entryPath(dataRoot, e.path))
-              (e.path, st, e)
-            }
+            snap.files.map(e => (GraftFileIndex.logStatus(dataRoot, e), e))
           } else {
             // legacy snapshot (pre-stats log): one recursive listing of
             // data/ (not one RPC per file), then keep exactly the
             // snapshot's files — time travel and racing writers may
             // leave extra files on disk that must not be read
-            val byRel = scala.collection.mutable.HashMap.empty[String, FileStatus]
-            if (hadoopFs.exists(dataRoot)) {
-              val it = hadoopFs.listFiles(dataRoot, true)
-              while (it.hasNext) {
-                val st = it.next()
-                if (st.isFile) byRel(LakeTable.relativize(dataRoot, st.getPath)) = st
-              }
-            }
+            val byRel = LakeTable.leafFiles(hadoopFs, dataRoot)
+              .map(st => LakeTable.relativize(dataRoot, st.getPath) -> st).toMap
             snap.files.map { e =>
               // a foreign (cloned) entry lives under its SOURCE root,
               // never in this table's listing: stat it directly
@@ -163,25 +153,15 @@ final class GraftFileIndex(spark: SparkSession, val tablePath: String,
                 // loudly rather than silently returning partial data
                 throw new IllegalStateException(
                   s"snapshot v${snap.version} of $tablePath references missing data file ${e.path}"))
-              (e.path, st, e)
+              (st, e)
             }
           }
-        val parts = statuses
-          .groupBy { case (rel, _, _) => partitionValuesOf(rel) }
-          .toSeq
-          .map { case (row, group) => (row, group.map(g => (g._2, g._3)).toArray) }
-        val bytes = statuses.map(_._2.getLen).sum
+        val parts = GraftFileIndex.byPartition(statuses, partitionSchema, spark)
+        val bytes = statuses.map(_._1.getLen).sum
         cached = Some((snap.version, parts, bytes))
         (parts, bytes)
     }
   }
-
-  /** Parse hive-style `col=value/` dirs of a table-relative file path
-    * into the partition-schema row (see [[PartitionPaths.valuesOf]]).
-    */
-  private def partitionValuesOf(rel: String): InternalRow =
-    PartitionPaths.valuesOf(rel, partitionSchema,
-      Option(spark.sessionState.conf.sessionLocalTimeZone))
 
   // generated partition columns whose SOURCE is a data column: data
   // predicates on the source synthesize partition predicates on the
@@ -201,17 +181,7 @@ final class GraftFileIndex(spark: SparkSession, val tablePath: String,
     // cheaper than) the per-file bounds pass below
     val allPartFilters = partitionFilters ++
       GeneratedColumns.synthesize(dataFilters, genSpecs, partitionSchema, resolver)
-    val pruned =
-      if (allPartFilters.isEmpty || partitionSchema.isEmpty) parts
-      else {
-        val bound = Predicate.createInterpreted(allPartFilters.reduce(And).transform {
-          case a: AttributeReference =>
-            val i = partitionSchema.fields.indexWhere(f => resolver(f.name, a.name))
-            BoundReference(i, partitionSchema.fields(i).dataType, nullable = true)
-        })
-        bound.initialize(0)
-        parts.filter { case (row, _) => bound.eval(row) }
-      }
+    val pruned = GraftFileIndex.prune(parts, allPartFilters, partitionSchema, resolver)
     // file-level data skipping on the logged min/max bounds: a file
     // whose bounds exclude the pushed filters never reaches the scan.
     // Stats are keyed by PHYSICAL column names (the names in the files,
@@ -252,6 +222,100 @@ final class GraftFileIndex(spark: SparkSession, val tablePath: String,
 
   override def toString: String =
     s"GraftFileIndex($tablePath${asOf.map(v => s", asOf=$v").getOrElse("")})"
+}
+
+private[lake] object GraftFileIndex {
+
+  /** The scan `FileStatus` of a log entry with a known size, built from
+    * the logged size and mtime — no LIST, no stat.
+    */
+  def logStatus(root: Path, e: LakeTable.FileEntry): FileStatus =
+    new FileStatus(e.size, false, 1, 128L << 20, math.max(e.mtimeMs, 0L),
+      LakeTable.entryPath(root, e.path))
+
+  /** Group (status, entry) pairs by the partition tuple parsed from
+    * each entry's hive-style `col=value/` dirs (see
+    * [[PartitionPaths.valuesOf]]; a foreign entry's absolute path
+    * parses the same way — its partition dirs are the last `k=v` ones).
+    */
+  def byPartition(files: Seq[(FileStatus, LakeTable.FileEntry)], partitionSchema: StructType,
+                  spark: SparkSession): Seq[(InternalRow, Array[(FileStatus, LakeTable.FileEntry)])] = {
+    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+    files.groupBy { case (_, e) => PartitionPaths.valuesOf(e.path, partitionSchema, tz) }
+      .toSeq
+      .map { case (row, group) => (row, group.toArray) }
+  }
+
+  /** The partition groups `filters` admit. Spark drops partition
+    * filters from the plan above a file scan, so an index must apply
+    * them itself.
+    */
+  def prune[T](parts: Seq[(InternalRow, T)], filters: Seq[Expression],
+               partitionSchema: StructType,
+               resolver: (String, String) => Boolean): Seq[(InternalRow, T)] =
+    if (filters.isEmpty || partitionSchema.isEmpty) parts
+    else {
+      val bound = PartitionPaths.bind(filters, partitionSchema, resolver)
+      parts.filter { case (row, _) => bound.eval(row) }
+    }
+}
+
+/** A [[FileIndex]] over a fixed set of a table's log entries: the
+  * engine's own scans of known files (rewrites, the change feed, the
+  * merge-on-read legs, bloom builds, streaming batches) read through
+  * it. Statuses come from the logged size and mtime, as in
+  * [[GraftFileIndex]], so building the scan lists nothing and infers
+  * nothing; an entry whose size is unknown (a legacy log, a file named
+  * outside the snapshot, a change file) costs one `getFileStatus`.
+  * Entry paths resolve against `base` — the data root, or the table
+  * root for change files — and foreign (cloned) entries share the
+  * index with local ones. `rootPaths` is `base` whatever the entries,
+  * and equality is by the set of absolute file paths, so two scans of
+  * the same files match in the plan cache.
+  */
+private[lake] final class PinnedFileIndex(spark: SparkSession, table: String, base: Path,
+                                          entries: Seq[LakeTable.FileEntry],
+                                          override val partitionSchema: StructType)
+    extends FileIndex {
+
+  private val root = LakeTable.fs(spark, table).makeQualified(base)
+
+  private lazy val parts: Seq[(InternalRow, Array[(FileStatus, LakeTable.FileEntry)])] =
+    GraftFileIndex.byPartition(entries.map { e =>
+      val st =
+        if (e.size >= 0) GraftFileIndex.logStatus(root, e)
+        else {
+          val p = LakeTable.entryPath(root, e.path)
+          p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
+        }
+      (st, e)
+    }, partitionSchema, spark)
+
+  private lazy val fileSet: Set[String] =
+    entries.iterator.map(e => LakeTable.entryPath(root, e.path).toString).toSet
+
+  override def rootPaths: Seq[Path] = Seq(root)
+
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    GraftFileIndex.prune(parts, partitionFilters, partitionSchema,
+      spark.sessionState.conf.resolver)
+      .map { case (row, files) => PartitionDirectory(row, files.map(_._1)) }
+
+  override def inputFiles: Array[String] = parts.flatMap(_._2.map(_._1.getPath.toString)).toArray
+
+  override def sizeInBytes: Long = parts.iterator.flatMap(_._2).map(_._1.getLen).sum
+
+  override def refresh(): Unit = ()
+
+  override def equals(o: Any): Boolean = o match {
+    case p: PinnedFileIndex => fileSet == p.fileSet
+    case _ => false
+  }
+
+  override def hashCode: Int = fileSet.hashCode
+
+  override def toString: String = s"PinnedFileIndex($table, ${entries.size} files)"
 }
 
 /** Hive-style partition-path parsing and driver-side partition

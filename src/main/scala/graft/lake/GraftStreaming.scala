@@ -255,15 +255,7 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
         checkSchemaPinned(endV, snap.schema, snap.partitionColumns)
         if (snap.files.isEmpty) Seq.empty
         else {
-          // per-root legs: foreign (cloned) entries read from their
-          // source roots
-          val base =
-            if (LakeTable.hasDv(snap))
-              LakeTable.morScan(spark, table, snap, snap.files, keepPos = false)
-            else LakeTable.parquetLegs(spark, table, pinnedTableSchema,
-              snap.filePaths, initialSnapshot.partitionColumns.size)
-              .reduce(_ unionByName _)
-          Seq(base
+          Seq(LakeTable.morScan(spark, table, snap, snap.files, keepPos = false)
             .withColumn(LakeTable.ChangeTypeCol, org.apache.spark.sql.functions.lit("insert"))
             .withColumn(LakeTable.CommitVersionCol, org.apache.spark.sql.functions.lit(endV))
             .withColumn(LakeTable.CommitTimestampCol,
@@ -292,7 +284,7 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
     lastBatchEnd = Some(endV)
     if (readChangeFeed)
       return changeFeedBatch(start.map(versionOf).orElse(startingVersion), endV)
-    val files: Seq[String] = start.map(versionOf).orElse(startingVersion) match {
+    val files: Seq[LakeTable.FileEntry] = start.map(versionOf).orElse(startingVersion) match {
       case None =>
         // initial batch: the whole table as of endV. A snapshot with
         // outstanding deletion vectors reads through the dv-applying
@@ -304,29 +296,28 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
             .select(schema.fieldNames.map(col).toIndexedSeq: _*)
           return SqlShims.asStreaming(df)
         }
-        snap.filePaths
+        snap.files
       case Some(startV) =>
         // one log-entry read per commit in the range: a delta names its
         // added/removed files directly, so the batch's metadata cost is
         // O(versions in range), never O(versions × files). Only a
         // legacy full-state entry pays a diff against its predecessor.
-        val added = ArrayBuffer.empty[String]
+        val added = ArrayBuffer.empty[LakeTable.FileEntry]
         var v = startV + 1
         while (v <= endV) {
           val e = LakeTable.logEntryAt(spark, table, v)
           checkSchemaPinned(v, e.schema, e.partitionColumns)
-          val (addsNow, removedNow): (Seq[String], Boolean) = e.full match {
+          val (addsNow, removedNow): (Seq[LakeTable.FileEntry], Boolean) = e.full match {
             // the CREATION commit (version 1) is reset-flagged but has
             // no predecessor to remove from — it is morally an append
             // of the initial data, and Delta's "timestamp precedes all
             // commits ⇒ start from the earliest version" contract
             // depends on it being deliverable
-            case None => (e.adds.map(_.path), (e.reset && v > 1) || e.removes.nonEmpty)
+            case None => (e.adds, (e.reset && v > 1) || e.removes.nonEmpty)
             case Some(fullFiles) =>
               val prev = LakeTable.snapshotAt(spark, table, v - 1).filePaths.toSet
-              val paths = fullFiles.map(_.path)
-              val pathSet = paths.toSet
-              (paths.filterNot(prev), prev.exists(p => !pathSet(p)))
+              val pathSet = fullFiles.map(_.path).toSet
+              (fullFiles.filterNot(f => prev(f.path)), prev.exists(p => !pathSet(p)))
           }
           if (e.operation == "COMPACT") {
             () // byte-level rewrite; rows already delivered
@@ -351,13 +342,8 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
         spark.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
         schema, isStreaming = true)
     } else {
-      // per-root legs: foreign (cloned) entries read from their source
-      // roots — basePath is per-scan state
-      val df = LakeTable.parquetLegs(spark, table, schema, files,
-        initialSnapshot.partitionColumns.size)
-        .map(_.select(schema.fieldNames.map(col).toIndexedSeq: _*))
-        .reduce(_ unionByName _)
-      SqlShims.asStreaming(df)
+      SqlShims.asStreaming(LakeTable.readDataFiles(spark, table, initialSnapshot.schema,
+        initialSnapshot.partitionColumns, files))
     }
   }
 

@@ -1,7 +1,9 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.json4s._
@@ -900,6 +902,22 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------------------------- data files
 
+  /** Every file under `dir`, found with one `listStatus` per directory;
+    * empty when `dir` does not exist. Not `listFiles(dir, true)`: the
+    * located statuses it builds load each file's permissions, which on
+    * Hadoop's local file system without native IO forks an `ls` per
+    * file. On an object store this is one LIST per directory, and the
+    * trees listed here are at most as deep as the partition columns.
+    */
+  private[lake] def leafFiles(f: FileSystem, dir: Path): Seq[FileStatus] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    def walk(d: Path): Unit =
+      (try f.listStatus(d) catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] })
+        .foreach(st => if (st.isDirectory) walk(st.getPath) else if (st.isFile) out += st)
+    walk(dir)
+    out.toSeq
+  }
+
   /** Write `df` as parquet into a fresh `<table>/_staging/<uuid>`
     * directory and hand that directory to `publish`, then delete it
     * whether the write, the publish or neither failed — a failed
@@ -916,13 +934,38 @@ object LakeTable extends org.apache.spark.internal.Logging {
     // the marker along as litter
     val writer = df.write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    // a failed write returns while its other tasks are still being
+    // killed, and a killed task can still create its attempt directory
+    // under the staging dir: tag the write's jobs so the failure path
+    // can wait for them before deleting
+    val tag = s"graft-staged-write-${staging.getName}"
+    val sc = spark.sparkContext
     try {
-      meteredCommit((if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+      sc.addJobTag(tag)
+      try meteredCommit((if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(staging.toString))
+      catch { case e: Throwable => awaitTasksEnded(spark, tag); throw e }
+      finally sc.removeJobTag(tag)
       publish(staging)
     } finally {
       try fs(spark, table).delete(staging, true) catch { case _: java.io.IOException => () }
     }
+  }
+
+  /** Wait, for at most 30 s, until no task of the jobs tagged `tag` is
+    * running. Read from the status store after draining the listener
+    * bus: a stage's active-task count is rewritten when its last task
+    * ends, so a stale count only overstates what still runs.
+    */
+  private def awaitTasksEnded(spark: SparkSession, tag: String): Unit = {
+    val st = spark.sparkContext.statusTracker
+    def running: Boolean = {
+      org.apache.spark.sql.graft.SqlShims.drainListenerBus(spark)
+      st.getJobIdsForTag(tag).exists(j => st.getJobInfo(j).exists(_.stageIds.exists(s =>
+        st.getStageInfo(s).exists(_.numActiveTasks > 0))))
+    }
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (running && System.nanoTime() < deadline) Thread.sleep(10)
   }
 
   /** Write `df` to a transient staging dir, then move the part files
@@ -1001,17 +1044,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
       // rename preserves length and mtime, so no per-file re-stat after
       // the move (one round trip per file saved on an object store)
       val staged = meteredCommit { meteredFileOps {
-        val b = scala.collection.mutable.ArrayBuffer.empty[(String, Path, Long, Long)]
-        val it = f.listFiles(staging, true)
-        while (it.hasNext) {
-          val st = it.next()
-          val name = st.getPath.getName
-          if (st.isFile && name.endsWith(".parquet")) {
-            b += ((relativize(staging, st.getPath), st.getPath,
-              st.getLen, st.getModificationTime))
-          }
-        }
-        b
+        leafFiles(f, staging).filter(_.getPath.getName.endsWith(".parquet")).map(st =>
+          (relativize(staging, st.getPath), st.getPath, st.getLen, st.getModificationTime))
       }}
       // An unpartitioned, unbucketed commit (staged files all at the
       // staging root) publishes its data files with ONE directory rename
@@ -1038,7 +1072,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
           if (!f.rename(staging, destDir))
             throw new IllegalStateException(s"could not move $staging to $destDir")
         }}
-        stageParallel(staged.toSeq) { case (rel0, _, len, mtime) =>
+        stageParallel(staged) { case (rel0, _, len, mtime) =>
           val rel = s"$batchDir/$rel0"
           val (rows, stats) =
             ParquetStats.collect(conf, new Path(dataPath(table), rel), dataSchema)
@@ -1056,7 +1090,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
         // keep the flat per-file move (a dir rename would add nesting
         // for no round-trip win).
         val batchDir = staging.getName
-        val byDir = staged.toSeq.groupBy { case (rel0, _, _, _) =>
+        val byDir = staged.groupBy { case (rel0, _, _, _) =>
           val i = rel0.lastIndexOf('/')
           if (i < 0) "" else rel0.substring(0, i)
         }.toSeq.sortBy(_._1)
@@ -1091,7 +1125,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
             new Path(dataPath(table), rel0).getParent
           }.distinct.foreach(f.mkdirs)
         }}
-        stageParallel(staged.toSeq) { case (rel0, src, len, mtime) =>
+        stageParallel(staged) { case (rel0, src, len, mtime) =>
           // bucketed commit: the staged name's task id (= bucket id under
           // the repartition above) moves into Spark's bucket-file naming,
           // `_NNNNN` before the extension — what BucketingUtils parses
@@ -1126,8 +1160,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
         val phys = mapping.getOrElse(logical, logical)
         dataSchema.fields.find(_.name == phys).map(fl => (phys, fl.dataType, fpp))
       }
-      BloomIndex.buildSidecar(spark, table, entries.map(_.path), byPhys,
-        entries.map(e => e.path -> e.rowCount).toMap) match {
+      BloomIndex.buildSidecar(spark, table, entries, byPhys) match {
         case Some(sidecar) => entries.map(_.copy(bloom = Some(sidecar)))
         case None => entries
       }
@@ -1294,13 +1327,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
       // level is free (see the bulk-move note in stageFiles)
       meteredCommit { meteredFileOps {
         val f = fs(spark, table)
-        val staged = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = f.listFiles(staging, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-            staged += relativize(staging, st.getPath)
-        }
+        val staged = leafFiles(f, staging).map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")).map(relativize(staging, _))
         if (staged.isEmpty) Nil
         else {
           val batchDir = staging.getName
@@ -1364,9 +1392,12 @@ object LakeTable extends org.apache.spark.internal.Logging {
       }
     if (e.operation == "COMPACT") None
     else if (e.cdc.exists(_.nonEmpty)) {
-      // recorded change files carry the table columns + _change_type
-      val recorded = decorate(spark.read.parquet(
-        e.cdc.get.map(rel => new Path(table, rel).toString): _*), None)
+      // recorded change files carry the commit's columns + _change_type
+      val feedSchema = GraftDataSource.asNullable(e.schema)
+        .add(ChangeTypeCol, org.apache.spark.sql.types.StringType)
+      val recorded = decorate(scanEntries(spark, table, feedSchema, Nil,
+        e.cdc.get.map(rel => FileEntry(rel, -1L, -1L, -1L, Map.empty)),
+        base = Some(new Path(table))), None)
       Some(removedFullDeletes.fold(recorded)(d =>
         recorded.unionByName(d, allowMissingColumns = true)))
     } else if (e.cdc.isDefined) {
@@ -1508,80 +1539,63 @@ object LakeTable extends org.apache.spark.internal.Logging {
   private[lake] def entryPath(dataRoot: Path, rel: String): Path =
     if (isForeignEntry(rel)) new Path(rel) else new Path(dataRoot, rel)
 
-  /** The source data root of a foreign file: strip the file name, any
-    * nested batch dirs (bulk-move publishes nest an opaque uuid dir
-    * inside the partition dir, so depth is NOT fixed) and one hive
-    * `k=v` dir per partition column. Counting `k=v` segments is exact:
-    * hive-escaped values cannot contain a literal `=`. This is what
-    * `basePath` must be for Spark to parse the partition values from
-    * the foreign dirs.
+  /** One parquet scan over `entries` of `table`, straight from the log:
+    * a `HadoopFsRelation` over a [[PinnedFileIndex]], so building it
+    * lists no directory and infers no schema. `physSchema` is the full
+    * PHYSICAL read schema, partition columns in place (as in
+    * [[GraftDataSource]]'s relation); their values parse from each
+    * file's `k=v` dirs. Entry paths are relative to `base` (the data
+    * root unless given); local and foreign (cloned) entries read in the
+    * same scan, and `_metadata` columns are available on the result.
     */
-  private[graft] def foreignBasePath(abs: String, numPartCols: Int): String = {
-    var p = new Path(abs).getParent // the file name
-    var remaining = numPartCols
-    while (remaining > 0) {
-      require(p != null, s"foreign file $abs has fewer than the $numPartCols partition " +
-        "(k=v) directories its table's partition columns need")
-      if (p.getName.contains('=')) remaining -= 1
-      p = p.getParent
-    }
-    p.toString
+  private[lake] def scanEntries(spark: SparkSession, table: String, physSchema: StructType,
+                                partitionColumns: Seq[String], entries: Seq[FileEntry],
+                                base: Option[Path] = None): DataFrame = {
+    val partitionSchema = StructType(partitionColumns.map(physSchema(_)))
+    val index = new PinnedFileIndex(spark, table, base.getOrElse(dataPath(table)), entries,
+      partitionSchema)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema, physSchema,
+      None, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** Per-root parquet legs over a mixed local/foreign file list: all
-    * local files read under the table's own data root, foreign
-    * (cloned) files group by their SOURCE roots — `basePath` is
-    * per-scan state, so one read cannot span roots. Callers apply
-    * their own projections per leg (scan pseudo-columns like
-    * `_metadata` do not survive a union) and union the results.
+  /** The logical columns of `schema` over a [[scanEntries]] frame read
+    * with its physical schema: for column mapping, the scan requests
+    * the PHYSICAL names (deep-nullable — evolved columns are absent
+    * from old files) and this renames back, in schema order. Identity
+    * for unmapped tables.
     */
-  private[lake] def parquetLegs(spark: SparkSession, table: String,
-                                physSchema: StructType, relPaths: Seq[String],
-                                numPartCols: Int): Seq[DataFrame] = {
-    val base = dataPath(table)
-    val (foreign, local) = relPaths.partition(isForeignEntry)
-    val legs =
-      (if (local.isEmpty) Nil
-       else Seq(base.toString -> local.map(r => new Path(base, r).toString))) ++
-      foreign.groupBy(foreignBasePath(_, numPartCols)).toSeq.sortBy(_._1)
-    legs.map { case (bp, files) =>
-      spark.read.option("basePath", bp).schema(physSchema).parquet(files: _*)
-    }
-  }
+  private def logicalColumns(schema: StructType): Seq[Column] =
+    schema.fields.toSeq.map(f => col(ColumnMapping.physicalName(f)).as(f.name))
 
   /** Read specific data files of a snapshot directly (the rewrite /
-    * feed paths that bypass the registered source), translated for
-    * column mapping: the parquet read requests the PHYSICAL schema
-    * (deep-nullable — evolved columns are absent from old files) and
-    * the result renames back to `schema`'s logical names, in schema
-    * order. Identity rename for unmapped tables. Foreign (cloned)
-    * entries read from their source roots ([[parquetLegs]]).
+    * feed / streaming paths that bypass the registered source) through
+    * one [[scanEntries]] scan, translated for column mapping
+    * ([[logicalColumns]]). The statuses come from the entries' logged
+    * sizes and mtimes; an entry of unknown size costs one stat.
     */
   private[lake] def readDataFiles(spark: SparkSession, table: String,
-                                  schema: StructType,
-                                  relPaths: Seq[String],
-                                  numPartCols: Int): DataFrame = {
+                                  schema: StructType, partitionColumns: Seq[String],
+                                  entries: Seq[FileEntry]): DataFrame = {
     val nullable = GraftDataSource.asNullable(schema)
-    val legs = parquetLegs(spark, table, ColumnMapping.physicalSchema(nullable),
-      relPaths, numPartCols)
-    legs.map(_.select(nullable.fields.map(f =>
-      col(ColumnMapping.physicalName(f)).as(f.name)).toIndexedSeq: _*))
-      .reduce(_ unionByName _)
+    scanEntries(spark, table, ColumnMapping.physicalSchema(nullable), partitionColumns, entries)
+      .select(logicalColumns(nullable): _*)
   }
 
   // ------------------------------------------------- merge-on-read reads
   //
   // A snapshot whose entries carry deletion vectors cannot be served by
   // the plain HadoopFsRelation scan (it would read deleted rows back).
-  // The MoR scan is a two-leg composition: dv-free files read exactly
-  // as before; dv-bearing files read WITH the parquet reader's
-  // per-file physical row index (`_metadata.row_index` — computed
-  // correctly even under splits and row-group skipping) and are
-  // LEFT-ANTI joined against the referenced deletion-vector rows on
-  // (file, position). The dv side is bounded by deleted-row count (the
-  // point-delete case this path exists for), so it broadcasts; user
-  // filters sit above one logical plan and push into both legs' parquet
-  // scans via Catalyst as usual.
+  // The MoR scan is a two-leg composition. Dv-free files read through
+  // one [[scanEntries]] scan whose statuses come from the log, so the
+  // leg lists nothing however many files it covers. Dv-bearing files
+  // read the same way, WITH the parquet reader's per-file physical row
+  // index (`_metadata.row_index` — computed correctly even under splits
+  // and row-group skipping), and are LEFT-ANTI joined against the
+  // referenced deletion-vector rows on (file, position); those rows
+  // still read as parquet directories under `_deletes/`. The dv side is
+  // bounded by deleted-row count (the point-delete case this path
+  // exists for), so it broadcasts; user filters sit above one logical
+  // plan and push into both legs' parquet scans via Catalyst as usual.
 
   /** Column names the MoR scan uses for file identity + row position.
     * Underscored like Delta's internal columns; dropped before rows
@@ -1629,19 +1643,13 @@ object LakeTable extends org.apache.spark.internal.Logging {
   /** [[readDataFiles]] plus the scan's file path and physical row
     * position as [[FilePathCol]]/[[RowPosCol]].
     */
-  private def readDataFilesWithPos(spark: SparkSession, table: String,
-                                   schema: StructType,
-                                   relPaths: Seq[String],
-                                   numPartCols: Int): DataFrame = {
-    val nullable = GraftDataSource.asNullable(schema)
-    val legs = parquetLegs(spark, table, ColumnMapping.physicalSchema(nullable),
-      relPaths, numPartCols)
-    // _metadata is a per-scan pseudo-column: select it per leg
-    legs.map(_.select(nullable.fields.map(f =>
-      col(ColumnMapping.physicalName(f)).as(f.name)).toIndexedSeq
-      :+ col("_metadata.file_path").as(FilePathCol)
-      :+ col("_metadata.row_index").as(RowPosCol): _*))
-      .reduce(_ unionByName _)
+  private def readDataFilesWithPos(spark: SparkSession, table: String, snap: Snapshot,
+                                   entries: Seq[FileEntry]): DataFrame = {
+    val nullable = GraftDataSource.asNullable(snap.schema)
+    scanEntries(spark, table, ColumnMapping.physicalSchema(nullable), snap.partitionColumns,
+      entries)
+      .select(logicalColumns(nullable) :+ col("_metadata.file_path").as(FilePathCol)
+        :+ col("_metadata.row_index").as(RowPosCol): _*)
   }
 
   /** Scan `entries` of `snap` with their deletion vectors applied.
@@ -1653,8 +1661,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
                             entries: Seq[FileEntry], keepPos: Boolean): DataFrame = {
     val (dvd, plain) = entries.partition(_.dv.isDefined)
     val dvdLeg = if (dvd.isEmpty) None else Some {
-      val df = readDataFilesWithPos(spark, table, snap.schema, dvd.map(_.path),
-        snap.partitionColumns.size)
+      val df = readDataFilesWithPos(spark, table, snap, dvd)
       val prefix = scanDataPrefix(spark, table)
       // a CLONED vector's rows key on the source files' ABSOLUTE URIs
       // (shallowClone re-keys them — foreign entries live outside this
@@ -1672,10 +1679,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
     }
     val plainLeg =
       if (plain.isEmpty) None
-      else if (keepPos) Some(readDataFilesWithPos(spark, table, snap.schema,
-        plain.map(_.path), snap.partitionColumns.size))
-      else Some(readDataFiles(spark, table, snap.schema, plain.map(_.path),
-        snap.partitionColumns.size))
+      else if (keepPos) Some(readDataFilesWithPos(spark, table, snap, plain))
+      else Some(readDataFiles(spark, table, snap.schema, snap.partitionColumns, plain))
     (plainLeg, dvdLeg) match {
       case (Some(a), Some(b)) => a.unionByName(b)
       case (Some(a), None)    => a
@@ -1694,7 +1699,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
   /** [[readDataFiles]] with the snapshot's deletion vectors applied —
     * what every rewrite/feed path that means LIVE rows must use.
     * Identical plan to [[readDataFiles]] when none of the requested
-    * files carries a dv.
+    * files carries a dv. A path the snapshot does not name reads with
+    * an unknown size, so its scan stats it once.
     */
   private[lake] def readDataFilesLive(spark: SparkSession, table: String,
                                       snap: Snapshot,
@@ -1703,7 +1709,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val entries = relPaths.map(p =>
       byPath.getOrElse(p, FileEntry(p, -1L, -1L, -1L, Map.empty)))
     if (entries.forall(_.dv.isEmpty))
-      readDataFiles(spark, table, snap.schema, relPaths, snap.partitionColumns.size)
+      readDataFiles(spark, table, snap.schema, snap.partitionColumns, entries)
     else morScan(spark, table, snap, entries, keepPos = false)
   }
 
@@ -3836,11 +3842,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
         return deleted
       case None => ()
     }
-    val it = f.listFiles(dp, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getModificationTime < cutoffMs &&
-          !retained.contains(relativize(dp, st.getPath)))
+    leafFiles(f, dp).foreach { st =>
+      if (st.getModificationTime < cutoffMs && !retained.contains(relativize(dp, st.getPath)))
         toDelete += st.getPath
     }
     if (dryRun) deleted += toDelete.size
@@ -3859,14 +3862,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
       .flatMap(_.cdc.getOrElse(Nil)).toSet
     val cdp = changeDataPath(table)
     if (f.exists(cdp)) {
-      val cit = f.listFiles(cdp, true)
-      val cdcToDelete = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (cit.hasNext) {
-        val st = cit.next()
-        if (st.isFile && st.getModificationTime < cutoffMs &&
-            !retainedCdc.contains("_change_data/" + relativize(cdp, st.getPath)))
-          cdcToDelete += st.getPath
-      }
+      val cdcToDelete = leafFiles(f, cdp).filter(st => st.getModificationTime < cutoffMs &&
+        !retainedCdc.contains("_change_data/" + relativize(cdp, st.getPath))).map(_.getPath)
       if (dryRun) deleted += cdcToDelete.size
       else cdcToDelete.foreach { p => if (f.delete(p, false)) deleted += 1 }
     }

@@ -69,6 +69,14 @@ object SqlShims {
     */
   def rowsOf(df: DataFrame): RDD[InternalRow] = df.queryExecution.toRdd
 
+  /** Block until every listener event posted so far has been delivered.
+    * Spark's listener bus is asynchronous, so a listener's records can
+    * lag the action that produced them; a reader of job records drains
+    * first. `listenerBus` is `private[spark]`.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** A user-facing Column over a catalyst expression (the classic
     * ColumnNode bridge) — how a SQL command's resolved predicate is
     * re-applied to a fresh DataFrame.

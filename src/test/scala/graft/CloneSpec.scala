@@ -302,11 +302,4 @@ class CloneSpec extends SparkSpec {
       LakeTable.shallowClone(spark, src, dst))
     assert(e2.getMessage.contains("already has committed versions"))
   }
-
-  test("a foreign path with too few partition directories fails by name, not NPE") {
-    val p = "file:/src/data/d=1/part-0.parquet"
-    assert(LakeTable.foreignBasePath(p, 1) == "file:/src/data")
-    val e = intercept[IllegalArgumentException](LakeTable.foreignBasePath(p, 2))
-    assert(e.getMessage.contains(p) && e.getMessage.contains("2 partition"))
-  }
 }

@@ -26,6 +26,15 @@ class CountingFileSystem extends RawLocalFileSystem {
     super.listStatus(f).map(strip)
   }
 
+  // FileSystem.listFiles walks through this, once per directory; the
+  // located statuses it builds load every file's permissions, which on
+  // the local file system without native IO forks an `ls` per file
+  override def listLocatedStatus(f: Path)
+      : org.apache.hadoop.fs.RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] = {
+    CountingFileSystem.recordLocated(f)
+    super.listLocatedStatus(f)
+  }
+
   override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
     CountingFileSystem.recordOpen(f)
     super.open(f, bufferSize)
@@ -57,12 +66,16 @@ object CountingFileSystem {
   private val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private val located = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   private def record(p: Path): Unit = listed.add(p.toUri.getPath)
   private def recordOpen(p: Path): Unit = opened.add(p.toUri.getPath)
   private def recordCreate(p: Path): Unit = created.add(p.toUri.getPath)
+  private def recordLocated(p: Path): Unit = located.add(p.toUri.getPath)
 
-  def reset(): Unit = { listed.clear(); opened.clear(); created.clear(); onList = _ => () }
+  def reset(): Unit = {
+    listed.clear(); opened.clear(); created.clear(); located.clear(); onList = _ => ()
+  }
 
   /** Test interception hook: invoked with each listed path BEFORE the
     * listing returns — lets a spec deterministically interleave a
@@ -75,6 +88,14 @@ object CountingFileSystem {
   def listedUnder(fragment: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
     listed.iterator().asScala.filter(_.contains(fragment)).toSeq
+  }
+
+  /** Directories listed through `listLocatedStatus` (the walk behind
+    * `listFiles`) since the last reset that contain `fragment`.
+    */
+  def locatedListedUnder(fragment: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    located.iterator().asScala.filter(_.contains(fragment)).toSeq
   }
 
   /** Paths opened (read) since the last reset that contain `fragment`

@@ -1040,4 +1040,35 @@ class LakeSpec extends SparkSpec {
       assert(LakeTable.read(spark, t).count() == 20)
     }
   }
+
+  test("appends, CoW DML with change feed and vacuum list staging and data dirs without located listings") {
+    // listFiles(dir, true) walks listLocatedStatus, whose statuses load
+    // each file's permissions (an `ls` fork per file on the local file
+    // system); the lake's own listings use one listStatus per directory
+    CountingFileSystem.install(spark.sparkContext.hadoopConfiguration)
+    val local = tmpTable("lake_located")
+    val t = "cfs:" + local
+    LakeTable.overwrite(spark, t, (1L to 40L).map(i => (i, s"s$i", s"d${i % 3}"))
+      .toDF("id", "s", "dt").repartition(2), partitionBy = Seq("dt"))
+    def located(): Seq[String] = CountingFileSystem.locatedListedUnder(local)
+
+    CountingFileSystem.reset()
+    LakeTable.append(spark, t, (41L to 50L).map(i => (i, s"s$i", s"d${i % 3}"))
+      .toDF("id", "s", "dt"))
+    assert(located().isEmpty, s"append: ${located()}")
+
+    CountingFileSystem.reset()
+    val vUpd = LakeTable.update(spark, t, Seq("s" -> lit("u")), col("id") % 2 === 0)
+    assert(located().isEmpty, s"update: ${located()}")
+    assert(LakeTable.changes(spark, t, vUpd, vUpd).count() == 50)
+
+    CountingFileSystem.reset()
+    val counted = LakeTable.vacuum(spark, t, retainVersions = 1, graceMs = 0, dryRun = true)
+    val deleted = LakeTable.vacuum(spark, t, retainVersions = 1, graceMs = 0)
+    assert(located().isEmpty, s"vacuum: ${located()}")
+    assert(counted > 0 && deleted == counted, s"dry run counted $counted, vacuum deleted $deleted")
+    assert(LakeTable.vacuum(spark, t, retainVersions = 1, graceMs = 0, dryRun = true) == 0)
+    assert(LakeTable.read(spark, t).count() == 50)
+    assert(LakeTable.read(spark, t).filter(col("s") === "u").count() == 25)
+  }
 }

@@ -14,7 +14,11 @@ by more than the base's interquartile range.
 
 Each side builds its own engine on its first run (in its own
 perfbench/target). `--base-dir` points at an existing checkout instead
-of making a worktree. `--out` keeps every run's metrics as JSON. Pair i
+of making a worktree. `--out` keeps every run's metrics as JSON. `--ops`
+also prints, per operation kind of the runs' `op_kinds` lines, the
+median latency of each side and how many pairs the working tree won,
+so a change in the workload's metrics can be put down to the operations
+that moved. Pair i
 runs the base first when i is even and the working tree first when it
 is odd, so drift in the machine's state falls on both sides.
 """
@@ -40,7 +44,8 @@ def parse_seeds(text):
 
 
 def run_once(tree, workload, seed, seconds):
-    """One untraced run in `tree`; its metrics, or None if it failed."""
+    """One untraced run in `tree`: its metrics, plus each operation
+    kind's median latency under the key "op_kinds", or None if it failed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
@@ -50,7 +55,11 @@ def run_once(tree, workload, seed, seconds):
         print(f"  run failed in {tree} (exit {p.returncode}): {p.stderr.strip()[-300:]}",
               file=sys.stderr)
         return None
-    return {k: m["value"] for k, m in json.loads(lines[-1])["metrics"].items()}
+    res = {k: m["value"] for k, m in json.loads(lines[-1])["metrics"].items()}
+    for l in lines:
+        if l.startswith("op_kinds "):
+            res["op_kinds"] = {k: v["p50_ms"] for k, v in json.loads(l[len("op_kinds "):]).items()}
+    return res
 
 
 def quartiles(xs):
@@ -73,6 +82,24 @@ def verdict(base, change, better):
             "delta_pct": 100.0 * (mc - mb) / mb if mb else float("nan"), "gain": gain}
 
 
+def print_ops(done):
+    """Per operation kind: the base and change medians of the runs'
+    median latencies (ms), and the pairs in which the change was faster."""
+    kinds = sorted({k for r in done for side in ("base", "change")
+                    for k in r[side].get("op_kinds", {})})
+    print(f"\n{'op kind':<15}{'base med ms':>14}{'change med ms':>16}{'delta':>9}{'wins':>7}")
+    for k in kinds:
+        pairs = [(r["base"]["op_kinds"][k], r["change"]["op_kinds"][k]) for r in done
+                 if k in r["base"].get("op_kinds", {}) and k in r["change"].get("op_kinds", {})]
+        if not pairs:
+            continue
+        mb = statistics.median(b for b, _ in pairs)
+        mc = statistics.median(c for _, c in pairs)
+        wins = sum(1 for b, c in pairs if c < b)
+        print(f"{k:<15}{mb:>14.1f}{mc:>16.1f}{100.0 * (mc - mb) / mb:>8.1f}%"
+              f"{wins:>4}/{len(pairs):<2}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
@@ -81,6 +108,8 @@ def main():
     ap.add_argument("--base", default="HEAD", help="base revision (default HEAD)")
     ap.add_argument("--base-dir", help="existing checkout of the base; no worktree is made")
     ap.add_argument("--out", help="write every run's metrics here as JSON")
+    ap.add_argument("--ops", action="store_true",
+                    help="also print base/change medians and wins per operation kind")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -132,6 +161,8 @@ def main():
         print(f"{name:<15}{spread('base'):>30}{spread('change'):>30}"
               f"{v['delta_pct']:>8.1f}%{v['wins']:>4}/{v['pairs']:<2}  "
               + ("gain" if v["gain"] else "no gain"))
+    if args.ops:
+        print_ops(done)
     if args.out:
         with open(args.out, "w") as f:
             json.dump(report, f, indent=1)
