@@ -52,7 +52,7 @@ object GraftCatalog {
       .foreach { case (layer, names) =>
         names.foreach { name =>
           val path = Pipeline.tablePath(warehouseDir, layer, name)
-          if (graft.lake.LakeTable.versions(spark, path).nonEmpty)
+          if (graft.lake.LakeTable.latestVersion(spark, path).nonEmpty)
             graft.lake.LakeTable.readLive(spark, path).createOrReplaceTempView(s"${name}_tbl")
         }
       }
@@ -108,7 +108,7 @@ object GraftCatalog {
                             "gold"   -> Pipeline.goldModels.keySet)
       name <- names.toSeq.sorted
       path = Pipeline.tablePath(warehouseDir, layer, name)
-      if graft.lake.LakeTable.versions(spark, path).nonEmpty
+      if graft.lake.LakeTable.latestVersion(spark, path).nonEmpty
       registered <- registerNamespacedTable(spark, layer, name, path)
     } yield registered
   }
@@ -194,7 +194,7 @@ object GraftCatalog {
                             "gold"   -> Pipeline.goldModels.keySet)
       name <- names.toSeq.sorted
       path = Pipeline.tablePath(warehouseDir, layer, name)
-      v <- graft.lake.LakeTable.versions(spark, path).lastOption
+      v <- graft.lake.LakeTable.latestVersion(spark, path)
     } yield (name, path, v)
     // resolution above is the only racy step; view registration below
     // is pure session state over already-frozen versions
@@ -284,7 +284,7 @@ object GraftCatalog {
     tables.flatMap { e =>
       (e \ "name", e \ "layer", e \ "path") match {
         case (JString(name), layerJ, JString(path))
-            if graft.lake.LakeTable.versions(spark, path).nonEmpty =>
+            if graft.lake.LakeTable.latestVersion(spark, path).nonEmpty =>
           graft.lake.LakeTable.readLive(spark, path).createOrReplaceTempView(s"${name}_tbl")
           // the namespaced identifier too (same surface registerLake
           // builds) — layer is present in every catalog this writer

@@ -118,7 +118,7 @@ class GraftSqlParser(spark: SparkSession, delegate: ParserInterface)
             else if (target.startsWith("'")) {
               // Delta's form quotes a table NAME; accept a quoted path too
               val s = target.substring(1, target.length - 1)
-              if (LakeTable.versions(spark, s).nonEmpty) s
+              if (LakeTable.latestVersion(spark, s).nonEmpty) s
               else resolveTarget(spark, s)
             } else resolveTarget(spark, target))
           catch { case _: Exception => None }
@@ -643,8 +643,8 @@ private[graft] case class GraftDropConstraintCommand(target: String, name: Strin
 }
 
 /** `DESCRIBE HISTORY t` — the commit log as rows, latest first; the
-  * SQL face of [[LakeTable.history]] (O(tail) past the history
-  * checkpoint, never O(commits)).
+  * SQL face of [[LakeTable.history]] (O(tail) past the newest
+  * snapshot checkpoint, never O(commits)).
   */
 private[graft] case class GraftDescribeHistoryCommand(target: String)
     extends LeafRunnableCommand {

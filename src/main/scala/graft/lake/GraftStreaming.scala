@@ -127,7 +127,7 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
     * `yyyy-MM-dd`, or `yyyy-MM-dd HH:mm:ss` UTC, like `timestampAsOf`;
     * a timestamp before the first commit starts from version 1, one
     * after the latest delivers only future commits. O(tail) through the
-    * history checkpoint, exactly like time travel.
+    * snapshot checkpoint's commit summaries, exactly like time travel.
     */
   private val startingVersion: Option[Long] = {
     if (options.contains("startingVersion") && options.contains("startingTimestamp"))

@@ -46,7 +46,8 @@ import org.json4s.jackson.JsonMethods
   * commit cost is O(files touched), not O(table): appending one file
   * to a million-file table writes one small JSON, not a million-entry
   * manifest. Every `checkpointInterval`-th commit additionally writes
-  * a full-state `<v>.checkpoint.json` (advisory), and readers
+  * a full-state `<v>.checkpoint.json` (advisory) that also carries
+  * every commit's history summary, and readers
   * reconstruct a snapshot as nearest-base + ≤interval deltas, where a
   * base is a checkpoint, a legacy full-state entry, or a `reset` delta
   * (OVERWRITE carries its complete new file list and is therefore its
@@ -62,9 +63,14 @@ import org.json4s.jackson.JsonMethods
   * Layout:
   * {{{
   * <table>/_graft_log/00000000000000000001.json              (delta, or legacy full-state)
-  * <table>/_graft_log/00000000000000000010.checkpoint.json   (full-state, every 10th)
+  * <table>/_graft_log/00000000000000000010.checkpoint.json   (segment list + commit summaries, every 10th)
+  * <table>/_graft_log/_manifests/<md5>.segment.json          (checkpoint file-list segments)
+  * <table>/_graft_log/_latest_hint                           (newest version, advisory)
   * <table>/data/<part=val>/part-<uuid>.parquet
-  * <table>/_staging/<uuid>/   (transient)
+  * <table>/_change_data/<uuid>/part-*.parquet                (change-feed rows of DML commits)
+  * <table>/_deletes/<uuid>/                                  (deletion vectors)
+  * <table>/_index/bloom/<uuid>.json                          (bloom sidecars, advisory)
+  * <table>/_staging/<uuid>/                                  (transient)
   * }}}
   */
 object LakeTable extends org.apache.spark.internal.Logging {
@@ -314,6 +320,10 @@ object LakeTable extends org.apache.spark.internal.Logging {
     case JString(x) => Some(x)
     case _          => None
   }
+  private def jMap[T](v: JValue)(value: JValue => T): Map[String, T] = v match {
+    case JObject(fields) => fields.map { case (k, x) => k -> value(x) }.toMap
+    case _               => Map.empty
+  }
 
   /** Back-compat: a pre-stats log records a file as its bare relative
     * path string; it parses to an entry with unknown size/rows/stats,
@@ -362,10 +372,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       operation = jStr(j \ "operation"),
       schema = DataType.fromJson(jStr(j \ "schemaJson")).asInstanceOf[StructType],
       partitionColumns = (j \ "partitionColumns").asInstanceOf[JArray].arr.map(jStr),
-      txns = (j \ "txns") match {
-        case JObject(fields) => fields.map { case (q, b) => q -> jLong(b) }.toMap
-        case _               => Map.empty
-      },
+      txns = jMap(j \ "txns")(jLong),
       full = full,
       adds = (j \ "adds") match {
         case JArray(entries) => entries.map(parseFile)
@@ -384,10 +391,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
         case _               => None
       },
       protocol = Protocol(rv, wv),
-      constraints = (j \ "cks") match {
-        case JObject(fields) => fields.map { case (n, e) => n -> jStr(e) }.toMap
-        case _               => Map.empty
-      },
+      constraints = jMap(j \ "cks")(jStr),
       removedFull = (j \ "rfull") match {
         case JArray(entries) => entries.map(jStr)
         case _               => Seq.empty
@@ -413,9 +417,10 @@ object LakeTable extends org.apache.spark.internal.Logging {
   // _graft_log/ (hint file, tmp files, foreign droppings) is not a version
   private val VersionFileName = """(\d{20})\.json""".r
 
-  /** All committed versions, ascending. O(log-dir listing) — used by
-    * history/time-travel/vacuum; the latest-snapshot hot path goes
-    * through the hint file instead (see [[latestVersion]]).
+  /** All committed versions, ascending. O(log-dir listing) — the
+    * fallback of history/time-travel/vacuum when no usable checkpoint
+    * covers the log; "is there a table / what is the newest version"
+    * goes through the hint file instead (see [[latestVersion]]).
     */
   def versions(spark: SparkSession, table: String): Seq[Long] = {
     val f = fs(spark, table)
@@ -466,7 +471,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * since the hint was written)), falling back to the O(commits)
     * directory listing when there is no usable hint.
     */
-  private[lake] def latestVersion(spark: SparkSession, table: String): Option[Long] = {
+  private[graft] def latestVersion(spark: SparkSession, table: String): Option[Long] = {
     val f = fs(spark, table)
     readHint(f, table).filter(h => f.exists(versionFile(table, h))) match {
       case Some(h) =>
@@ -483,12 +488,22 @@ object LakeTable extends org.apache.spark.internal.Logging {
   // ------------------------------------------------ snapshot checkpoints
   //
   // Every checkpointInterval-th commit also writes `<v>.checkpoint.json`
-  // — the full file list as of v, in the legacy full-state format — so
-  // reconstruction walks back at most ~interval deltas before hitting a
-  // base. The checkpoint is ADVISORY (post-commit, best-effort): a
-  // missing or torn one just lengthens the walk, which still terminates
-  // at a legacy full-state entry, a `reset` delta (OVERWRITE), or the
-  // table's first commit (whose delta applies to the empty base).
+  // — the state as of v (its file list as manifest segments, below) plus
+  // the (version, ts, operation, num_files) summary of every commit up
+  // to v — so reconstruction walks back at most ~interval deltas before
+  // hitting a base, and history() reads one checkpoint plus the
+  // ≤interval tail instead of O(commits) entries. The checkpoint is
+  // ADVISORY (post-commit, best-effort): a missing or torn one just
+  // lengthens the walk, which still terminates at a legacy full-state
+  // entry, a `reset` delta (OVERWRITE), or the table's first commit
+  // (whose delta applies to the empty base), and history falls back to
+  // the log listing.
+
+  private[lake] val checkpointInterval = 10L
+
+  /** One commit as history() reports it. */
+  private final case class HistEntry(version: Long, timestampMs: Long,
+                                     operation: String, numFiles: Long)
 
   private def snapshotCheckpointFile(table: String, v: Long): Path =
     new Path(logPath(table), f"$v%020d.checkpoint.json")
@@ -568,24 +583,21 @@ object LakeTable extends org.apache.spark.internal.Logging {
     (JsonMethods.parse(readFileText(f, new Path(manifestsPath(table), name))) \ "files")
       .asInstanceOf[JArray].arr.map(parseFile)
 
-  /** Segment references of a v2 checkpoint, without reading segments —
-    * the writer-side handle for reuse. None for missing/legacy/torn.
+  /** A parsed `<v>.checkpoint.json`. A v2 checkpoint's `head` has no
+    * files — they sit in its manifest `segments`, read only by callers
+    * that need them ([[checkpointSnapshot]]); a legacy single-file
+    * checkpoint carries them inline and has no segments. `hist` holds
+    * the summaries of the commits up to v; it is empty when the
+    * checkpoint predates them, which means "no summaries", never "no
+    * versions".
     */
-  private def readCheckpointRefs(f: FileSystem, table: String,
-                                 v: Long): Option[Seq[SegmentRef]] =
-    if (v <= 0) None
-    else try {
-      val p = snapshotCheckpointFile(table, v)
-      if (!f.exists(p)) None
-      else scala.util.Try {
-        val j = JsonMethods.parse(readFileText(f, p))
-        require(jLongOpt(j \ "checkpointV").contains(2L), "not a segmented checkpoint")
-        (j \ "segments").asInstanceOf[JArray].arr.map(s =>
-          SegmentRef(jStr(s \ "n"), jLong(s \ "c"), jStr(s \ "lo"), jStr(s \ "hi")))
-      }.toOption
-    } catch { case _: java.io.IOException => None }
+  private final case class Checkpoint(head: Snapshot, segments: Option[Seq[SegmentRef]],
+                                      hist: Seq[HistEntry]) {
+    def numFiles: Long = head.files.size + segments.getOrElse(Nil).map(_.count).sum
+  }
 
-  private def renderCheckpointV2(s: Snapshot, segs: Seq[SegmentRef]): String =
+  private def renderCheckpointV2(s: Snapshot, segs: Seq[SegmentRef],
+                                 hist: Seq[HistEntry]): String =
     JsonMethods.compact(JsonMethods.render(JObject(List(
       "checkpointV" -> JLong(2L),
       "version" -> JLong(s.version),
@@ -602,53 +614,64 @@ object LakeTable extends org.apache.spark.internal.Logging {
         n -> (JString(e): JValue) }),
       "segments" -> JArray(segs.map(r => JObject(
         "n" -> JString(r.name), "c" -> JLong(r.count),
-        "lo" -> JString(r.minPath), "hi" -> JString(r.maxPath))).toList)))))
+        "lo" -> JString(r.minPath), "hi" -> JString(r.maxPath))).toList),
+      // one compact row per commit: the cumulative form lets vacuum drop
+      // older checkpoints without losing history
+      "hist" -> JArray(hist.map(h => JArray(List(JLong(h.version),
+        JLong(h.timestampMs), JString(h.operation), JLong(h.numFiles)))).toList)))))
 
-  private def parseCheckpointV2(f: FileSystem, table: String, j: JValue): Snapshot = {
-    val rv = jLongOpt(j \ "rv").map(_.toInt).getOrElse(1)
-    if (rv > MaxReaderVersion)
-      throw new ProtocolVersionException(
-        s"this table's checkpoint requires readerVersion $rv, but this library " +
-          s"reads up to readerVersion $MaxReaderVersion")
-    val segs = (j \ "segments").asInstanceOf[JArray].arr.map(s => jStr(s \ "n"))
-    Snapshot(
-      jLong(j \ "version"), jLong(j \ "timestampMs"), jStr(j \ "operation"),
-      DataType.fromJson(jStr(j \ "schema")).asInstanceOf[StructType],
-      (j \ "partitionColumns").asInstanceOf[JArray].arr.map(jStr),
-      segs.flatMap(readSegment(f, table, _)),
-      (j \ "txns") match {
-        case JObject(fields) => fields.map { case (q, b) => q -> jLong(b) }.toMap
-        case _               => Map.empty
-      },
-      Protocol(rv, jLongOpt(j \ "wv").map(_.toInt).getOrElse(1)),
-      constraints = (j \ "cks") match {
-        case JObject(fields) => fields.map { case (n, e) => n -> jStr(e) }.toMap
-        case _               => Map.empty
-      })
-  }
-
-  /** Parse `<v>.checkpoint.json` if present and fully readable — either
-    * a v2 segmented checkpoint or a legacy single-file full state. Any
-    * missing segment or parse failure degrades to None (delta-walk
-    * reconstruction); an entry with neither `checkpointV` nor `files`
-    * is never read as an empty table.
+  /** Parse `<v>.checkpoint.json` if present and readable — a v2
+    * segmented checkpoint or a legacy single-file full state — without
+    * reading any segment. A missing, torn or foreign file is None
+    * (callers degrade to the delta walk or the log listing); an entry
+    * with neither `checkpointV` nor `files` is never read as an empty
+    * table.
     */
-  private def readSnapshotCheckpoint(f: FileSystem, table: String,
-                                     v: Long): Option[Snapshot] =
-    try {
+  private def openCheckpoint(f: FileSystem, table: String, v: Long): Option[Checkpoint] =
+    if (v <= 0) None
+    else try {
       val p = snapshotCheckpointFile(table, v)
       if (!f.exists(p)) None
       else scala.util.Try {
         val txt = readFileText(f, p)
         val j = JsonMethods.parse(txt)
-        if (jLongOpt(j \ "checkpointV").isDefined) parseCheckpointV2(f, table, j)
-        else {
+        if (jLongOpt(j \ "checkpointV").contains(2L)) {
+          val rv = jLongOpt(j \ "rv").map(_.toInt).getOrElse(1)
+          // a checkpoint newer than this reader is skipped: the delta
+          // walk then meets the log entry's own gate, which refuses loudly
+          require(rv <= MaxReaderVersion, s"checkpoint needs readerVersion $rv")
+          val head = Snapshot(
+            jLong(j \ "version"), jLong(j \ "timestampMs"), jStr(j \ "operation"),
+            DataType.fromJson(jStr(j \ "schema")).asInstanceOf[StructType],
+            (j \ "partitionColumns").asInstanceOf[JArray].arr.map(jStr), Nil,
+            jMap(j \ "txns")(jLong),
+            Protocol(rv, jLongOpt(j \ "wv").map(_.toInt).getOrElse(1)),
+            jMap(j \ "cks")(jStr))
+          val segs = (j \ "segments").asInstanceOf[JArray].arr.map(s =>
+            SegmentRef(jStr(s \ "n"), jLong(s \ "c"), jStr(s \ "lo"), jStr(s \ "hi")))
+          val hist = (j \ "hist") match {
+            case JArray(rows) => rows.map {
+              case JArray(List(hv, ts, op, nf)) => HistEntry(jLong(hv), jLong(ts), jStr(op), jLong(nf))
+              case other => throw new IllegalStateException(s"bad history row $other")
+            }
+            case _ => Nil
+          }
+          Checkpoint(head, Some(segs), hist)
+        } else {
           val e = parseLogEntry(txt)
-          Snapshot(e.version, e.timestampMs, e.operation, e.schema,
-            e.partitionColumns, e.full.get, e.txns, e.protocol, e.constraints)
+          Checkpoint(Snapshot(e.version, e.timestampMs, e.operation, e.schema,
+            e.partitionColumns, e.full.get, e.txns, e.protocol, e.constraints), None, Nil)
         }
       }.toOption
     } catch { case _: java.io.IOException => None }
+
+  /** The snapshot a checkpoint holds, with its segments read; None when
+    * any segment is missing or unreadable.
+    */
+  private def checkpointSnapshot(f: FileSystem, table: String, v: Long): Option[Snapshot] =
+    openCheckpoint(f, table, v).flatMap(cp => scala.util.Try(cp.head.copy(files =
+      cp.head.files ++ cp.segments.getOrElse(Nil).flatMap(r => readSegment(f, table, r.name))))
+      .toOption)
 
   /** Segments of the new checkpoint given the previous checkpoint's and
     * the plain deltas since it: reuse untouched segments, rewrite the
@@ -701,6 +724,37 @@ object LakeTable extends org.apache.spark.internal.Logging {
     sorted.grouped(segTarget).filter(_.nonEmpty)
       .map(g => writeSegment(f, table, g)).toSeq
 
+  /** The log entries of `vs`, each read and parsed once; a missing or
+    * unparsable entry is a Failure.
+    */
+  private def readEntries(f: FileSystem, table: String,
+                          vs: Seq[Long]): Seq[(Long, scala.util.Try[LogEntry])] =
+    vs.map(v => v -> scala.util.Try(parseLogEntry(readFileText(f, versionFile(table, v)))))
+
+  /** History rows of consecutive log entries. numFiles is DELTA
+    * ARITHMETIC (previous count - removes + adds) seeded with `seed`,
+    * the count just before the first entry — no snapshot per version.
+    * A missing or unparsable entry is skipped and poisons the running
+    * count, or every later version would compound off a stale base; the
+    * next version then pays one reconstruction.
+    */
+  private def summarize(f: FileSystem, table: String,
+                        entries: Seq[(Long, scala.util.Try[LogEntry])],
+                        seed: Option[Long]): Seq[HistEntry] = {
+    var count = seed
+    entries.flatMap { case (v, parsed) =>
+      val h = parsed.flatMap(e => scala.util.Try {
+        val nf = e.full.map(_.size.toLong)
+          .orElse(if (e.reset) Some(e.adds.size.toLong)
+                  else (if (v == 1L) Some(0L) else count).map(_ - e.removes.size + e.adds.size))
+          .getOrElse(reconstruct(f, table, v).files.size.toLong)
+        HistEntry(v, e.timestampMs, e.operation, nf)
+      }).toOption
+      count = h.map(_.numFiles)
+      h
+    }
+  }
+
   private def writeSnapshotCheckpoint(spark: SparkSession, f: FileSystem,
                                       table: String, snap: Snapshot): Unit =
     try {
@@ -708,25 +762,28 @@ object LakeTable extends org.apache.spark.internal.Logging {
       if (f.exists(target)) return // deterministic content; first write stands
       val segTarget = math.max(1, segmentTargetEntries(spark))
       val sorted = snap.files.sortBy(_.path)
-      val prevRefs = readCheckpointRefs(f, table, snap.version - checkpointInterval)
+      val from = snap.version - checkpointInterval
+      val prev = openCheckpoint(f, table, from)
+      val window = readEntries(f, table, from + 1 to snap.version)
+      // summaries: the previous checkpoint's plus the window's, or — when
+      // it carries none — computed once from version 1
+      val hist = prev.filter(_.hist.nonEmpty) match {
+        case Some(p) => p.hist ++ summarize(f, table, window, Some(p.numFiles))
+        case None    => summarize(f, table, readEntries(f, table, 1L to from) ++ window, None)
+      }
       // incremental only over a window of PLAIN deltas: a reset (its own
       // base) or legacy full-state entry in range means the previous
       // segments describe a dead lineage — re-chunk from the live list
-      val window = prevRefs.flatMap { _ =>
-        scala.util.Try {
-          ((snap.version - checkpointInterval + 1) to snap.version)
-            .map(v => parseLogEntry(readFileText(f, versionFile(table, v))))
-        }.toOption.filter(_.forall(e => e.full.isEmpty && !e.reset))
-      }
-      val segs = (prevRefs, window) match {
-        case (Some(refs), Some(deltas)) =>
-          scala.util.Try(incrementalSegments(f, table, refs, deltas, sorted, segTarget))
+      val deltas = window.map(_._2.toOption.filter(e => e.full.isEmpty && !e.reset))
+      val segs = prev.flatMap(_.segments) match {
+        case Some(refs) if deltas.forall(_.isDefined) =>
+          scala.util.Try(incrementalSegments(f, table, refs, deltas.flatten, sorted, segTarget))
             .getOrElse(chunkSegments(f, table, sorted, segTarget))
         case _ => chunkSegments(f, table, sorted, segTarget)
       }
       val tmp = new Path(logPath(table), s".cp-snap-tmp-${java.util.UUID.randomUUID()}")
       val out = f.create(tmp, false)
-      try out.write(renderCheckpointV2(snap, segs).getBytes("UTF-8"))
+      try out.write(renderCheckpointV2(snap, segs, hist).getBytes("UTF-8"))
       finally out.close()
       publishIfAbsent(f, tmp, target)
       ()
@@ -741,7 +798,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     reconstruct(fs(spark, table), table, version)
 
   private def reconstruct(f: FileSystem, table: String, version: Long): Snapshot = {
-    readSnapshotCheckpoint(f, table, version).getOrElse {
+    checkpointSnapshot(f, table, version).getOrElse {
       val p = versionFile(table, version)
       if (!f.exists(p))
         throw new IllegalArgumentException(s"no version $version at $table")
@@ -758,7 +815,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
           var cur = version
           while (base == null) {
             if (cur - 1 == 0) base = Seq.empty // first commit: empty base
-            else readSnapshotCheckpoint(f, table, cur - 1) match {
+            else checkpointSnapshot(f, table, cur - 1) match {
               case Some(cp) => base = cp.files
               case None =>
                 val q = versionFile(table, cur - 1)
@@ -841,10 +898,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val won = publishIfAbsent(f, tmp, target)
     if (won) {
       writeLatestHint(f, table, stamped.version)
-      if (stamped.version % checkpointInterval == 0) {
+      if (stamped.version % checkpointInterval == 0)
         writeSnapshotCheckpoint(spark, f, table, stamped)
-        writeHistoryCheckpoint(f, table, stamped.version)
-      }
     }
     won
   }}
@@ -2272,132 +2327,63 @@ object LakeTable extends org.apache.spark.internal.Logging {
     spark.read.format("graft").option("versionAsOf", v).load(table)
   }
 
-  // ------------------------------------------------- history checkpoint
+  // ---------------------------------------------------------- commit history
   //
-  // history() needs (version, ts, operation, num_files) per commit; with
-  // only the per-version JSONs that is O(commits) file reads per call —
-  // fine at daily cadence, painful for a maintenance dashboard over a
-  // streaming table with tens of thousands of commits. Every
-  // checkpointInterval-th commit therefore rolls the summaries up into
-  // one `_history_checkpoint` file (incrementally: previous checkpoint +
-  // the ≤interval new snapshots), and history() reads checkpoint + tail.
-  // Like the latest-hint, the checkpoint is ADVISORY: missing, stale,
-  // torn or foreign content degrades to parsing the per-version JSONs;
-  // correctness never depends on it.
+  // history(), timestamp travel and time-based vacuum need (version, ts,
+  // operation, num_files) per commit; with only the per-version JSONs
+  // that is O(commits) file reads per call — fine at daily cadence,
+  // painful for a maintenance dashboard over a streaming table with tens
+  // of thousands of commits. The newest snapshot checkpoint carries the
+  // summaries of every commit up to it, so these read that one file
+  // plus the ≤interval tail since it, through the same arithmetic the
+  // checkpoint writer uses ([[summarize]]).
 
-  private[lake] val checkpointInterval = 10L
-
-  private def checkpointFile(table: String) = new Path(logPath(table), "_history_checkpoint")
-
-  private final case class HistEntry(version: Long, timestampMs: Long,
-                                     operation: String, numFiles: Long)
-
-  private def snapshotSummary(s: Snapshot): HistEntry =
-    HistEntry(s.version, s.timestampMs, s.operation, s.files.size.toLong)
-
-  private def readCheckpoint(f: FileSystem, table: String): Option[(Long, Seq[HistEntry])] =
-    try {
-      val p = checkpointFile(table)
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        scala.util.Try {
-          val j = JsonMethods.parse(txt)
-          val upTo = jLong(j \ "version")
-          val entries = (j \ "entries").asInstanceOf[JArray].arr.map { e =>
-            HistEntry(jLong(e \ "v"), jLong(e \ "ts"), jStr(e \ "op"), jLong(e \ "nf"))
-          }
-          (upTo, entries)
-        }.toOption
-      }
-    } catch { case _: java.io.IOException => None }
-
-  /** Committed versions without the O(commits) log listing: the history
-    * checkpoint names the covered prefix, a forward existence-probe
-    * finds the ≤interval tail — O(tail) metadata calls. Degrades to the
-    * full listing when there is no usable checkpoint (the same advisory
-    * discipline as the checkpoint itself). Used by history() and
-    * vacuum(), the two O(commits) walkers.
+  /** The log as the newest checkpoint at or below the latest version
+    * sees it: that checkpoint's summaries and file count, and the tail
+    * versions since it — found by the latest hint and existence probes,
+    * no listing. None when that checkpoint is missing, torn or carries
+    * no summaries, or the tail has a hole (foreign log deletion: the
+    * hint sees past it, a probe would not); callers then list the log.
     */
-  private[lake] def versionsFast(spark: SparkSession, table: String): Seq[Long] = {
+  private def checkpointedLog(spark: SparkSession,
+                              table: String): Option[(Seq[HistEntry], Long, Seq[Long])] = {
     val f = fs(spark, table)
-    val computed = readCheckpoint(f, table) match {
-      case Some((upTo, entries)) if f.exists(versionFile(table, upTo)) =>
-        var v = upTo
-        val tail = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (f.exists(versionFile(table, v + 1))) { v += 1; tail += v }
-        Some((entries.map(_.version).filter(_ <= upTo) ++ tail).distinct.sorted)
-      case _ => None
-    }
-    // Gap guard: the forward probe stops at the first missing version
-    // file, so a hole in the post-checkpoint tail (foreign log
-    // deletion) would silently truncate the list — and vacuum would
-    // then treat pre-gap versions as latest and delete files the TRUE
-    // latest snapshots still reference. The latest-hint is written
-    // post-commit and sees past such a hole; on disagreement, pay the
-    // full listing.
-    computed match {
-      case Some(vs) if vs.nonEmpty &&
-          !readHint(f, table).exists(h => h > vs.max && f.exists(versionFile(table, h))) =>
-        vs
-      case _ => versions(spark, table)
+    latestVersion(spark, table).flatMap { latest =>
+      val c = latest - latest % checkpointInterval
+      val tail = c + 1 to latest
+      val base =
+        if (c == 0) Some((Seq.empty[HistEntry], 0L))
+        else openCheckpoint(f, table, c).filter(_.hist.nonEmpty).map(cp => (cp.hist, cp.numFiles))
+      base.filter(_ => tail.forall(v => f.exists(versionFile(table, v))))
+        .map { case (hist, numFiles) => (hist, numFiles, tail) }
     }
   }
 
-  private def writeHistoryCheckpoint(f: FileSystem, table: String, upTo: Long): Unit =
-    try {
-      val prev = readCheckpoint(f, table)
-      val carried = prev.map(_._2.filter(_.version <= upTo)).getOrElse(Seq.empty)
-      val from = prev.map(_._1 + 1).getOrElse(1L)
-      // numFiles per fresh version is DELTA ARITHMETIC (prev count -
-      // removes + adds), seeded from the carried prefix — no snapshot
-      // reconstruction per version; a gap or unknown falls back to one
-      // reconstruction (and a gap is skipped, not fatal — advisory file)
-      var count: Option[Long] = carried.lastOption.map(_.numFiles)
-      val fresh = (from to upTo).flatMap { v =>
-        val p = versionFile(table, v)
-        if (!f.exists(p)) { count = None; None }
-        else scala.util.Try {
-          val e = parseLogEntry(readFileText(f, p))
-          val seed = if (v == 1L) Some(0L) else count
-          val nf = e.full.map(_.size.toLong)
-            .orElse(if (e.reset) Some(e.adds.size.toLong)
-                    else seed.map(_ - e.removes.size + e.adds.size))
-            .getOrElse(reconstruct(f, table, v).files.size.toLong)
-          count = Some(nf)
-          HistEntry(v, e.timestampMs, e.operation, nf)
-        } match {
-          case scala.util.Success(h) => Some(h)
-          // an existing-but-unparsable entry must poison the running
-          // count like a missing one, or every later version's delta
-          // arithmetic compounds off a stale base
-          case scala.util.Failure(_) => count = None; None
-        }
-      }
-      val entries = carried ++ fresh
-      val body = JsonMethods.compact(JsonMethods.render(JObject(
-        "version" -> JLong(upTo),
-        "entries" -> JArray(entries.map(e => JObject(
-          "v" -> JLong(e.version), "ts" -> JLong(e.timestampMs),
-          "op" -> JString(e.operation), "nf" -> JLong(e.numFiles))).toList))))
-      // tmp + atomic replace so a concurrent history() never reads a torn
-      // file (the Try parse would shrug it off, but then that call pays
-      // the full O(commits) fallback for nothing)
-      val tmp = new Path(logPath(table), s".cp-tmp-${java.util.UUID.randomUUID()}")
-      val out = f.create(tmp, false)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      if (f.getUri.getScheme == "file")
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(tmp.toUri.getPath),
-          java.nio.file.Paths.get(checkpointFile(table).toUri.getPath),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      else {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(f.getUri, f.getConf)
-        fc.rename(tmp, checkpointFile(table), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      }
-    } catch { case _: java.io.IOException => () } // advisory — never fail a commit
+  /** Committed versions without the O(commits) log listing: the
+    * checkpoint's summaries name the covered prefix, a forward probe
+    * the tail, and no tail entry is parsed. Degrades to the full
+    * listing when there is no usable checkpoint. Used by vacuum().
+    */
+  private[lake] def versionsFast(spark: SparkSession, table: String): Seq[Long] =
+    checkpointedLog(spark, table) match {
+      case Some((hist, _, tail)) => hist.map(_.version) ++ tail
+      case None                  => versions(spark, table)
+    }
+
+  /** Every commit's summary, ascending: the checkpoint's plus the tail's
+    * (O(tail) entry reads, no snapshot built); with no usable checkpoint,
+    * every listed entry through the same arithmetic.
+    */
+  private def summaries(spark: SparkSession, table: String): Seq[HistEntry] = {
+    val f = fs(spark, table)
+    checkpointedLog(spark, table).flatMap { case (hist, numFiles, tail) =>
+      val rows = summarize(f, table, readEntries(f, table, tail), Some(numFiles))
+      if (rows.size == tail.size) Some(hist ++ rows) else None
+    }.getOrElse {
+      val vs = versions(spark, table)
+      if (vs.isEmpty) Nil else summarize(f, table, readEntries(f, table, vs.head to vs.last), None)
+    }
+  }
 
   /** Read the table through the registered `graft` data source
     * ([[GraftDataSource]]): the returned DataFrame re-resolves the
@@ -2418,39 +2404,31 @@ object LakeTable extends org.apache.spark.internal.Logging {
   }
 
   /** Commit history, latest first: (version, timestamp_ms, operation,
-    * num_files). Reads the rolled-up `_history_checkpoint` for the
-    * covered prefix and parses per-version JSONs only for the tail
-    * since it (≤ checkpointInterval files), so the call is O(tail), not
-    * O(commits); with no usable checkpoint it degrades to parsing
-    * everything.
+    * num_files). Reads the summaries the newest snapshot checkpoint
+    * carries for the covered prefix and parses per-version JSONs only
+    * for the tail since it (≤ checkpointInterval files), so the call is
+    * O(tail), not O(commits); with no usable checkpoint it degrades to
+    * parsing every listed entry.
     */
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val f = fs(spark, table)
-    val byVersion = readCheckpoint(f, table)
-      .map(_._2.map(e => e.version -> e).toMap).getOrElse(Map.empty)
-    versionsFast(spark, table)
-      .map(v => byVersion.getOrElse(v, snapshotSummary(snapshotAt(spark, table, v))))
+    summaries(spark, table)
       .map(e => (e.version, e.timestampMs, e.operation, e.numFiles))
       .sortBy(-_._1)
       .toDF("version", "timestamp_ms", "operation", "num_files")
   }
 
   /** The newest version committed at or before `tsMs` — timestamp time
-    * travel (`option("timestampAsOf", ...)`), resolved from the history
-    * checkpoint + tail like [[history]] (O(tail), no full log parse).
-    * Commit timestamps are the writers' wall clocks: monotonic per
-    * table in practice (commits serialize through put-if-absent), but
-    * clock skew between writers can reorder them — ties and inversions
-    * resolve to the highest qualifying version, matching Delta.
+    * travel (`option("timestampAsOf", ...)`), resolved from the
+    * checkpoint's summaries + tail like [[history]] (O(tail), no full
+    * log parse). Commit timestamps are the writers' wall clocks:
+    * monotonic per table in practice (commits serialize through
+    * put-if-absent), but clock skew between writers can reorder them —
+    * ties and inversions resolve to the highest qualifying version,
+    * matching Delta.
     */
   def versionAtTimestamp(spark: SparkSession, table: String, tsMs: Long): Long = {
-    val f = fs(spark, table)
-    val byVersion = readCheckpoint(f, table)
-      .map(_._2.map(e => e.version -> e).toMap).getOrElse(Map.empty)
-    val qualifying = versionsFast(spark, table)
-      .map(v => byVersion.getOrElse(v, snapshotSummary(snapshotAt(spark, table, v))))
-      .filter(_.timestampMs <= tsMs)
+    val qualifying = summaries(spark, table).filter(_.timestampMs <= tsMs)
     if (qualifying.isEmpty)
       throw new IllegalArgumentException(
         s"no version of $table committed at or before timestamp $tsMs " +
@@ -3745,7 +3723,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * `retainMs` switches retention from count-based to TIME-based
     * ("keep 7 days of time travel", `VACUUM t RETAIN 168 HOURS`):
     * every version committed inside the window survives, the newest
-    * always survives, and `retainVersions` is ignored.
+    * always survives, and `retainVersions` is ignored. Commit times come
+    * from the newest snapshot checkpoint's summaries plus the tail since
+    * it, as in [[history]].
     */
   def vacuum(spark: SparkSession, table: String, retainVersions: Int = 2,
              graceMs: Long = 15L * 60 * 1000, dryRun: Boolean = false,
@@ -3757,20 +3737,19 @@ object LakeTable extends org.apache.spark.internal.Logging {
     // `retainMs` switches retention from count-based to TIME-based
     // (the production norm: "keep 7 days of time travel"): every
     // version committed inside the window survives, the newest always
-    // survives, and timestamps come from the history checkpoint —
-    // O(tail), not O(commits)
+    // survives, and timestamps come from the checkpoint's summaries
+    // plus the tail — O(tail), not O(commits)
     def retainedVersions(vsX: Seq[Long]): Seq[Long] = retainMs match {
       case None => vsX.takeRight(math.max(1, retainVersions))
       case Some(ms) =>
         val cutoff = System.currentTimeMillis() - math.max(0L, ms)
-        val byV = readCheckpoint(f, table)
-          .map(_._2.map(e => e.version -> e).toMap).getOrElse(Map.empty)
-        val kept = vsX.filter(v => byV.get(v).map(_.timestampMs)
-          .getOrElse(snapshotAt(spark, table, v).timestampMs) >= cutoff)
+        val ts = summaries(spark, table).map(e => e.version -> e.timestampMs).toMap
+        // a version with no summary (unparsable entry) has no known age: kept
+        val kept = vsX.filter(v => ts.get(v).forall(_ >= cutoff))
         if (kept.isEmpty) vsX.takeRight(1) else kept
     }
-    val retainedSnaps = retainedVersions(vs)
-      .map(v => snapshotAt(spark, table, v))
+    val retainedVs = retainedVersions(vs)
+    val retainedSnaps = retainedVs.map(v => snapshotAt(spark, table, v))
     val retained = retainedSnaps.flatMap(_.filePaths).toSet
     val cutoffMs = System.currentTimeMillis() - math.max(0L, graceMs)
     val dp = dataPath(table)
@@ -3857,7 +3836,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     // retained versions recorded (the feed stays readable over the
     // same window time travel works), sweep the rest once old enough
     // — including orphans from aborted DML commits
-    val retainedCdc = retainedVersions(vs)
+    val retainedCdc = retainedVs
       .flatMap(v => scala.util.Try(logEntryAt(spark, table, v)).toOption)
       .flatMap(_.cdc.getOrElse(Nil)).toSet
     val cdp = changeDataPath(table)
@@ -3902,13 +3881,15 @@ object LakeTable extends org.apache.spark.internal.Logging {
     // surviving checkpoint (dead lineages, orphans of crashed
     // checkpoint writes) — same grace discipline as data files. The
     // newest checkpoint at or below the OLDEST retained version stays:
-    // it is that version's reconstruction base. Checkpoints only ever
+    // it is that version's reconstruction base, and every newer one
+    // stays with it — the newest carries the commit summaries history()
+    // reads, so no sweep loses history. Checkpoints only ever
     // land at interval multiples, so they are FOUND by existence probes
     // (O(commits / interval) stats), never by listing the log dir —
     // vacuum stays zero-listing on the log.
     val cpVersions = (checkpointInterval to vs.max by checkpointInterval)
       .filter(v => f.exists(snapshotCheckpointFile(table, v)))
-    val oldestRetained = retainedVersions(vs).min
+    val oldestRetained = retainedVs.min
     val keepFloor = cpVersions.filter(_ <= oldestRetained).lastOption.getOrElse(Long.MinValue)
     val (cpDrop0, cpKeep) = cpVersions.partition(_ < keepFloor)
     val cpDrop = cpDrop0.filter { v =>
@@ -3926,7 +3907,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       // their segments) — same set whether this is a dry run or not
       val survivors = cpKeep ++ cpDrop0.diff(cpDrop)
       val referenced = survivors
-        .flatMap(v => readCheckpointRefs(f, table, v).getOrElse(Nil))
+        .flatMap(v => openCheckpoint(f, table, v).flatMap(_.segments).getOrElse(Nil))
         .map(_.name).toSet
       val segsToDelete = f.listStatus(mp).toSeq.filter(st =>
         st.isFile && st.getModificationTime < cutoffMs &&

@@ -238,6 +238,68 @@ class LakeMetaSpec extends SparkSpec {
       s"vacuum() listed the log dir despite a checkpoint: $listedVac")
     // vacuum still reclaimed old version data and latest still reads
     assert(LakeTable.read(spark, t).count() == 25)
+    // vacuum kept the checkpoint that carries the commit summaries
+    CountingFileSystem.reset()
+    assert(LakeTable.history(spark, t).count() == 25)
+    val listedAfterVac = CountingFileSystem.listedUnder("/t/_graft_log")
+    assert(listedAfterVac.isEmpty,
+      s"history() after vacuum listed the log dir: $listedAfterVac")
+  }
+
+  test("history, timestamp travel and time-based vacuum read the tail without building snapshots") {
+    val t = cfsTable("meta_tail")
+    LakeTable.overwrite(spark, t, Seq((1L, "r1")).toDF("id", "s")) // v1
+    (2 to 21).foreach { i =>
+      LakeTable.append(spark, t, Seq((i.toLong, s"r$i")).toDF("id", "s"))
+    } // checkpoints at v10, v20
+    // a clear gap between v21 and v22, so a retention cutoff between
+    // their commit times is not a race
+    Thread.sleep(500)
+    LakeTable.delete(spark, t, col("id") === 1L) // v22: v1's file now referenced by v1..v21 only
+    (23 to 25).foreach { i =>
+      LakeTable.append(spark, t, Seq((i.toLong, s"r$i")).toDF("id", "s"))
+    }
+    def tailOpens(body: => Unit): Unit = {
+      CountingFileSystem.reset()
+      body
+      (21 to 25).foreach { v =>
+        val n = CountingFileSystem.openedUnder(f"/t/_graft_log/$v%020d.json").size
+        assert(n <= 1, s"v$v's log entry opened $n times")
+      }
+      val manifests = CountingFileSystem.openedUnder("_manifests")
+      assert(manifests.isEmpty, s"the tail read opened checkpoint segments: $manifests")
+    }
+    var hist: Array[org.apache.spark.sql.Row] = null
+    tailOpens { hist = LakeTable.history(spark, t).collect() }
+    assert(hist.map(_.getLong(0)).toSeq == (1L to 25L).reverse)
+    val ts = hist.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    tailOpens { assert(LakeTable.versionAtTimestamp(spark, t, ts(23L)) == 23L) }
+    // time-based retention cut between v21 and v22 keeps exactly v22..v25
+    def retainFrom22(): Option[Long] =
+      Some(System.currentTimeMillis() - (ts(21L) + ts(22L)) / 2)
+    val byCount = LakeTable.vacuum(spark, t, retainVersions = 4, graceMs = 0L, dryRun = true)
+    assert(byCount >= 1, "v1's file is reclaimable once v21 is out of retention")
+    assert(LakeTable.vacuum(spark, t, graceMs = 0L, dryRun = true,
+      retainMs = retainFrom22()) == byCount)
+    // a checkpoint without summaries (the earlier format) gives the same answers
+    val cp20 = java.nio.file.Paths.get(new java.net.URI(
+      "file:" + t.stripPrefix("cfs:") + f"/_graft_log/${20L}%020d.checkpoint.json"))
+    val stripped = {
+      import org.json4s._
+      import org.json4s.jackson.JsonMethods
+      val JObject(fields) =
+        JsonMethods.parse(new String(java.nio.file.Files.readAllBytes(cp20), "UTF-8")): @unchecked
+      assert(fields.exists(_._1 == "hist"))
+      JsonMethods.compact(JsonMethods.render(JObject(fields.filterNot(_._1 == "hist"))))
+    }
+    java.nio.file.Files.write(cp20, stripped.getBytes("UTF-8"))
+    assert(LakeTable.history(spark, t).collect().toSeq == hist.toSeq)
+    assert(LakeTable.versionAtTimestamp(spark, t, ts(23L)) == 23L)
+    assert(LakeTable.versionAtTimestamp(spark, t, ts(21L)) == 21L)
+    assert(LakeTable.vacuum(spark, t, graceMs = 0L, dryRun = true,
+      retainMs = retainFrom22()) == byCount)
+    assert(LakeTable.vacuum(spark, t, graceMs = 0L, retainMs = retainFrom22()) == byCount)
+    assert(LakeTable.read(spark, t, asOf = Some(22L)).count() == 20)
   }
 
   test("concurrent MERGEs into disjoint partitions both commit (rebase, no caller retry)") {

@@ -830,7 +830,7 @@ class LakeSpec extends SparkSpec {
     (1 to 23).foreach(i => LakeTable.overwrite(spark, t, df(i)))
 
     // the 20th commit rolled a checkpoint covering versions 1..20
-    val cp = java.nio.file.Paths.get(s"$t/_graft_log/_history_checkpoint")
+    val cp = java.nio.file.Paths.get(s"$t/_graft_log/00000000000000000020.checkpoint.json")
     assert(java.nio.file.Files.exists(cp))
     val expect = (1L to 23L).reverse
     val h1 = LakeTable.history(spark, t).collect()
@@ -926,32 +926,36 @@ class LakeSpec extends SparkSpec {
     LakeTable.overwrite(spark, t, Seq((1L, "a")).toDF("id", "s").coalesce(1)) // v1
     (2L to 6L).foreach(i =>
       LakeTable.append(spark, t, Seq((i, "x")).toDF("id", "s").coalesce(1)))
+    val snap6 = LakeTable.latestSnapshot(spark, t).get
     // corrupt v3's entry IN PLACE (an existing-but-unparsable file, the
     // case distinct from a missing one)
     val vf = new java.io.File(s"$t/_graft_log/${"%020d".format(3)}.json")
     val w = new java.io.FileWriter(vf); w.write("{not json"); w.close()
-    val m = LakeTable.getClass.getDeclaredMethod("writeHistoryCheckpoint",
-      classOf[org.apache.hadoop.fs.FileSystem], classOf[String], java.lang.Long.TYPE)
+    val m = LakeTable.getClass.getDeclaredMethod("writeSnapshotCheckpoint",
+      classOf[org.apache.spark.sql.SparkSession], classOf[org.apache.hadoop.fs.FileSystem],
+      classOf[String], classOf[LakeTable.Snapshot])
     m.setAccessible(true)
     val fsm = LakeTable.getClass.getDeclaredMethod("fs",
       classOf[org.apache.spark.sql.SparkSession], classOf[String])
     fsm.setAccessible(true)
     val f = fsm.invoke(LakeTable, spark, t).asInstanceOf[org.apache.hadoop.fs.FileSystem]
-    m.invoke(LakeTable, f, t, java.lang.Long.valueOf(6L))
+    m.invoke(LakeTable, spark, f, t, snap6)
     // every entry the checkpoint DOES record carries the true file count
     // (1 file per version here): v4+ must not be computed off v2's stale
     // count — they are either reconstructed correctly or skipped
     val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$t/_graft_log/_history_checkpoint")), "UTF-8")
-    val entries = org.json4s.jackson.JsonMethods.parse(txt) \ "entries"
+      java.nio.file.Paths.get(s"$t/_graft_log/${"%020d".format(6)}.checkpoint.json")), "UTF-8")
+    val entries = org.json4s.jackson.JsonMethods.parse(txt) \ "hist"
     import org.json4s._
-    entries.asInstanceOf[JArray].arr.foreach { e =>
-      val v = (e \ "v").asInstanceOf[JValue] match {
-        case JLong(x) => x; case JInt(x) => x.toLong; case _ => fail("bad v")
-      }
-      val nf = (e \ "nf") match {
-        case JLong(x) => x; case JInt(x) => x.toLong; case _ => fail("bad nf")
-      }
+    def num(j: JValue): Long = j match {
+      case JLong(x) => x; case JInt(x) => x.toLong; case _ => fail(s"bad number $j")
+    }
+    val rows = entries.asInstanceOf[JArray].arr
+    // v1 and v2 precede the corrupt entry: their counts are known
+    assert(rows.map(r => num(r(0))).take(2) == List(1L, 2L))
+    rows.foreach { e =>
+      val v = num(e(0))
+      val nf = num(e(3))
       assert(nf == v, s"history checkpoint records $nf files at v$v (true: $v)")
     }
   }

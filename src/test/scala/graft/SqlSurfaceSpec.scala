@@ -153,6 +153,23 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM fact_events_tbl").head.getLong(0) == before + 3)
   }
 
+  test("pinLake and registerLake find each table's newest version without listing its log") {
+    import graft.lake.LakeTable
+    import spark.implicits._
+    CountingFileSystem.install(spark.sparkContext.hadoopConfiguration)
+    val tmp = "cfs:" + java.nio.file.Files.createTempDirectory("sql_nolist").toString
+    val t = Pipeline.tablePath(tmp, "silver", "fact_events")
+    LakeTable.overwrite(spark, t, Seq((1L, "a")).toDF("id", "s"))
+    LakeTable.append(spark, t, Seq((2L, "b")).toDF("id", "s"))
+    CountingFileSystem.reset()
+    val pins = GraftCatalog.pinLake(spark, tmp)
+    assert(pins == Map("fact_events" -> 2L))
+    GraftCatalog.registerLake(spark, tmp)
+    assert(spark.sql("SELECT count(*) FROM fact_events_tbl").head.getLong(0) == 2L)
+    val listed = CountingFileSystem.listedUnder("_graft_log")
+    assert(listed.isEmpty, s"catalog registration listed table logs: $listed")
+  }
+
   test("INSERT INTO a registered lake view commits a lake version, visible live") {
     val tmp = java.nio.file.Files.createTempDirectory("sql_insert").toString
     Pipeline.runSilver(spark, sf, tmp)
