@@ -58,7 +58,7 @@ private[graft] object BloomIndex {
     * return its table-relative path. `physCols` are (physical name,
     * type, fpp): the scan reads exactly those columns by their known
     * types, through the entries' logged statuses
-    * ([[LakeTable.scanEntries]]); each entry's row count sizes its
+    * ([[LakeScan.scanEntries]]); each entry's row count sizes its
     * filters exactly. Returns None when nothing is flagged or no
     * column type is supported.
     */
@@ -84,7 +84,7 @@ private[graft] object BloomIndex {
     val sizes = entries.map(e => e.path -> math.max(64L, e.rowCount)).toMap
 
     val readSchema = StructType(cols.map { case (n, dt, _) => StructField(n, dt) })
-    val df = LakeTable.scanEntries(spark, table, readSchema, Nil, entries)
+    val df = LakeScan.scanEntries(spark, table, readSchema, Nil, entries)
       .select(col("_metadata.file_path").as("__f") +:
         names.zipWithIndex.map { case (n, i) =>
           if (kinds(i) == 1) col(n).cast("string").as(s"__c$i")

@@ -59,12 +59,15 @@ object GraftDataSource {
   *   .option("partitionBy", "event_date").save(path)                  // repartitioned overwrite
   * }}}
   *
-  * Read relations wrap a [[GraftFileIndex]], so the file list is
-  * re-resolved from the transaction log at every query planning — a
-  * registered view or long-lived DataFrame always reads the newest
-  * committed snapshot (the Glue+Trino behavior of the reference;
-  * VERDICT r4's one semantic gap). `versionAsOf` pins a version, which
-  * is the correct frozen semantics for time travel.
+  * Every read relation holds a live [[GraftFileIndex]], which resolves
+  * the snapshot from the transaction log once at creation and again at
+  * every query planning — a registered view or long-lived DataFrame
+  * always reads the newest committed snapshot (the Glue+Trino behavior
+  * of the reference). `versionAsOf` pins a version, which is the
+  * correct frozen semantics for time travel. A snapshot without
+  * deletion vectors reads as a [[GraftRelation]]; one with vectors as
+  * a [[GraftMorRelation]]. SQL inserts into either commit through
+  * [[GraftInsertCommand.insert]].
   *
   * This is deliberately the V1 `RelationProvider` extension point, not
   * DataSourceV2: returning a `HadoopFsRelation` reuses Spark's entire
@@ -137,20 +140,17 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
         s"versionAsOf must be a version number, got '$v'"))
     }.orElse(parameters.get("timestampAsOf").map(t =>
       LakeTable.versionAtTimestamp(spark, table, parseTimestampMs(t))))
-    // a snapshot carrying merge-on-read deletion vectors cannot be
-    // served by the HadoopFsRelation scan (it would read deleted rows
-    // back) — it resolves to the dv-applying composition relation
-    // instead, and back to this (faster, whole-stage-codegen) relation
-    // once compact reconciles the vectors away
-    val probe = asOf match {
-      case Some(v) => LakeTable.snapshotAt(spark, table, v)
-      case None => LakeTable.latestSnapshot(spark, table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version at $table"))
-    }
-    if (LakeTable.hasDv(probe))
-      return new GraftMorRelation(table, asOf, spark)
+    // the index resolves the snapshot once; the relation branches on it
+    // and the first scan reuses it. A snapshot carrying merge-on-read
+    // deletion vectors cannot be served by the HadoopFsRelation scan (it
+    // would read deleted rows back) — it resolves to the dv-applying
+    // composition relation instead, and back to this (faster,
+    // whole-stage-codegen) relation once compact reconciles the vectors
+    // away
     val index = new GraftFileIndex(spark, table, asOf)
-    val snap = index.snapshotNow()
+    val snap = index.initialSnapshot
+    if (LakeTable.hasDv(snap))
+      return new GraftMorRelation(index, spark)
     val partitionSchema = index.partitionSchema
     // The FULL snapshot schema serves as dataSchema, partition columns
     // included: HadoopFsRelation treats a partition column that also
@@ -186,7 +186,7 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
     // skip their exchange, and equality filters on the bucket column
     // prune to the matching bucket's files (see Bucketing)
     val bucketSpec = Bucketing.spec(snap.schema).map(Bucketing.toBucketSpec)
-    new GraftRelation(table, index, partitionSchema, dataSchema, fileFormat,
+    new GraftRelation(index, partitionSchema, dataSchema, fileFormat,
       relOptions, spark, bucketSpecArg = bucketSpec)
   }
 
@@ -373,23 +373,6 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
     new GraftSource(sqlContext.sparkSession, pathOf(parameters), parameters)
 }
 
-/** The relation `format("graft")` reads resolve to: a
-  * [[HadoopFsRelation]] over the live [[GraftFileIndex]] (Spark's whole
-  * native parquet scan path applies — vectorized reader, codegen,
-  * pushdown, pruning, and now file skipping), plus
-  * [[InsertableRelation]], which is what routes SQL DML
-  * (`INSERT INTO`/`INSERT OVERWRITE` on a `USING graft` catalog table
-  * or a registered live view) through the transaction log's
-  * transactional append/overwrite instead of Spark's raw
-  * write-files-into-the-directory command. The reference's entire write
-  * surface is SQL statements materializing Iceberg tables (ref: silver
-  * defs.yaml:22 `trino_sql` blocks); this is the analog.
-  *
-  * `INSERT OVERWRITE` keeps the table's partition layout (a metadata
-  * swap, like [[LakeTable.overwrite]]); static `PARTITION (...)` specs
-  * are rejected by [[graft.GraftExtensions]] — partition routing is
-  * automatic from the row values, as in Delta.
-  */
 /** Batch change-feed relation: the computed feed DataFrame behind the
   * `BaseRelation` surface so SQL (`CREATE TEMPORARY VIEW ... USING
   * graft`) can consume it. `needConversion = false` hands Spark the
@@ -408,8 +391,18 @@ private[graft] class GraftChangeFeedRelation(df: org.apache.spark.sql.DataFrame,
     df.queryExecution.toRdd.asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
 }
 
+/** The relation a vector-free snapshot reads as: a
+  * [[HadoopFsRelation]] over the live [[GraftFileIndex]], so Spark's
+  * whole native parquet scan path applies — vectorized reader,
+  * codegen, pushdown, partition pruning and file skipping. SQL
+  * `INSERT INTO`/`INSERT OVERWRITE` on a `USING graft` catalog table or
+  * a registered view commit through the transaction log
+  * ([[GraftTableRelation]]) instead of Spark's raw
+  * write-files-into-the-directory command. The reference's entire write
+  * surface is SQL statements materializing Iceberg tables (ref: silver
+  * defs.yaml:22 `trino_sql` blocks); this is the analog.
+  */
 private[graft] class GraftRelation(
-    val tablePath: String,
     val index: GraftFileIndex,
     partitionSchemaArg: StructType,
     dataSchemaArg: StructType,
@@ -419,28 +412,17 @@ private[graft] class GraftRelation(
     bucketSpecArg: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = None)
   extends HadoopFsRelation(index, partitionSchemaArg, dataSchemaArg,
     bucketSpec = bucketSpecArg, fileFormat, options)(spark)
-  with InsertableRelation {
+  with GraftTableRelation
 
-  override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    if (overwrite) {
-      // preserve the current layout: INSERT OVERWRITE replaces rows,
-      // never the partitioning. Under Spark's dynamic partition
-      // overwrite conf, a partitioned table replaces ONLY the
-      // partitions the incoming rows land in — the same semantics the
-      // conf selects on stock file-source tables, but transactional.
-      val parts = LakeTable.latestSnapshot(spark, tablePath)
-        .map(_.partitionColumns).getOrElse(Nil)
-      val dynamic = spark.conf
-        .get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-        .equalsIgnoreCase("dynamic")
-      if (dynamic && parts.nonEmpty)
-        LakeTable.overwritePartitions(spark, tablePath, data)
-      else
-        LakeTable.overwrite(spark, tablePath, data, parts)
-    } else {
-      LakeTable.append(spark, tablePath, data)
-    }
-    // this relation instance may serve the very next query
-    index.refresh()
-  }
+/** A relation `format("graft")` resolves to, plain or merge-on-read,
+  * with the live index behind it: the table path and any pinned
+  * version come from there. Spark plans an insert into a relation with
+  * no partition columns as `InsertIntoDataSourceCommand`, which calls
+  * [[insert]] directly; both routes end in [[GraftInsertCommand.insert]].
+  */
+private[graft] trait GraftTableRelation extends InsertableRelation {
+  def index: GraftFileIndex
+
+  override def insert(data: DataFrame, overwrite: Boolean): Unit =
+    GraftInsertCommand.insert(data.sparkSession, index, data, overwrite)
 }

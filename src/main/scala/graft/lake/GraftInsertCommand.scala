@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -9,43 +9,62 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
 /** SQL DML (`INSERT INTO` / `INSERT OVERWRITE`) on a graft table,
   * routed through the transaction log.
   *
-  * Spark's analyzer plans every insert into a `HadoopFsRelation` as
-  * [[InsertIntoHadoopFsRelationCommand]] — a RAW write of part files
-  * into the relation's directory, which for a lake table would bypass
-  * the log entirely: untracked files, no commit, the rows silently
-  * invisible to every log-driven reader. [[GraftInsertRule]] (injected
-  * by [[graft.GraftExtensions]] as a post-hoc resolution rule, so it
-  * runs AFTER `PreprocessTableInsertion` has already matched columns
-  * and inserted casts) rewrites that command into this one, which
-  * commits through [[LakeTable.append]]/[[LakeTable.overwrite]] —
-  * giving the reference's SQL write surface (every `trino_sql` block
-  * materializes an Iceberg table, ref: silver defs.yaml:22) a
+  * Spark's analyzer plans an insert into a data source relation one of
+  * two ways, and both end in [[GraftInsertCommand.insert]]:
+  *
+  *  - into a relation with partition columns (a partitioned plain
+  *    [[GraftRelation]]) as [[InsertIntoHadoopFsRelationCommand]] — a
+  *    RAW write of part files into the relation's directory, which for
+  *    a lake table would bypass the log entirely: untracked files, no
+  *    commit, the rows silently invisible to every log-driven reader.
+  *    [[GraftInsertRule]] rewrites it into this command;
+  *  - into any other `InsertableRelation` (an unpartitioned plain
+  *    relation, or a [[GraftMorRelation]], which reports no partition
+  *    columns to the analyzer) as `InsertIntoDataSourceCommand`, which
+  *    calls the relation's `insert` ([[GraftTableRelation]]).
+  *
+  * This gives the reference's SQL write surface (every `trino_sql`
+  * block materializes an Iceberg table, ref: silver defs.yaml:22) a
   * transactional analog.
   */
-final case class GraftInsertCommand(tablePath: String, query: LogicalPlan,
+final case class GraftInsertCommand(index: GraftFileIndex, query: LogicalPlan,
                                     overwrite: Boolean) extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(query)
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val data = org.apache.spark.sql.graft.SqlShims.ofRows(spark, query)
+    GraftInsertCommand.insert(spark, index,
+      org.apache.spark.sql.graft.SqlShims.ofRows(spark, query), overwrite)
+    Seq.empty
+  }
+}
+
+object GraftInsertCommand {
+
+  /** Commit one SQL insert into the table behind `index`: an append,
+    * or an overwrite that replaces rows and never the partition layout.
+    * Under Spark's dynamic partition-overwrite conf a partitioned table
+    * replaces ONLY the partitions the rows land in (the conf's own
+    * semantics on stock file sources, made transactional). A
+    * time-travel or fixed-file relation is read-only. The index is
+    * refreshed afterwards: its relation may serve the very next query.
+    */
+  private[lake] def insert(spark: SparkSession, index: GraftFileIndex, data: DataFrame,
+                           overwrite: Boolean): Unit = {
+    val table = index.tablePath
+    if (index.readOnly)
+      throw new IllegalArgumentException(
+        s"cannot INSERT into a time-travel (versionAsOf) or fixed-file graft relation of $table")
     if (overwrite) {
-      // INSERT OVERWRITE replaces rows, never the partition layout;
-      // under Spark's dynamic partition-overwrite conf a partitioned
-      // table replaces ONLY the partitions the rows land in (the conf's
-      // own semantics on stock file sources, made transactional)
-      val parts = LakeTable.latestSnapshot(spark, tablePath)
-        .map(_.partitionColumns).getOrElse(Nil)
+      val parts = LakeTable.latestSnapshot(spark, table).map(_.partitionColumns).getOrElse(Nil)
       val dynamic = spark.conf
         .get("spark.sql.sources.partitionOverwriteMode", "STATIC")
         .equalsIgnoreCase("dynamic")
-      if (dynamic && parts.nonEmpty)
-        LakeTable.overwritePartitions(spark, tablePath, data)
-      else
-        LakeTable.overwrite(spark, tablePath, data, parts)
+      if (dynamic && parts.nonEmpty) LakeTable.overwritePartitions(spark, table, data)
+      else LakeTable.overwrite(spark, table, data, parts)
     } else {
-      LakeTable.append(spark, tablePath, data)
+      LakeTable.append(spark, table, data)
     }
-    Seq.empty
+    index.refresh()
   }
 }
 
@@ -53,8 +72,7 @@ final case class GraftInsertCommand(tablePath: String, query: LogicalPlan,
   * [[GraftInsertCommand]] whenever the target relation is backed by a
   * [[GraftFileIndex]]. Static `PARTITION (col=value)` specs are
   * rejected loudly (they would route rows past the value-derived hive
-  * layout — partition routing is automatic, as in Delta); time-travel
-  * relations are read-only.
+  * layout — partition routing is automatic, as in Delta).
   */
 final class GraftInsertRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
@@ -66,10 +84,7 @@ final class GraftInsertRule extends Rule[LogicalPlan] {
               "static PARTITION specs are not supported on graft tables — partition " +
                 "routing is automatic from the row values (as in Delta); drop the " +
                 "PARTITION clause and include the column in the data")
-          if (idx.asOf.isDefined)
-            throw new IllegalArgumentException(
-              s"cannot INSERT into a time-travel (versionAsOf) graft relation of ${idx.tablePath}")
-          GraftInsertCommand(idx.tablePath, cmd.query, cmd.mode == SaveMode.Overwrite)
+          GraftInsertCommand(idx, cmd.query, cmd.mode == SaveMode.Overwrite)
         case _ => plan
       }
     case _ => plan

@@ -139,15 +139,11 @@ final case class GraftUpdateCommand(tablePath: String,
 
 final class GraftMergeRule extends Rule[LogicalPlan] {
 
-  /** The graft table (path, pinned version) behind a (possibly
-    * aliased/viewed) relation — plain or merge-on-read form.
+  /** The live index (table path, pinned version) behind a (possibly
+    * aliased/viewed) graft relation — plain or merge-on-read form.
     */
-  private final case class Target(tablePath: String, asOf: Option[Long])
-  private def graftIndex(plan: LogicalPlan): Option[Target] = plan match {
-    case LogicalRelation(rel: GraftRelation, _, _, _, _) =>
-      Some(Target(rel.index.tablePath, rel.index.asOf))
-    case LogicalRelation(rel: GraftMorRelation, _, _, _, _) =>
-      Some(Target(rel.tablePath, rel.asOf))
+  private def graftIndex(plan: LogicalPlan): Option[GraftFileIndex] = plan match {
+    case LogicalRelation(rel: GraftTableRelation, _, _, _, _) => Some(rel.index)
     case SubqueryAlias(_, child) => graftIndex(child)
     case View(_, _, child, _) => graftIndex(child)
     case _ => None

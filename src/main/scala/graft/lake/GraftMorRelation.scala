@@ -1,194 +1,70 @@
 package graft.lake
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SQLContext}
-import org.apache.spark.sql.catalyst.analysis.Resolver
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, PrunedFilteredScan}
-import org.apache.spark.sql.types.{StructField, StructType}
-
-/** Bridge from the V1 pushdown `sources.Filter` ADT back to (a) a
-  * `Column` predicate to apply inside the MoR composition — Catalyst
-  * then pushes it into the legs' parquet scans — and (b) a Catalyst
-  * expression for driver-side file skipping ([[DataSkipping]] /
-  * partition-path pruning). Both are BEST-EFFORT and sound-by-
-  * weakening: an untranslatable filter is simply not pushed (Spark
-  * re-evaluates every filter above the scan regardless —
-  * [[GraftMorRelation.unhandledFilters]] declares them all unhandled).
-  */
-private[lake] object SourceFilters {
-
-  /** Conjunct-weakening translation: And keeps whichever sides
-    * translate; Or/Not require the whole subtree (a weakened
-    * disjunct/negation would be UNSOUND to push).
-    */
-  def toColumn(f: Filter): Option[Column] = f match {
-    case sources.And(l, r) => (toColumn(l), toColumn(r)) match {
-      case (Some(a), Some(b)) => Some(a && b)
-      case (a, b)             => a.orElse(b)
-    }
-    case sources.Or(l, r) =>
-      for { a <- toColumn(l); b <- toColumn(r) } yield a || b
-    case sources.Not(c)                   => toColumn(c).map(!_)
-    case sources.EqualTo(a, v)            => Some(col(a) === lit(v))
-    case sources.EqualNullSafe(a, v)      => Some(col(a) <=> lit(v))
-    case sources.GreaterThan(a, v)        => Some(col(a) > lit(v))
-    case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case sources.LessThan(a, v)           => Some(col(a) < lit(v))
-    case sources.LessThanOrEqual(a, v)    => Some(col(a) <= lit(v))
-    case sources.In(a, vs)                => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case sources.IsNull(a)                => Some(col(a).isNull)
-    case sources.IsNotNull(a)             => Some(col(a).isNotNull)
-    case sources.StringStartsWith(a, v)   => Some(col(a).startsWith(v))
-    case sources.StringEndsWith(a, v)     => Some(col(a).endsWith(v))
-    case sources.StringContains(a, v)     => Some(col(a).contains(v))
-    case sources.AlwaysTrue()             => Some(lit(true))
-    case sources.AlwaysFalse()            => Some(lit(false))
-    case _                                => None
-  }
-
-  /** Catalyst form for the driver-side provers. Unknown shapes drop to
-    * None — [[DataSkipping]] keeps any file it cannot disprove, so
-    * weakening stays sound.
-    */
-  def toExpr(f: Filter, schema: StructType, resolver: Resolver): Option[Expression] = {
-    import org.apache.spark.sql.catalyst.{expressions => E}
-    def attr(name: String): Option[(E.AttributeReference, StructField)] =
-      schema.fields.find(fl => resolver(fl.name, name))
-        .map(fl => (E.AttributeReference(fl.name, fl.dataType, nullable = true)(), fl))
-    def bin(a: String, v: Any, mk: (Expression, Expression) => Expression): Option[Expression] =
-      attr(a).flatMap { case (ar, fl) =>
-        scala.util.Try(mk(ar, Literal.create(v, fl.dataType))).toOption
-      }
-    f match {
-      case sources.And(l, r) =>
-        (toExpr(l, schema, resolver), toExpr(r, schema, resolver)) match {
-          case (Some(a), Some(b)) => Some(E.And(a, b))
-          case (a, b)             => a.orElse(b)
-        }
-      case sources.Or(l, r) =>
-        for { a <- toExpr(l, schema, resolver); b <- toExpr(r, schema, resolver) }
-          yield E.Or(a, b)
-      case sources.EqualTo(a, v)            => bin(a, v, E.EqualTo(_, _))
-      case sources.EqualNullSafe(a, v)      => bin(a, v, E.EqualNullSafe(_, _))
-      case sources.GreaterThan(a, v)        => bin(a, v, E.GreaterThan(_, _))
-      case sources.GreaterThanOrEqual(a, v) => bin(a, v, E.GreaterThanOrEqual(_, _))
-      case sources.LessThan(a, v)           => bin(a, v, E.LessThan(_, _))
-      case sources.LessThanOrEqual(a, v)    => bin(a, v, E.LessThanOrEqual(_, _))
-      case sources.In(a, vs) =>
-        attr(a).flatMap { case (ar, fl) =>
-          scala.util.Try(
-            E.In(ar, vs.toIndexedSeq.map(v => Literal.create(v, fl.dataType)))).toOption
-        }
-      case sources.IsNull(a)    => attr(a).map { case (ar, _) => E.IsNull(ar) }
-      case sources.IsNotNull(a) => attr(a).map { case (ar, _) => E.IsNotNull(ar) }
-      case _                    => None
-    }
-  }
-}
+import org.apache.spark.sql.{Row, SparkSession, SQLContext}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Expression, PlanExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter => FilterPlan, Project}
+import org.apache.spark.sql.graft.SqlShims
+import org.apache.spark.sql.sources.{BaseRelation, CatalystScan, Filter}
+import org.apache.spark.sql.types.StructType
 
 /** The relation `format("graft")` resolves to when the snapshot
   * carries merge-on-read deletion vectors. The plain
   * [[GraftRelation]]'s `HadoopFsRelation` scan cannot serve such a
   * snapshot (it would read deleted rows back), so this relation plans
-  * the [[LakeTable.morScan]] composition per query instead: dv-free
+  * the [[LakeScan.morScan]] composition per query instead: dv-free
   * files through the stock parquet path, dv-bearing files anti-joined
   * against their vectors on `(_metadata.file_path,
   * _metadata.row_index)`.
   *
-  * Scan economics: `PrunedFilteredScan` hands this relation the pushed
-  * filters and required columns; translatable filters are applied
-  * INSIDE the composition (Catalyst pushes them into both legs'
-  * parquet scans) and drive the same driver-side file skipping the
-  * file index gives dv-free tables ([[LakeTable.prunedEntries]]), so a
-  * point lookup still reads ~1 file. Every filter is also declared
-  * unhandled, so Spark re-evaluates above the scan — pushing is purely
-  * an optimization and partial translation stays sound. Live-read
-  * semantics match [[GraftFileIndex]]: the snapshot re-resolves per
-  * scan; schema/layout drift fails loudly with a re-register hint;
-  * `asOf` pins. Tables reconcile back to the plain relation (and
-  * whole-stage codegen over `HadoopFsRelation`) after a
+  * It holds the same live [[GraftFileIndex]] a plain relation does,
+  * which resolves the snapshot per scan (`asOf` pins), fails loudly on
+  * schema or layout drift with a re-register hint, and sizes the
+  * relation. As a `CatalystScan` it receives Spark's predicates as
+  * Catalyst expressions: the deterministic, subquery-free ones prune
+  * the snapshot's files through [[LakeScan.prune]] — the pruning the
+  * index gives a plain relation, so a point lookup still reads ~1
+  * file — and apply INSIDE the composition, where Catalyst pushes them
+  * into both legs' parquet scans. Every predicate is also declared
+  * unhandled, so Spark re-evaluates it above the scan and pushing stays
+  * a pure optimization. Tables reconcile back to the plain relation
+  * (and whole-stage codegen over `HadoopFsRelation`) after a
   * [[LakeTable.compact]] clears their vectors — the read path is the
   * merge-on-read TAX, compact is the amortization.
   */
-private[graft] class GraftMorRelation(val tablePath: String,
-                                      val asOf: Option[Long],
-                                      spark: SparkSession)
-    extends BaseRelation with PrunedFilteredScan with InsertableRelation {
-
-  private def resolveSnap(): LakeTable.Snapshot = asOf match {
-    case Some(v) => LakeTable.snapshotAt(spark, tablePath, v)
-    case None => LakeTable.latestSnapshot(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $tablePath"))
-  }
-
-  private val initialSnapshot = resolveSnap()
+private[graft] class GraftMorRelation(val index: GraftFileIndex, spark: SparkSession)
+    extends BaseRelation with CatalystScan with GraftTableRelation {
 
   override def sqlContext: SQLContext = spark.sqlContext
 
   /** Full snapshot schema, partition columns in place (same contract
     * as [[GraftRelation]] — registered views stay INSERT-able).
     */
-  override val schema: StructType = GraftDataSource.asNullable(initialSnapshot.schema)
-
-  val partitionSchema: StructType = GraftDataSource.asNullable(
-    StructType(initialSnapshot.partitionColumns.map(initialSnapshot.schema(_))))
+  override val schema: StructType = GraftDataSource.asNullable(index.initialSnapshot.schema)
 
   override def needConversion: Boolean = false
 
-  override def sizeInBytes: Long =
-    initialSnapshot.files.map(e => math.max(e.size, 0L)).sum
+  override def sizeInBytes: Long = index.sizeInBytes
 
-  /** Current snapshot with [[GraftFileIndex]]'s staleness discipline:
-    * a schema/layout change under a live plan fails loudly, never
-    * serves stale columns.
-    */
-  def snapshotChecked(): LakeTable.Snapshot = {
-    val snap = resolveSnap()
-    if (snap.partitionColumns != initialSnapshot.partitionColumns)
-      throw new IllegalStateException(
-        s"partition layout of $tablePath changed at v${snap.version} since this " +
-          s"relation was registered at v${initialSnapshot.version} — re-register " +
-          "the view (REFRESH TABLE / re-create it) to pick up the new layout")
-    if (GraftDataSource.asNullable(snap.schema) != schema)
-      throw new IllegalStateException(
-        s"schema of $tablePath evolved at v${snap.version} since this relation " +
-          s"was registered at v${initialSnapshot.version} — re-register the view " +
-          "(REFRESH TABLE / re-create it) to read the evolved schema")
-    snap
-  }
-
-  // every filter re-evaluates above the scan; pushing below is a pure
-  // optimization, so partial/weakened translation can never drop rows
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
 
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter]): RDD[Row] = {
-    val snap = snapshotChecked()
+  override def buildScan(requiredColumns: Seq[Attribute],
+                         filters: Seq[Expression]): RDD[Row] = {
+    val snap = index.snapshot()
+    val pushable = filters.filter(f =>
+      f.deterministic && !f.exists(_.isInstanceOf[PlanExpression[_]]))
+    val table = index.tablePath
+    val plan = LakeScan.morScan(spark, table, snap, LakeScan.prune(spark, table, snap, pushable),
+      keepPos = false).queryExecution.analyzed
     val resolver = spark.sessionState.conf.resolver
-    val exprs = filters.toSeq.flatMap(SourceFilters.toExpr(_, schema, resolver))
-    val entries = LakeTable.prunedEntries(spark, tablePath, snap, exprs)
-    val base = LakeTable.morScan(spark, tablePath, snap, entries, keepPos = false)
-    val pushed = filters.toSeq.flatMap(SourceFilters.toColumn)
-    val filtered = pushed.foldLeft(base)(_ filter _)
-    val pruned = filtered.select(requiredColumns.toIndexedSeq.map(col): _*)
+    def rebind(a: Attribute): Attribute = plan.output.find(o => resolver(o.name, a.name))
+      .getOrElse(throw new IllegalStateException(s"column ${a.name} is not in the scan of $table"))
+    val filtered = pushable.map(_.transform { case a: AttributeReference => rebind(a) })
+      .reduceOption(And).fold(plan)(FilterPlan(_, plan))
     // needConversion = false: hand Spark the plan's InternalRows
     // directly (the V1 contract for catalyst-row relations) — the
     // underlying parquet scans keep codegen, the join stays distributed
-    pruned.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
-
-  override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    if (overwrite) {
-      // preserve the current layout: INSERT OVERWRITE replaces rows,
-      // never the partitioning
-      val parts = LakeTable.latestSnapshot(spark, tablePath)
-        .map(_.partitionColumns).getOrElse(Nil)
-      LakeTable.overwrite(spark, tablePath, data, parts)
-    } else {
-      LakeTable.append(spark, tablePath, data)
-    }
+    SqlShims.ofRows(spark, Project(requiredColumns.map(rebind), filtered))
+      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 }

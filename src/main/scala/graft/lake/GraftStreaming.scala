@@ -255,7 +255,7 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
         checkSchemaPinned(endV, snap.schema, snap.partitionColumns)
         if (snap.files.isEmpty) Seq.empty
         else {
-          Seq(LakeTable.morScan(spark, table, snap, snap.files, keepPos = false)
+          Seq(LakeScan.morScan(spark, table, snap, snap.files, keepPos = false)
             .withColumn(LakeTable.ChangeTypeCol, org.apache.spark.sql.functions.lit("insert"))
             .withColumn(LakeTable.CommitVersionCol, org.apache.spark.sql.functions.lit(endV))
             .withColumn(LakeTable.CommitTimestampCol,
@@ -286,16 +286,9 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
       return changeFeedBatch(start.map(versionOf).orElse(startingVersion), endV)
     val files: Seq[LakeTable.FileEntry] = start.map(versionOf).orElse(startingVersion) match {
       case None =>
-        // initial batch: the whole table as of endV. A snapshot with
-        // outstanding deletion vectors reads through the dv-applying
-        // composition — the raw file list would resurrect deleted rows.
+        // initial batch: the whole table as of endV
         val snap = LakeTable.snapshotAt(spark, table, endV)
         checkSchemaPinned(endV, snap.schema, snap.partitionColumns)
-        if (LakeTable.hasDv(snap)) {
-          val df = LakeTable.morScan(spark, table, snap, snap.files, keepPos = false)
-            .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-          return SqlShims.asStreaming(df)
-        }
         snap.files
       case Some(startV) =>
         // one log-entry read per commit in the range: a delta names its
@@ -342,8 +335,10 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
         spark.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
         schema, isStreaming = true)
     } else {
-      SqlShims.asStreaming(LakeTable.readDataFiles(spark, table, initialSnapshot.schema,
-        initialSnapshot.partitionColumns, files))
+      // outstanding deletion vectors apply: the raw file list would
+      // resurrect deleted rows
+      SqlShims.asStreaming(LakeScan.morScan(spark, table, initialSnapshot, files,
+        keepPos = false))
     }
   }
 

@@ -2,8 +2,6 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.json4s._
@@ -1424,7 +1422,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     // vectors (e.g. a RESTORE re-referencing dv'd entries) whose
     // deleted rows must not appear in synthesized change rows
     def readEntries(entries: Seq[FileEntry], schema: StructType): DataFrame =
-      morScan(spark, table,
+      LakeScan.morScan(spark, table,
         Snapshot(v, e.timestampMs, e.operation, schema, e.partitionColumns, entries),
         entries, keepPos = false)
     def emptyChanges: DataFrame = decorate(
@@ -1450,7 +1448,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       // recorded change files carry the commit's columns + _change_type
       val feedSchema = GraftDataSource.asNullable(e.schema)
         .add(ChangeTypeCol, org.apache.spark.sql.types.StringType)
-      val recorded = decorate(scanEntries(spark, table, feedSchema, Nil,
+      val recorded = decorate(LakeScan.scanEntries(spark, table, feedSchema, Nil,
         e.cdc.get.map(rel => FileEntry(rel, -1L, -1L, -1L, Map.empty)),
         base = Some(new Path(table))), None)
       Some(removedFullDeletes.fold(recorded)(d =>
@@ -1594,63 +1592,15 @@ object LakeTable extends org.apache.spark.internal.Logging {
   private[lake] def entryPath(dataRoot: Path, rel: String): Path =
     if (isForeignEntry(rel)) new Path(rel) else new Path(dataRoot, rel)
 
-  /** One parquet scan over `entries` of `table`, straight from the log:
-    * a `HadoopFsRelation` over a [[PinnedFileIndex]], so building it
-    * lists no directory and infers no schema. `physSchema` is the full
-    * PHYSICAL read schema, partition columns in place (as in
-    * [[GraftDataSource]]'s relation); their values parse from each
-    * file's `k=v` dirs. Entry paths are relative to `base` (the data
-    * root unless given); local and foreign (cloned) entries read in the
-    * same scan, and `_metadata` columns are available on the result.
-    */
-  private[lake] def scanEntries(spark: SparkSession, table: String, physSchema: StructType,
-                                partitionColumns: Seq[String], entries: Seq[FileEntry],
-                                base: Option[Path] = None): DataFrame = {
-    val partitionSchema = StructType(partitionColumns.map(physSchema(_)))
-    val index = new PinnedFileIndex(spark, table, base.getOrElse(dataPath(table)), entries,
-      partitionSchema)
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema, physSchema,
-      None, new ParquetFileFormat, Map.empty)(spark))
-  }
-
-  /** The logical columns of `schema` over a [[scanEntries]] frame read
-    * with its physical schema: for column mapping, the scan requests
-    * the PHYSICAL names (deep-nullable — evolved columns are absent
-    * from old files) and this renames back, in schema order. Identity
-    * for unmapped tables.
-    */
-  private def logicalColumns(schema: StructType): Seq[Column] =
-    schema.fields.toSeq.map(f => col(ColumnMapping.physicalName(f)).as(f.name))
-
-  /** Read specific data files of a snapshot directly (the rewrite /
-    * feed / streaming paths that bypass the registered source) through
-    * one [[scanEntries]] scan, translated for column mapping
-    * ([[logicalColumns]]). The statuses come from the entries' logged
-    * sizes and mtimes; an entry of unknown size costs one stat.
-    */
-  private[lake] def readDataFiles(spark: SparkSession, table: String,
-                                  schema: StructType, partitionColumns: Seq[String],
-                                  entries: Seq[FileEntry]): DataFrame = {
-    val nullable = GraftDataSource.asNullable(schema)
-    scanEntries(spark, table, ColumnMapping.physicalSchema(nullable), partitionColumns, entries)
-      .select(logicalColumns(nullable): _*)
-  }
-
   // ------------------------------------------------- merge-on-read reads
   //
-  // A snapshot whose entries carry deletion vectors cannot be served by
-  // the plain HadoopFsRelation scan (it would read deleted rows back).
-  // The MoR scan is a two-leg composition. Dv-free files read through
-  // one [[scanEntries]] scan whose statuses come from the log, so the
-  // leg lists nothing however many files it covers. Dv-bearing files
-  // read the same way, WITH the parquet reader's per-file physical row
-  // index (`_metadata.row_index` — computed correctly even under splits
-  // and row-group skipping), and are LEFT-ANTI joined against the
-  // referenced deletion-vector rows on (file, position); those rows
-  // still read as parquet directories under `_deletes/`. The dv side is
-  // bounded by deleted-row count (the point-delete case this path
-  // exists for), so it broadcasts; user filters sit above one logical
-  // plan and push into both legs' parquet scans via Catalyst as usual.
+  // A snapshot whose entries carry deletion vectors reads through the
+  // merge-on-read composition, [[LakeScan.morScan]]: dv-free files as
+  // the plain scan reads them, dv-bearing files anti-joined against
+  // their vectors on (file, row position). Every scan of log entries —
+  // that composition, the pinned scans under it, the one pruner — lives
+  // in LakeScan.scala; these are the file-identity columns and prefixes
+  // DML keys its vectors by.
 
   /** Column names the MoR scan uses for file identity + row position.
     * Underscored like Delta's internal columns; dropped before rows
@@ -1676,172 +1626,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
     */
   private[lake] def scanDataPrefix(spark: SparkSession, table: String): String =
     scanFormPath(fs(spark, table).makeQualified(dataPath(table))) + "/"
-
-  /** Threshold (rows) under which the dv side of the MoR anti-join is
-    * broadcast. Above it the join falls back to a shuffle — correct but
-    * a sign the table wants a [[compact]] to reconcile its vectors.
-    */
-  private def dvBroadcastRows(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.dv.broadcastRows").map(_.toLong).getOrElse(1000000L)
-
-  /** All (file-relative-path, position) rows of the given entries'
-    * deletion vectors. May contain rows for OTHER files sharing a dv
-    * directory — callers join/filter by file, so extras are inert.
-    */
-  private[lake] def dvRows(spark: SparkSession, table: String, entries: Seq[FileEntry]): DataFrame = {
-    val dirs = entries.flatMap(_.dv.map(_.path)).distinct
-    val schema = StructType(Seq(StructField("p", org.apache.spark.sql.types.StringType),
-      StructField("pos", org.apache.spark.sql.types.LongType)))
-    spark.read.schema(schema).parquet(dirs.map(rel => new Path(table, rel).toString): _*)
-  }
-
-  /** [[readDataFiles]] plus the scan's file path and physical row
-    * position as [[FilePathCol]]/[[RowPosCol]].
-    */
-  private def readDataFilesWithPos(spark: SparkSession, table: String, snap: Snapshot,
-                                   entries: Seq[FileEntry]): DataFrame = {
-    val nullable = GraftDataSource.asNullable(snap.schema)
-    scanEntries(spark, table, ColumnMapping.physicalSchema(nullable), snap.partitionColumns,
-      entries)
-      .select(logicalColumns(nullable) :+ col("_metadata.file_path").as(FilePathCol)
-        :+ col("_metadata.row_index").as(RowPosCol): _*)
-  }
-
-  /** Scan `entries` of `snap` with their deletion vectors applied.
-    * Output columns are the snapshot's logical schema, plus
-    * [[FilePathCol]]/[[RowPosCol]] when `keepPos` (the detection-scan
-    * form — the DV-safe replacement for `input_file_name()`).
-    */
-  private[lake] def morScan(spark: SparkSession, table: String, snap: Snapshot,
-                            entries: Seq[FileEntry], keepPos: Boolean): DataFrame = {
-    val (dvd, plain) = entries.partition(_.dv.isDefined)
-    val dvdLeg = if (dvd.isEmpty) None else Some {
-      val df = readDataFilesWithPos(spark, table, snap, dvd)
-      val prefix = scanDataPrefix(spark, table)
-      // a CLONED vector's rows key on the source files' ABSOLUTE URIs
-      // (shallowClone re-keys them — foreign entries live outside this
-      // table's data root); local rows stay data-root-relative
-      val del = dvRows(spark, table, dvd)
-        .select(when(col("p").startsWith("/") || col("p").contains(":/"), col("p"))
-          .otherwise(concat(lit(prefix), col("p"))).as("__dv_file"),
-          col("pos").as("__dv_pos"))
-      val card = dvd.flatMap(_.dv).map(_.cardinality).sum
-      val delHinted = if (card <= dvBroadcastRows(spark)) broadcast(del) else del
-      val kept = df.join(delHinted,
-        df(FilePathCol) === delHinted("__dv_file") &&
-          df(RowPosCol) === delHinted("__dv_pos"), "left_anti")
-      if (keepPos) kept else kept.drop(FilePathCol, RowPosCol)
-    }
-    val plainLeg =
-      if (plain.isEmpty) None
-      else if (keepPos) Some(readDataFilesWithPos(spark, table, snap, plain))
-      else Some(readDataFiles(spark, table, snap.schema, snap.partitionColumns, plain))
-    (plainLeg, dvdLeg) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case (None, None) =>
-        val base = GraftDataSource.asNullable(snap.schema)
-        val shape =
-          if (!keepPos) base
-          else StructType(base.fields ++ Seq(
-            StructField(FilePathCol, org.apache.spark.sql.types.StringType),
-            StructField(RowPosCol, org.apache.spark.sql.types.LongType)))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], shape)
-    }
-  }
-
-  /** [[readDataFiles]] with the snapshot's deletion vectors applied —
-    * what every rewrite/feed path that means LIVE rows must use.
-    * Identical plan to [[readDataFiles]] when none of the requested
-    * files carries a dv. A path the snapshot does not name reads with
-    * an unknown size, so its scan stats it once.
-    */
-  private[lake] def readDataFilesLive(spark: SparkSession, table: String,
-                                      snap: Snapshot,
-                                      relPaths: Seq[String]): DataFrame = {
-    val byPath = snap.files.iterator.map(e => e.path -> e).toMap
-    val entries = relPaths.map(p =>
-      byPath.getOrElse(p, FileEntry(p, -1L, -1L, -1L, Map.empty)))
-    if (entries.forall(_.dv.isEmpty))
-      readDataFiles(spark, table, snap.schema, snap.partitionColumns, entries)
-    else morScan(spark, table, snap, entries, keepPos = false)
-  }
-
-  /** Best-effort resolution of a user `Column` predicate against a
-    * schema, split into conjuncts — feeds driver-side file pruning
-    * ([[prunedEntries]]). Empty on any resolution failure: pruning is
-    * an optimization, never a gate.
-    */
-  private[lake] def resolvedConjuncts(spark: SparkSession, schema: StructType,
-                                      condition: Column): Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression}
-    def split(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => split(l) ++ split(r)
-      case other      => Seq(other)
-    }
-    try {
-      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        GraftDataSource.asNullable(schema))
-      empty.filter(condition).queryExecution.analyzed.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => split(f.condition)
-      }.flatten.map(foldConstants)
-    } catch { case scala.util.control.NonFatal(_) => Nil }
-  }
-
-  /** Fold foldable subtrees to Literals — the analyzed plan (which
-    * [[resolvedConjuncts]] reads; the OPTIMIZED plan of an empty
-    * relation eliminates the filter altogether) leaves computed
-    * constants like `timestamp_micros(1700000000L)` as calls, which no
-    * bounds proof pattern-matches. Evaluation is safe: foldable implies
-    * deterministic and input-free.
-    */
-  private def foldConstants(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    e.transformUp {
-      case f if f.foldable && !f.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal] =>
-        org.apache.spark.sql.catalyst.expressions.Literal.create(f.eval(null), f.dataType)
-    }
-
-  /** The snapshot's entries pruned driver-side by the resolved
-    * conjuncts: hive partition-value evaluation for conjuncts touching
-    * only partition columns, [[DataSkipping]] bounds for the rest —
-    * the same pruning [[GraftFileIndex.listFiles]] gives a relation
-    * scan, for the MoR paths that plan their own file list. A point
-    * delete on a clustered key reads ~1 file, not the table.
-    */
-  private[lake] def prunedEntries(spark: SparkSession, table: String, snap: Snapshot,
-                                  conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[FileEntry] = {
-    if (conds.isEmpty || snap.files.isEmpty) return snap.files
-    val resolver = spark.sessionState.conf.resolver
-    val pSchema = GraftDataSource.asNullable(
-      StructType(snap.partitionColumns.map(snap.schema(_))))
-    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
-    val (pConds0, rest) = conds.partition(c =>
-      PartitionPaths.evaluableOnPartitions(Seq(c), pSchema, resolver))
-    // hidden partitioning: data predicates on a generated column's
-    // source imply partition predicates on the transform target
-    val gens = GeneratedColumns.specs(snap.schema).filter(s =>
-      snap.partitionColumns.contains(s.target) &&
-        !snap.partitionColumns.contains(s.source))
-    val pConds = pConds0 ++ GeneratedColumns.synthesize(rest, gens, pSchema, resolver)
-    val pPred = if (pConds.isEmpty) None
-      else Some(PartitionPaths.bind(pConds, pSchema, resolver))
-    val nameMap = ColumnMapping.mapping(snap.schema)
-    val dataSchema = ColumnMapping.physicalSchema(
-      StructType(snap.schema.filterNot(f => snap.partitionColumns.contains(f.name))))
-    val physConds =
-      if (ColumnMapping.needsTranslation(snap.schema))
-        rest.map(ColumnMapping.physicalizeExpr(_, nameMap))
-      else rest
-    val probes = BloomIndex.equalityProbes(physConds, dataSchema, resolver)
-    val f = fs(spark, table)
-    snap.files.filter { e =>
-      val pOk = pPred.forall(_.eval(PartitionPaths.valuesOf(e.path, pSchema, tz)))
-      pOk && !DataSkipping.skip(physConds, dataSchema, resolver, e) &&
-        !BloomIndex.skip(f, table, e, probes)
-    }
-  }
 
   /** Incoming write schema decorated for the target's column mapping:
     * fields whose name the snapshot knows take its physical name; new
@@ -2631,7 +2415,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * of GDPR-style point deletes against a fact table: CoW rewrites the
     * table; this writes kilobytes.
     *
-    * Reads apply the vectors via [[morScan]]; [[compact]] reconciles
+    * Reads apply the vectors via [[LakeScan.morScan]]; [[compact]] reconciles
     * them back into clean files; the change feed records the deleted
     * rows at commit time exactly like CoW. A file whose every row is
     * deleted is simply REMOVED from the snapshot (no vector needed), and
@@ -2881,7 +2665,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     // per task ⇒ each rewritten file lands near the parquet sweet spot.
     val targetTasks = math.max(1,
       math.ceil(picked.map(_._2).sum.toDouble / targetFileBytes).toInt)
-    val packed = readDataFilesLive(spark, table, snap, set.map(_.path))
+    val packed = LakeScan.readDataFilesLive(spark, table, snap, set.map(_.path))
     // partition cols lead the range-partitioning and the sort, so the
     // write path's required ordering is already satisfied and it does
     // not re-sort (which would destroy the clustering)
@@ -3387,7 +3171,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val dvDir: Option[String] =
       if (dvd.isEmpty) None
       else {
-        val rows = dvRows(spark, src, dvd)
+        val rows = LakeScan.dvRows(spark, src, dvd)
           .filter(col("p").isInCollection(dvd.map(scanKey)))
           // re-key into scan-form ABSOLUTE URIs (stored local keys are
           // scan-form relative, so the concat stays in the scan domain)

@@ -89,10 +89,9 @@ class MetadataOnlyAgg extends Rule[LogicalPlan] {
     * collected condition could then reference an alias this rule would
     * mis-bind.
     */
-  private def graftScan(plan: LogicalPlan): Option[(Either[GraftRelation, GraftMorRelation], Seq[Expression])] =
+  private def graftScan(plan: LogicalPlan): Option[(GraftFileIndex, Seq[Expression])] =
     plan match {
-      case LogicalRelation(rel: GraftRelation, _, _, false, _)    => Some((Left(rel), Nil))
-      case LogicalRelation(rel: GraftMorRelation, _, _, false, _) => Some((Right(rel), Nil))
+      case LogicalRelation(rel: GraftTableRelation, _, _, false, _) => Some((rel.index, Nil))
       case Project(projectList, child)
           if projectList.forall(_.isInstanceOf[AttributeReference]) =>
         graftScan(child)
@@ -133,13 +132,11 @@ class MetadataOnlyAgg extends Rule[LogicalPlan] {
     case agg @ Aggregate(Nil, aggExprs, child, _)
         if aggExprs.nonEmpty && aggExprs.forall(e => aggOf(e).isDefined) =>
       graftScan(child) match {
-        case Some((relE, conds)) =>
+        case Some((index, conds)) =>
           // checked: an evolved/re-partitioned table fails as loudly
           // here as the scan this answer replaces would
-          val (snap, pSchema) = relE match {
-            case Left(rel)  => (rel.index.snapshotChecked(), rel.index.partitionSchema)
-            case Right(rel) => (rel.snapshotChecked(), rel.partitionSchema)
-          }
+          val snap = index.snapshot()
+          val pSchema = index.partitionSchema
           val tz = Option(conf.sessionLocalTimeZone)
           val resolver = conf.resolver
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import LakeTable._
+import LakeScan.{dvRows, morScan, readDataFilesLive, resolvedConjuncts}
 
 /** The one row-level-operation core behind every DML entry point of
   * [[LakeTable]] — copy-on-write (CoW) and merge-on-read (MoR) MERGE,
@@ -18,7 +19,7 @@ import LakeTable._
   *     statement's footprint predicate;
   *  1. drop whole files from metadata alone ([[provablyCoveredFiles]],
   *     DELETE only) and prune the candidate files driver-side
-  *     ([[prunedEntries]]);
+  *     ([[LakeScan.prune]]);
   *  1. one detection collect over the candidates: the files holding a
   *     claimed row with their per-file claimed-row counts (the SQL
   *     MERGE cardinality check rides it as a sentinel row);
@@ -154,7 +155,7 @@ private[lake] object RowLevelOps {
         provablyCoveredFiles(spark, snap, conds)
       else Nil
     val droppedSet = dropped.toSet
-    val cands = prunedEntries(spark, table,
+    val cands = LakeScan.prune(spark, table,
       snap.copy(files = snap.files.filterNot(e => droppedSet(e.path))), conds)
 
     // ---- detection: the claimed rows, plus (when inserting) every
@@ -395,7 +396,7 @@ private[lake] object RowLevelOps {
         val winnersAdds = newest.files.filterNot(e => curByPath.get(e.path).contains(e))
         if (conds.isEmpty && winnersAdds.nonEmpty)
           refuse("the predicate did not resolve for a disjointness proof")
-        val mightMatch = prunedEntries(spark, table, newest.copy(files = winnersAdds), conds)
+        val mightMatch = LakeScan.prune(spark, table, newest.copy(files = winnersAdds), conds)
         if (mightMatch.nonEmpty)
           refuse(s"the winner added file(s) the predicate cannot be proven to miss " +
             s"(e.g. ${mightMatch.head.path})")

@@ -351,6 +351,37 @@ class DeleteVectorSpec extends SparkSpec {
     assert(got == Seq(-1.0))
   }
 
+  test("filtered SELECT through the merge-on-read relation prunes files") {
+    CountingFileSystem.install(spark.sparkContext.hadoopConfiguration)
+    val d = java.nio.file.Files.createTempDirectory("dv_selprune").toString
+    val t = s"cfs:$d/t"
+    // four range tasks, each inside one partition: four files, two per half
+    LakeTable.overwrite(spark, t,
+      spark.range(1, 101).select(col("id"), (col("id") * 1.5).as("v"),
+        when(col("id") <= 50L, "a").otherwise("b").as("half"))
+        .repartitionByRange(4, col("id")),
+      partitionBy = Seq("half"))
+    LakeTable.deleteMergeOnRead(spark, t, col("id") === 3L)
+    val snap = LakeTable.latestSnapshot(spark, t).get
+    assert(snap.files.size == 4 && snap.files.count(_.dv.isDefined) == 1, snap.files)
+    def opened(): Set[String] = CountingFileSystem.openedUnder(s"$d/t/data/")
+      .filter(_.endsWith(".parquet")).toSet
+    val df = spark.read.format("graft").load(t)
+
+    CountingFileSystem.reset()
+    assert(df.filter(col("id") === 57L).select("v").as[Double].collect().toSeq == Seq(85.5))
+    val admits57 = snap.files.filter(e => e.stats.get("id").exists(s =>
+      s.min.exists(_.toLong <= 57L) && s.max.exists(_.toLong >= 57L)))
+    assert(admits57.size == 1, admits57)
+    assert(opened() == Set(s"$d/t/data/${admits57.head.path}"), opened())
+
+    CountingFileSystem.reset()
+    assert(df.filter(col("half") === "a").select("id").as[Long].collect().toSet ==
+      (1L to 50L).toSet - 3L)
+    assert(opened() == snap.files.filter(_.path.startsWith("half=a/"))
+      .map(e => s"$d/t/data/${e.path}").toSet, opened())
+  }
+
   test("MoR merge: upsert via position-delete + append, state-identical to CoW") {
     val t = tmpTable("dv_merge")
     val twin = tmpTable("dv_merge_twin")

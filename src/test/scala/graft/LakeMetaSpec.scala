@@ -246,6 +246,26 @@ class LakeMetaSpec extends SparkSpec {
       s"history() after vacuum listed the log dir: $listedAfterVac")
   }
 
+  test("a pinned read resolves its snapshot once") {
+    val t = cfsTable("meta_once")
+    LakeTable.overwrite(spark, t, Seq((1L, "r1")).toDF("id", "s")) // v1
+    (2 to 25).foreach { i =>
+      LakeTable.append(spark, t, Seq((i.toLong, s"r$i")).toDF("id", "s"))
+    } // checkpoints at v10, v20
+    CountingFileSystem.reset()
+    assert(LakeTable.read(spark, t).collect().length == 25)
+    val opens = CountingFileSystem.openedUnder("/t/_graft_log/").groupBy(identity)
+      .map { case (p, n) => p -> n.size }
+    val checkpoint = opens.filter(_._1.endsWith(f"${20L}%020d.checkpoint.json"))
+    assert(checkpoint.values.toSeq == Seq(1), s"checkpoint opens: $checkpoint")
+    val segments = opens.filter(_._1.contains("_manifests"))
+    assert(segments.nonEmpty && segments.values.forall(_ == 1), s"segment opens: $segments")
+    (21 to 25).foreach { v =>
+      val n = opens.getOrElse(opens.keys.find(_.endsWith(f"/$v%020d.json")).getOrElse(""), 0)
+      assert(n == 1, s"v$v's log entry opened $n times")
+    }
+  }
+
   test("history, timestamp travel and time-based vacuum read the tail without building snapshots") {
     val t = cfsTable("meta_tail")
     LakeTable.overwrite(spark, t, Seq((1L, "r1")).toDF("id", "s")) // v1

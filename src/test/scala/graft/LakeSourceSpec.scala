@@ -89,6 +89,37 @@ class LakeSourceSpec extends SparkSpec {
     assert(latest.count() == 12)
   }
 
+  test("INSERT into a versionAsOf view is refused and adds no version") {
+    def refused(t: String, view: String, asOf: Long): Unit = {
+      spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW $view USING graft " +
+        s"OPTIONS (path '$t', versionAsOf '$asOf')")
+      val before = LakeTable.latestVersion(spark, t)
+      val e = intercept[Exception] {
+        spark.sql(s"INSERT INTO $view VALUES (9, 'p1', 9.0)")
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => Option(x.getMessage).exists(_.contains("cannot INSERT into a time-travel"))),
+        s"$view: ${e.getMessage}")
+      assert(LakeTable.latestVersion(spark, t) == before, s"$view committed a version")
+    }
+    val rows = Seq((1L, "p1", 10.0), (2L, "p2", 20.0)).toDF("id", "part", "v")
+    val more = Seq((3L, "p1", 30.0)).toDF("id", "part", "v")
+    val partitioned = tmpTable("asof_ins_part")
+    LakeTable.overwrite(spark, partitioned, rows, partitionBy = Seq("part"))
+    LakeTable.append(spark, partitioned, more)
+    refused(partitioned, "asof_ins_part_v", 1L)
+    val plain = tmpTable("asof_ins_plain")
+    LakeTable.overwrite(spark, plain, rows)
+    LakeTable.append(spark, plain, more)
+    refused(plain, "asof_ins_plain_v", 1L)
+    // v2 carries a deletion vector: the view is a merge-on-read relation
+    val mor = tmpTable("asof_ins_mor")
+    LakeTable.overwrite(spark, mor, rows.union(more))
+    LakeTable.deleteMergeOnRead(spark, mor, col("id") === 1L)
+    refused(mor, "asof_ins_mor_v", 2L)
+    assert(spark.table("asof_ins_mor_v").count() == 2)
+  }
+
   test("timestampAsOf resolves to the newest version at or before the timestamp") {
     val t = tmpTable("live_ts_asof")
     spark.range(3).toDF("id").write.format("graft").mode("overwrite").save(t)

@@ -132,6 +132,29 @@ class PartitionOverwriteSpec extends SparkSpec {
     } finally spark.conf.set(key, prior)
   }
 
+  test("SQL INSERT OVERWRITE routes dynamically on a table carrying deletion vectors") {
+    val t = tmpTable("dpo_sql_dv")
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    // one file per day, so deleting id 1 leaves d1's file behind a vector
+    LakeTable.overwrite(spark, t, base.coalesce(1), partitionBy = Seq("day"))
+    LakeTable.deleteMergeOnRead(spark, t, col("id") === 1L)
+    assert(LakeTable.latestSnapshot(spark, t).get.files.exists(_.dv.isDefined))
+    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW dpo_sql_dv_tbl USING graft OPTIONS (path '$t')")
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.get(key, "STATIC")
+    spark.conf.set(key, "dynamic")
+    try {
+      spark.sql("INSERT OVERWRITE dpo_sql_dv_tbl VALUES (20, 'd2', 99.0)")
+      assert(LakeTable.latestSnapshot(spark, t).get.operation == "OVERWRITE PARTITIONS")
+      assert(rowsOf(LakeTable.read(spark, t)) == Set(
+        (2L, "d1", 20.0), (5L, "d3", 50.0), (20L, "d2", 99.0)))
+      spark.conf.set(key, "static")
+      spark.sql("INSERT OVERWRITE dpo_sql_dv_tbl VALUES (7, 'd7', 70.0)")
+      assert(LakeTable.latestSnapshot(spark, t).get.operation == "OVERWRITE")
+      assert(rowsOf(LakeTable.read(spark, t)) == Set((7L, "d7", 70.0)))
+    } finally spark.conf.set(key, prior)
+  }
+
   test("time travel and restore see through the partition overwrite") {
     val t = tmpTable("dpo_tt")
     val v1 = LakeTable.overwrite(spark, t, base, partitionBy = Seq("day"))
