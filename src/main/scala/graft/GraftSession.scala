@@ -28,6 +28,7 @@ object GraftSession {
       // modern representation every engine reads.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config(graft.lake.LocalFs.ImplConf, graft.lake.LocalFs.Impl)
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

@@ -34,8 +34,8 @@ import org.apache.spark.sql.types.{MetadataBuilder, StructType}
   * bucket partitioning — appends, CoW rewrites (UPDATE / DELETE /
   * MERGE) and plain compaction all preserve the invariant "every live
   * data file is a bucket file". Merge-on-read deletion vectors never
-  * move rows, so they preserve it trivially (the MoR composition scan
-  * just doesn't claim the partitioning).
+  * move rows, so they preserve it trivially (a vectored scan claims
+  * the partitioning like any other).
   *
   * Hash compatibility: rows are routed with
   * `df.repartition(numBuckets, bucketCols)` — catalyst

@@ -64,10 +64,10 @@ object GraftDataSource {
   * every query planning — a registered view or long-lived DataFrame
   * always reads the newest committed snapshot (the Glue+Trino behavior
   * of the reference). `versionAsOf` pins a version, which is the
-  * correct frozen semantics for time travel. A snapshot without
-  * deletion vectors reads as a [[GraftRelation]]; one with vectors as
-  * a [[GraftMorRelation]]. SQL inserts into either commit through
-  * [[GraftInsertCommand.insert]].
+  * correct frozen semantics for time travel. Every snapshot reads as a
+  * [[GraftRelation]]; one with deletion vectors applies them inside its
+  * parquet reader ([[GraftParquetFileFormat]]). SQL inserts commit
+  * through [[GraftInsertCommand.insert]].
   *
   * This is deliberately the V1 `RelationProvider` extension point, not
   * DataSourceV2: returning a `HadoopFsRelation` reuses Spark's entire
@@ -140,17 +140,10 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
         s"versionAsOf must be a version number, got '$v'"))
     }.orElse(parameters.get("timestampAsOf").map(t =>
       LakeTable.versionAtTimestamp(spark, table, parseTimestampMs(t))))
-    // the index resolves the snapshot once; the relation branches on it
-    // and the first scan reuses it. A snapshot carrying merge-on-read
-    // deletion vectors cannot be served by the HadoopFsRelation scan (it
-    // would read deleted rows back) — it resolves to the dv-applying
-    // composition relation instead, and back to this (faster,
-    // whole-stage-codegen) relation once compact reconciles the vectors
-    // away
+    // the index resolves the snapshot once; the relation is shaped by it
+    // and the first scan reuses it
     val index = new GraftFileIndex(spark, table, asOf)
     val snap = index.initialSnapshot
-    if (LakeTable.hasDv(snap))
-      return new GraftMorRelation(index, spark)
     val partitionSchema = index.partitionSchema
     // The FULL snapshot schema serves as dataSchema, partition columns
     // included: HadoopFsRelation treats a partition column that also
@@ -164,11 +157,18 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
     // reader hard-errors on a missing NON-nullable column.
     val dataSchema = GraftDataSource.asNullable(snap.schema)
     // a column-mapped snapshot reads through the name-translating
-    // parquet format; identity-mapped tables keep the stock format
-    // (and its class-based plan-cache equality)
+    // parquet format, a snapshot carrying merge-on-read deletion vectors
+    // through the vector-applying one (rows, not batches — the stock
+    // reader would read deleted rows back); other tables keep the stock
+    // format, its columnar batches and its class-based plan-cache
+    // equality. A relation created vector-free refuses a snapshot that
+    // gains vectors later (re-register); one created with vectors
+    // keeps applying them after compact reconciles them away.
     val mapped = ColumnMapping.needsTranslation(snap.schema)
     val fileFormat =
-      if (mapped) new GraftParquetFileFormat(ColumnMapping.mapping(snap.schema))
+      if (mapped || index.appliesDeletes)
+        new GraftParquetFileFormat(
+          if (mapped) ColumnMapping.mapping(snap.schema) else Map.empty, index.appliesDeletes)
       else new ParquetFileFormat
     // HadoopFsRelation equality includes `options`, and stock
     // ParquetFileFormat.equals is isInstanceOf-based (so
@@ -391,13 +391,14 @@ private[graft] class GraftChangeFeedRelation(df: org.apache.spark.sql.DataFrame,
     df.queryExecution.toRdd.asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
 }
 
-/** The relation a vector-free snapshot reads as: a
+/** The relation every graft snapshot reads as: a
   * [[HadoopFsRelation]] over the live [[GraftFileIndex]], so Spark's
   * whole native parquet scan path applies — vectorized reader,
-  * codegen, pushdown, partition pruning and file skipping. SQL
+  * codegen, pushdown, partition pruning and file skipping (deletion
+  * vectors apply inside the reader). SQL
   * `INSERT INTO`/`INSERT OVERWRITE` on a `USING graft` catalog table or
   * a registered view commit through the transaction log
-  * ([[GraftTableRelation]]) instead of Spark's raw
+  * ([[insert]]) instead of Spark's raw
   * write-files-into-the-directory command. The reference's entire write
   * surface is SQL statements materializing Iceberg tables (ref: silver
   * defs.yaml:22 `trino_sql` blocks); this is the analog.
@@ -412,17 +413,12 @@ private[graft] class GraftRelation(
     bucketSpecArg: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = None)
   extends HadoopFsRelation(index, partitionSchemaArg, dataSchemaArg,
     bucketSpec = bucketSpecArg, fileFormat, options)(spark)
-  with GraftTableRelation
+  with InsertableRelation {
 
-/** A relation `format("graft")` resolves to, plain or merge-on-read,
-  * with the live index behind it: the table path and any pinned
-  * version come from there. Spark plans an insert into a relation with
-  * no partition columns as `InsertIntoDataSourceCommand`, which calls
-  * [[insert]] directly; both routes end in [[GraftInsertCommand.insert]].
-  */
-private[graft] trait GraftTableRelation extends InsertableRelation {
-  def index: GraftFileIndex
-
+  /** Spark plans an insert into a relation with no partition columns as
+    * `InsertIntoDataSourceCommand`, which calls this directly; both
+    * routes end in [[GraftInsertCommand.insert]].
+    */
   override def insert(data: DataFrame, overwrite: Boolean): Unit =
     GraftInsertCommand.insert(data.sparkSession, index, data, overwrite)
 }

@@ -12,16 +12,14 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
   * Spark's analyzer plans an insert into a data source relation one of
   * two ways, and both end in [[GraftInsertCommand.insert]]:
   *
-  *  - into a relation with partition columns (a partitioned plain
+  *  - into a relation with partition columns (a partitioned
   *    [[GraftRelation]]) as [[InsertIntoHadoopFsRelationCommand]] — a
   *    RAW write of part files into the relation's directory, which for
   *    a lake table would bypass the log entirely: untracked files, no
   *    commit, the rows silently invisible to every log-driven reader.
   *    [[GraftInsertRule]] rewrites it into this command;
-  *  - into any other `InsertableRelation` (an unpartitioned plain
-  *    relation, or a [[GraftMorRelation]], which reports no partition
-  *    columns to the analyzer) as `InsertIntoDataSourceCommand`, which
-  *    calls the relation's `insert` ([[GraftTableRelation]]).
+  *  - into an unpartitioned relation as `InsertIntoDataSourceCommand`,
+  *    which calls the relation's `insert` ([[GraftRelation]]).
   *
   * This gives the reference's SQL write surface (every `trino_sql`
   * block materializes an Iceberg table, ref: silver defs.yaml:22) a

@@ -140,10 +140,10 @@ final case class GraftUpdateCommand(tablePath: String,
 final class GraftMergeRule extends Rule[LogicalPlan] {
 
   /** The live index (table path, pinned version) behind a (possibly
-    * aliased/viewed) graft relation — plain or merge-on-read form.
+    * aliased/viewed) graft relation.
     */
   private def graftIndex(plan: LogicalPlan): Option[GraftFileIndex] = plan match {
-    case LogicalRelation(rel: GraftTableRelation, _, _, _, _) => Some(rel.index)
+    case LogicalRelation(rel: GraftRelation, _, _, _, _) => Some(rel.index)
     case SubqueryAlias(_, child) => graftIndex(child)
     case View(_, _, child, _) => graftIndex(child)
     case _ => None

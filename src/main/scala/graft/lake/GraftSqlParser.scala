@@ -512,7 +512,7 @@ private[graft] object GraftSqlParser {
     else {
       val plan = spark.table(target).queryExecution.analyzed
       plan.collectFirst {
-        case LogicalRelation(r: GraftTableRelation, _, _, _, _) => r.index.tablePath
+        case LogicalRelation(r: GraftRelation, _, _, _, _) => r.index.tablePath
       }.getOrElse(throw new IllegalArgumentException(
         s"$target does not resolve to a graft lake table — register it " +
           "(GraftCatalog.registerLake / format(\"graft\") view) or pass its " +

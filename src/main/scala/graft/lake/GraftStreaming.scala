@@ -248,9 +248,9 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
     val frames: Seq[DataFrame] = start match {
       case None =>
         // initial batch: the whole snapshot as inserts at endV. A
-        // snapshot with outstanding deletion vectors reads through the
-        // dv-applying composition — the raw file list would resurrect
-        // vector-deleted rows into the feed.
+        // snapshot's outstanding deletion vectors apply in the scan —
+        // the raw file list would resurrect vector-deleted rows into
+        // the feed.
         val snap = LakeTable.snapshotAt(spark, table, endV)
         checkSchemaPinned(endV, snap.schema, snap.partitionColumns)
         if (snap.files.isEmpty) Seq.empty

@@ -5,10 +5,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BasePredicate, BoundReference, Cast, EvalMode, Expression, Literal, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import LakeTable.{FileEntry, Snapshot}
@@ -36,19 +36,24 @@ import LakeTable.{FileEntry, Snapshot}
   *
   * '''Pinned''' ([[LakeScan.scanEntries]]): a fixed set of a table's
   * log entries — the engine's own scans of known files (rewrites, the
-  * change feed, the merge-on-read legs, bloom builds, streaming
-  * batches). Entry paths resolve against `base` (the data root, or the
+  * change feed, DML detection, bloom builds, streaming batches). Entry paths resolve against `base` (the data root, or the
   * table root for change files); local and foreign (cloned) entries
   * share one index, and `rootPaths` is `base` whatever the entries.
-  * Equality is by the set of absolute file paths, so two scans of the
-  * same files match in the plan cache.
+  * Equality is by the set of absolute file paths and their deletion
+  * vectors, so two scans of the same file states match in the plan
+  * cache.
   *
   * Both forms build each `FileStatus` from the logged size and mtime —
   * no LIST, no stat; an entry of unknown size (a legacy log, a file
   * named outside the snapshot, a change file) costs one
-  * `getFileStatus`. Both prune through [[LakeScan.prune]]: partition
-  * values parsed from the hive-style `col=value/` dirs, plus file
-  * skipping on the logged bounds and bloom sidecars.
+  * `getFileStatus`. A listed file carrying a deletion vector carries
+  * its serialized bitmap as file metadata, which Spark hands the reader
+  * with each split ([[GraftParquetFileFormat]] applies it), so a scan
+  * applies exactly the vectors of the snapshot it listed; the bitmaps
+  * of the files a scan keeps are read on the driver while listing. Both prune
+  * through [[LakeScan.prune]]: partition values parsed from the
+  * hive-style `col=value/` dirs, plus file skipping on the logged
+  * bounds and bloom sidecars.
   */
 final class GraftFileIndex private[lake] (spark: SparkSession, val tablePath: String,
                                           val asOf: Option[Long], base: Path,
@@ -72,6 +77,13 @@ final class GraftFileIndex private[lake] (spark: SparkSession, val tablePath: St
     pinned.getOrElse(LakeTable.snapshotAt(spark, tablePath, versionNow()))
 
   override val partitionSchema: StructType = LakeScan.partitionSchemaOf(initialSnapshot)
+
+  /** Does the relation over this index apply deletion vectors? Decided
+    * by the snapshot it was created over: a live relation created
+    * vector-free keeps the stock (columnar) reader and refuses a
+    * snapshot that has since gained vectors (see [[listFiles]]).
+    */
+  val appliesDeletes: Boolean = pinned.isDefined || LakeTable.hasDv(initialSnapshot)
 
   /** A pinned version or fixed files: nothing may be inserted. */
   def readOnly: Boolean = asOf.isDefined || pinned.isDefined
@@ -137,9 +149,8 @@ final class GraftFileIndex private[lake] (spark: SparkSession, val tablePath: St
     }
 
   /** The snapshot a scan planned now reads, checked against schema and
-    * layout drift: metadata-only answers (e.g. [[MetadataOnlyAgg]]) and
-    * the merge-on-read relation fail as loudly on an evolved table as
-    * the plain scan would.
+    * layout drift: metadata-only answers (e.g. [[MetadataOnlyAgg]])
+    * fail as loudly on an evolved table as the scan would.
     */
   def snapshot(): Snapshot = resolve()._1
 
@@ -147,19 +158,28 @@ final class GraftFileIndex private[lake] (spark: SparkSession, val tablePath: St
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val (snap, parts, _) = resolve()
     // same loud-failure discipline as schema drift: a merge-on-read
-    // DELETE that committed since a plain relation was registered means
-    // its file-list scan would RESURRECT deleted rows — the
-    // re-registered relation resolves through the dv-aware scan
-    if (pinned.isEmpty && LakeTable.hasDv(snap))
+    // DELETE that committed since a vector-free relation was registered
+    // means its stock reader would RESURRECT deleted rows — the
+    // re-registered relation reads through the vector-applying format
+    if (!appliesDeletes && LakeTable.hasDv(snap))
       throw new IllegalStateException(
         s"table $tablePath carries merge-on-read deletion vectors as of " +
           s"v${snap.version}, committed after this relation was registered " +
           s"at v${initialSnapshot.version} — a plain scan would read deleted " +
           "rows; re-register the view (REFRESH TABLE / re-create it) to read " +
-          "through the vector-aware scan")
-    LakeScan.prune[(FileStatus, FileEntry)](spark, tablePath, initialSnapshot, parts, _._2,
-      partitionFilters, dataFilters)
-      .map { case (row, files) => PartitionDirectory(row, files.map(_._1).toArray) }
+          "through the vector-applying reader")
+    val kept = LakeScan.prune[(FileStatus, FileEntry)](spark, tablePath, initialSnapshot, parts,
+      _._2, partitionFilters, dataFilters)
+    // the kept files' vectors ride their listing to the reader
+    val vectored = kept.flatMap(_._2.map(_._2)).filter(_.dv.isDefined)
+    val bitmaps =
+      if (vectored.isEmpty) Map.empty[String, Array[Byte]]
+      else DeletionVectors.readAll(LakeTable.fs(spark, tablePath), new Path(tablePath), vectored)
+    kept.map { case (row, files) =>
+      PartitionDirectory(row, files.map { case (st, e) =>
+        FileStatusWithMetadata(st, bitmaps.get(e.path).map(DeletionVectors.MetadataKey -> _).toMap)
+      })
+    }
   }
 
   override def inputFiles: Array[String] =
@@ -169,8 +189,9 @@ final class GraftFileIndex private[lake] (spark: SparkSession, val tablePath: St
 
   override def refresh(): Unit = synchronized { cached = None }
 
-  private lazy val fileSet: Set[String] = pinned.toSeq.flatMap(_.files).iterator
-    .map(e => LakeTable.entryPath(root, e.path).toString).toSet
+  private lazy val fileSet: Set[(String, Option[LakeTable.DeleteVector])] =
+    pinned.toSeq.flatMap(_.files).iterator
+      .map(e => (LakeTable.entryPath(root, e.path).toString, e.dv)).toSet
 
   override def equals(o: Any): Boolean = o match {
     case p: GraftFileIndex if pinned.isDefined && p.pinned.isDefined => fileSet == p.fileSet
@@ -186,8 +207,8 @@ final class GraftFileIndex private[lake] (spark: SparkSession, val tablePath: St
 }
 
 /** How log entries become a scan: the pinned parquet scan over known
-  * entries, the merge-on-read composition, the one pruner, and the
-  * predicate resolution that feeds it.
+  * entries (deletion vectors applied inside the reader), the one
+  * pruner, and the predicate resolution that feeds it.
   */
 private[lake] object LakeScan {
 
@@ -248,8 +269,8 @@ private[lake] object LakeScan {
   }
 
   /** [[prune]] over `snap`'s entries, in their order, for the paths that
-    * plan their own file list (DML detection and rebase, the
-    * merge-on-read relation). `conds` mixes partition and data
+    * plan their own file list (DML detection and rebase). `conds`
+    * mixes partition and data
     * conjuncts; those that evaluate on partition values alone act as
     * partition filters. A point delete on a clustered key reads ~1
     * file, not the table.
@@ -275,6 +296,9 @@ private[lake] object LakeScan {
     * file's `k=v` dirs. Entry paths are relative to `base` (the data
     * root unless given); local and foreign (cloned) entries read in the
     * same scan, and `_metadata` columns are available on the result.
+    * Entries carrying deletion vectors read through the
+    * vector-applying [[GraftParquetFileFormat]]; the scan is one
+    * `FileScan` either way.
     */
   def scanEntries(spark: SparkSession, table: String, physSchema: StructType,
                   partitionColumns: Seq[String], entries: Seq[FileEntry],
@@ -282,120 +306,34 @@ private[lake] object LakeScan {
     val index = new GraftFileIndex(spark, table, None,
       base.getOrElse(LakeTable.dataPath(table)),
       Some(Snapshot(-1L, 0L, "SCAN", physSchema, partitionColumns, entries)))
+    val format =
+      if (entries.exists(_.dv.isDefined)) new GraftParquetFileFormat(Map.empty, deletes = true)
+      else new ParquetFileFormat
     spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, physSchema,
-      None, new ParquetFileFormat, Map.empty)(spark))
+      None, format, Map.empty)(spark))
   }
 
-  /** The logical columns of `schema` over a [[scanEntries]] frame read
-    * with its physical schema: for column mapping, the scan requests
-    * the PHYSICAL names (deep-nullable — evolved columns are absent
-    * from old files) and this renames back, in schema order. Identity
-    * for unmapped tables.
-    */
-  private def logicalColumns(schema: StructType): Seq[Column] =
-    schema.fields.toSeq.map(f => col(ColumnMapping.physicalName(f)).as(f.name))
-
-  /** Read specific data files of a snapshot directly (the rewrite /
-    * feed / streaming paths that bypass the registered source) through
-    * one [[scanEntries]] scan, translated for column mapping
-    * ([[logicalColumns]]).
-    */
-  def readDataFiles(spark: SparkSession, table: String,
-                    schema: StructType, partitionColumns: Seq[String],
-                    entries: Seq[FileEntry]): DataFrame = {
-    val nullable = GraftDataSource.asNullable(schema)
-    scanEntries(spark, table, ColumnMapping.physicalSchema(nullable), partitionColumns, entries)
-      .select(logicalColumns(nullable): _*)
-  }
-
-  // ------------------------------------------------- merge-on-read reads
-  //
-  // A snapshot whose entries carry deletion vectors cannot be served by
-  // the plain HadoopFsRelation scan (it would read deleted rows back).
-  // The MoR scan is a two-leg composition. Dv-free files read through
-  // one [[scanEntries]] scan whose statuses come from the log, so the
-  // leg lists nothing however many files it covers. Dv-bearing files
-  // read the same way, WITH the parquet reader's per-file physical row
-  // index (`_metadata.row_index` — computed correctly even under splits
-  // and row-group skipping), and are LEFT-ANTI joined against the
-  // referenced deletion-vector rows on (file, position); those rows
-  // still read as parquet directories under `_deletes/`. The dv side is
-  // bounded by deleted-row count (the point-delete case this path
-  // exists for), so it broadcasts; user filters sit above one logical
-  // plan and push into both legs' parquet scans via Catalyst as usual.
-
-  /** Threshold (rows) under which the dv side of the MoR anti-join is
-    * broadcast. Above it the join falls back to a shuffle — correct but
-    * a sign the table wants a `compact` to reconcile its vectors.
-    */
-  private def dvBroadcastRows(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.dv.broadcastRows").map(_.toLong).getOrElse(1000000L)
-
-  /** All (file-relative-path, position) rows of the given entries'
-    * deletion vectors. May contain rows for OTHER files sharing a dv
-    * directory — callers join/filter by file, so extras are inert.
-    */
-  def dvRows(spark: SparkSession, table: String, entries: Seq[FileEntry]): DataFrame = {
-    val dirs = entries.flatMap(_.dv.map(_.path)).distinct
-    val schema = StructType(Seq(StructField("p", StringType), StructField("pos", LongType)))
-    spark.read.schema(schema).parquet(dirs.map(rel => new Path(table, rel).toString): _*)
-  }
-
-  /** [[readDataFiles]] plus the scan's file path and physical row
-    * position as `FilePathCol`/`RowPosCol`.
-    */
-  private def readDataFilesWithPos(spark: SparkSession, table: String, snap: Snapshot,
-                                   entries: Seq[FileEntry]): DataFrame = {
-    val nullable = GraftDataSource.asNullable(snap.schema)
-    scanEntries(spark, table, ColumnMapping.physicalSchema(nullable), snap.partitionColumns,
-      entries)
-      .select(logicalColumns(nullable) :+ col("_metadata.file_path").as(LakeTable.FilePathCol)
-        :+ col("_metadata.row_index").as(LakeTable.RowPosCol): _*)
-  }
-
-  /** Scan `entries` of `snap` with their deletion vectors applied.
-    * Output columns are the snapshot's logical schema, plus
-    * `FilePathCol`/`RowPosCol` when `keepPos` (the detection-scan
-    * form — the DV-safe replacement for `input_file_name()`). On
-    * dv-free entries the plan is exactly [[readDataFiles]]'s.
+  /** Scan `entries` of `snap` with their deletion vectors applied, in
+    * one [[scanEntries]] scan — the read of every rewrite, feed and
+    * streaming path that bypasses the registered source. Output
+    * columns are the snapshot's logical schema (for column mapping the
+    * scan requests the PHYSICAL names, deep-nullable — evolved columns
+    * are absent from old files — and renames back), plus
+    * `FilePathCol`/`RowPosCol` when `keepPos`: the scan's file path and
+    * physical row index, the detection-scan form DML keys its vectors
+    * by.
     */
   def morScan(spark: SparkSession, table: String, snap: Snapshot,
               entries: Seq[FileEntry], keepPos: Boolean): DataFrame = {
-    import LakeTable.{FilePathCol, RowPosCol}
-    val (dvd, plain) = entries.partition(_.dv.isDefined)
-    val dvdLeg = if (dvd.isEmpty) None else Some {
-      val df = readDataFilesWithPos(spark, table, snap, dvd)
-      val prefix = LakeTable.scanDataPrefix(spark, table)
-      // a CLONED vector's rows key on the source files' ABSOLUTE URIs
-      // (shallowClone re-keys them — foreign entries live outside this
-      // table's data root); local rows stay data-root-relative
-      val del = dvRows(spark, table, dvd)
-        .select(when(col("p").startsWith("/") || col("p").contains(":/"), col("p"))
-          .otherwise(concat(lit(prefix), col("p"))).as("__dv_file"),
-          col("pos").as("__dv_pos"))
-      val card = dvd.flatMap(_.dv).map(_.cardinality).sum
-      val delHinted = if (card <= dvBroadcastRows(spark)) broadcast(del) else del
-      val kept = df.join(delHinted,
-        df(FilePathCol) === delHinted("__dv_file") &&
-          df(RowPosCol) === delHinted("__dv_pos"), "left_anti")
-      if (keepPos) kept else kept.drop(FilePathCol, RowPosCol)
-    }
-    val plainLeg =
-      if (plain.isEmpty) None
-      else if (keepPos) Some(readDataFilesWithPos(spark, table, snap, plain))
-      else Some(readDataFiles(spark, table, snap.schema, snap.partitionColumns, plain))
-    (plainLeg, dvdLeg) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case (None, None) =>
-        val base = GraftDataSource.asNullable(snap.schema)
-        val shape =
-          if (!keepPos) base
-          else StructType(base.fields ++ Seq(
-            StructField(FilePathCol, StringType), StructField(RowPosCol, LongType)))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], shape)
-    }
+    val nullable = GraftDataSource.asNullable(snap.schema)
+    val pos =
+      if (!keepPos) Nil
+      else Seq(col("_metadata.file_path").as(LakeTable.FilePathCol),
+        col("_metadata.row_index").as(LakeTable.RowPosCol))
+    scanEntries(spark, table, ColumnMapping.physicalSchema(nullable), snap.partitionColumns,
+      entries)
+      .select(nullable.fields.toSeq.map(f => col(ColumnMapping.physicalName(f)).as(f.name)) ++
+        pos: _*)
   }
 
   /** The LIVE rows of the named files of `snap` — [[morScan]] over

@@ -66,7 +66,7 @@ import org.json4s.jackson.JsonMethods
   * <table>/_graft_log/_latest_hint                           (newest version, advisory)
   * <table>/data/<part=val>/part-<uuid>.parquet
   * <table>/_change_data/<uuid>/part-*.parquet                (change-feed rows of DML commits)
-  * <table>/_deletes/<uuid>/                                  (deletion vectors)
+  * <table>/_deletes/<uuid>.bin                              (deletion-vector bitmaps of one commit)
   * <table>/_index/bloom/<uuid>.json                          (bloom sidecars, advisory)
   * <table>/_staging/<uuid>/                                  (transient)
   * }}}
@@ -83,17 +83,20 @@ object LakeTable extends org.apache.spark.internal.Logging {
   /** A positional deletion vector attached to one data file — the
     * merge-on-read delete analog of Iceberg v2's positional delete
     * files (the reference's tables are Iceberg-v2-on-Trino, ref:
-    * trino_iceberg_transform_component.py:33,116-123). `path` is a
-    * table-root-relative directory under `_deletes/` holding parquet
-    * rows `(p: string, pos: long)` — the data-file-relative path and
-    * 0-based physical row ordinal of each deleted row. One delete
-    * commit writes ONE such directory shared by every file it touched;
-    * each touched file's entry points at the directory that holds its
-    * COMPLETE current deleted-position set (a later delete on the same
-    * file folds the old positions into its new directory).
-    * `cardinality` is this file's deleted-row count within that set.
+    * trino_iceberg_transform_component.py:33,116-123), in Delta's
+    * deletion-vector form: one serialized Roaring bitmap of the file's
+    * deleted 0-based physical row positions ([[DeletionVectors]]).
+    * `path` is a table-root-relative sidecar `_deletes/<uuid>.bin`;
+    * one delete commit writes ONE sidecar holding the bitmaps of every
+    * file it touched back to back, and `offset`/`size` locate this
+    * file's bitmap in it. The bitmap is the file's COMPLETE current
+    * deleted set (a later delete on the same file ORs the old bitmap
+    * into its new one). `cardinality` is that set's size. The log
+    * renders it as `dv: {p, o, s, c}`; an entry without `o`/`s` (the
+    * earlier parquet-directory form) parses with -1 and fails loudly
+    * when read.
     */
-  final case class DeleteVector(path: String, cardinality: Long)
+  final case class DeleteVector(path: String, offset: Long, size: Long, cardinality: Long)
 
   /** One data file as the transaction log records it: table-relative
     * path plus the metadata a reader needs to PLAN a scan without
@@ -238,8 +241,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
         s.max.map(m => "mx" -> JString(m)),
         s.nullCount.map(n => "nc" -> JLong(n))).flatten): JValue)
     })) ++
-    e.dv.map(d => "dv" -> (JObject(List(
-      "p" -> JString(d.path), "c" -> JLong(d.cardinality))): JValue)).toList ++
+    e.dv.map(d => "dv" -> (JObject(List("p" -> JString(d.path), "o" -> JLong(d.offset),
+      "s" -> JLong(d.size), "c" -> JLong(d.cardinality))): JValue)).toList ++
     e.bloom.map(b => "bf" -> (JString(b): JValue)).toList)
 
   private def commonFields(version: Long, timestampMs: Long, operation: String,
@@ -337,7 +340,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
         case _ => Map.empty[String, ColStats]
       }
       val dv = (o \ "dv") match {
-        case d: JObject => Some(DeleteVector(jStr(d \ "p"), jLong(d \ "c")))
+        case d: JObject => Some(DeleteVector(jStr(d \ "p"), jLongOpt(d \ "o").getOrElse(-1L),
+          jLongOpt(d \ "s").getOrElse(-1L), jLong(d \ "c")))
         case _          => None
       }
       FileEntry(jStr(o \ "p"), jLong(o \ "sz"), jLong(o \ "mt"), jLong(o \ "rc"), stats,
@@ -1581,26 +1585,16 @@ object LakeTable extends org.apache.spark.internal.Logging {
     sb.toString
   }
 
-  /** A log entry's deletion-vector key: scan-form relative for local
-    * files, scan-form absolute for cloned (foreign) references — the
-    * domain every stored dv `p` value lives in.
-    */
-  private[lake] def scanKey(e: FileEntry): String =
-    if (isForeignEntry(e.path)) scanFormAbs(e.path) else scanFormRel(e.path)
-
   /** The physical location of a log entry's file. */
   private[lake] def entryPath(dataRoot: Path, rel: String): Path =
     if (isForeignEntry(rel)) new Path(rel) else new Path(dataRoot, rel)
 
   // ------------------------------------------------- merge-on-read reads
   //
-  // A snapshot whose entries carry deletion vectors reads through the
-  // merge-on-read composition, [[LakeScan.morScan]]: dv-free files as
-  // the plain scan reads them, dv-bearing files anti-joined against
-  // their vectors on (file, row position). Every scan of log entries —
-  // that composition, the pinned scans under it, the one pruner — lives
-  // in LakeScan.scala; these are the file-identity columns and prefixes
-  // DML keys its vectors by.
+  // A snapshot whose entries carry deletion vectors applies them inside
+  // the parquet reader ([[GraftParquetFileFormat]]); every scan of log
+  // entries and the one pruner live in LakeScan.scala. These are the
+  // file-identity columns DML detection maps its hits to entries by.
 
   /** Column names the MoR scan uses for file identity + row position.
     * Underscored like Delta's internal columns; dropped before rows
@@ -1615,8 +1609,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
   /** The absolute data-root prefix EXACTLY as the scan's
     * `_metadata.file_path` renders file paths (Hadoop's
     * `Path.toString` of the qualified path — `file:/x`, not the URI
-    * form `file:///x`). Rows that violate the assumption fail loudly in
-    * [[RowLevelOps]]'s vector keying rather than mis-joining.
+    * form `file:///x`). Hits that violate the assumption fail loudly in
+    * [[RowLevelOps]]'s mapping of hits to entries rather than
+    * committing a vector for no file.
     */
   private def qualifiedDataPrefix(spark: SparkSession, table: String): String =
     fs(spark, table).makeQualified(dataPath(table)).toString
@@ -2415,7 +2410,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * of GDPR-style point deletes against a fact table: CoW rewrites the
     * table; this writes kilobytes.
     *
-    * Reads apply the vectors via [[LakeScan.morScan]]; [[compact]] reconciles
+    * Reads apply the vectors inside the parquet reader; [[compact]] reconciles
     * them back into clean files; the change feed records the deleted
     * rows at commit time exactly like CoW. A file whose every row is
     * deleted is simply REMOVED from the snapshot (no vector needed), and
@@ -2518,8 +2513,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
   /** `REORG TABLE … APPLY (PURGE)` (Delta's name): rewrite ONLY the
     * files carrying outstanding deletion vectors — no bin-packing of
-    * small files, no clustering — so readers stop paying the MoR
-    * anti-join and vacuum can reclaim the vectors, without touching
+    * small files, no clustering — so readers get back the columnar
+    * reader and vacuum can reclaim the vectors, without touching
     * anything else. A zero-byte small-file threshold makes [[compact]]
     * select exactly the dv-carrying set (it always pulls those in).
     */
@@ -2587,8 +2582,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
       // A file with an outstanding deletion vector joins the rewrite set
       // REGARDLESS of size: compact is where merge-on-read deletes
       // reconcile back into clean files (Iceberg's rewrite_data_files
-      // with delete-file compaction), so readers stop paying the
-      // anti-join and vacuum can reclaim the vector.
+      // with delete-file compaction), so readers stop filtering by
+      // row index and vacuum can reclaim the vector.
       val small = snap.files.filter(inScope).map(e => e -> sizeOf(spark, table, e))
         .filter { case (e, sz) => sz < smallFileBytes || e.dv.isDefined }
       if (small.size <= 1 && small.forall(_._1.dv.isEmpty)) Nil else small
@@ -3137,17 +3132,16 @@ object LakeTable extends org.apache.spark.internal.Logging {
     *  - vacuuming the SOURCE can remove files the clone still
     *    references — retain accordingly, or compact the clone
     *    (rewrites localize every file they touch);
-    *  - ACTIVE deletion vectors clone by RE-KEYING: their rows are
-    *    rewritten into the clone's own `_deletes/` with the data
-    *    files' absolute source URIs as keys — O(deleted rows) bytes,
-    *    never O(data) — so the clone OWNS its vectors (source vacuum
-    *    cannot strand them) and a MoR-heavy fact branches without a
-    *    compact-first;
+    *  - ACTIVE deletion vectors clone by COPY: their bitmaps are
+    *    copied into one sidecar in the clone's own `_deletes/` —
+    *    O(deleted rows) bytes, never O(data) — so the clone OWNS its
+    *    vectors (source vacuum cannot strand them) and a MoR-heavy
+    *    fact branches without a compact-first;
     *  - bloom sidecars are dropped (advisory; rebuilt on rewrite);
-    *  - merge-on-read DML on still-foreign files works: new vectors
-    *    key on the files' absolute URIs (the same form the re-keyed
-    *    inherited vectors use), so a clone takes trickle DELETE/
-    *    UPDATE/MERGE without localizing a byte of source data.
+    *  - merge-on-read DML on still-foreign files works: a vector
+    *    belongs to its log entry, whatever the entry's path, so a
+    *    clone takes trickle DELETE/UPDATE/MERGE without localizing a
+    *    byte of source data.
     */
   def shallowClone(spark: SparkSession, src: String, dst: String,
                    asOf: Option[Long] = None): Long = {
@@ -3164,28 +3158,20 @@ object LakeTable extends org.apache.spark.internal.Logging {
     def absOf(rel: String): String =
       if (isForeignEntry(rel)) rel // clone of a clone: same refs
       else new Path(srcRoot, rel).toString
-    // active vectors: stage ONE new vector directory in the CLONE,
-    // holding the dv'd entries' rows re-keyed on absolute URIs (rows
-    // already absolute — a cloned clone's — pass through)
+    // active vectors: copy their bitmaps' bytes into ONE sidecar of
+    // the CLONE
     val dvd = snap.files.filter(_.dv.exists(_.cardinality > 0))
-    val dvDir: Option[String] =
-      if (dvd.isEmpty) None
+    val copied: Map[String, DeleteVector] =
+      if (dvd.isEmpty) Map.empty
       else {
-        val rows = LakeScan.dvRows(spark, src, dvd)
-          .filter(col("p").isInCollection(dvd.map(scanKey)))
-          // re-key into scan-form ABSOLUTE URIs (stored local keys are
-          // scan-form relative, so the concat stays in the scan domain)
-          .select(when(col("p").startsWith("/") || col("p").contains(":/"), col("p"))
-            .otherwise(concat(lit(scanFormPath(srcRoot) + "/"), col("p"))).as("p"),
-            col("pos"))
-        Some(RowLevelOps.stageDeleteVector(spark, dst, rows,
-          math.max(1, math.min(32, dvd.size))))
+        val bytes = DeletionVectors.readAll(f, new Path(src), dvd)
+        val (sidecar, at) = DeletionVectors.writeSidecar(spark, dst, dvd.map(e => bytes(e.path)))
+        dvd.zip(at).map { case (e, (offset, size)) =>
+          e.path -> DeleteVector(sidecar, offset, size, e.dv.get.cardinality)
+        }.toMap
       }
-    val entries = snap.files.map { e =>
-      val dv = e.dv.filter(_.cardinality > 0)
-        .map(d => DeleteVector(dvDir.get, d.cardinality))
-      e.copy(path = absOf(e.path), dv = dv, bloom = None)
-    }
+    val entries = snap.files.map(e =>
+      e.copy(path = absOf(e.path), dv = copied.get(e.path), bloom = None))
     commitLoop(spark, dst, "CLONE", held = Some(None)) { head =>
       if (head.nonEmpty)
         throw new ConcurrentCommitException(s"CLONE into $dst lost the commit race")
@@ -3272,7 +3258,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     require(head.files.forall(e =>
         isForeignEntry(e.path) || e.dv.forall(_.cardinality == 0)),
       s"cannot publish $branch: the branch head carries active deletion vectors " +
-        "on its own data files (vector rows key on branch-relative paths) — " +
+        "on its own data files (their bitmaps live in the branch's own _deletes/) — " +
         "REORG TABLE ... APPLY (PURGE) the branch first")
     val f = fs(spark, src)
     val srcPrefix = qualifiedDataPrefix(spark, src) + "/"
@@ -3412,7 +3398,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val f = fs(spark, table)
     val base = dataPath(table)
     // existence probes fan out like staging: bounded pool, one RPC
-    // each. Deletion-vector dirs are re-referenced state too — a
+    // each. Deletion-vector sidecars are re-referenced state too — a
     // vacuumed vector would silently RESURRECT its deleted rows.
     val probeRels: Seq[String] =
       target.filePaths ++ target.files.flatMap(_.dv.map(_.path)).distinct
@@ -3630,19 +3616,19 @@ object LakeTable extends org.apache.spark.internal.Logging {
       if (dryRun) deleted += cdcToDelete.size
       else cdcToDelete.foreach { p => if (f.delete(p, false)) deleted += 1 }
     }
-    // deletion-vector dirs age out the same way: a dir referenced by
+    // deletion-vector sidecars age out the same way: one referenced by
     // no retained snapshot (superseded by a later delete's merged
     // vector, reconciled by compact, or orphaned by a lost commit
-    // race) is swept whole once past the grace window
+    // race) is swept once past the grace window
     val retainedDv = retainedSnaps
       .flatMap(_.files.flatMap(_.dv.map(_.path))).toSet
     val delp = deletesPath(table)
     if (f.exists(delp)) {
       f.listStatus(delp).foreach { st =>
-        if (st.isDirectory && st.getModificationTime < cutoffMs &&
+        if (st.isFile && st.getModificationTime < cutoffMs &&
             !retainedDv.contains("_deletes/" + st.getPath.getName)) {
           if (dryRun) deleted += 1
-          else if (f.delete(st.getPath, true)) deleted += 1
+          else if (f.delete(st.getPath, false)) deleted += 1
         }
       }
     }
@@ -3712,7 +3698,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
 
   /** Log-vs-filesystem integrity audit (Delta's FSCK role): verify that
     * every file a snapshot references — data files, deletion-vector
-    * dirs, bloom sidecars — is present and sized as the log recorded,
+    * sidecars, bloom sidecars — is present and sized as the log recorded,
     * WITHOUT opening any of them (stat-only, O(referenced files)
     * metadata). The check an operator runs after an incident (an
     * over-eager external cleanup, a partial restore from backup, a
@@ -3740,7 +3726,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
         case _ => ()
       }
     }
-    // sidecars are shared per commit (one vector dir / bloom json can
+    // sidecars are shared per commit (one vector sidecar / bloom json can
     // serve many file entries) — report each missing one ONCE, with the
     // blast radius aggregated over its referencing entries
     snap.files.flatMap(e => e.dv.map(dv => (dv.path, dv.cardinality)))

@@ -83,7 +83,7 @@ class MetadataOnlyAgg extends Rule[LogicalPlan] {
     }
   }
 
-  /** The graft relation (plain or merge-on-read) under attribute-only
+  /** The graft relation under attribute-only
     * Projects and Filters, with the filter conditions collected on the
     * way down. A Project that computes or renames anything bails: a
     * collected condition could then reference an alias this rule would
@@ -91,7 +91,7 @@ class MetadataOnlyAgg extends Rule[LogicalPlan] {
     */
   private def graftScan(plan: LogicalPlan): Option[(GraftFileIndex, Seq[Expression])] =
     plan match {
-      case LogicalRelation(rel: GraftTableRelation, _, _, false, _) => Some((rel.index, Nil))
+      case LogicalRelation(rel: GraftRelation, _, _, false, _) => Some((rel.index, Nil))
       case Project(projectList, child)
           if projectList.forall(_.isInstanceOf[AttributeReference]) =>
         graftScan(child)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import LakeTable._
-import LakeScan.{dvRows, morScan, readDataFilesLive, resolvedConjuncts}
+import LakeScan.{morScan, readDataFilesLive, resolvedConjuncts}
 
 /** The one row-level-operation core behind every DML entry point of
   * [[LakeTable]] — copy-on-write (CoW) and merge-on-read (MoR) MERGE,
@@ -21,13 +21,14 @@ import LakeScan.{dvRows, morScan, readDataFilesLive, resolvedConjuncts}
   *     DELETE only) and prune the candidate files driver-side
   *     ([[LakeScan.prune]]);
   *  1. one detection collect over the candidates: the files holding a
-  *     claimed row with their per-file claimed-row counts (the SQL
-  *     MERGE cardinality check rides it as a sentinel row);
+  *     claimed row, each with the bitmap of its claimed row positions
+  *     (the SQL MERGE cardinality check rides it as a sentinel row);
   *  1. a materializer: CoW rewrites the affected files as kept rows plus
-  *     post-images; MoR folds position-delete vectors into them and
-  *     appends the post-images. Inserts append either way;
+  *     post-images; MoR ORs each file's new bitmap into its old vector
+  *     on the driver, writes them as one sidecar, and appends the
+  *     post-images. Inserts append either way;
   *  1. stage the change feed (pre/post/delete images of claimed rows,
-  *     plus inserts) concurrently with the data and vector writes;
+  *     plus inserts) concurrently with the data writes;
   *  1. one commit step ([[commit]]), rebasing onto concurrent commits
   *     when the statement's footprint provably excludes the winners.
   *
@@ -119,7 +120,7 @@ private[lake] object RowLevelOps {
       "each target row may match at most one source row"
     def dupProbe(s: DataFrame): DataFrame = s.groupBy(st.keys.map(col): _*)
       .agg(count(lit(1)).as("__cnt")).filter(col("__cnt") > 1)
-      .limit(1).select(lit(dupMark).as(FilePathCol), lit(0L).as("count"))
+      .limit(1).select(lit(dupMark).as(FilePathCol), lit(0L).as(RowPosCol))
 
     // ---- resolve: the prune predicate and the footprint a rebase must
     // prove the winners miss. DELETE/UPDATE: the condition; scoped
@@ -173,17 +174,17 @@ private[lake] object RowLevelOps {
       .getOrElse(if (st.inserts.nonEmpty) claimed || keyMatched else touched))
     val ownDet = (st.mor || st.inserts.nonEmpty) && persistShared(det)
     try {
-      val hits = det.filter(touched)
-      val countsDf = hits.groupBy(col(FilePathCol)).count()
-      val counts = st.source.filter(_ => !dupChecked).fold(countsDf)(s =>
-        countsDf.unionByName(dupProbe(s)))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      require(!counts.contains(dupMark), dupMsg)
+      // the claimed files, each with the bitmap of its claimed positions
+      // (MoR's new vector)
+      val hits = det.filter(touched).select(col(FilePathCol), col(RowPosCol))
+      val detected = DeletionVectors.positionsByFile(
+        st.source.filter(_ => !dupChecked).fold(hits)(s => hits.unionByName(dupProbe(s))))
+      require(!detected.contains(dupMark), dupMsg)
       val prefix = scanDataPrefix(spark, table)
       def scanAbsOf(e: FileEntry): String =
         if (isForeignEntry(e.path)) scanFormAbs(e.path) else prefix + scanFormRel(e.path)
-      val affected = cands.filter(e => counts.contains(scanAbsOf(e)))
-      val unmapped = counts.keySet -- affected.map(scanAbsOf)
+      val affected = cands.filter(e => detected.contains(scanAbsOf(e)))
+      val unmapped = detected.keySet -- affected.map(scanAbsOf)
       require(unmapped.isEmpty, s"${st.op} matched file ${unmapped.headOption.getOrElse("")} " +
         "that is neither under the table data root nor a cloned reference of this snapshot — " +
         "refusing to commit (the file could not be marked for rewrite)")
@@ -211,34 +212,35 @@ private[lake] object RowLevelOps {
             .select(projected(snap, ordered, marks): _*))
         else Nil
       val toWrite = (body ++ inserted).reduceOption(_ unionByName _)
-      val vectors = Some(affected).filter(a => st.mor && a.nonEmpty).map { a =>
-        val key = morVectorKey(spark, table, st.op, a.map(_.path).filter(isForeignEntry))
-        val withOldDv = a.filter(_.dv.isDefined)
-        val rows = hits.select(key.as("p"), col(RowPosCol).as("pos"))
-        if (withOldDv.isEmpty) rows
-        else rows.unionByName(dvRows(spark, table, withOldDv)
-          .filter(col("p").isInCollection(withOldDv.map(scanKey))))
-      }
-      // ---- stage: data, vectors and change feed are independent writes
-      // — overlapped. Nothing removed ⇒ the commit is append-shaped and
+      // ---- stage: data and change feed are independent writes —
+      // overlapped. Nothing removed ⇒ the commit is append-shaped and
       // the feed synthesizes the identical inserts from its added files:
       // no change-feed write.
-      val ((dvDir, newFiles), cdc) = stageConcurrently(stageConcurrently(
-        vectors.map(v => stageDeleteVector(spark, table, v, math.max(1, math.min(32, affected.size)))))(
+      val (newFiles, cdc) = stageConcurrently(
         toWrite.fold(Seq.empty[FileEntry])(stageFiles(spark, table, _, snap.partitionColumns,
-          ColumnMapping.mapping(schema), checks = snap.constraints))))(
+          ColumnMapping.mapping(schema), checks = snap.constraints)))(
         if (affected.isEmpty) (if (dropped.isEmpty) None else Some(Nil))
         else Some(stageChangeFiles(spark, table,
           (changes(snap, ordered, evaluated, evMarks) ++
             inserted.map(_.withColumn(ChangeTypeCol, lit("insert")))).reduce(_ unionByName _))))
-      val vectored = dvDir.toSeq.flatMap(dir => affected.flatMap { e =>
-        // committed cardinality = new positions + the folded old vector's
-        // (disjoint: morScan already excludes dv'd rows); a file left
-        // with no live row leaves the snapshot outright
-        val card = counts(scanAbsOf(e)) + e.dv.map(_.cardinality).getOrElse(0L)
-        if (e.rowCount >= 0 && card >= e.rowCount) None
-        else Some(e.copy(dv = Some(DeleteVector(dir, card))))
-      })
+      // MoR: each affected file's vector is its detected bitmap ORed
+      // with its old one; a file left with no live row leaves the
+      // snapshot outright, the rest share one new sidecar
+      val vectors = if (!st.mor) Nil else {
+        val old = DeletionVectors.readAll(fs(spark, table), new Path(table), affected)
+        affected.map { e =>
+          val bm = detected(scanAbsOf(e))
+          old.get(e.path).foreach(b => bm.or(DeletionVectors.deserialize(b)))
+          (e, bm)
+        }.filter { case (e, bm) => e.rowCount < 0 || bm.getLongCardinality < e.rowCount }
+      }
+      val vectored = if (vectors.isEmpty) Nil else {
+        val (sidecar, at) = DeletionVectors.writeSidecar(spark, table,
+          vectors.map(v => DeletionVectors.serialize(v._2)))
+        vectors.zip(at).map { case ((e, bm), (offset, size)) =>
+          e.copy(dv = Some(DeleteVector(sidecar, offset, size, bm.getLongCardinality)))
+        }
+      }
       val removed = affected.map(_.path) ++ dropped
       if (removed.isEmpty && newFiles.isEmpty && st.txns.isEmpty) return snap.version
       commit(spark, table, snap, st, schema, vectored ++ newFiles, removed,
@@ -456,52 +458,4 @@ private[lake] object RowLevelOps {
       DataSkipping.proveAllRows(physConds, physSchema, resolver, e, known.toMap)
     }.map(_.path)
   }
-
-  /** Vector-key column for the MoR position deletes: a matched row in a
-    * LOCAL file keys on its data-root-relative path; a row in a CLONED
-    * (foreign) file keys on the file's absolute URI verbatim — the key
-    * form [[LakeTable.shallowClone]] re-keys inherited vectors with, and
-    * the form `_metadata.file_path` yields at scan time, so
-    * [[morScan]]'s verbatim absolute-key resolution applies both.
-    * `foreignAffected` is the matched foreign entry set; anything else
-    * fails loudly IN THE PLAN rather than committing a vector no scan
-    * would ever match.
-    */
-  private def morVectorKey(spark: SparkSession, table: String, op: String,
-                           foreignAffected: Seq[String]): Column = {
-    val prefix = scanDataPrefix(spark, table)
-    val bad = raise_error(concat(
-      lit(s"$op on $table matched a file outside the data root: "),
-      col(FilePathCol)))
-    // log-form foreign paths transcode to the scan form the column
-    // carries — a verbatim comparison would miss percent-encodable paths
-    val foreignLeg =
-      if (foreignAffected.isEmpty) bad
-      else when(col(FilePathCol).isInCollection(foreignAffected.map(scanFormAbs)),
-        col(FilePathCol)).otherwise(bad)
-    when(col(FilePathCol).startsWith(prefix),
-      col(FilePathCol).substr(lit(prefix.length + 1), lit(Int.MaxValue)))
-      .otherwise(foreignLeg)
-  }
-
-  /** Stage `df` (columns `p` = data-file-relative path, `pos` = row
-    * ordinal) as ONE new deletion-vector directory under `_deletes/`,
-    * returning its table-relative path. Partitioned by file so a
-    * reader's per-file rows cluster; `_SUCCESS` markers are hidden
-    * files the parquet read ignores.
-    */
-  private[lake] def stageDeleteVector(spark: SparkSession, table: String,
-                                df: DataFrame, parts: Int): String =
-    withStagedWrite(spark, table, df.repartition(parts, col("p"))) { staging =>
-      val name = java.util.UUID.randomUUID().toString
-      val dest = new Path(deletesPath(table), name)
-      meteredCommit { meteredFileOps {
-        val f = fs(spark, table)
-        f.mkdirs(deletesPath(table))
-        if (!f.rename(staging, dest))
-          throw new IllegalStateException(
-            s"could not move staged deletion vector $staging to $dest")
-      }}
-      s"_deletes/$name"
-    }
 }

@@ -62,8 +62,8 @@ object MaintenanceOps {
     * clears the affected files' vectors), a COMPACT that reconciles
     * the rest, and a final MoR delete so the state handed to the
     * correctness gate still carries ACTIVE vectors: the hash compare
-    * therefore proves the MoR read composition itself (anti-join on
-    * file/position), not just vector bookkeeping. DuckDB replays the
+    * therefore proves the MoR read itself (the reader's per-file
+    * bitmap against the parquet row index), not just vector bookkeeping. DuckDB replays the
     * history as plain SQL over the same input parquet.
     */
   def lakeDv(spark: SparkSession, dir: String): DataFrame = {

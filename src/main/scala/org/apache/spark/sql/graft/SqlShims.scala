@@ -23,34 +23,17 @@ object SqlShims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `df` with every DATA file-scan leaf re-marked `isStreaming = true`
+  /** `df` with every file-scan leaf re-marked `isStreaming = true`
     * — what `Source.getBatch` must hand back. Keeping the
     * LogicalRelation (rather than round-tripping rows through an RDD)
     * preserves the native parquet scan path for the micro-batch:
     * column pruning and filter pushdown still reach the files, exactly
     * how Spark's own FileStreamSource builds its batches.
-    *
-    * DELETE-VECTOR scans (roots under `_deletes/`) deliberately stay
-    * batch relations: a dv-applying micro-batch is a LeftAnti join of
-    * data against vector positions, and marking BOTH sides streaming
-    * sends it to StreamingSymmetricHashJoinExec, which refuses
-    * LeftAnti. The vectors are immutable reference data pinned by the
-    * snapshot — a stream-batch join (planned as an ordinary broadcast
-    * anti per micro-batch) is both legal and the plan you'd want.
     */
   def asStreaming(df: DataFrame): DataFrame =
     ofRows(df.sparkSession, df.queryExecution.analyzed.transform {
-      case lr: LogicalRelation if !lr.isStreaming && !isDeleteVectorScan(lr) =>
-        lr.copy(isStreaming = true)
+      case lr: LogicalRelation if !lr.isStreaming => lr.copy(isStreaming = true)
     })
-
-  private def isDeleteVectorScan(lr: LogicalRelation): Boolean = lr.relation match {
-    case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-      val roots = h.location.rootPaths
-      roots.nonEmpty && roots.forall(p =>
-        Option(p.getParent).exists(_.getName == "_deletes"))
-    case _ => false
-  }
 
   /** A batch DataFrame over already-computed internal rows. The sink
     * uses it to re-wrap `addBatch`'s micro-batch (whose plan carries

@@ -285,4 +285,15 @@ class BucketingSpec extends SparkSpec {
     assert(spec.numBuckets == 2)
     assert(rowsOf(LakeTable.read(spark, t)) == rowsOf(right))
   }
+
+  test("a bucketed table carrying deletion vectors keeps its bucketed scan and drops the rows") {
+    val t = tmpTable("bkt_dv")
+    LakeTable.overwriteBucketed(spark, t, left, 8, Seq("k"))
+    LakeTable.deleteMergeOnRead(spark, t, $"seq" % 10 === 3L)
+    assert(LakeTable.latestSnapshot(spark, t).get.files.exists(_.dv.isDefined))
+    val kept = left.filter($"seq" % 10 =!= 3L)
+    val agg = LakeTable.read(spark, t).groupBy("k").agg(count(lit(1)).as("n"), max($"seq").as("m"))
+    assert(shuffles(agg) == 0, s"bucket-keyed agg over vectors must not shuffle:\n${finalPlan(agg)}")
+    assert(rowsOf(agg) == rowsOf(kept.groupBy("k").agg(count(lit(1)).as("n"), max($"seq").as("m"))))
+  }
 }

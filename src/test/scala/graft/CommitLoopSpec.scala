@@ -129,4 +129,40 @@ class CommitLoopSpec extends SparkSpec {
     assert(eb.getMessage == "b" && eb.getSuppressed.isEmpty)
     assert(LakeTable.stageConcurrently(1)(2) == ((1, 2)))
   }
+
+  test("a merge-on-read DELETE losing every race orphans only its sidecar; vacuum and fsck see sidecars") {
+    val d = rjctDir("loop_dv_orphan")
+    val t = s"rjct:$d/t"
+    LakeTable.overwrite(spark, t,
+      (1L to 60L).map(i => (i, s"s$i")).toDF("id", "s").repartition(3))
+    LakeTable.deleteMergeOnRead(spark, t, col("id") === 1L)
+    LakeTable.deleteMergeOnRead(spark, t, col("id") === 30L)
+    val f = new Path(t).getFileSystem(spark.sessionState.newHadoopConf())
+    val deletes = new Path(t, "_deletes")
+    def sidecars(): Set[String] = f.listStatus(deletes).map(_.getPath.getName).toSet
+    def referenced(): Set[String] = LakeTable.latestSnapshot(spark, t).get.files
+      .flatMap(_.dv.map(_.path.stripPrefix("_deletes/"))).toSet
+    val live = ids(t)
+    val before = sidecars()
+
+    RejectingPublisher.reject = true
+    try intercept[ConcurrentCommitException](
+      LakeTable.deleteMergeOnRead(spark, t, col("id") === 2L))
+    finally RejectingPublisher.reject = false
+    val orphans = sidecars() -- before
+    assert(orphans.size == 1 && orphans.head.endsWith(".bin"), s"orphans: $orphans")
+    assert(f.getFileStatus(new Path(deletes, orphans.head)).isFile)
+    assert(ids(t) == live)
+
+    LakeTable.vacuum(spark, t, retainVersions = 1, graceMs = 0L)
+    assert(sidecars() == referenced(), s"after vacuum: ${sidecars()} vs ${referenced()}")
+    assert(referenced().nonEmpty && ids(t) == live)
+
+    val gone = referenced().head
+    f.delete(new Path(deletes, gone), false)
+    val issues = LakeTable.fsck(spark, t).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(issues.exists { case (p, c, i) =>
+      p == s"_deletes/$gone" && c == "delete_vector" && i.startsWith("missing") }, issues.toSeq)
+  }
 }

@@ -78,4 +78,32 @@ class LogScanSpec extends SparkSpec {
     val kinds = feed.groupBy(LakeTable.ChangeTypeCol).count().as[(String, Long)].collect().toMap
     assert(kinds == Map("update_preimage" -> 99L, "update_postimage" -> 99L), s"got $kinds")
   }
+
+  test("a read over deletion vectors is one file scan, with no more jobs than after compact") {
+    val t = fortyFiles("logscan_dv")
+    def query = spark.read.format("graft").load(t).filter(col("v") === 5L).select("id")
+    object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val df = query
+    var ids = Set.empty[Long]
+    val vectored = jobsOf { ids = df.as[Long].collect().toSet }
+    assert(ids == (0L until 4000L).filter(i => i % 7 == 5 && i != 5L).toSet)
+    val plan = df.queryExecution.executedPlan
+    val scans = plans.collect(plan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 1, plan)
+    assert(plans.collect(plan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
+    }.isEmpty, plan)
+    // the merge-on-read DELETE wrote one sidecar file for its commit
+    val f = new org.apache.hadoop.fs.Path(t).getFileSystem(spark.sessionState.newHadoopConf())
+    val sidecars = f.listStatus(new org.apache.hadoop.fs.Path(t, "_deletes"))
+    assert(sidecars.length == 1 && sidecars.head.isFile, sidecars.map(_.getPath).toSeq)
+
+    LakeTable.compact(spark, t, smallFileBytes = 1L << 30)
+    assert(!LakeTable.latestSnapshot(spark, t).get.files.exists(_.dv.isDefined))
+    val compacted = jobsOf { assert(query.as[Long].collect().toSet == ids) }
+    assert(vectored.size <= compacted.size, s"over vectors: $vectored; compacted: $compacted")
+  }
 }
