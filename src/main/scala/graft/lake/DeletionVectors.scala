@@ -43,11 +43,6 @@ private[lake] object DeletionVectors {
       val in = f.open(new Path(table, sidecar))
       try es.map { e =>
         val d = e.dv.get
-        if (d.offset < 0 || d.size < 0)
-          throw new IllegalStateException(
-            s"table $table: the deletion vector ${d.path} of ${e.path} has no offset and " +
-              "size (the parquet-directory vector form, which this version no longer " +
-              "reads) — rewrite the table with a version that reads it (compact) first")
         val buf = new Array[Byte](Math.toIntExact(d.size))
         in.readFully(d.offset, buf)
         e.path -> buf

@@ -101,11 +101,10 @@ private[lake] class GraftSink(spark: SparkSession, path: String,
   *
   * Batches are derived from the log's per-commit DELTAS: a version's
   * added files are read straight from its commit entry — O(commits in
-  * range) metadata, independent of table size. Only a legacy
-  * (pre-sharding) full-state entry pays a snapshot diff. The pinned
-  * schema is revalidated per tailed commit: upstream schema evolution
-  * or a partition-layout change mid-stream fails loudly with a restart
-  * hint (Delta stops the stream the same way) instead of silently
+  * range) metadata, independent of table size. The pinned schema is
+  * revalidated per tailed commit: upstream schema evolution or a
+  * partition-layout change mid-stream fails loudly with a restart hint
+  * (Delta stops the stream the same way) instead of silently
   * projecting the new column away.
   */
 private[lake] class GraftSource(spark: SparkSession, table: String,
@@ -240,7 +239,7 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
 
   /** The change-feed batch for the range: every commit's recorded (or
     * synthesized) row-level changes, projected through the pinned feed
-    * schema. COMPACT contributes nothing; a legacy commit whose
+    * schema. COMPACT contributes nothing; a row-rewriting commit whose
     * changes were never recorded fails loudly via
     * [[LakeTable.changesOfEntry]].
     */
@@ -293,25 +292,18 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
       case Some(startV) =>
         // one log-entry read per commit in the range: a delta names its
         // added/removed files directly, so the batch's metadata cost is
-        // O(versions in range), never O(versions × files). Only a
-        // legacy full-state entry pays a diff against its predecessor.
+        // O(versions in range), never O(versions × files).
         val added = ArrayBuffer.empty[LakeTable.FileEntry]
         var v = startV + 1
         while (v <= endV) {
           val e = LakeTable.logEntryAt(spark, table, v)
           checkSchemaPinned(v, e.schema, e.partitionColumns)
-          val (addsNow, removedNow): (Seq[LakeTable.FileEntry], Boolean) = e.full match {
-            // the CREATION commit (version 1) is reset-flagged but has
-            // no predecessor to remove from — it is morally an append
-            // of the initial data, and Delta's "timestamp precedes all
-            // commits ⇒ start from the earliest version" contract
-            // depends on it being deliverable
-            case None => (e.adds, (e.reset && v > 1) || e.removes.nonEmpty)
-            case Some(fullFiles) =>
-              val prev = LakeTable.snapshotAt(spark, table, v - 1).filePaths.toSet
-              val pathSet = fullFiles.map(_.path).toSet
-              (fullFiles.filterNot(f => prev(f.path)), prev.exists(p => !pathSet(p)))
-          }
+          // the CREATION commit (version 1) is reset-flagged but has
+          // no predecessor to remove from — it is morally an append
+          // of the initial data, and Delta's "timestamp precedes all
+          // commits ⇒ start from the earliest version" contract
+          // depends on it being deliverable
+          val removedNow = (e.reset && v > 1) || e.removes.nonEmpty
           if (e.operation == "COMPACT") {
             () // byte-level rewrite; rows already delivered
           } else if (removedNow) {
@@ -324,7 +316,7 @@ private[lake] class GraftSource(spark: SparkSession, table: String,
             logWarning(s"graft source: skipping change commit v$v (${e.operation}) " +
               s"on $table")
           } else {
-            added ++= addsNow
+            added ++= e.adds
           }
           v += 1
         }

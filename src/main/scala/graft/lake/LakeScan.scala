@@ -44,10 +44,10 @@ import LakeTable.{FileEntry, Snapshot}
   * cache.
   *
   * Both forms build each `FileStatus` from the logged size and mtime —
-  * no LIST, no stat; an entry of unknown size (a legacy log, a file
-  * named outside the snapshot, a change file) costs one
-  * `getFileStatus`. A listed file carrying a deletion vector carries
-  * its serialized bitmap as file metadata, which Spark hands the reader
+  * no LIST, no stat; an entry of unknown size (a file named outside
+  * the snapshot, a change file) costs one `getFileStatus`. A listed
+  * file carrying a deletion vector carries its serialized bitmap as
+  * file metadata, which Spark hands the reader
   * with each split ([[GraftParquetFileFormat]] applies it), so a scan
   * applies exactly the vectors of the snapshot it listed; the bitmaps
   * of the files a scan keeps are read on the driver while listing. Both prune

@@ -23,9 +23,9 @@ import org.json4s.jackson.JsonMethods
   *    so concurrent writers serialize by optimistic retry and a taken
   *    version can never be silently clobbered. Readers always see a
   *    complete snapshot — never a half-written directory.
-  *  - Snapshot isolation + time travel: each log entry carries the full
-  *    file list and schema; `read(asOf = version)` reconstructs any
-  *    retained version.
+  *  - Snapshot isolation + time travel: each log entry carries the
+  *    schema and the files its commit added and removed;
+  *    `read(asOf = version)` reconstructs any retained version.
   *  - Schema evolution: `append` merges new columns into the snapshot
   *    schema; old files simply lack the column and read as nulls
   *    (parquet with user-specified schema), old versions keep theirs.
@@ -47,10 +47,10 @@ import org.json4s.jackson.JsonMethods
   * a full-state `<v>.checkpoint.json` (advisory) that also carries
   * every commit's history summary, and readers
   * reconstruct a snapshot as nearest-base + ≤interval deltas, where a
-  * base is a checkpoint, a legacy full-state entry, or a `reset` delta
-  * (OVERWRITE carries its complete new file list and is therefore its
-  * own base). This is the manifest / manifest-list discipline of
-  * Iceberg (the reference's format, ref:
+  * base is a checkpoint, a `reset` delta (OVERWRITE carries its
+  * complete new file list and is therefore its own base), or version
+  * 1. This is the manifest / manifest-list discipline of Iceberg (the
+  * reference's format, ref:
   * trino_iceberg_transform_component.py:116-123) and Delta's
   * delta-log + checkpoint. "What is the newest version" resolves
   * through the O(1) `_latest_hint` file (written post-commit, verified
@@ -60,7 +60,7 @@ import org.json4s.jackson.JsonMethods
   *
   * Layout:
   * {{{
-  * <table>/_graft_log/00000000000000000001.json              (delta, or legacy full-state)
+  * <table>/_graft_log/00000000000000000001.json              (delta)
   * <table>/_graft_log/00000000000000000010.checkpoint.json   (segment list + commit summaries, every 10th)
   * <table>/_graft_log/_manifests/<md5>.segment.json          (checkpoint file-list segments)
   * <table>/_graft_log/_latest_hint                           (newest version, advisory)
@@ -92,9 +92,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * file's bitmap in it. The bitmap is the file's COMPLETE current
     * deleted set (a later delete on the same file ORs the old bitmap
     * into its new one). `cardinality` is that set's size. The log
-    * renders it as `dv: {p, o, s, c}`; an entry without `o`/`s` (the
-    * earlier parquet-directory form) parses with -1 and fails loudly
-    * when read.
+    * renders it as `dv: {p, o, s, c}`.
     */
   final case class DeleteVector(path: String, offset: Long, size: Long, cardinality: Long)
 
@@ -104,9 +102,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * `FileStatus` without a LIST), row count and per-column bounds (to
     * skip the file against pushed filters). This is the manifest-entry
     * role Iceberg plays for the reference (ref:
-    * trino_iceberg_transform_component.py:116-123). `size < 0` marks a
-    * legacy entry (pre-stats log) — readers fall back to listing, and
-    * the entry upgrades on the next rewrite of the file's snapshot.
+    * trino_iceberg_transform_component.py:116-123).
     *
     * `dv`: the file's outstanding [[DeleteVector]], if any — readers
     * must filter the file's rows by position against it. Logged
@@ -132,9 +128,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * format-version): `reader` names the capability a client needs to
     * READ the table correctly, `writer` the capability to WRITE it
     * without corrupting invariants newer clients rely on. Every commit
-    * and checkpoint carries the stamp; entries written before the stamp
-    * existed read as version 1. A client refuses — loudly, naming both
-    * numbers — to read past [[LakeTable.MaxReaderVersion]] or commit
+    * and checkpoint carries the stamp. A client refuses — loudly,
+    * naming both numbers — to read past [[LakeTable.MaxReaderVersion]] or commit
     * past [[LakeTable.MaxWriterVersion]], so a future format change
     * (manifest segments, column mapping) degrades to a clear "upgrade
     * the library" error instead of a silent misread.
@@ -193,10 +188,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
     def filePaths: Seq[String] = files.map(_.path)
   }
 
-  /** One parsed log file. A legacy (pre-sharding) file carries the
-    * complete file list in `full`; a delta commit carries only the
-    * files it added/removed. `reset = true` marks a commit that
-    * replaced the table contents (OVERWRITE): its `adds` ARE the full
+  /** One parsed version entry: the files its commit added/removed.
+    * `reset = true` marks a commit that replaced the table contents
+    * (OVERWRITE): its `adds` ARE the full
     * new file list, making the entry a reconstruction base. `cdc`
     * names the commit's change-data files (table-root-relative, under
     * `_change_data/`) — row-level pre/post images a DML commit records
@@ -206,7 +200,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
       version: Long, timestampMs: Long, operation: String,
       schema: StructType, partitionColumns: Seq[String],
       txns: Map[String, Long],
-      full: Option[Seq[FileEntry]],
       adds: Seq[FileEntry], removes: Seq[String], reset: Boolean,
       cdc: Option[Seq[String]],
       protocol: Protocol,
@@ -272,10 +265,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
     }): JValue))
   }
 
-  // (The legacy full-state RENDER is gone — checkpoints are segmented
-  // now, see "manifest segments" below — but the full-state PARSE stays:
-  // legacy version files and v1 checkpoints still read.)
-
   /** Delta render — what every commit writes: O(files touched), never
     * O(table). Schema/partition-columns/txns ride along in full (they
     * are O(columns + streams), small) so any single delta yields the
@@ -326,12 +315,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     case _               => Map.empty
   }
 
-  /** Back-compat: a pre-stats log records a file as its bare relative
-    * path string; it parses to an entry with unknown size/rows/stats,
-    * which readers treat as "go stat the filesystem".
-    */
   private def parseFile(j: JValue): FileEntry = j match {
-    case JString(p) => FileEntry(p, -1L, -1L, -1L, Map.empty)
     case o: JObject =>
       val stats = (o \ "st") match {
         case JObject(cols) => cols.map { case (c, v) =>
@@ -340,8 +324,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
         case _ => Map.empty[String, ColStats]
       }
       val dv = (o \ "dv") match {
-        case d: JObject => Some(DeleteVector(jStr(d \ "p"), jLongOpt(d \ "o").getOrElse(-1L),
-          jLongOpt(d \ "s").getOrElse(-1L), jLong(d \ "c")))
+        case d: JObject =>
+          Some(DeleteVector(jStr(d \ "p"), jLong(d \ "o"), jLong(d \ "s"), jLong(d \ "c")))
         case _          => None
       }
       FileEntry(jStr(o \ "p"), jLong(o \ "sz"), jLong(o \ "mt"), jLong(o \ "rc"), stats,
@@ -349,25 +333,20 @@ object LakeTable extends org.apache.spark.internal.Logging {
     case other => throw new IllegalStateException(s"expected file entry, got $other")
   }
 
-  /** Parse either format: `files` present ⇒ full-state (legacy version
-    * file or checkpoint); otherwise a delta with `adds`/`removes`.
+  /** Parse a version entry: a delta with `adds`, plus `removes`,
+    * `reset`, `cdc` and `rfull` when present.
     */
   private def parseLogEntry(s: String): LogEntry = {
     val j = JsonMethods.parse(s)
     // protocol gate FIRST: refusing to read a future-reader entry must
     // not depend on the rest of the entry parsing (a future format may
     // not even carry today's fields)
-    val rv = jLongOpt(j \ "rv").map(_.toInt).getOrElse(1)
-    val wv = jLongOpt(j \ "wv").map(_.toInt).getOrElse(1)
+    val rv = jLong(j \ "rv").toInt
     if (rv > MaxReaderVersion)
       throw new ProtocolVersionException(
         s"this table's log requires readerVersion $rv, but this library reads " +
           s"up to readerVersion $MaxReaderVersion — upgrade the library to read " +
           "this table")
-    val full = (j \ "files") match {
-      case JArray(entries) => Some(entries.map(parseFile))
-      case _               => None
-    }
     LogEntry(
       version = jLong(j \ "version"),
       timestampMs = jLong(j \ "timestampMs"),
@@ -375,10 +354,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
       schema = DataType.fromJson(jStr(j \ "schemaJson")).asInstanceOf[StructType],
       partitionColumns = (j \ "partitionColumns").asInstanceOf[JArray].arr.map(jStr),
       txns = jMap(j \ "txns")(jLong),
-      full = full,
       adds = (j \ "adds") match {
         case JArray(entries) => entries.map(parseFile)
-        case _               => Seq.empty
+        case other           => throw new IllegalStateException(s"expected adds, got $other")
       },
       removes = (j \ "removes") match {
         case JArray(entries) => entries.map(jStr)
@@ -392,7 +370,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
         case JArray(entries) => Some(entries.map(jStr))
         case _               => None
       },
-      protocol = Protocol(rv, wv),
+      protocol = Protocol(rv, jLong(j \ "wv").toInt),
       constraints = jMap(j \ "cks")(jStr),
       removedFull = (j \ "rfull") match {
         case JArray(entries) => entries.map(jStr)
@@ -406,13 +384,29 @@ object LakeTable extends org.apache.spark.internal.Logging {
     finally in.close()
   }
 
-  /** The log entry of one committed version (delta or legacy full). */
+  /** Version `v`'s entry of `table`: the one place log entries are
+    * read. Every commit writes a delta; an entry in any other form (a
+    * full-state file list, a bare-path file, a deletion vector without
+    * offset and size, no protocol stamp) is refused, naming the table
+    * and the version — never read as an empty delta.
+    */
+  private def readEntry(f: FileSystem, table: String, v: Long): LogEntry = {
+    val txt = readFileText(f, versionFile(table, v))
+    try parseLogEntry(txt) catch {
+      case e: ProtocolVersionException => throw e
+      case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(
+          s"cannot read version $v of $table: its log entry is not a delta entry " +
+            s"(${e.getMessage})", e)
+    }
+  }
+
+  /** The log entry of one committed version. */
   private[graft] def logEntryAt(spark: SparkSession, table: String, version: Long): LogEntry = {
     val f = fs(spark, table)
-    val p = versionFile(table, version)
-    if (!f.exists(p))
+    if (!f.exists(versionFile(table, version)))
       throw new IllegalArgumentException(s"no version $version at $table")
-    parseLogEntry(readFileText(f, p))
+    readEntry(f, table, version)
   }
 
   // a committed snapshot is exactly 20 digits + ".json"; anything else in
@@ -439,10 +433,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
   // Resolving "latest" by listing _graft_log/ is O(commits) per read — at
   // daily-commit cadence over years that listing is the reader's metadata
   // bottleneck (the problem Delta solves with _last_checkpoint and Iceberg
-  // with version-hint.text). Every graft snapshot is already full-state
-  // (it carries the complete file list + schema), so no multi-file log
-  // replay is needed — only "what is the newest version?". A best-effort
-  // `_latest_hint` file answers that in O(1): written after every
+  // with version-hint.text). A best-effort `_latest_hint` file answers
+  // "what is the newest version?" in O(1): written after every
   // successful commit, read + probed-forward on access. The hint is
   // advisory only — it can lag (writer crashed between commit and hint;
   // racing writers overwrite it out of order) but correctness never
@@ -496,10 +488,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
   // hitting a base, and history() reads one checkpoint plus the
   // ≤interval tail instead of O(commits) entries. The checkpoint is
   // ADVISORY (post-commit, best-effort): a missing or torn one just
-  // lengthens the walk, which still terminates at a legacy full-state
-  // entry, a `reset` delta (OVERWRITE), or the table's first commit
-  // (whose delta applies to the empty base), and history falls back to
-  // the log listing.
+  // lengthens the walk, which still terminates at a `reset` delta
+  // (OVERWRITE) or the table's first commit (whose delta applies to the
+  // empty base), and history falls back to the log listing.
 
   private[lake] val checkpointInterval = 10L
 
@@ -534,12 +525,11 @@ object LakeTable extends org.apache.spark.internal.Logging {
   // checkpointers, and turns a rewrite that changed nothing into no
   // write at all.
   //
-  // The v2 checkpoint file deliberately does NOT carry the legacy
-  // `schemaJson` key: a pre-segment reader's checkpoint parse fails,
-  // and it degrades to delta-chain reconstruction — correct, just
-  // longer — instead of silently misreading a checkpoint format it
-  // does not understand. (New READERS of old single-file checkpoints
-  // still work: both formats parse below.)
+  // The v2 checkpoint file deliberately does NOT carry the version
+  // entries' `schemaJson` key: a pre-segment reader's checkpoint parse
+  // fails, and it degrades to delta-chain reconstruction — correct,
+  // just longer — instead of silently misreading a checkpoint format it
+  // does not understand.
 
   /** One immutable manifest segment, as the checkpoint references it:
     * content-addressed file name, entry count, and the sorted
@@ -585,17 +575,14 @@ object LakeTable extends org.apache.spark.internal.Logging {
     (JsonMethods.parse(readFileText(f, new Path(manifestsPath(table), name))) \ "files")
       .asInstanceOf[JArray].arr.map(parseFile)
 
-  /** A parsed `<v>.checkpoint.json`. A v2 checkpoint's `head` has no
-    * files — they sit in its manifest `segments`, read only by callers
-    * that need them ([[checkpointSnapshot]]); a legacy single-file
-    * checkpoint carries them inline and has no segments. `hist` holds
-    * the summaries of the commits up to v; it is empty when the
-    * checkpoint predates them, which means "no summaries", never "no
-    * versions".
+  /** A parsed `<v>.checkpoint.json`. Its `head` has no files — they sit
+    * in its manifest `segments`, read only by callers that need them
+    * ([[checkpointSnapshot]]). `hist` holds the summaries of the commits
+    * up to v.
     */
-  private final case class Checkpoint(head: Snapshot, segments: Option[Seq[SegmentRef]],
+  private final case class Checkpoint(head: Snapshot, segments: Seq[SegmentRef],
                                       hist: Seq[HistEntry]) {
-    def numFiles: Long = head.files.size + segments.getOrElse(Nil).map(_.count).sum
+    def numFiles: Long = segments.map(_.count).sum
   }
 
   private def renderCheckpointV2(s: Snapshot, segs: Seq[SegmentRef],
@@ -607,7 +594,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       "rv" -> JLong(s.protocol.reader.toLong),
       "wv" -> JLong(s.protocol.writer.toLong),
       "operation" -> JString(s.operation),
-      // "schema", NOT the legacy "schemaJson" — see the format note above
+      // "schema", NOT the entries' "schemaJson" — see the format note above
       "schema" -> JString(s.schema.json),
       "partitionColumns" -> JArray(s.partitionColumns.map(JString(_)).toList),
       "txns" -> JObject(s.txns.toList.sortBy(_._1).map { case (q, b) =>
@@ -622,12 +609,11 @@ object LakeTable extends org.apache.spark.internal.Logging {
       "hist" -> JArray(hist.map(h => JArray(List(JLong(h.version),
         JLong(h.timestampMs), JString(h.operation), JLong(h.numFiles)))).toList)))))
 
-  /** Parse `<v>.checkpoint.json` if present and readable — a v2
-    * segmented checkpoint or a legacy single-file full state — without
-    * reading any segment. A missing, torn or foreign file is None
-    * (callers degrade to the delta walk or the log listing); an entry
-    * with neither `checkpointV` nor `files` is never read as an empty
-    * table.
+  /** Parse `<v>.checkpoint.json` — a v2 checkpoint carrying both its
+    * `segments` and its `hist` — without reading any segment. Anything
+    * else (missing, torn, foreign, or short of either key) is None, and
+    * callers degrade to the delta walk or the log listing; a checkpoint
+    * is never read as an empty table.
     */
   private def openCheckpoint(f: FileSystem, table: String, v: Long): Option[Checkpoint] =
     if (v <= 0) None
@@ -635,45 +621,36 @@ object LakeTable extends org.apache.spark.internal.Logging {
       val p = snapshotCheckpointFile(table, v)
       if (!f.exists(p)) None
       else scala.util.Try {
-        val txt = readFileText(f, p)
-        val j = JsonMethods.parse(txt)
-        if (jLongOpt(j \ "checkpointV").contains(2L)) {
-          val rv = jLongOpt(j \ "rv").map(_.toInt).getOrElse(1)
-          // a checkpoint newer than this reader is skipped: the delta
-          // walk then meets the log entry's own gate, which refuses loudly
-          require(rv <= MaxReaderVersion, s"checkpoint needs readerVersion $rv")
-          val head = Snapshot(
-            jLong(j \ "version"), jLong(j \ "timestampMs"), jStr(j \ "operation"),
-            DataType.fromJson(jStr(j \ "schema")).asInstanceOf[StructType],
-            (j \ "partitionColumns").asInstanceOf[JArray].arr.map(jStr), Nil,
-            jMap(j \ "txns")(jLong),
-            Protocol(rv, jLongOpt(j \ "wv").map(_.toInt).getOrElse(1)),
-            jMap(j \ "cks")(jStr))
-          val segs = (j \ "segments").asInstanceOf[JArray].arr.map(s =>
-            SegmentRef(jStr(s \ "n"), jLong(s \ "c"), jStr(s \ "lo"), jStr(s \ "hi")))
-          val hist = (j \ "hist") match {
-            case JArray(rows) => rows.map {
-              case JArray(List(hv, ts, op, nf)) => HistEntry(jLong(hv), jLong(ts), jStr(op), jLong(nf))
-              case other => throw new IllegalStateException(s"bad history row $other")
-            }
-            case _ => Nil
-          }
-          Checkpoint(head, Some(segs), hist)
-        } else {
-          val e = parseLogEntry(txt)
-          Checkpoint(Snapshot(e.version, e.timestampMs, e.operation, e.schema,
-            e.partitionColumns, e.full.get, e.txns, e.protocol, e.constraints), None, Nil)
+        val j = JsonMethods.parse(readFileText(f, p))
+        require(jLong(j \ "checkpointV") == 2L, "not a v2 checkpoint")
+        val rv = jLong(j \ "rv").toInt
+        // a checkpoint newer than this reader is skipped: the delta
+        // walk then meets the log entry's own gate, which refuses loudly
+        require(rv <= MaxReaderVersion, s"checkpoint needs readerVersion $rv")
+        val head = Snapshot(
+          jLong(j \ "version"), jLong(j \ "timestampMs"), jStr(j \ "operation"),
+          DataType.fromJson(jStr(j \ "schema")).asInstanceOf[StructType],
+          (j \ "partitionColumns").asInstanceOf[JArray].arr.map(jStr), Nil,
+          jMap(j \ "txns")(jLong), Protocol(rv, jLong(j \ "wv").toInt),
+          jMap(j \ "cks")(jStr))
+        val hist = (j \ "hist").asInstanceOf[JArray].arr.map {
+          case JArray(List(hv, ts, op, nf)) => HistEntry(jLong(hv), jLong(ts), jStr(op), jLong(nf))
+          case other => throw new IllegalStateException(s"bad history row $other")
         }
+        Checkpoint(head, segmentRefs(j), hist)
       }.toOption
     } catch { case _: java.io.IOException => None }
+
+  private def segmentRefs(checkpoint: JValue): Seq[SegmentRef] =
+    (checkpoint \ "segments").asInstanceOf[JArray].arr.map(s =>
+      SegmentRef(jStr(s \ "n"), jLong(s \ "c"), jStr(s \ "lo"), jStr(s \ "hi")))
 
   /** The snapshot a checkpoint holds, with its segments read; None when
     * any segment is missing or unreadable.
     */
   private def checkpointSnapshot(f: FileSystem, table: String, v: Long): Option[Snapshot] =
     openCheckpoint(f, table, v).flatMap(cp => scala.util.Try(cp.head.copy(files =
-      cp.head.files ++ cp.segments.getOrElse(Nil).flatMap(r => readSegment(f, table, r.name))))
-      .toOption)
+      cp.segments.flatMap(r => readSegment(f, table, r.name)))).toOption)
 
   /** Segments of the new checkpoint given the previous checkpoint's and
     * the plain deltas since it: reuse untouched segments, rewrite the
@@ -731,7 +708,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
     */
   private def readEntries(f: FileSystem, table: String,
                           vs: Seq[Long]): Seq[(Long, scala.util.Try[LogEntry])] =
-    vs.map(v => v -> scala.util.Try(parseLogEntry(readFileText(f, versionFile(table, v)))))
+    vs.map(v => v -> scala.util.Try(readEntry(f, table, v)))
 
   /** History rows of consecutive log entries. numFiles is DELTA
     * ARITHMETIC (previous count - removes + adds) seeded with `seed`,
@@ -746,10 +723,10 @@ object LakeTable extends org.apache.spark.internal.Logging {
     var count = seed
     entries.flatMap { case (v, parsed) =>
       val h = parsed.flatMap(e => scala.util.Try {
-        val nf = e.full.map(_.size.toLong)
-          .orElse(if (e.reset) Some(e.adds.size.toLong)
-                  else (if (v == 1L) Some(0L) else count).map(_ - e.removes.size + e.adds.size))
-          .getOrElse(reconstruct(f, table, v).files.size.toLong)
+        val nf =
+          if (e.reset) e.adds.size.toLong
+          else (if (v == 1L) Some(0L) else count).map(_ - e.removes.size + e.adds.size)
+            .getOrElse(reconstruct(f, table, v).files.size.toLong)
         HistEntry(v, e.timestampMs, e.operation, nf)
       }).toOption
       count = h.map(_.numFiles)
@@ -767,19 +744,19 @@ object LakeTable extends org.apache.spark.internal.Logging {
       val from = snap.version - checkpointInterval
       val prev = openCheckpoint(f, table, from)
       val window = readEntries(f, table, from + 1 to snap.version)
-      // summaries: the previous checkpoint's plus the window's, or — when
-      // it carries none — computed once from version 1
-      val hist = prev.filter(_.hist.nonEmpty) match {
+      // summaries: the previous checkpoint's plus the window's, or — with
+      // no usable previous checkpoint — computed once from version 1
+      val hist = prev match {
         case Some(p) => p.hist ++ summarize(f, table, window, Some(p.numFiles))
         case None    => summarize(f, table, readEntries(f, table, 1L to from) ++ window, None)
       }
       // incremental only over a window of PLAIN deltas: a reset (its own
-      // base) or legacy full-state entry in range means the previous
-      // segments describe a dead lineage — re-chunk from the live list
-      val deltas = window.map(_._2.toOption.filter(e => e.full.isEmpty && !e.reset))
-      val segs = prev.flatMap(_.segments) match {
-        case Some(refs) if deltas.forall(_.isDefined) =>
-          scala.util.Try(incrementalSegments(f, table, refs, deltas.flatten, sorted, segTarget))
+      // base) in range means the previous segments describe a dead
+      // lineage — re-chunk from the live list
+      val deltas = window.map(_._2.toOption.filterNot(_.reset))
+      val segs = prev match {
+        case Some(p) if deltas.forall(_.isDefined) =>
+          scala.util.Try(incrementalSegments(f, table, p.segments, deltas.flatten, sorted, segTarget))
             .getOrElse(chunkSegments(f, table, sorted, segTarget))
         case _ => chunkSegments(f, table, sorted, segTarget)
       }
@@ -792,64 +769,50 @@ object LakeTable extends org.apache.spark.internal.Logging {
     } catch { case _: java.io.IOException => () } // advisory — never fail a commit
 
   /** Reconstruct the snapshot of `version`: nearest base at or below it
-    * (snapshot checkpoint, legacy full-state entry, or `reset` delta),
-    * then the deltas up to `version` applied in order. O(interval)
-    * small metadata reads, independent of table size.
+    * (snapshot checkpoint, `reset` delta, or the empty table before
+    * version 1), then the deltas up to `version` applied in order.
+    * O(interval) small metadata reads, independent of table size.
     */
   def snapshotAt(spark: SparkSession, table: String, version: Long): Snapshot =
     reconstruct(fs(spark, table), table, version)
 
-  private def reconstruct(f: FileSystem, table: String, version: Long): Snapshot = {
+  private def reconstruct(f: FileSystem, table: String, version: Long): Snapshot =
     checkpointSnapshot(f, table, version).getOrElse {
-      val p = versionFile(table, version)
-      if (!f.exists(p))
+      if (!f.exists(versionFile(table, version)))
         throw new IllegalArgumentException(s"no version $version at $table")
-      val head = parseLogEntry(readFileText(f, p))
-      head.full match {
-        case Some(files) =>
-          Snapshot(version, head.timestampMs, head.operation, head.schema,
-            head.partitionColumns, files, head.txns, head.protocol,
-            head.constraints)
-        case None =>
-          // walk back to a base, collecting the delta chain (ascending)
-          var chain: List[LogEntry] = List(head)
-          var base: Seq[FileEntry] = if (head.reset) Seq.empty else null
-          var cur = version
-          while (base == null) {
-            if (cur - 1 == 0) base = Seq.empty // first commit: empty base
-            else checkpointSnapshot(f, table, cur - 1) match {
-              case Some(cp) => base = cp.files
-              case None =>
-                val q = versionFile(table, cur - 1)
-                if (!f.exists(q))
-                  throw new IllegalStateException(
-                    s"cannot reconstruct version $version of $table: log entry " +
-                      s"${cur - 1} is missing (foreign log deletion?)")
-                val e = parseLogEntry(readFileText(f, q))
-                e.full match {
-                  case Some(files) => base = files
-                  case None =>
-                    chain ::= e
-                    if (e.reset) base = Seq.empty
-                    else cur -= 1
-                }
-            }
-          }
-          var files = base
-          chain.foreach { d =>
-            files =
-              if (d.reset) d.adds
-              else {
-                val rm = d.removes.toSet
-                (if (rm.isEmpty) files else files.filterNot(x => rm(x.path))) ++ d.adds
-              }
-          }
-          Snapshot(version, head.timestampMs, head.operation, head.schema,
-            head.partitionColumns, files, head.txns, head.protocol,
-            head.constraints)
+      val head = readEntry(f, table, version)
+      // walk back to a base, collecting the delta chain (ascending)
+      var chain: List[LogEntry] = List(head)
+      var base: Seq[FileEntry] = if (head.reset) Seq.empty else null
+      var cur = version
+      while (base == null) {
+        if (cur - 1 == 0) base = Seq.empty // first commit: empty base
+        else checkpointSnapshot(f, table, cur - 1) match {
+          case Some(cp) => base = cp.files
+          case None =>
+            if (!f.exists(versionFile(table, cur - 1)))
+              throw new IllegalStateException(
+                s"cannot reconstruct version $version of $table: log entry " +
+                  s"${cur - 1} is missing (foreign log deletion?)")
+            val e = readEntry(f, table, cur - 1)
+            chain ::= e
+            if (e.reset) base = Seq.empty
+            else cur -= 1
+        }
       }
+      var files = base
+      chain.foreach { d =>
+        files =
+          if (d.reset) d.adds
+          else {
+            val rm = d.removes.toSet
+            (if (rm.isEmpty) files else files.filterNot(x => rm(x.path))) ++ d.adds
+          }
+      }
+      Snapshot(version, head.timestampMs, head.operation, head.schema,
+        head.partitionColumns, files, head.txns, head.protocol,
+        head.constraints)
     }
-  }
 
   /** Commit `snap` as `snap.version` iff that version does not exist
     * yet, writing the DELTA (`adds`/`removes`/`reset`) — O(files
@@ -1405,9 +1368,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
     * changed). DML commits read their recorded change files;
     * append-shaped commits synthesize inserts from their added files;
     * OVERWRITE synthesizes the previous snapshot as deletes plus the
-    * new files as inserts. A legacy row-rewriting commit with no
-    * recorded change data fails loudly — its row-level delta is
-    * unknowable after the fact.
+    * new files as inserts. A row-rewriting commit with no recorded
+    * change data fails loudly — its row-level delta is unknowable after
+    * the fact.
     */
   private[lake] def changesOf(spark: SparkSession, table: String,
                               v: Long): Option[DataFrame] =
@@ -1459,56 +1422,51 @@ object LakeTable extends org.apache.spark.internal.Logging {
         recorded.unionByName(d, allowMissingColumns = true)))
     } else if (e.cdc.isDefined) {
       // recorded, and genuinely empty (e.g. a conditional merge where
-      // no clause fired) — a real empty change set, not a legacy gap
+      // no clause fired) — a real empty change set, not an unrecorded one
       Some(removedFullDeletes.getOrElse(emptyChanges))
-    } else e.full match {
-      case Some(_) =>
-        throw new UnsupportedOperationException(
-          s"change feed of $table: version $v is a legacy full-state commit " +
-            "(pre-change-feed) — its row-level changes were not recorded")
-      case None if e.reset =>
-        // overwrite: everything before is deleted, everything added
-        // inserts. Version 1 has no previous snapshot — a table CREATED
-        // by overwrite (the common case) starts from the empty base,
-        // mirroring reconstruct's "first commit: empty base" rule.
-        val deletes =
-          if (v == 1) emptyChanges
-          else {
-            val prev = snapshotAt(spark, table, v - 1)
-            if (prev.files.isEmpty) emptyChanges
-            else decorate(readEntries(prev.files, prev.schema), Some("delete"))
-          }
-        val inserts =
-          if (e.adds.isEmpty) emptyChanges
-          else decorate(readEntries(e.adds, e.schema), Some("insert"))
-        Some(deletes.unionByName(inserts, allowMissingColumns = true))
-      case None if e.operation == "OVERWRITE PARTITIONS" || e.operation == "PUBLISH" =>
-        // dynamic partition overwrite — and a WAP branch PUBLISH, which
-        // has the same commit shape — synthesize like OVERWRITE, but
-        // scoped: deletes are the rows of exactly the REPLACED files
-        // (recovered from the previous snapshot so their dv state is
-        // honored), inserts are the added files' rows
-        val removedSet = e.removes.toSet
-        val deletes =
-          if (removedSet.isEmpty) emptyChanges
-          else {
-            val prev = snapshotAt(spark, table, v - 1)
-            val removed = prev.files.filter(f => removedSet.contains(f.path))
-            if (removed.isEmpty) emptyChanges
-            else decorate(readEntries(removed, prev.schema), Some("delete"))
-          }
-        val inserts =
-          if (e.adds.isEmpty) emptyChanges
-          else decorate(readEntries(e.adds, e.schema), Some("insert"))
-        Some(deletes.unionByName(inserts, allowMissingColumns = true))
-      case None if e.removes.nonEmpty =>
-        throw new UnsupportedOperationException(
-          s"change feed of $table: version $v (${e.operation}) rewrote rows but " +
-            "recorded no change data (written before the change feed existed?)")
-      case None =>
-        // append-shaped: added files ARE the inserted rows
-        if (e.adds.isEmpty) Some(emptyChanges)
-        else Some(decorate(readEntries(e.adds, e.schema), Some("insert")))
+    } else if (e.reset) {
+      // overwrite: everything before is deleted, everything added
+      // inserts. Version 1 has no previous snapshot — a table CREATED
+      // by overwrite (the common case) starts from the empty base,
+      // mirroring reconstruct's "first commit: empty base" rule.
+      val deletes =
+        if (v == 1) emptyChanges
+        else {
+          val prev = snapshotAt(spark, table, v - 1)
+          if (prev.files.isEmpty) emptyChanges
+          else decorate(readEntries(prev.files, prev.schema), Some("delete"))
+        }
+      val inserts =
+        if (e.adds.isEmpty) emptyChanges
+        else decorate(readEntries(e.adds, e.schema), Some("insert"))
+      Some(deletes.unionByName(inserts, allowMissingColumns = true))
+    } else if (e.operation == "OVERWRITE PARTITIONS" || e.operation == "PUBLISH") {
+      // dynamic partition overwrite — and a WAP branch PUBLISH, which
+      // has the same commit shape — synthesize like OVERWRITE, but
+      // scoped: deletes are the rows of exactly the REPLACED files
+      // (recovered from the previous snapshot so their dv state is
+      // honored), inserts are the added files' rows
+      val removedSet = e.removes.toSet
+      val deletes =
+        if (removedSet.isEmpty) emptyChanges
+        else {
+          val prev = snapshotAt(spark, table, v - 1)
+          val removed = prev.files.filter(f => removedSet.contains(f.path))
+          if (removed.isEmpty) emptyChanges
+          else decorate(readEntries(removed, prev.schema), Some("delete"))
+        }
+      val inserts =
+        if (e.adds.isEmpty) emptyChanges
+        else decorate(readEntries(e.adds, e.schema), Some("insert"))
+      Some(deletes.unionByName(inserts, allowMissingColumns = true))
+    } else if (e.removes.nonEmpty) {
+      throw new UnsupportedOperationException(
+        s"change feed of $table: version $v (${e.operation}) rewrote rows but " +
+          "recorded no change data (written before the change feed existed?)")
+    } else {
+      // append-shaped: added files ARE the inserted rows
+      if (e.adds.isEmpty) Some(emptyChanges)
+      else Some(decorate(readEntries(e.adds, e.schema), Some("insert")))
     }
   }
 
@@ -2120,8 +2078,8 @@ object LakeTable extends org.apache.spark.internal.Logging {
   /** The log as the newest checkpoint at or below the latest version
     * sees it: that checkpoint's summaries and file count, and the tail
     * versions since it — found by the latest hint and existence probes,
-    * no listing. None when that checkpoint is missing, torn or carries
-    * no summaries, or the tail has a hole (foreign log deletion: the
+    * no listing. None when that checkpoint is not usable (see
+    * [[openCheckpoint]]), or the tail has a hole (foreign log deletion: the
     * hint sees past it, a probe would not); callers then list the log.
     */
   private def checkpointedLog(spark: SparkSession,
@@ -2132,7 +2090,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       val tail = c + 1 to latest
       val base =
         if (c == 0) Some((Seq.empty[HistEntry], 0L))
-        else openCheckpoint(f, table, c).filter(_.hist.nonEmpty).map(cp => (cp.hist, cp.numFiles))
+        else openCheckpoint(f, table, c).map(cp => (cp.hist, cp.numFiles))
       base.filter(_ => tail.forall(v => f.exists(versionFile(table, v))))
         .map { case (hist, numFiles) => (hist, numFiles, tail) }
     }
@@ -2584,18 +2542,11 @@ object LakeTable extends org.apache.spark.internal.Logging {
       // reconcile back into clean files (Iceberg's rewrite_data_files
       // with delete-file compaction), so readers stop filtering by
       // row index and vacuum can reclaim the vector.
-      val small = snap.files.filter(inScope).map(e => e -> sizeOf(spark, table, e))
+      val small = snap.files.filter(inScope).map(e => e -> e.size)
         .filter { case (e, sz) => sz < smallFileBytes || e.dv.isDefined }
       if (small.size <= 1 && small.forall(_._1.dv.isEmpty)) Nil else small
     }
   }
-
-  /** A file's size from the log; a legacy entry (pre-stats log) costs
-    * one stat — never a listing.
-    */
-  private def sizeOf(spark: SparkSession, table: String, e: FileEntry): Long =
-    if (e.size >= 0) e.size
-    else fs(spark, table).getFileStatus(entryPath(dataPath(table), e.path)).getLen
 
   /** The rewrite body of [[compact]] and [[reclusterIncremental]]:
     * validate the cluster columns, read back the live rows of the
@@ -2667,8 +2618,9 @@ object LakeTable extends org.apache.spark.internal.Logging {
     val pCols = snap.partitionColumns.map(col)
     val rows =
       if (zorderBy.nonEmpty) {
-        // logged LIVE row counts size the boundary sample; a legacy
-        // entry (rowCount unknown) costs one count of the scope
+        // logged LIVE row counts size the boundary sample; an entry
+        // whose footer was unreadable (rowCount unknown) costs one count
+        // of the scope
         val counts = set.map(_.liveRowCount)
         val totalRows = if (counts.forall(_ >= 0)) counts.sum else packed.count()
         val zc = "_graft_zvalue"
@@ -2754,11 +2706,11 @@ object LakeTable extends org.apache.spark.internal.Logging {
     if (snapOpt.isEmpty) return None
     val snap = snapOpt.get
     val entry = logEntryAt(spark, table, snap.version)
-    val touched = entry.full.map(_.map(_.path)).getOrElse(entry.adds.map(_.path))
+    val touched = entry.adds.map(_.path)
     if (touched.isEmpty) return None
     val dirs = touched.map(partitionDirOf).toSet
     val smallInScope = snap.files.count(e =>
-      dirs.contains(partitionDirOf(e.path)) && sizeOf(spark, table, e) < smallFileBytes)
+      dirs.contains(partitionDirOf(e.path)) && e.size < smallFileBytes)
     if (smallInScope < minSmallFiles) None
     else {
       val v = compact(spark, table, smallFileBytes = smallFileBytes,
@@ -2824,7 +2776,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       // pass to re-baseline)
       snap.files.filter(e =>
         inScope(e) && (!clusteredAsOf.contains(e.path) || e.dv.isDefined))
-        .map(e => e -> sizeOf(spark, table, e))
+        .map(e => e -> e.size)
     }
   }
 
@@ -3150,9 +3102,6 @@ object LakeTable extends org.apache.spark.internal.Logging {
         throw new IllegalArgumentException(s"no committed version at $src")))
     require(latestSnapshot(spark, dst).isEmpty,
       s"refusing to clone into $dst: it already has committed versions")
-    require(snap.files.forall(_.size >= 0),
-      s"cannot shallow-clone $src at v${snap.version}: legacy entries without " +
-        "logged stats — compact the source first")
     val f = fs(spark, src)
     val srcRoot = f.makeQualified(dataPath(src))
     def absOf(rel: String): String =
@@ -3676,9 +3625,13 @@ object LakeTable extends org.apache.spark.internal.Logging {
       // floor that the grace window protected (they still reference
       // their segments) — same set whether this is a dry run or not
       val survivors = cpKeep ++ cpDrop0.diff(cpDrop)
-      val referenced = survivors
-        .flatMap(v => openCheckpoint(f, table, v).flatMap(_.segments).getOrElse(Nil))
-        .map(_.name).toSet
+      // a segment named by a surviving checkpoint file stays even when
+      // that checkpoint is not usable as a base (no summaries): vacuum
+      // never strands a checkpoint file it keeps
+      val referenced = survivors.flatMap { v =>
+        scala.util.Try(segmentRefs(JsonMethods.parse(
+          readFileText(f, snapshotCheckpointFile(table, v))))).getOrElse(Nil)
+      }.map(_.name).toSet
       val segsToDelete = f.listStatus(mp).toSeq.filter(st =>
         st.isFile && st.getModificationTime < cutoffMs &&
           !referenced.contains(st.getPath.getName))
@@ -3720,7 +3673,7 @@ object LakeTable extends org.apache.spark.internal.Logging {
       (try Some(f.getFileStatus(p))
        catch { case _: java.io.FileNotFoundException => None }) match {
         case None => issues += ((e.path, "data", "missing"))
-        case Some(st) if e.size >= 0 && st.getLen != e.size =>
+        case Some(st) if st.getLen != e.size =>
           issues += ((e.path, "data",
             s"size mismatch: logged ${e.size} bytes, found ${st.getLen}"))
         case _ => ()

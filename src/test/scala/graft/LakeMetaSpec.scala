@@ -66,32 +66,49 @@ class LakeMetaSpec extends SparkSpec {
       s"live read listed the data tree (should plan from the log): $listed")
   }
 
-  test("legacy string-only logs (pre-stats) still read, via the listing fallback") {
-    val t = tmpTable("meta_legacy")
-    LakeTable.overwrite(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
-    // rewrite the commit JSON to the OLD pre-sharding format: a
-    // full-state `files` list of bare path strings (no stats, no delta)
-    val logDir = java.nio.file.Paths.get(s"$t/_graft_log")
-    val vf = logDir.resolve(f"${1L}%020d.json")
-    val txt = new String(java.nio.file.Files.readAllBytes(vf), "UTF-8")
-    val legacy = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val JObject(fields) = JsonMethods.parse(txt): @unchecked
-      val rewritten = fields.flatMap {
-        case ("adds", JArray(entries)) =>
-          Some("files" -> JArray(entries.map(e => (e \ "p").asInstanceOf[JString])))
-        case ("reset", _) | ("removes", _) => None
-        case other => Some(other)
+  test("a log entry not in the delta form is refused, naming the table and version") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val t = tmpTable("meta_notdelta")
+    LakeTable.overwrite(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "s")) // v1
+    LakeTable.append(spark, t, Seq((3L, "c")).toDF("id", "s"))               // v2
+    val vf = java.nio.file.Paths.get(s"$t/_graft_log").resolve(f"${2L}%020d.json")
+    val original = new String(java.nio.file.Files.readAllBytes(vf), "UTF-8")
+    val JObject(fields) = JsonMethods.parse(original): @unchecked
+    val adds = fields.collectFirst { case ("adds", JArray(es)) => es }.get
+    val v1Adds = (JsonMethods.parse(new String(java.nio.file.Files.readAllBytes(
+      vf.resolveSibling(f"${1L}%020d.json")), "UTF-8")) \ "adds").asInstanceOf[JArray].arr
+    def withAdds(f: List[JValue] => (String, JValue)): String =
+      JsonMethods.compact(JsonMethods.render(JObject(fields.map {
+        case ("adds", _) => f(adds)
+        case other       => other
+      })))
+    val forms = Seq(
+      // a full-state entry: the complete file list, no delta
+      "full-state" -> withAdds(es => "files" -> JArray(v1Adds ++ es)),
+      // a file recorded as its bare path, without size or stats
+      "bare-path file" -> withAdds(es => "adds" -> JArray(es.map(_ \ "p"))),
+      // a deletion vector without offset and size
+      "dv without o/s" -> withAdds(es => "adds" -> JArray(es.map {
+        case JObject(fs) => JObject(fs :+ ("dv" -> JObject(
+          "p" -> JString("_deletes/gone.bin"), "c" -> JLong(1L))))
+        case other => other
+      })))
+    forms.foreach { case (form, txt) =>
+      assert(txt != original, s"$form: rewrite changed nothing")
+      java.nio.file.Files.write(vf, txt.getBytes("UTF-8"))
+      def refused(read: => Long): Unit = {
+        val e = intercept[Exception] { read }
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(x => String.valueOf(x.getMessage)).toSeq
+        assert(msgs.exists(m => m.contains(t) && m.contains("version 2")),
+          s"$form: the refusal must name $t and version 2, got: ${msgs.mkString(" / ")}")
       }
-      JsonMethods.compact(JsonMethods.render(JObject(rewritten)))
+      refused(LakeTable.read(spark, t).count())
+      refused(spark.read.format("graft").load(t).count())
     }
-    assert(legacy != txt && !legacy.contains("\"sz\"") && legacy.contains("\"files\""),
-      s"rewrite failed: $legacy")
-    java.nio.file.Files.delete(vf)
-    java.nio.file.Files.write(vf, legacy.getBytes("UTF-8"))
-    assert(LakeTable.read(spark, t).count() == 2)
-    assert(spark.read.format("graft").load(t).count() == 2)
+    java.nio.file.Files.write(vf, original.getBytes("UTF-8"))
+    assert(LakeTable.read(spark, t).count() == 3)
   }
 
   test("data skipping: a point filter reads only the files whose bounds admit it") {

@@ -988,9 +988,11 @@ class LakeSpec extends SparkSpec {
     assert(re.getMessage.contains("readerVersion 99") &&
       re.getMessage.contains(s"readerVersion ${LakeTable.MaxReaderVersion}"))
 
-    // an UNSTAMPED (pre-protocol) entry reads as version 1: both fine
+    // an UNSTAMPED entry is refused, naming the table and the version
     restamp(original.replace("\"rv\":1,\"wv\":1,", ""))
-    assert(LakeTable.read(spark, t).count() == 2)
+    val ue = intercept[IllegalStateException] { LakeTable.read(spark, t).count() }
+    assert(ue.getMessage.contains(t) && ue.getMessage.contains("version 2"), ue.getMessage)
+    restamp(original)
     LakeTable.append(spark, t, Seq((3L, "c")).toDF("id", "s"))
     assert(LakeTable.read(spark, t).count() == 3)
   }
